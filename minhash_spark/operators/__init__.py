@@ -2,7 +2,6 @@ from .signatures import with_minhash_signature
 from .lsh import bands_table, candidate_pairs, bucket_stats
 from .verify import estimate_jaccard, verify_pairs
 from .cluster import connected_components
-from .cluster_twostar import connected_components_twostar
 from .exact import exact_dup_groups, dedup_exact
 from .simhash import with_simhash, simhash_candidates
 from .substring import containment_candidates, verify_containment, substring_dedup
@@ -26,7 +25,6 @@ __all__ = [
     "estimate_jaccard",
     "verify_pairs",
     "connected_components",
-    "connected_components_twostar",
     "exact_dup_groups",
     "dedup_exact",
     "with_simhash",

@@ -1,26 +1,120 @@
-"""Connected components over the verified duplicate-pair graph via iterative
-min-label propagation (union-find by repeated "adopt the smallest label among
-yourself and your neighbors").
+"""Connected components over the verified duplicate-pair graph.
 
-Convergence: each iteration is one round of label broadcast, so the loop
-terminates after at most graph-diameter iterations; duplicate clusters are
-near-cliques (LSH pairs), so diameter is tiny in practice. Each iteration is
-one shuffle join + one shuffled groupBy; `localCheckpoint` after every round
-truncates lineage so plans don't grow (SURVEY.md §7 hard part (b)).
+One operator with two paths, chosen by one bounded collect of the edges:
 
-Labels are the document ids themselves (min over the cluster picks a
-deterministic canonical member). Works for any orderable id type; callers at
-extreme scale should pass a compact id column.
+- **local** (at most `_LOCAL_MAX_EDGES` edges): the edges come to the driver
+  in a single Arrow job. A sorted factorization maps the ids to integer
+  codes in id order, and min-label propagation with pointer jumping
+  (`lab = lab[lab]`) resolves the components in numpy.
+- **distributed** (more edges): alternating large-star / small-star rounds
+  on DataFrames (Kiveris et al., "Connected Components in MapReduce and
+  Beyond", SoCC'14), O(log n) rounds, each ending in a `localCheckpoint` so
+  the plan does not grow.
+
+Both paths label every vertex with its component's minimum id, in the
+input's id type, and raise when they do not converge within
+`max_iterations`: a split component is never returned. Neither path writes
+the session conf.
 """
 
 from __future__ import annotations
 
-import logging
-
+import numpy as np
+import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
-logger = logging.getLogger(__name__)
+# Edge cap of the local path, the same bounded collect as
+# streaming/incremental.py's _KEY_PRUNE_MAX_KEYS. At the cap the driver holds
+# the Arrow edge table, the 2^21 concatenated ids and a few int64 arrays of
+# that length: measured peak driver-Python RSS 0.26 GB for long ids and
+# 0.69 GB for ~50-byte url strings (one Python str object per id).
+_LOCAL_MAX_EDGES = 1 << 20
+
+
+def _local_components(e: DataFrame, tbl: pa.Table, max_iterations: int):
+    """(url, cluster_id) of the collected edges tbl(u, v) of e, plus rounds,
+    or None when it does not converge."""
+    a, b = tbl.column("u").to_numpy(), tbl.column("v").to_numpy()
+    # sorted factorization: code order is id order, so the smallest code of
+    # a component is its smallest id
+    codes, ids = pd.factorize(np.concatenate([a, b]), sort=True)
+    ca, cb = codes[: len(a)], codes[len(a) :]
+    lab = np.arange(len(ids))
+    for rounds in range(1, max_iterations + 1):
+        la, lb = lab[ca], lab[cb]
+        if np.array_equal(la, lb):
+            t = e.schema["u"].dataType
+            schema = StructType([StructField("url", t), StructField("cluster_id", t)])
+            out = pa.table({"url": ids, "cluster_id": ids[lab]})
+            return e.sparkSession.createDataFrame(out, schema), rounds
+        # hook each edge's larger label onto its smaller one, then jump
+        # pointers until every vertex points at its tree's root
+        np.minimum.at(lab, np.maximum(la, lb), np.minimum(la, lb))
+        while not np.array_equal(nxt := lab[lab], lab):
+            lab = nxt
+    return None
+
+
+def _star_checksum(e: DataFrame) -> tuple[int, int]:
+    # bit_xor: order-insensitive and overflow-free (a LONG sum would raise
+    # under Spark 4's default ANSI mode once enough hashes accumulate)
+    return tuple(
+        e.agg(F.count("*"), F.coalesce(F.expr("bit_xor(xxhash64(u, v))"), F.lit(0))).first()
+    )
+
+
+def _two_star(e: DataFrame, max_iterations: int):
+    """(url, cluster_id) of the checkpointed edge set e(u, v), plus rounds,
+    or None when it does not converge.
+
+    - large-star: every node u links its LARGER neighbors to
+      m(u) = min({u} ∪ Γ(u)).
+    - small-star: orienting edges toward the larger endpoint, every node u
+      links its smaller neighbors and itself to their minimum.
+
+    Both are a groupBy min plus a join (no collect_list, so a hub never
+    materializes its neighbor array). The edge set converges to stars
+    (member → component minimum); it is stable when its count + XOR of pair
+    hashes repeats between rounds."""
+    prev_ckpt, prev = e, None
+    for rounds in range(1, max_iterations + 1):
+        # -- large-star ----------------------------------------------------
+        sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        mins = sym.groupBy("u").agg(F.min("v").alias("_mn"))
+        m = F.least(F.col("u"), F.col("_mn"))
+        e = (
+            sym.where(F.col("v") > F.col("u"))
+            .join(mins, "u")
+            .select(F.col("v").alias("u"), m.alias("v"))
+            .where(F.col("u") != F.col("v"))
+            .distinct()
+        )
+        # -- small-star ----------------------------------------------------
+        o = e.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
+        mins = o.groupBy("u").agg(F.min("v").alias("_mn"))
+        linked = o.join(mins, "u").select(F.col("v").alias("u"), F.col("_mn").alias("v"))
+        self_links = mins.select(F.col("u"), F.col("_mn").alias("v"))
+        e = (
+            linked.union(self_links)
+            .where(F.col("u") != F.col("v"))
+            .distinct()
+            .localCheckpoint()
+        )
+        # this round's edges are materialized (eager checkpoint): free the
+        # previous round's blocks instead of pinning O(rounds) edge copies
+        prev_ckpt.unpersist()
+        prev_ckpt = e
+        cur = _star_checksum(e)
+        if cur == prev:
+            # stars: members label to their root, roots to themselves
+            members = e.select(F.col("u").alias("url"), F.col("v").alias("cluster_id"))
+            roots = e.select(F.col("v").alias("url"), F.col("v").alias("cluster_id"))
+            return members.union(roots.distinct()), rounds
+        prev = cur
+    return None
 
 
 def connected_components(
@@ -28,130 +122,35 @@ def connected_components(
     src: str = "url_a",
     dst: str = "url_b",
     max_iterations: int = 50,
-    num_partitions: int | None = None,
     stats_out: dict | None = None,
 ) -> DataFrame:
-    """edges(src, dst) → (url, cluster_id) for every vertex appearing in
-    edges; cluster_id is the minimum vertex id of the component. `stats_out`,
-    if given, receives {"rounds": int, "converged": bool} — same reporting
-    contract as the two-star variant.
-
-    The iteration shuffles are sized to the EDGE COUNT, not the session's
-    global shuffle partitions: the dup-pair graph is orders of magnitude
-    smaller than the corpus, and running each of the ~2·iterations tiny
-    shuffles across 2×cores partitions leaves the cores idle on scheduling
-    (measured 13% utilization at local[32]). ~500k edges per partition keeps
-    tasks meaningful; pass num_partitions explicitly for huge graphs."""
-    spark = edges.sparkSession
-
-    sym = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-    ).localCheckpoint()  # materialize upstream exactly once, original conf
-    if num_partitions is None:
-        n_edges = sym.count()  # cheap: reads the checkpoint
-        par = spark.sparkContext.defaultParallelism
-        num_partitions = max(min(par, 8), n_edges // 500_000 + 1)
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_broadcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    prev_adaptive = spark.conf.get("spark.sql.adaptive.enabled")
-    converged = False
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(num_partitions))
-        # broadcast OFF inside the loop: edges and labels are co-partitioned by
-        # "u" after the first shuffle, so the iteration join needs no exchange at
-        # all — while a broadcast join would rebuild and re-ship a driver-side
-        # hash table of every label EVERY iteration (a serial ~seconds barrier
-        # that dominates the loop on small-to-mid graphs and grows with labels)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        # AQE OFF inside the loop: every per-round query here runs over
-        # already-materialized checkpoints at a fixed, deliberately small
-        # partition count, so AQE has nothing to coalesce or re-join — it
-        # only adds a per-shuffle re-planning barrier to each of the
-        # ~2·rounds tiny jobs (measured as pure driver latency on the
-        # dup-pair graphs this loop sees).
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        # the loop probes neighbors through e.v, so partition the edge table by v
-        # ONCE — labels stay partitioned by u (groupBy output), so the iteration
-        # join and the label update join both line up with zero per-round
-        # exchanges of the edge set
-        # localCheckpoint is eager, so once the repartitioned copy is
-        # materialized the first checkpoint's blocks can be dropped — at
-        # large edge counts each stale checkpoint holds the whole edge set
-        # in block storage until driver GC happens to collect the reference
-        pre = sym
-        sym = sym.repartition(num_partitions, "v").localCheckpoint()
-        pre.unpersist()
-
-        # FUSED FIRST ROUND. With the identity labelling labels₀(u) = u, round
-        # 1 of the propagation reduces to new_label(u) = min(u, min_{(u,v)∈E} v)
-        # — one aggregation over the symmetric edge set, no labels table, no
-        # join, and no separate vertex-set distinct (the groupBy keys ARE the
-        # vertex set). Identical labels to running the generic round on
-        # identity labels; also always a change when edges exist (every edge
-        # lowers its larger endpoint), so the convergence probe for round 1
-        # is skipped rather than computed.
-        labels = (
-            sym.groupBy("u")
-            .agg(F.least(F.col("u"), F.min("v")).alias("label"))
-            .localCheckpoint()
+    """edges(src, dst) → (url, cluster_id) for every vertex of a non-loop
+    edge; cluster_id is the minimum vertex id of the component, in the
+    input's id type. Raises RuntimeError when the components do not converge
+    within max_iterations rounds. `stats_out`, if given, receives
+    {"path": "local" | "distributed", "rounds": int, "n_edges": int}, where
+    n_edges counts the non-loop input edges."""
+    # a self-loop carries no connectivity, and `!=` also drops null ids
+    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).where(
+        F.col("u") != F.col("v")
+    )
+    tbl = e.limit(_LOCAL_MAX_EDGES + 1).toArrow()
+    if tbl.num_rows <= _LOCAL_MAX_EDGES:
+        path, n_edges = "local", tbl.num_rows
+        res = _local_components(e, tbl, max_iterations)
+    else:
+        del tbl  # free the cap + 1 collected rows before the distributed run
+        path = "distributed"
+        e = e.localCheckpoint()
+        n_edges = e.count()  # reads the checkpoint
+        res = _two_star(e, max_iterations)
+    if res is None:
+        raise RuntimeError(
+            f"connected_components ({path}) did not converge within "
+            f"{max_iterations} rounds on {n_edges} edges; returning now "
+            "would split components — raise max_iterations"
         )
-
-        rounds = 1
-        prev_ckpt = labels
-        for _ in range(max_iterations - 1):
-            rounds += 1
-            # smallest label visible from each vertex through one hop
-            nbr_min = (
-                sym.alias("e")
-                .join(labels.alias("l"), F.col("e.v") == F.col("l.u"), "inner")
-                .select(F.col("e.u").alias("nu"), F.col("l.label").alias("label"))
-                .groupBy("nu")
-                .agg(F.min("label").alias("nbr_label"))
-            )
-            new_labels = (
-                labels.alias("l")
-                .join(nbr_min.alias("n"), F.col("l.u") == F.col("n.nu"), "left")
-                .select(
-                    F.col("l.u").alias("u"),
-                    F.least(
-                        F.col("l.label"),
-                        F.coalesce(F.col("n.nbr_label"), F.col("l.label")),
-                    ).alias("new_label"),
-                    F.col("l.label").alias("old_label"),
-                )
-            ).localCheckpoint()
-            # the new round's labels are materialized; the previous round's
-            # checkpoint blocks are dead — free them now rather than keeping
-            # O(rounds) full label copies pinned in block storage
-            prev_ckpt.unpersist()
-            prev_ckpt = new_labels
-            changed = new_labels.where(F.col("new_label") < F.col("old_label")).limit(1)
-            labels = new_labels.select("u", F.col("new_label").alias("label"))
-            if changed.count() == 0:
-                converged = True
-                break
-    finally:
-        # a failed job mid-loop must not leave the whole session running with
-        # ~num_partitions shuffle partitions, broadcast joins disabled, or
-        # AQE off
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_broadcast)
-        spark.conf.set("spark.sql.adaptive.enabled", prev_adaptive)
-
+    clusters, rounds = res
     if stats_out is not None:
-        stats_out["rounds"] = rounds
-        stats_out["converged"] = converged
-    if not converged:
-        # a component with diameter > max_iterations would be silently split;
-        # surface it instead (near-dup clusters are near-cliques, so hitting
-        # this means the edge set is pathological — raise max_iterations or
-        # pre-contract with the exact-dup path)
-        logger.warning(
-            "connected_components: min-label propagation did not converge "
-            "within %d iterations — some components may be split into "
-            "multiple cluster_ids",
-            max_iterations,
-        )
-
-    return labels.select(F.col("u").alias("url"), F.col("label").alias("cluster_id"))
+        stats_out.update(path=path, rounds=rounds, n_edges=n_edges)
+    return clusters

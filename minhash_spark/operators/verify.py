@@ -1,8 +1,9 @@
 """Jaccard verification — the reference's `query` estimator (fraction of
 positionally-equal sketch cells, /root/reference/src/serial/minhash-serial.c:16-26)
-as a pure JVM expression over candidate pairs: zip_with equality + aggregate
-sum, divided by sketch_size. No Python in this stage at all; it stays inside
-whole-stage codegen.
+over candidate pairs. `verify_pairs` evaluates it with an Arrow pandas UDF:
+one numpy equality per Arrow batch of signature pairs. `estimate_jaccard`
+is the same estimator as a JVM expression (zip_with equality + aggregate
+sum, divided by sketch_size).
 """
 
 from __future__ import annotations

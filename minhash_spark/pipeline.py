@@ -9,7 +9,8 @@ catalog is configured; same layout either way):
     candidates/   (url_a, url_b)
     pairs/        (url_a, url_b, est_jaccard)
     clusters/     (url, cluster_id)
-    metrics/      one JSON line per stage run (lineage checkpoint)
+    metrics/      one JSON line per stage run (lineage checkpoint); the
+                  clusters line carries the CC path, rounds and edge count
 
 Candidate generation and verification are SEPARATE stages (each one job,
 each ending in a parquet write) on purpose: the two biggest shuffles in the
@@ -69,23 +70,10 @@ class PipelineResult:
 
 
 class DedupPipeline:
-    def __init__(
-        self,
-        spark: SparkSession,
-        cfg: DedupConfig,
-        out_dir: str,
-        cc_variant: str = "minlabel",
-    ):
-        """cc_variant: "minlabel" (default — O(diameter) rounds, cheapest on
-        the near-clique graphs LSH produces) or "twostar" (large-star/
-        small-star, O(log n) rounds — pick for edge sets that may contain
-        long chains, e.g. heavy containment-dedup output)."""
-        if cc_variant not in ("minlabel", "twostar"):
-            raise ValueError(f"unknown cc_variant {cc_variant!r}")
+    def __init__(self, spark: SparkSession, cfg: DedupConfig, out_dir: str):
         self.spark = spark
         self.cfg = cfg
         self.out_dir = out_dir
-        self.cc_variant = cc_variant
         self.metrics_dir = os.path.join(out_dir, "metrics")
         os.makedirs(self.metrics_dir, exist_ok=True)
 
@@ -185,9 +173,10 @@ class DedupPipeline:
     def compute_verified(
         self, signatures_path: str, candidates_path: str, force: bool = False
     ) -> str:
-        """Jaccard verification of a materialized candidate set: two
-        shuffle-hash joins against the signature table, filtered at
-        cfg.threshold."""
+        """Jaccard verification of a materialized candidate set: two joins
+        against the signature table (the session conf picks broadcast or
+        shuffled hash from real sizes), an Arrow pandas UDF estimate, and a
+        filter at cfg.jaccard_threshold."""
         out = os.path.join(self.out_dir, "pairs")
         if _exists(out) and not force:
             return out
@@ -210,18 +199,15 @@ class DedupPipeline:
             return out
         t0 = time.time()
         edges = self.spark.read.parquet(pairs_path)
-        if self.cc_variant == "twostar":
-            from .operators.cluster_twostar import connected_components_twostar
-
-            clusters = connected_components_twostar(edges)
-        else:
-            clusters = connected_components(edges)
-        clusters.write.mode("overwrite").parquet(out)
+        cc: dict = {}
+        connected_components(edges, stats_out=cc).write.mode("overwrite").parquet(out)
         n = self.spark.read.parquet(out).count()
         self._log_metric(
             "clusters",
             n_clustered_docs=n,
-            cc_variant=self.cc_variant,
+            cc_path=cc["path"],
+            cc_rounds=cc["rounds"],
+            n_edges=cc["n_edges"],
             seconds=time.time() - t0,
         )
         return out
@@ -245,8 +231,6 @@ class DedupPipeline:
 
 def run_dedup(
     spark: SparkSession, pages: DataFrame, out_dir: str, cfg: DedupConfig | None = None,
-    resume: bool = True, cc_variant: str = "minlabel",
+    resume: bool = True,
 ) -> PipelineResult:
-    return DedupPipeline(
-        spark, cfg or DedupConfig(), out_dir, cc_variant=cc_variant
-    ).run(pages, resume=resume)
+    return DedupPipeline(spark, cfg or DedupConfig(), out_dir).run(pages, resume=resume)

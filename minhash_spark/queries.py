@@ -142,23 +142,6 @@ FROM u JOIN g ON u.text = g.text WHERE g.c >= 2
 """
 
 
-def q_dedup_clusters_twostar(spark, sf_dir):
-    """Same pipeline as dedup_clusters_exact but resolved with the
-    large-star/small-star O(log n)-round connected-components variant —
-    identical labels by the component-minimum contract, so the same oracle
-    value-checks both CC implementations."""
-    from .operators.cluster_twostar import connected_components_twostar
-
-    edges = _minhash_text_dup_pairs(spark, sf_dir).select(
-        F.col("id_a").alias("url_a"), F.col("id_b").alias("url_b")
-    )
-    cc = connected_components_twostar(edges)
-    return cc.select(F.col("url").alias("doc_id"), F.col("cluster_id"))
-
-
-SQL_DEDUP_CLUSTERS_TWOSTAR = SQL_DEDUP_CLUSTERS_EXACT
-
-
 # --------------------------------------------------------------------------
 # text analysis
 # --------------------------------------------------------------------------
@@ -1675,7 +1658,6 @@ QUERIES = {
     "exact_dedup_groups": q_exact_dedup_groups,
     "minhash_text_dup_pairs": q_minhash_text_dup_pairs,
     "dedup_clusters_exact": q_dedup_clusters_exact,
-    "dedup_clusters_twostar": q_dedup_clusters_twostar,
     "token_count": q_token_count,
     "token_count_bpe": q_token_count_bpe,
     "quality_features": q_quality_features,
@@ -1731,7 +1713,6 @@ ORACLE_SQL = {
     "exact_dedup_groups": SQL_EXACT_DEDUP_GROUPS,
     "minhash_text_dup_pairs": SQL_MINHASH_TEXT_DUP_PAIRS,
     "dedup_clusters_exact": SQL_DEDUP_CLUSTERS_EXACT,
-    "dedup_clusters_twostar": SQL_DEDUP_CLUSTERS_TWOSTAR,
     "token_count": SQL_TOKEN_COUNT,
     "token_count_bpe": SQL_TOKEN_COUNT_BPE,
     "quality_features": SQL_QUALITY_FEATURES,

@@ -1,23 +1,20 @@
-"""Connected-components comparison at bench scale: min-label propagation
-(operators/cluster.py, O(diameter) rounds) vs alternating large-star/
-small-star (operators/cluster_twostar.py, O(log n) rounds) on the SAME
-verified-pair edge set — the measured backing for the O(log n) claim.
+"""Connected-components timing at bench scale: operators/cluster.py's
+`connected_components` on the verified-pair edge set of the bench corpus
+and on a high-diameter chain fixture.
 
 Reuses the tmpfs signature cache of profile_pair_stages.py (writes it if
-absent), derives the verified pairs once, then runs each CC variant
-`repeats` times reporting wall + rounds + cluster checksum equality.
+absent), derives the verified pairs once, then runs the operator `repeats`
+times, reporting wall, path (local/distributed), rounds and whether every
+repeat produced the same assignment checksum.
 
-The dedup graph is clique-shaped (diameter ~1-2), so it cannot show the
-O(log n) vs O(diameter) separation — `chain` mode synthesizes a
-HIGH-DIAMETER fixture instead: K disjoint path graphs of length L with the
-component-minimum id at one end (min-label's worst case: the label must
-walk all L-1 hops, one per round, while large-star/small-star contracts
-the path in O(log L) rounds). That is the regime a real corpus hits when
-near-dup clusters chain through borderline pairs instead of forming
-cliques.
+The dedup graph is clique-shaped (diameter ~1-2). `chain` mode synthesizes
+a HIGH-DIAMETER fixture instead: K disjoint path graphs of length L with the
+component-minimum id at one end, the worst case for plain label propagation
+(one hop per round) — the regime a real corpus hits when near-dup clusters
+chain through borderline pairs instead of forming cliques.
 
-Usage: SPARK_GRAFT_CPUS=32 python scripts/bench_cc.py [sf_dir] [amplify] [repeats]
-       SPARK_GRAFT_CPUS=32 python scripts/bench_cc.py chain [length] [n_chains] [repeats]
+Usage: SPARK_GRAFT_CPUS=4 python scripts/bench_cc.py [sf_dir] [amplify] [repeats]
+       SPARK_GRAFT_CPUS=4 python scripts/bench_cc.py chain [length] [n_chains] [repeats]
 """
 
 from __future__ import annotations
@@ -36,7 +33,6 @@ from minhash_spark.operators.signatures import with_minhash_signature
 from minhash_spark.operators.lsh import bands_table, candidate_pairs, release_persisted
 from minhash_spark.operators.verify import verify_pairs
 from minhash_spark.operators.cluster import connected_components
-from minhash_spark.operators.cluster_twostar import connected_components_twostar
 from minhash_spark.queries import CFG
 import bench
 
@@ -51,39 +47,21 @@ def _checksum(cc):
     ).collect()[0].asDict()
 
 
-def run_variants(edges, repeats: int, min_label_iters: int, twostar_iters: int) -> dict:
-    out, sums = {}, set()
-    for name, fn in (
-        (
-            "min_label",
-            lambda st: connected_components(
-                edges, max_iterations=min_label_iters, stats_out=st
-            ),
-        ),
-        (
-            "twostar",
-            lambda st: connected_components_twostar(
-                edges, max_iterations=twostar_iters, stats_out=st
-            ),
-        ),
-    ):
-        walls, rounds, converged = [], None, None
-        for _ in range(repeats):
-            st: dict = {}
-            t0 = time.time()
-            cc = fn(st)
-            cs = _checksum(cc)
-            walls.append(round(time.time() - t0, 1))
-            rounds = st.get("rounds")
-            converged = st.get("converged")
-            sums.add((cs["s"], cs["n"]))
-        out[name] = {
-            "wall_best": min(walls),
-            "walls": walls,
-            "rounds": rounds,
-            "converged": converged,
-        }
-    return {"variants": out, "identical_assignments": len(sums) == 1}
+def run_cc(edges, repeats: int, max_iterations: int) -> dict:
+    walls, sums = [], set()
+    for _ in range(repeats):
+        st = {}
+        t0 = time.time()
+        cs = _checksum(connected_components(edges, max_iterations=max_iterations, stats_out=st))
+        walls.append(round(time.time() - t0, 2))
+        sums.add((cs["s"], cs["n"]))
+    return {
+        "wall_best": min(walls),
+        "walls": walls,
+        "path": st["path"],
+        "rounds": st["rounds"],
+        "identical_assignments": len(sums) == 1,
+    }
 
 
 def main_dedup_graph() -> None:
@@ -114,7 +92,7 @@ def main_dedup_graph() -> None:
 
     out = {"fixture": "dedup_graph", "n_docs": n_docs, "n_edges": n_edges,
            "cpus": default_parallelism(), "amplify": amplify}
-    out.update(run_variants(edges, repeats, 50, 30))
+    out.update(run_cc(edges, repeats, 50))
     print(json.dumps(out))
 
 
@@ -125,8 +103,7 @@ def main_chain() -> None:
 
     spark = get_spark("bench-cc-chain")
     # chain c occupies ids [c·L, (c+1)·L); edges connect consecutive ids, so
-    # the component minimum c·L sits at one END — min-label must carry it
-    # across all L−1 hops, one round per hop (its true worst case)
+    # the component minimum c·L sits at one END, L−1 hops from the far end
     e = spark.range(n_chains * length).withColumn(
         "i", F.pmod("id", F.lit(length))
     )
@@ -140,9 +117,7 @@ def main_chain() -> None:
     out = {"fixture": "chain", "length": length, "n_chains": n_chains,
            "n_vertices": n_chains * length, "n_edges": n_edges,
            "diameter": length - 1, "cpus": default_parallelism()}
-    # min-label needs ≥ diameter rounds; give it headroom so it converges
-    # and the rounds count is the measured diameter, not the cap
-    out.update(run_variants(edges, repeats, length + 10, 60))
+    out.update(run_cc(edges, repeats, 60))
     print(json.dumps(out))
 
 

@@ -27,14 +27,6 @@ def main() -> None:
     p.add_argument("--threshold", type=float, default=0.8)
     p.add_argument("--bands", type=int, default=32)
     p.add_argument("--rows", type=int, default=4)
-    p.add_argument(
-        "--cc",
-        choices=["minlabel", "twostar"],
-        default="minlabel",
-        help="connected-components variant: minlabel (O(diameter) rounds — "
-        "near-clique LSH graphs) or twostar (O(log n) rounds — chain-heavy "
-        "edge sets)",
-    )
     args = p.parse_args()
 
     from minhash_spark.config import DedupConfig, MinHashConfig
@@ -51,9 +43,7 @@ def main() -> None:
     )
     spark = get_spark("minhash-spark-pipeline")
     pages = read_pages(spark, args.input)
-    result = run_dedup(
-        spark, pages, args.output, cfg, resume=not args.no_resume, cc_variant=args.cc
-    )
+    result = run_dedup(spark, pages, args.output, cfg, resume=not args.no_resume)
     print(
         json.dumps(
             {
