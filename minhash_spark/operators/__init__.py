@@ -1,5 +1,5 @@
 from .signatures import with_minhash_signature
-from .lsh import bands_table, candidate_pairs, bucket_stats
+from .lsh import band_keys, bands_table, candidate_pairs, bucket_stats
 from .verify import estimate_jaccard, verify_pairs
 from .cluster import connected_components
 from .exact import exact_dup_groups, dedup_exact
@@ -19,6 +19,7 @@ from .multimodal import extract_media_features, decode_media, fake_decode
 
 __all__ = [
     "with_minhash_signature",
+    "band_keys",
     "bands_table",
     "candidate_pairs",
     "bucket_stats",

@@ -1,10 +1,10 @@
 """LSH banding + candidate-pair generation.
 
 Banding slices each signature into `bands` groups of `rows` values and keys
-each slice with xxhash64 — documents agreeing on any band become a candidate
-pair (standard MinHash-LSH; the signature semantics underneath are the
-reference's, SURVEY.md §2.3). All JVM-side: slice/transform/posexplode/
-xxhash64 are built-in expressions inside whole-stage codegen; no Python.
+each slice with xxhash64 (`band_keys`) — documents agreeing on any band
+become a candidate pair (standard MinHash-LSH; the signature semantics
+underneath are the reference's, SURVEY.md §2.3). All JVM-side: slice/
+transform/explode/xxhash64 are built-in expressions; no Python.
 
 Scale/skew design:
 - The candidate join is a self equi-join on band_key — shuffle
@@ -20,7 +20,7 @@ Scale/skew design:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..config import DedupConfig
@@ -45,39 +45,39 @@ def release_persisted() -> None:
         _PERSISTED.pop().unpersist()
 
 
+def band_keys(sig_col: str, cfg: DedupConfig, packed: bool = True) -> Column:
+    """array<bigint> of a signature's `bands` band keys: band i's key is
+    xxhash64(i, slice i) over its `rows` signature values. The band index is
+    folded INTO the key, so equal slices in different bands never collide
+    into one bucket and no separate band_id column travels through the
+    caches and shuffles.
+
+    packed=True takes the packed int32 binary buffer (substring per band),
+    packed=False the array<int> form (slice per band). Equal signatures get
+    equal keys within one form; the key VALUES differ between forms (hash of
+    bytes vs of an int list), which is why incremental stores record their
+    signature format."""
+    rows = cfg.rows
+    sig = F.col(sig_col)
+    if packed:
+        band = lambda i: F.substring(sig, i * (rows * 4) + 1, rows * 4)
+    else:
+        band = lambda i: F.slice(sig, i * rows + 1, rows)
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(cfg.bands - 1)), lambda i: F.xxhash64(i, band(i))
+    )
+
+
 def bands_table(
     sig_df: DataFrame, cfg: DedupConfig, id_col: str = "url", sig_col: str = "minhash"
 ) -> DataFrame:
-    """(id, minhash) → (id, band_key). band_key is xxhash64 over the band's
-    `rows` signature values plus the band index — the index is folded INTO
-    the key (equal slices in different bands never collide into one bucket),
-    so no separate band_id column travels through the cache/shuffles; at
-    10^12 docs the band table is the biggest intermediate and every column
-    on it is paid 32×/doc.
-
-    Accepts the signature in either representation: array<int> (slice per
-    band) or the packed int32 binary buffer (substring per band — still
-    whole-stage codegen). Equal signatures produce equal buckets in both
-    forms; the band_key VALUES differ between forms (hash of a list vs of
-    bytes), which is fine — band keys are internal bucket ids, never part
-    of a result contract."""
-    rows = cfg.rows
-    if dict(sig_df.dtypes)[sig_col] == "binary":
-        band_slices = F.transform(
-            F.sequence(F.lit(0), F.lit(cfg.bands - 1)),
-            lambda i: F.substring(F.col(sig_col), i * (rows * 4) + 1, rows * 4),
-        )
-    else:
-        band_slices = F.transform(
-            F.sequence(F.lit(0), F.lit(cfg.bands - 1)),
-            lambda i: F.slice(F.col(sig_col), i * rows + 1, rows),
-        )
-    return (
-        sig_df.select(id_col, F.posexplode(band_slices).alias("band_id", "band_sig"))
-        .select(
-            id_col,
-            F.xxhash64(F.col("band_id"), F.col("band_sig")).alias("band_key"),
-        )
+    """(id, minhash) → (id, band_key): one row per band of `band_keys`. At
+    10^12 docs the band table is the biggest intermediate and every column on
+    it is paid 32×/doc, so it carries only the id and the key. Accepts the
+    packed binary or the array<int> signature."""
+    packed = dict(sig_df.dtypes)[sig_col] == "binary"
+    return sig_df.select(
+        id_col, F.explode(band_keys(sig_col, cfg, packed)).alias("band_key")
     )
 
 

@@ -12,6 +12,14 @@ micro-batch is deduplicated against the accumulated signature store
 
 ``availableNow`` triggers make the same code run as a drain-and-stop job —
 the pattern for periodic incremental dedup over a landing zone.
+
+The store (`incremental_dedup_batch`, `probe_store`) has two paths with the
+same results and the same store rows. A narrow batch (rows × bands within
+_KEY_PRUNE_MAX_KEYS) crosses into Python once: one job computes its
+signatures and band keys and brings them to the driver, which prunes the
+store by Bloom filter, fetches the matching band rows and stored signatures
+with broadcast semi joins, and counts and verifies pairs in numpy. A wide
+batch runs the same steps as Spark joins and UDFs.
 """
 
 from __future__ import annotations
@@ -23,6 +31,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
+    DoubleType,
+    IntegerType,
+    LongType,
     StringType,
     StructField,
     StructType,
@@ -31,7 +42,7 @@ from pyspark.sql.types import (
 
 from ..config import DedupConfig
 from ..operators.signatures import with_minhash_signature
-from ..operators.lsh import bands_table, candidate_pairs
+from ..operators.lsh import band_keys, bands_table
 from ..operators.verify import verify_pairs
 
 PAGES_SCHEMA = StructType(
@@ -163,8 +174,10 @@ _MANIFEST = "_bucket_manifest.json"
 _BLOOM_K = 4  # probes per key
 _BLOOM_BITS_PER_KEY = 24  # → fill ≈ 0.15 at k=4 → fpp ≈ 5e-4 per key test
 _BLOOM_MIN_BITS = 1024
-# driver-side cap on collected (bucket, key) rows for read-time probing;
-# past it the batch is "wide" and key pruning degrades to bucket pruning
+# driver-side cap on collected rows. A batch is narrow (resolved on the
+# driver) while rows × bands, its store band matches and its band collisions
+# stay within it; the wide path Bloom-probes only while its distinct
+# (bucket, key) pairs do, and degrades to bucket pruning past it
 _KEY_PRUNE_MAX_KEYS = 1 << 18
 
 
@@ -215,7 +228,31 @@ def _bloom_maybe_any(bitmap, m: int, keys_u64) -> bool:
     return bool(bits.all(axis=1).any())
 
 
-_BLOOM_ROW_SCHEMA = "store_bucket int, n long, m long, bits binary"
+def _bloom_entry(keys_u64) -> dict:
+    """Manifest entry {n, m, bits (base64)} of one partition's distinct keys."""
+    import base64
+
+    m = _bloom_m_bits(len(keys_u64))
+    bits = base64.b64encode(_bloom_build(keys_u64, m).tobytes()).decode()
+    return {"n": len(keys_u64), "m": m, "bits": bits}
+
+
+def _keys_by_bucket(keys_i64, n_buckets: int) -> dict[int, "object"]:
+    """{store_bucket: distinct uint64 keys} of int64 keys on the driver, with
+    the JVM's bucket (`_bucket_col`: pmod of an xxhash64 value)."""
+    import numpy as np
+
+    keys = np.unique(np.asarray(keys_i64, dtype=np.int64))
+    bucket = np.mod(keys, n_buckets)  # numpy's mod takes the divisor's sign
+    order = np.argsort(bucket, kind="stable")
+    ids, starts = np.unique(bucket[order], return_index=True)
+    return {
+        int(b): k.view(np.uint64)
+        for b, k in zip(ids, np.split(keys[order], starts[1:]))
+    }
+
+
+_BLOOM_ROW_SCHEMA = "store_bucket int, n long, m long, bits string"
 
 
 def _bucket_blooms(df_bucketed: DataFrame, key_col: str) -> dict[str, dict]:
@@ -223,22 +260,13 @@ def _bucket_blooms(df_bucketed: DataFrame, key_col: str) -> dict[str, dict]:
     keys, built distributively (groupBy + applyInPandas: executors see the
     keys they are about to write; the driver collects only one ~m/8-byte row
     per bucket — bounded by the store layout, not the batch size)."""
-    import base64
-
     import numpy as np
     import pandas as pd
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
         keys = np.unique(pdf["k"].to_numpy(dtype=np.int64).view(np.uint64))
-        m = _bloom_m_bits(len(keys))
-        return pd.DataFrame(
-            {
-                "store_bucket": [int(pdf["store_bucket"].iloc[0])],
-                "n": [len(keys)],
-                "m": [m],
-                "bits": [_bloom_build(keys, m).tobytes()],
-            }
-        )
+        row = {"store_bucket": int(pdf["store_bucket"].iloc[0]), **_bloom_entry(keys)}
+        return pd.DataFrame({k: [v] for k, v in row.items()})
 
     rows = (
         df_bucketed.select("store_bucket", F.col(key_col).alias("k"))
@@ -247,11 +275,7 @@ def _bucket_blooms(df_bucketed: DataFrame, key_col: str) -> dict[str, dict]:
         .collect()
     )
     return {
-        str(r["store_bucket"]): {
-            "n": int(r["n"]),
-            "m": int(r["m"]),
-            "bits": base64.b64encode(bytes(r["bits"])).decode(),
-        }
+        str(r["store_bucket"]): {"n": int(r["n"]), "m": int(r["m"]), "bits": r["bits"]}
         for r in rows
     }
 
@@ -347,6 +371,8 @@ def pruned_store_read(
     epoch_id: int,
     touched_buckets: list[int],
     key_filter: dict[int, "object"] | None = None,
+    stats_out: dict | None = None,
+    schema: StructType | None = None,
 ) -> DataFrame:
     """Read a bucketed store side (`<store>/bands` or `<store>/signatures`)
     pruned to (a) batches other than `epoch_id` (a failed previous attempt of
@@ -371,11 +397,18 @@ def pruned_store_read(
     per-bucket key filter and skipped when NO batch key can be present —
     key-level pruning inside touched buckets, the piece bucket pruning
     cannot provide when a wide batch touches every bucket. Partitions whose
-    manifests predate blooms are kept unconditionally (no false pruning)."""
+    manifests predate blooms are kept unconditionally (no false pruning).
+
+    `stats_out`, if given, has the numbers of partitions read and
+    Bloom-pruned added to its `partitions_read` / `partitions_bloom_pruned`
+    (callers read both store sides into one dict). A `schema` of the side's
+    data columns skips Spark's schema-inference job over the parquet
+    footers; the partition columns are still taken from the paths."""
     import base64
 
     import numpy as np
 
+    reader = spark.read if schema is None else spark.read.schema(schema)
     want = {int(b) for b in touched_buckets}
     paths: list[str] = []
     bloom_pruned: list[str] = []
@@ -407,6 +440,9 @@ def pruned_store_read(
                         bloom_pruned.append(path)
                         continue
                 paths.append(path)
+    if stats_out is not None:
+        for k, n in (("partitions_read", paths), ("partitions_bloom_pruned", bloom_pruned)):
+            stats_out[k] = stats_out.get(k, 0) + len(n)
     if not paths:
         if bloom_pruned:
             # every bucket-matching partition was Bloom-rejected: the join
@@ -414,15 +450,433 @@ def pruned_store_read(
             # store schema (one footer read) instead of falling back to a
             # whole-store root read that would defeat the pruning
             return (
-                spark.read.option("basePath", store_dir)
+                reader.option("basePath", store_dir)
                 .parquet(bloom_pruned[0])
                 .limit(0)
             )
-        return spark.read.parquet(store_dir).where(
+        return reader.parquet(store_dir).where(
             (F.col("batch_id") != epoch_id)
             & F.col("store_bucket").isin(list(want))
         )
-    return spark.read.option("basePath", store_dir).parquet(*paths)
+    return reader.option("basePath", store_dir).parquet(*paths)
+
+
+def _spark_pruned_read(
+    spark: SparkSession,
+    store_dir: str,
+    epoch_id: int,
+    df: DataFrame,
+    bucket_expr,
+    key_expr,
+    key_prune: bool,
+    stats_out: dict | None,
+) -> DataFrame:
+    """pruned_store_read of the partitions that may hold df's keys, from keys
+    that stay in Spark: Bloom-probed when the distinct (bucket, key) pairs
+    fit _collect_key_filter's cap, else pruned by bucket only."""
+    kf = _collect_key_filter(df, bucket_expr, key_expr) if key_prune else None
+    if kf is None:
+        touched = [
+            r[0] for r in df.select(bucket_expr.alias("b")).distinct().collect()
+        ]
+        return pruned_store_read(spark, store_dir, epoch_id, touched, stats_out=stats_out)
+    return pruned_store_read(spark, store_dir, epoch_id, list(kf), kf, stats_out)
+
+
+def _write_batch_side(
+    side_dir: str, epoch_id: int, rows: DataFrame, blooms: dict[str, dict]
+) -> None:
+    """Overwrite one store side's batch_id=epoch_id directory with `rows`
+    (partitioned by their store_bucket) and record its manifest.
+
+    `rows` must be CLUSTERED: each bucket in one task (repartition on the
+    bucket column, or one task for a small batch). Otherwise every task
+    opens a writer per touched bucket — at thousands of store buckets that
+    is tasks×buckets small files per batch (measured 5× slower batches at
+    1024 buckets), and at corpus scale a metadata explosion."""
+    out = os.path.join(side_dir, f"batch_id={epoch_id}")
+    rows.write.mode("overwrite").partitionBy("store_bucket").parquet(out)
+    _write_bucket_manifest(out, blooms)
+
+
+def _new_stats(path: str) -> dict:
+    return {"path": path, "partitions_read": 0, "partitions_bloom_pruned": 0}
+
+
+def _pair_schema(url_type) -> StructType:
+    return StructType(
+        [
+            StructField("url_a", url_type),
+            StructField("url_b", url_type),
+            StructField("est_jaccard", DoubleType()),
+        ]
+    )
+
+
+def _collect_batch(batch_df: DataFrame, cfg: DedupConfig):
+    """Job 1 of the narrow path, and its only Python stage: the batch's
+    (url, minhash, band_keys, url_key = xxhash64(url)) as an Arrow table.
+    None when the batch is wide (rows × bands > _KEY_PRUNE_MAX_KEYS), which a
+    bounded count decides BEFORE the signature UDF runs, so the UDF runs once
+    per batch on either path; the count also bounds the collect."""
+    max_rows = _KEY_PRUNE_MAX_KEYS // cfg.bands
+    # a count through toArrow is one job; DataFrame.count is two under AQE
+    if batch_df.select(F.lit(1)).limit(max_rows + 1).toArrow().num_rows > max_rows:
+        return None
+    sigs = with_minhash_signature(batch_df.select("url", "text"), cfg, packed=True)
+    return sigs.select(
+        "url",
+        "minhash",
+        band_keys("minhash", cfg).alias("band_keys"),
+        F.xxhash64("url").alias("url_key"),
+    ).toArrow()
+
+
+def _batch_sigs(spark: SparkSession, batch_df: DataFrame, tbl, cfg) -> DataFrame:
+    """The batch's (url, minhash) for the Spark path: the collected table of
+    `_collect_batch` when it ran (the UDF does not run twice), else the
+    signature UDF."""
+    if tbl is None:
+        return with_minhash_signature(
+            batch_df.select("url", "text"), cfg, packed=True
+        ).select("url", "minhash")
+    schema = StructType([batch_df.schema["url"], StructField("minhash", BinaryType())])
+    return spark.createDataFrame(tbl.select(["url", "minhash"]), schema)
+
+
+def _join_rows(left_keys, right_keys) -> int:
+    """Rows of the equi-join of two int64 key arrays, without building it."""
+    import numpy as np
+
+    ku, cu = np.unique(left_keys, return_counts=True)
+    kv, cv = np.unique(right_keys, return_counts=True)
+    _, ia, ib = np.intersect1d(ku, kv, assume_unique=True, return_indices=True)
+    return int(cu[ia] @ cv[ib])
+
+
+_VERIFY_CHUNK = 1 << 16  # pairs per estimator block: 2 × 32 MiB of int32 cells
+
+
+def _resolve_on_driver(
+    spark: SparkSession,
+    tbl,
+    url_type,
+    store_path: str,
+    cfg: DedupConfig,
+    epoch_id: int,
+    n_store_buckets: int,
+    probe: bool,
+    stats: dict,
+):
+    """Steps 2-6 of the narrow path (see incremental_dedup_batch) for the
+    table of `_collect_batch`: the verified (url_a, url_b, est_jaccard) as an
+    Arrow table, or None when the band collisions exceed _KEY_PRUNE_MAX_KEYS
+    rows (a hot band key), for the Spark path to take over.
+
+    An ingest pairs the batch with itself (url_a < url_b) and with the store
+    minus `epoch_id` (canonicalized), and verifies with every signature row
+    of a candidate url, as verify_pairs over store ∪ batch does. A probe
+    pairs only with the store (url_a = probe url), and its signature
+    overrides a stored one of the same url. Fills `stats` with
+    n_candidates, n_store_band_rows and the partition counts."""
+    import numpy as np
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    cap = _KEY_PRUNE_MAX_KEYS
+    sig_store, band_store = _store_subdirs(store_path)
+    tbl = tbl.filter(pc.is_valid(tbl["url"]))  # a null url never joins
+    urls = tbl["url"].to_numpy(zero_copy_only=False)
+    batch = pd.DataFrame(
+        {
+            "band_key": pc.list_flatten(tbl["band_keys"]).to_numpy(),
+            "url": np.repeat(urls, cfg.bands),
+        }
+    )
+    store = pd.DataFrame(
+        {"band_key": batch.band_key[:0], "url": urls[:0], "url_key": batch.band_key[:0]}
+    )
+    if _has_batches(band_store):
+        # job 2: the store's band rows sharing a key with the batch, from the
+        # Bloom-surviving partitions, through a broadcast semi join
+        kf = _keys_by_bucket(batch.band_key, n_store_buckets)
+        prev = pruned_store_read(
+            spark, band_store, epoch_id, list(kf), kf, stats,
+            StructType(
+                [StructField("url", url_type), StructField("band_key", LongType())]
+            ),
+        )
+        keys = spark.createDataFrame(pa.table({"band_key": np.unique(batch.band_key)}))
+        store = (
+            prev.join(F.broadcast(keys), "band_key", "left_semi")
+            .where(F.col("url").isNotNull())
+            .select("band_key", "url", F.xxhash64("url").alias("url_key"))
+            .limit(cap + 1)
+            .toArrow()
+            .to_pandas()
+        )
+        if len(store) > cap:
+            return None
+
+    # band collisions, each counted once as in candidate_pairs: the batch
+    # with itself once per unordered pair, and the batch with the store
+    # (disjoint sides: the store excludes this epoch)
+    multi = batch[batch.band_key.duplicated(keep=False)]
+    legs = [(batch, store, False)]
+    if not probe:
+        legs.append((multi, multi, True))
+    if sum(_join_rows(l.band_key, r.band_key) for l, r, _ in legs) > cap:
+        return None
+    ends = []
+    for left, right, ordered in legs:
+        m = left.merge(right[["band_key", "url"]], on="band_key", suffixes=("_a", "_b"))
+        a, b = m.url_a.to_numpy(), m.url_b.to_numpy()
+        keep = a < b if ordered else a != b
+        a, b = a[keep], b[keep]
+        if not probe:
+            lo = a < b
+            a, b = np.where(lo, a, b), np.where(lo, b, a)
+        ends.append((a, b))
+    a, b = (np.concatenate(e) for e in zip(*ends))
+    n_bands = pd.DataFrame({"url_a": a, "url_b": b}).value_counts(sort=False)
+    cand = n_bands[n_bands >= cfg.min_band_matches].index.to_frame(index=False)
+    stats.update(n_candidates=len(cand), n_store_band_rows=len(store))
+
+    sigs = pd.DataFrame(
+        {"url": urls, "minhash": tbl["minhash"].to_numpy(zero_copy_only=False)}
+    )
+    need = pd.unique(cand.url_b if probe else np.concatenate([cand.url_a, cand.url_b]))
+    if len(need) and _has_batches(sig_store):
+        # job 3: the stored signatures of the candidate urls, the same way
+        batch_keys = pd.DataFrame({"url": urls, "url_key": tbl["url_key"].to_numpy()})
+        url_key = (
+            pd.concat([batch_keys, store[["url", "url_key"]]])
+            .drop_duplicates("url")
+            .set_index("url")["url_key"]
+        )
+        kf = _keys_by_bucket(url_key.loc[need], n_store_buckets)
+        prev = pruned_store_read(
+            spark, sig_store, epoch_id, list(kf), kf, stats,
+            StructType(
+                [StructField("url", url_type), StructField("minhash", BinaryType())]
+            ),
+        )
+        want = spark.createDataFrame(
+            pa.table({"url": pa.array(need, type=to_arrow_type(url_type))}),
+            StructType([StructField("url", url_type)]),
+        )
+        stored = (
+            prev.join(F.broadcast(want), "url", "left_semi")
+            .select("url", "minhash")
+            .toArrow()
+            .to_pandas()
+        )
+        if probe:
+            stored = stored[~stored.url.isin(urls)]
+        sigs = pd.concat([stored, sigs], ignore_index=True)
+
+    # verify: the estimator of estimate_jaccard_udf, (A == B).sum(1) / size,
+    # over every (pair, signature row of url_a, signature row of url_b)
+    size = cfg.minhash.sketch_size
+    S = np.frombuffer(b"".join(sigs.minhash), dtype="<i4").reshape(len(sigs), size)
+    idx = pd.DataFrame({"url": sigs.url, "i": np.arange(len(sigs))})
+    m = cand.merge(idx.set_axis(["url_a", "i_a"], axis=1), on="url_a").merge(
+        idx.set_axis(["url_b", "i_b"], axis=1), on="url_b"
+    )
+    ia, ib = m.i_a.to_numpy(), m.i_b.to_numpy()
+    est = np.empty(len(m))
+    for s in range(0, len(m), _VERIFY_CHUNK):
+        t = slice(s, s + _VERIFY_CHUNK)
+        est[t] = (S[ia[t]] == S[ib[t]]).sum(axis=1)
+    est /= float(size)
+    keep = est >= cfg.jaccard_threshold
+    at = to_arrow_type(url_type)
+    return pa.table(
+        {
+            "url_a": pa.array(m.url_a.to_numpy()[keep], type=at),
+            "url_b": pa.array(m.url_b.to_numpy()[keep], type=at),
+            "est_jaccard": est[keep],
+        }
+    )
+
+
+def _write_on_driver(
+    spark: SparkSession,
+    tbl,
+    url_field: StructField,
+    store_path: str,
+    cfg: DedupConfig,
+    epoch_id: int,
+    n_store_buckets: int,
+) -> None:
+    """Both store sides of a narrow batch from the rows already on the
+    driver, with each bucket's Bloom built here: the bits `_bucket_blooms`
+    computes, without its applyInPandas job."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    sig_store, band_store = _store_subdirs(store_path)
+    band_key = pc.list_flatten(tbl["band_keys"])
+    band_url = tbl["url"].take(np.repeat(np.arange(tbl.num_rows), cfg.bands))
+    sides = (
+        (sig_store, tbl["url"], "minhash", tbl["minhash"], BinaryType(), tbl["url_key"]),
+        (band_store, band_url, "band_key", band_key, LongType(), band_key),
+    )
+    for side_dir, url, name, col, dtype, key in sides:
+        keys = key.to_numpy()
+        rows = spark.createDataFrame(
+            pa.table(
+                {
+                    "url": url,
+                    name: col,
+                    "store_bucket": np.mod(keys, n_store_buckets).astype(np.int32),
+                }
+            ),
+            StructType(
+                [
+                    url_field,
+                    StructField(name, dtype),
+                    StructField("store_bucket", IntegerType()),
+                ]
+            ),
+        )
+        blooms = {
+            str(b): _bloom_entry(k)
+            for b, k in _keys_by_bucket(keys, n_store_buckets).items()
+        }
+        _write_batch_side(side_dir, epoch_id, rows.coalesce(1), blooms)
+
+
+def _spark_pairs(
+    spark: SparkSession,
+    batch_sigs: DataFrame,
+    new_bands: DataFrame,
+    store_path: str,
+    cfg: DedupConfig,
+    epoch_id: int,
+    n_store_buckets: int,
+    key_prune: bool,
+    probe: bool,
+    stats_out: dict | None,
+) -> DataFrame:
+    """The wide path's verified pairs: `_resolve_on_driver`'s pairing and
+    verification as Spark joins and the estimator UDF."""
+    sig_store, band_store = _store_subdirs(store_path)
+    # candidates restricted to pairs touching the new batch, in two legs so
+    # each band collision is counted exactly once (the batch candidate_pairs
+    # semantics): batch-vs-batch enumerates each unordered pair once via
+    # url_a < url_b; batch-vs-store joins the new-batch band table against
+    # the persisted store (the sides are disjoint — the store excludes this
+    # epoch — so only canonicalization is needed). A single new-vs-all join
+    # would keep BOTH orderings of an intra-batch pair, doubling its
+    # band-match count vs batch-vs-store pairs.
+    batch_a = new_bands.select("band_key", F.col("url").alias("url_a"))
+    legs = []
+    if not probe:
+        legs.append(
+            batch_a.join(
+                new_bands.select("band_key", F.col("url").alias("url_b")), ["band_key"]
+            ).where(F.col("url_a") < F.col("url_b"))
+        )
+    prev_bands = None
+    if _has_batches(band_store):
+        prev_bands = _spark_pruned_read(
+            spark, band_store, epoch_id, new_bands,
+            _bucket_col("band_key", n_store_buckets), F.col("band_key"),
+            key_prune, stats_out,
+        )
+        store = batch_a.join(
+            prev_bands.select("band_key", F.col("url").alias("url_b")), ["band_key"]
+        ).where(F.col("url_a") != F.col("url_b"))
+        if not probe:
+            store = store.select(
+                "band_key",
+                F.least("url_a", "url_b").alias("url_a"),
+                F.greatest("url_a", "url_b").alias("url_b"),
+            )
+        legs.append(store)
+    collisions = legs[0]
+    for leg in legs[1:]:
+        collisions = collisions.unionByName(leg)
+    # materialize the candidate set once: the url-bucket collection below
+    # needs an action anyway, and checkpointing keeps the caller's later
+    # materialization of the pairs from recomputing the collision join
+    joined = (
+        collisions.groupBy("url_a", "url_b")
+        .agg(F.count("*").alias("n_bands"))
+        .where(F.col("n_bands") >= cfg.min_band_matches)
+        .drop("n_bands")
+    ).localCheckpoint()
+
+    all_sigs = batch_sigs
+    if prev_bands is not None:
+        # verification only needs the signatures of candidate members: read
+        # the signature-store partitions that may hold a candidate url (key =
+        # xxhash64(url), the derivation of the write-side manifest blooms)
+        u = F.col("url_b") if probe else F.explode(F.array("url_a", "url_b"))
+        prev_sigs = _spark_pruned_read(
+            spark, sig_store, epoch_id, joined.select(u.alias("u")),
+            _bucket_col("u", n_store_buckets), F.xxhash64("u"),
+            key_prune, stats_out,
+        ).select("url", "minhash")
+        if probe:
+            # a probe url may also exist IN the store (re-checking a known
+            # doc): the probe's current signature is authoritative, and a url
+            # must appear once in the sig table or the verify joins would
+            # duplicate its pairs
+            prev_sigs = prev_sigs.join(batch_sigs.select("url"), "url", "left_anti")
+        all_sigs = prev_sigs.unionByName(batch_sigs)
+    if stats_out is not None:
+        stats_out["n_candidates"] = joined.count()
+        stats_out["n_store_band_rows"] = (
+            0
+            if prev_bands is None
+            else prev_bands.join(new_bands.select("band_key"), "band_key", "left_semi")
+            .count()
+        )
+    return verify_pairs(joined, all_sigs, cfg)
+
+
+def _spark_ingest(
+    spark: SparkSession,
+    batch_sigs: DataFrame,
+    store_path: str,
+    cfg: DedupConfig,
+    epoch_id: int,
+    n_store_buckets: int,
+    key_prune: bool,
+    stats_out: dict | None,
+) -> DataFrame:
+    """The wide path of incremental_dedup_batch: pairs, verification and
+    both store writes as Spark jobs."""
+    sig_store, band_store = _store_subdirs(store_path)
+    batch_sigs = batch_sigs.persist()
+    new_bands = bands_table(batch_sigs, cfg).persist()
+    verified = _spark_pairs(
+        spark, batch_sigs, new_bands, store_path, cfg, epoch_id,
+        n_store_buckets, key_prune, False, stats_out,
+    )
+    # per-bucket key Bloom filters into the manifests: one extra pass over
+    # the (persisted) batch per side — the write-time cost that buys the
+    # key-level read pruning above for every later batch and probe
+    sig_out = batch_sigs.withColumn("store_bucket", _bucket_col("url", n_store_buckets))
+    _write_batch_side(
+        sig_store, epoch_id, sig_out.repartition(F.col("store_bucket")),
+        _bucket_blooms(sig_out.select("store_bucket", F.xxhash64("url").alias("k")), "k"),
+    )
+    band_out = new_bands.withColumn(
+        "store_bucket", _bucket_col("band_key", n_store_buckets)
+    )
+    _write_batch_side(
+        band_store, epoch_id, band_out.repartition(F.col("store_bucket")),
+        _bucket_blooms(band_out, "band_key"),
+    )
+    batch_sigs.unpersist()
+    new_bands.unpersist()
+    return verified
 
 
 def incremental_dedup_batch(
@@ -433,12 +887,30 @@ def incremental_dedup_batch(
     epoch_id: int = 0,
     n_store_buckets: int = 64,
     key_prune: bool = True,
+    stats_out: dict | None = None,
 ) -> DataFrame:
     """Dedup one micro-batch against the accumulated signature store:
     signatures + LSH bands for the batch, band join of the new bands against
     the PERSISTED band store ∪ batch bands, verified pairs returned; batch
     signatures and bands appended to the store. Designed for foreachBatch
     (pass its epoch_id through).
+
+    Two paths, the same pairs and the same store rows:
+    - narrow (rows × bands ≤ _KEY_PRUNE_MAX_KEYS, decided by a bounded count
+      before any signature is computed): job 1 computes signatures, band
+      keys and xxhash64(url) — the only Python stage — and brings them to
+      the driver. The driver Bloom-prunes the store partitions; job 2 semi
+      joins the surviving band partitions with a broadcast frame of the
+      batch keys; pandas counts band matches per pair; job 3 fetches the
+      stored signatures of the candidate urls; numpy verifies. Both store
+      sides are written from the driver's rows, Blooms built on the driver.
+      Every Python task costs ~0.15 s before it sees data, so a small batch
+      crosses the boundary once instead of four times. A batch whose band
+      collisions exceed the same cap (a hot key) hands its collected
+      signatures to the wide path.
+    - wide (larger batches, or key_prune=False): the same steps as Spark
+      joins, the signature UDF and the estimator UDF, Blooms built by
+      applyInPandas.
 
     Scale + exactly-once design:
     - The band table is a persisted, incrementally-grown store
@@ -459,168 +931,37 @@ def incremental_dedup_batch(
       data instead of appending duplicates that would inflate band-match
       counts forever. The streaming checkpoint alone cannot provide this —
       the store write is a side effect outside the sink transaction.
+
+    `stats_out`, if given, receives {"path": "narrow" | "wide",
+    "n_candidates", "n_store_band_rows" (store band rows sharing a key with
+    the batch), "partitions_read", "partitions_bloom_pruned"} (store
+    partitions over both sides). On the wide path the two row counts cost
+    one extra job each.
     """
     cfg = cfg or DedupConfig()
     n_store_buckets = _effective_store_buckets(store_path, n_store_buckets)
-    sig_store, band_store = _store_subdirs(store_path)
-    batch_sigs = with_minhash_signature(
-        batch_df.select("url", "text"), cfg, packed=True
-    ).select("url", "minhash").persist()
-    new_bands = bands_table(batch_sigs, cfg).persist()
-
-    all_sigs = batch_sigs
-    prev_bands = None
-    batch_is_narrow = False
-    if _has_batches(sig_store):
-        # key-level pruning: collect the batch's distinct (bucket, band_key)
-        # pairs (bounded by _KEY_PRUNE_MAX_KEYS) and Bloom-probe each store
-        # partition's manifest — partitions that contain NONE of the batch's
-        # band keys are never read. A wide batch (> cap keys) falls back to
-        # bucket-level pruning (where it touches everything anyway).
-        band_keys = (
-            _collect_key_filter(
-                new_bands,
-                _bucket_col("band_key", n_store_buckets),
-                F.col("band_key"),
-            )
-            if key_prune
-            else None
+    url_field = batch_df.schema["url"]
+    tbl = _collect_batch(batch_df, cfg) if key_prune else None
+    stats: dict | None = _new_stats("narrow")
+    pairs = None
+    if tbl is not None:
+        pairs = _resolve_on_driver(
+            spark, tbl, url_field.dataType, store_path, cfg, epoch_id,
+            n_store_buckets, False, stats,
         )
-        if band_keys is not None:
-            batch_is_narrow = True
-            prev_bands = pruned_store_read(
-                spark, band_store, epoch_id, list(band_keys), band_keys
-            )
-        else:
-            touched_band_buckets = [
-                r[0]
-                for r in new_bands.select(
-                    _bucket_col("band_key", n_store_buckets).alias("b")
-                )
-                .distinct()
-                .collect()
-            ]
-            prev_bands = pruned_store_read(
-                spark, band_store, epoch_id, touched_band_buckets
-            )
-
-    # candidates restricted to pairs touching the new batch, in two legs so
-    # each band collision is counted exactly once (the batch candidate_pairs
-    # semantics): batch-vs-batch enumerates each unordered pair once via
-    # url_a < url_b; batch-vs-store joins the small new-batch band table
-    # against the persisted store (the sides are disjoint — the store
-    # excludes this epoch — so only canonicalization is needed). A single
-    # new-vs-all join would keep BOTH orderings of an intra-batch pair,
-    # doubling its band-match count vs batch-vs-store pairs.
-    batch_a = new_bands.select("band_key", F.col("url").alias("url_a"))
-    collisions = (
-        batch_a.join(
-            new_bands.select("band_key", F.col("url").alias("url_b")), ["band_key"]
+    if pairs is None:
+        stats = None if stats_out is None else _new_stats("wide")
+        verified = _spark_ingest(
+            spark, _batch_sigs(spark, batch_df, tbl, cfg), store_path, cfg,
+            epoch_id, n_store_buckets, key_prune, stats,
         )
-        .where(F.col("url_a") < F.col("url_b"))
-        .select("url_a", "url_b")
-    )
-    if prev_bands is not None:
-        # a narrow batch side is broadcast: the (Bloom-surviving) store
-        # partitions stream through the join with no shuffle of the store
-        batch_side = F.broadcast(batch_a) if batch_is_narrow else batch_a
-        store_collisions = (
-            batch_side.join(
-                prev_bands.select("band_key", F.col("url").alias("url_b")),
-                ["band_key"],
-            )
-            .where(F.col("url_a") != F.col("url_b"))
-            .select(
-                F.least("url_a", "url_b").alias("url_a"),
-                F.greatest("url_a", "url_b").alias("url_b"),
-            )
+    else:
+        _write_on_driver(
+            spark, tbl, url_field, store_path, cfg, epoch_id, n_store_buckets
         )
-        collisions = collisions.unionByName(store_collisions)
-    # materialize the (small) candidate set once: the url-bucket collection
-    # below needs an action anyway, and checkpointing keeps the caller's
-    # later materialization of `verified` from recomputing the collision join
-    joined = (
-        collisions.groupBy("url_a", "url_b")
-        .agg(F.count("*").alias("n_bands"))
-        .where(F.col("n_bands") >= cfg.min_band_matches)
-        .drop("n_bands")
-    ).localCheckpoint()
-
-    if prev_bands is not None:
-        # verification only needs the signatures of candidate members — prune
-        # the signature-store scan to the url hash buckets the candidates
-        # touch, Bloom-refined to partitions that may actually HOLD one of
-        # the candidate urls (key = xxhash64(url), same derivation as the
-        # write-side manifest blooms)
-        url_keys = (
-            _collect_key_filter(
-                joined.select(F.explode(F.array("url_a", "url_b")).alias("u")),
-                _bucket_col("u", n_store_buckets),
-                F.xxhash64("u"),
-            )
-            if key_prune
-            else None
-        )
-        if url_keys is not None:
-            prev_sigs = pruned_store_read(
-                spark, sig_store, epoch_id, list(url_keys), url_keys
-            )
-        else:
-            touched_url_buckets = [
-                r[0]
-                for r in joined.select(
-                    F.explode(
-                        F.array(
-                            _bucket_col("url_a", n_store_buckets),
-                            _bucket_col("url_b", n_store_buckets),
-                        )
-                    ).alias("b")
-                )
-                .distinct()
-                .collect()
-            ]
-            prev_sigs = pruned_store_read(
-                spark, sig_store, epoch_id, touched_url_buckets
-            )
-        all_sigs = prev_sigs.select("url", "minhash").unionByName(batch_sigs)
-    verified = verify_pairs(joined, all_sigs, cfg)
-
-    # CLUSTERED write: repartition on the bucket column first so each write
-    # task covers few bucket directories. Without it every task opens a
-    # writer per touched bucket — at thousands of store buckets that is
-    # tasks×buckets small files per batch (measured 5× slower batches at
-    # 1024 buckets), and at corpus scale a metadata explosion.
-    sig_out = batch_sigs.withColumn(
-        "store_bucket", _bucket_col("url", n_store_buckets)
-    )
-    sig_out.repartition(F.col("store_bucket")).write.mode(
-        "overwrite"
-    ).partitionBy("store_bucket").parquet(
-        os.path.join(sig_store, f"batch_id={epoch_id}")
-    )
-    band_out = new_bands.withColumn(
-        "store_bucket", _bucket_col("band_key", n_store_buckets)
-    )
-    band_out.repartition(F.col("store_bucket")).write.mode(
-        "overwrite"
-    ).partitionBy("store_bucket").parquet(
-        os.path.join(band_store, f"batch_id={epoch_id}")
-    )
-    # per-bucket key Bloom filters into the manifests: one extra pass over
-    # the (persisted) batch per side — the write-time cost that buys the
-    # key-level read pruning above for every later batch and probe
-    _write_bucket_manifest(
-        os.path.join(sig_store, f"batch_id={epoch_id}"),
-        _bucket_blooms(
-            sig_out.select("store_bucket", F.xxhash64("url").alias("k")), "k"
-        ),
-    )
-    _write_bucket_manifest(
-        os.path.join(band_store, f"batch_id={epoch_id}"),
-        _bucket_blooms(band_out.select("store_bucket", "band_key"), "band_key"),
-    )
-    batch_sigs.unpersist()
-    new_bands.unpersist()
+        verified = spark.createDataFrame(pairs, _pair_schema(url_field.dataType))
+    if stats_out is not None:
+        stats_out.update(stats)
     return verified
 
 
@@ -629,6 +970,7 @@ def probe_store(
     batch_df: DataFrame,
     store_path: str,
     cfg: DedupConfig | None = None,
+    stats_out: dict | None = None,
 ) -> DataFrame:
     """READ-ONLY near-dup lookup against an accumulated store: which stored
     documents is each probe document a near-duplicate of? Returns
@@ -636,106 +978,37 @@ def probe_store(
     modified — the "is this already in my corpus?" API, e.g. an ingest
     gate or an eval-set decontamination check against a training corpus.
 
-    Same pruned-read machinery as incremental_dedup_batch (touched-bucket
-    manifests, O(touched) store scan), minus the intra-batch pair leg and
-    minus the store writes."""
+    The narrow and wide paths of incremental_dedup_batch, minus the
+    intra-batch pair leg and minus the store writes: a narrow probe runs
+    one Python stage and three collects. A probe url that is also stored
+    is verified with the probe's signature. `stats_out` as in
+    incremental_dedup_batch."""
     cfg = cfg or DedupConfig()
-    sig_store, band_store = _store_subdirs(store_path)
-    if not _has_batches(band_store):
+    if not _has_batches(_store_subdirs(store_path)[1]):
         raise ValueError(f"probe_store: {store_path} has no batches to probe")
     n_store_buckets = _effective_store_buckets(store_path, None)
+    url_type = batch_df.schema["url"].dataType
 
-    batch_sigs = with_minhash_signature(
-        batch_df.select("url", "text"), cfg, packed=True
-    ).select("url", "minhash").persist()
-    new_bands = bands_table(batch_sigs, cfg)
-    # epoch -1: no batch is excluded — probes read the whole (pruned) store;
-    # key-level Bloom pruning applies exactly as in ingest
-    band_keys = _collect_key_filter(
-        new_bands, _bucket_col("band_key", n_store_buckets), F.col("band_key")
-    )
-    if band_keys is not None:
-        prev_bands = pruned_store_read(
-            spark, band_store, -1, list(band_keys), band_keys
+    tbl = _collect_batch(batch_df, cfg)
+    stats: dict | None = _new_stats("narrow")
+    pairs = None
+    if tbl is not None:
+        # epoch -1: no batch is excluded — probes read the whole (pruned) store
+        pairs = _resolve_on_driver(
+            spark, tbl, url_type, store_path, cfg, -1, n_store_buckets, True, stats
         )
+    if pairs is not None:
+        out = spark.createDataFrame(pairs, _pair_schema(url_type))
     else:
-        touched = [
-            r[0]
-            for r in new_bands.select(
-                _bucket_col("band_key", n_store_buckets).alias("b")
-            )
-            .distinct()
-            .collect()
-        ]
-        prev_bands = pruned_store_read(spark, band_store, -1, touched)
-    joined_plan = (
-        new_bands.select("band_key", F.col("url").alias("url_a"))
-        .join(
-            prev_bands.select("band_key", F.col("url").alias("url_b")),
-            ["band_key"],
+        stats = None if stats_out is None else _new_stats("wide")
+        batch_sigs = _batch_sigs(spark, batch_df, tbl, cfg).persist()
+        out = _spark_pairs(
+            spark, batch_sigs, bands_table(batch_sigs, cfg), store_path, cfg, -1,
+            n_store_buckets, True, True, stats,
         )
-        .where(F.col("url_a") != F.col("url_b"))
-        .groupBy("url_a", "url_b")
-        .agg(F.count("*").alias("n_bands"))
-        .where(F.col("n_bands") >= cfg.min_band_matches)
-        .drop("n_bands")
-    )
-    # Tiny-probe fast path: collect the candidate pairs TOGETHER WITH their
-    # JVM-computed sig-store bucket/key columns in ONE job — the pair set of
-    # a probe is candidate pairs against the pruned store, typically a
-    # handful of rows. That replaces the localCheckpoint job + the separate
-    # key-filter distinct/collect job of the generic path (probe latency is
-    # pure micro-job orchestration), and `joined` becomes a local relation
-    # the verify joins can broadcast. Falls back to checkpoint + on-cluster
-    # key collection beyond the same bounded cap the key filter uses.
-    import numpy as np
-
-    probed = joined_plan.select(
-        "url_a",
-        "url_b",
-        _bucket_col("url_b", n_store_buckets).alias("__b"),
-        F.xxhash64("url_b").alias("__k"),
-    )
-    rows = probed.limit(_KEY_PRUNE_MAX_KEYS + 1).collect()
-    if len(rows) <= _KEY_PRUNE_MAX_KEYS:
-        joined = spark.createDataFrame(
-            [(r["url_a"], r["url_b"]) for r in rows],
-            joined_plan.schema,
-        )
-        by_bucket: dict[int, list] = {}
-        for r in rows:
-            by_bucket.setdefault(int(r["__b"]), []).append(r["__k"])
-        url_keys = {
-            b: np.unique(np.array(ks, dtype=np.int64)).view(np.uint64)
-            for b, ks in by_bucket.items()
-        }
-    else:
-        joined = joined_plan.localCheckpoint()
-        url_keys = _collect_key_filter(
-            joined, _bucket_col("url_b", n_store_buckets), F.xxhash64("url_b")
-        )
-    if url_keys is not None:
-        prev_sigs = pruned_store_read(
-            spark, sig_store, -1, list(url_keys), url_keys
-        )
-    else:
-        touched_urls = [
-            r[0]
-            for r in joined.select(
-                _bucket_col("url_b", n_store_buckets).alias("b")
-            )
-            .distinct()
-            .collect()
-        ]
-        prev_sigs = pruned_store_read(spark, sig_store, -1, touched_urls)
-    prev_sigs = prev_sigs.select("url", "minhash")
-    # a probe url may also exist IN the store (re-checking a known doc):
-    # the probe's current signature is authoritative, and a url must appear
-    # once in the sig table or the verify joins would duplicate its pairs
-    prev_sigs = prev_sigs.join(batch_sigs.select("url"), "url", "left_anti")
-    all_sigs = prev_sigs.unionByName(batch_sigs)
-    out = verify_pairs(joined, all_sigs, cfg)
-    batch_sigs.unpersist()
+        batch_sigs.unpersist()
+    if stats_out is not None:
+        stats_out.update(stats)
     return out
 
 

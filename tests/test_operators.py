@@ -459,6 +459,45 @@ def test_packed_signature_representation_parity(spark):
     assert run(pk)  # the near-dup pair must actually be found
 
 
+@pytest.mark.parametrize("packed", [True, False])
+def test_band_keys_match_the_stored_band_key_derivation(spark, packed):
+    """Exploded `band_keys` equals `bands_table` row for row, and both equal
+    the derivation incremental stores were written with: posexplode over the
+    band slices, then xxhash64(band index, slice). A drift here would make
+    new batches silently miss every stored band."""
+    from collections import Counter
+
+    from minhash_spark.config import DedupConfig
+    from minhash_spark.operators.lsh import band_keys, bands_table
+    from minhash_spark.operators.signatures import with_minhash_signature
+
+    cfg = DedupConfig()
+    pages, _, _ = generate_corpus(40, seed=3)
+    sigs = with_minhash_signature(
+        spark.createDataFrame(pages).select("url", "text"), cfg, packed=packed
+    ).select("url", "minhash")
+    rows = cfg.rows
+    if packed:
+        band = lambda i: F.substring("minhash", i * (rows * 4) + 1, rows * 4)
+    else:
+        band = lambda i: F.slice("minhash", i * rows + 1, rows)
+    slices = F.transform(F.sequence(F.lit(0), F.lit(cfg.bands - 1)), band)
+    reference = sigs.select(
+        "url", F.posexplode(slices).alias("band_id", "band_sig")
+    ).select("url", F.xxhash64("band_id", "band_sig").alias("band_key"))
+    exploded = sigs.select(
+        "url", F.explode(band_keys("minhash", cfg, packed)).alias("band_key")
+    )
+
+    def rows_of(df):
+        return Counter(tuple(r) for r in df.collect())
+
+    want = rows_of(reference)
+    assert sum(want.values()) == 40 * cfg.bands
+    assert rows_of(exploded) == want
+    assert rows_of(bands_table(sigs, cfg)) == want
+
+
 def test_passage_dup_stats_hash_mode_equals_string_mode(spark):
     """The default hashed passage key (the at-scale shuffle form) must
     produce the same per-doc stats as the exact-string key on a corpus with

@@ -1,0 +1,196 @@
+"""The two paths of the incremental store (streaming/incremental.py) give the
+same answers and write the same store: the narrow path (signatures once to
+the driver, numpy pair counting and verification) against the wide path
+(Spark joins and UDFs), forced by setting the narrow cap to 0. Also: the
+collision overflow hand-off, stats_out, and the job count of a narrow
+ingest and probe."""
+
+import json
+import os
+from collections import Counter
+
+import pandas as pd
+import pytest
+from pyspark.sql import functions as F
+
+from minhash_spark.config import DedupConfig
+from minhash_spark.sources.pages import generate_corpus
+from minhash_spark.streaming import incremental
+from minhash_spark.streaming.incremental import (
+    _store_subdirs,
+    incremental_dedup_batch,
+    probe_store,
+)
+
+CFG = DedupConfig()
+
+
+def _rows(df):
+    return Counter(tuple(r) for r in df.collect())
+
+
+def _store_state(spark, store):
+    """Rows per side (with batch_id and store_bucket) and every manifest."""
+    out = {}
+    for side in _store_subdirs(store):
+        rows = Counter(tuple(r) for r in spark.read.parquet(side).collect())
+        manifests = {
+            d: json.load(open(os.path.join(side, d, "_bucket_manifest.json")))
+            for d in sorted(os.listdir(side))
+            if d.startswith("batch_id=")
+        }
+        out[os.path.basename(side)] = (rows, manifests)
+    return out
+
+
+def _replay(spark, df, probes, store):
+    """Three epochs, epoch 1 ingested twice (a foreachBatch replay), then a
+    probe: every result as a multiset, plus the stats of each call."""
+    results, stats = [], []
+    for e in (0, 1, 1, 2):
+        st: dict = {}
+        part = df.where(F.col("epoch") == e).drop("epoch")
+        results.append(
+            _rows(incremental_dedup_batch(spark, part, store, CFG, e, 4, stats_out=st))
+        )
+        stats.append(st)
+    st = {}
+    results.append(_rows(probe_store(spark, probes, store, CFG, stats_out=st)))
+    stats.append(st)
+    return results, stats
+
+
+@pytest.fixture(params=["string", "long"])
+def corpus(request, spark):
+    """Three epochs of a near-dup corpus. Epoch 2 re-ingests one epoch-0 url
+    (its store and batch signature rows both verify), and the probes hold a
+    copy under a new url, stored urls with other and with their own text
+    (the probe's signature replaces the stored ones), a novel text and one
+    probe url twice."""
+    pages, _, _ = generate_corpus(150, seed=5)
+    pdf = pages[["url", "text"]].copy()
+    if request.param == "long":
+        pdf["url"] = range(1000, 1000 + len(pdf))
+    pdf["epoch"] = [i % 3 for i in range(len(pdf))]
+    # a copy of an epoch-2 doc, ingested in epoch 0 and again in epoch 2
+    twin = "twin" if request.param == "string" else 5_000
+    first = pdf.iloc[[5]].assign(url=twin, epoch=0)
+    df = spark.createDataFrame(
+        pd.concat([pdf, first, first.assign(epoch=2)], ignore_index=True)
+    )
+    u1 = pdf.url.tolist()[1]
+    new = "probe-copy" if request.param == "string" else 99_999
+    novel = "probe-novel" if request.param == "string" else 99_998
+    copy5 = "probe-copy5" if request.param == "string" else 99_997
+    probes = spark.createDataFrame(
+        [
+            (new, pdf.text.iloc[3]),
+            (u1, pdf.text.iloc[4]),
+            (novel, "entirely new words never stored anywhere qq zz"),
+            (new, pdf.text.iloc[3]),
+            (twin, pdf.text.iloc[5]),
+            (copy5, pdf.text.iloc[5]),
+        ],
+        df.select("url", "text").schema,
+    )
+    return df, probes, twin
+
+
+def test_narrow_and_wide_paths_agree(spark, corpus, monkeypatch, tmp_path):
+    df, probes, twin = corpus
+    got = {}
+    for path, cap in (("narrow", incremental._KEY_PRUNE_MAX_KEYS), ("wide", 0)):
+        monkeypatch.setattr(incremental, "_KEY_PRUNE_MAX_KEYS", cap)
+        store = str(tmp_path / path)
+        results, stats = _replay(spark, df, probes, store)
+        assert {s["path"] for s in stats} == {path}
+        got[path] = (results, stats, _store_state(spark, store))
+
+    (n_res, n_stats, n_store), (w_res, w_stats, w_store) = got["narrow"], got["wide"]
+    assert n_res == w_res
+    # the replay of epoch 1 returns the same pairs and leaves no duplicate rows
+    assert n_res[1] == n_res[2] and sum(n_res[3].values()) > 0
+    # the re-ingested url verifies with both of its signature rows
+    assert max(n_res[3].values()) == 2
+    probe_hits = {r[0] for r in n_res[4]}
+    assert probe_hits and not any("novel" in str(u) or u == 99_998 for u in probe_hits)
+    # the twin is stored twice; probed, it verifies once, with its probe
+    # row, on either side of a pair
+    twin_counts = [n for (a, b, _), n in n_res[4].items() if twin in (a, b)]
+    assert len(twin_counts) >= 2 and set(twin_counts) == {1}
+    for n, w in zip(n_stats, w_stats):
+        assert {k: v for k, v in n.items() if k != "path"} == {
+            k: v for k, v in w.items() if k != "path"
+        }
+    assert n_store == w_store
+    for rows, manifests in n_store.values():
+        assert sum(rows.values()) > 0
+        assert all(m["blooms"] and m["store_buckets"] for m in manifests.values())
+
+
+def test_collision_overflow_hands_off_to_spark(spark, monkeypatch, tmp_path):
+    """A narrow batch whose store band rows exceed the cap (a hot key) is
+    verified by the Spark path from its collected signatures, with the same
+    pairs and store rows as the wide path."""
+    text = "the same boilerplate page repeated many times across the crawl"
+    stored = spark.createDataFrame(
+        [(f"s{i}", text) for i in range(3)], "url string, text string"
+    )
+    batch = spark.createDataFrame(
+        [("b0", text), ("b1", "an unrelated short page")], "url string, text string"
+    )
+    got = {}
+    # cap 64: two rows are narrow (2 × 32 bands), the 3 × 32 stored band
+    # rows of the hot text are not
+    for path, cap in (("overflow", 64), ("wide", 0)):
+        monkeypatch.setattr(incremental, "_KEY_PRUNE_MAX_KEYS", cap)
+        store = str(tmp_path / path)
+        incremental_dedup_batch(spark, stored, store, CFG, 0, 4).collect()
+        st: dict = {}
+        rows = _rows(incremental_dedup_batch(spark, batch, store, CFG, 1, 4, stats_out=st))
+        got[path] = (rows, st["path"], _store_state(spark, store))
+    assert got["overflow"][1] == got["wide"][1] == "wide"
+    assert got["overflow"][0] == got["wide"][0]
+    assert {(a, b) for a, b, _ in got["overflow"][0]} == {
+        ("b0", "s0"), ("b0", "s1"), ("b0", "s2")
+    }
+    assert got["overflow"][2] == got["wide"][2]
+
+
+def _jobs(sc, group, fn):
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_narrow_job_counts(spark, tmp_path):
+    """At most half of the Spark jobs of the earlier per-step plans: 10 for
+    a narrow ingest (was 21), 6 for a narrow probe (was 12)."""
+    sc = spark.sparkContext
+    store = str(tmp_path / "store")
+    pages, _, _ = generate_corpus(120, seed=9)
+    df = spark.createDataFrame(pages).select("url", "text")
+    first = df.where(F.crc32("url") % 2 == 0)
+    second = df.where(F.crc32("url") % 2 == 1)
+    incremental_dedup_batch(spark, first, store, CFG, 0, 8).collect()
+
+    st: dict = {}
+    n_ingest = _jobs(
+        sc,
+        "narrow-ingest",
+        lambda: incremental_dedup_batch(
+            spark, second, store, CFG, 1, 8, stats_out=st
+        ).collect(),
+    )
+    assert st["path"] == "narrow" and st["n_store_band_rows"] > 0
+    st = {}
+    n_probe = _jobs(
+        sc, "narrow-probe",
+        lambda: probe_store(spark, df.limit(20), store, CFG, stats_out=st).collect(),
+    )
+    assert st["path"] == "narrow" and st["n_candidates"] > 0
+    assert n_ingest <= 10, n_ingest
+    assert n_probe <= 6, n_probe
