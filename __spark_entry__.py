@@ -2,10 +2,10 @@
 
 ``entry`` runs the flagship dedup query (MinHash signature → LSH banding →
 candidate join → Jaccard verification → connected components) on the sf0.001
-tables. ``queries``/``oracle_sql`` expose every implemented operator from
-SURVEY.md §2 — every registered query (len(QUERIES) of them; the two dicts
-share the same key set) carries a full value-level DuckDB oracle: the
-sketch/fingerprint/SRP semantics are re-derived exactly in SQL
+tables. ``queries``/``oracle_sql`` expose every registered near-dup query —
+each one (len(QUERIES) of them; the two dicts share the same key set)
+carries a full value-level DuckDB oracle: the sketch/fingerprint/SRP
+semantics are re-derived exactly in SQL
 (minhash_spark/oracle_sql.py), so even the "non-SQL-expressible" operators
 are hash-checked, not rows-only.
 """

@@ -36,15 +36,7 @@ from minhash_spark.operators.simhash import with_simhash, simhash_candidates
 from minhash_spark.operators.substring import substring_dedup
 from minhash_spark.operators.similarity import srp_cosine_pairs, brute_force_topk
 from minhash_spark.operators.text import token_count
-from minhash_spark.queries import (
-    CFG,
-    q_tpch_q1_pricing,
-    q_segment_revenue_broadcast_join,
-    q_top3_orders_per_customer,
-    q_events_hourly,
-    q_quality_features,
-    _emb_union,
-)
+from minhash_spark.queries import CFG, q_quality_features, _emb_union
 
 AMPLIFY = int(os.environ.get("SPARK_GRAFT_AMPLIFY", "20"))
 
@@ -306,15 +298,6 @@ def main() -> None:
         lambda: brute_force_topk(emb, emb.where(F.col("vec_id") < 100), k=10).count(),
     )
     timed("quality_features", lambda: q_quality_features(spark, sf_dir).count())
-    timed("tpch_q1_pricing", lambda: q_tpch_q1_pricing(spark, sf_dir).count())
-    timed(
-        "segment_revenue_join",
-        lambda: q_segment_revenue_broadcast_join(spark, sf_dir).count(),
-    )
-    timed(
-        "top3_orders_window", lambda: q_top3_orders_per_customer(spark, sf_dir).count()
-    )
-    timed("events_hourly", lambda: q_events_hourly(spark, sf_dir).count())
 
     # attribute executor task time / CPU to each query's BEST repeat window
     # (the one the recorded wall number comes from)

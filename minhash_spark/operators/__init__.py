@@ -15,7 +15,6 @@ from .similarity import (
 )
 from .ngram import ngrams_col, jaccard_col, ngram_jaccard_pairs
 from .text import token_count, with_quality_score, with_lang_id, with_fingerprint
-from .multimodal import extract_media_features, decode_media, fake_decode
 
 __all__ = [
     "with_minhash_signature",
@@ -46,7 +45,4 @@ __all__ = [
     "with_quality_score",
     "with_lang_id",
     "with_fingerprint",
-    "extract_media_features",
-    "decode_media",
-    "fake_decode",
 ]

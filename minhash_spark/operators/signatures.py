@@ -7,11 +7,13 @@ pandas UDF per document: hash the document's shingle set against all
 Scale notes: the UDF is the only Python in the hot path and is fully
 vectorized numpy inside (no per-row Python arithmetic); hash-function
 coefficients (≤ a few KiB) travel by closure capture to every task —
-the Spark analog of the reference's shared `hash_functions` table. The
-signature is `array<int>` — every value is < prime_modulus = 2^31-1 so int32
-holds it exactly, halving the signature store/cache/shuffle bytes; empty
-cells use int32 max so JVM `least()` merges preserve min semantics
-(config.SIG_INFTY_INT).
+the Spark analog of the reference's shared `hash_functions` table. Every
+value is < prime_modulus = 2^31-1 so int32 holds it exactly; empty cells use
+int32 max (config.SIG_INFTY_INT), so min merges keep their semantics. The
+engine form is the packed one (`packed=True`): one little-endian int32
+binary buffer per document, which every engine writer stores. `array<int>`
+is the oracle/interchange form (exploded value checks, JVM `least()`
+merges).
 """
 
 from __future__ import annotations

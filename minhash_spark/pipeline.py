@@ -47,7 +47,6 @@ from .operators.signatures import with_minhash_signature
 from .operators.lsh import bands_table, candidate_pairs, multi_bucket_stats
 from .operators.verify import verify_pairs
 from .operators.cluster import connected_components
-from .operators.exact import exact_dup_groups
 
 
 def _exists(path: str) -> bool:

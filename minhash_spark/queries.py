@@ -12,10 +12,16 @@ both sides; id pairs are canonicalized (id_a < id_b).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .config import DedupConfig, MinHashConfig, HASH_KWISE
+from .config import (
+    DedupConfig,
+    MinHashConfig,
+    HASH_KWISE,
+    SIG_INFTY_INT,
+    SIG_INFTY_LONG,
+)
 from . import oracle_sql
 from .operators.signatures import with_minhash_signature
 from .operators.lsh import bands_table, candidate_pairs, release_persisted
@@ -35,7 +41,6 @@ from .operators.text import (
     with_lang_id,
     with_fingerprint,
 )
-from .operators.multimodal import extract_media_features
 from .sources.tables import load_table
 
 CFG = DedupConfig(minhash=MinHashConfig(sketch_size=128, seed=42))
@@ -753,501 +758,6 @@ WHERE len(regexp_split_to_array(a.nt, ' ')) >= {_MIN_CONTAINEE_TOKENS}
 """
 
 
-# --------------------------------------------------------------------------
-# multimodal plumbing (binary column → metadata)
-# --------------------------------------------------------------------------
-
-def q_multimodal_meta(spark, sf_dir):
-    d = load_table(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("string").alias("doc_key"),
-        F.encode("text", "utf-8").alias("payload"),
-    )
-    meta = extract_media_features(
-        d, media_col="payload", url_col="doc_key", media_type="html"
-    )
-    return meta.select(
-        F.col("url").alias("doc_key"), "n_bytes", F.col("sha256").alias("payload_sha")
-    )
-
-
-SQL_MULTIMODAL_META = """
-SELECT doc_id::VARCHAR AS doc_key, octet_length(encode(text)) AS n_bytes,
-       sha256(text) AS payload_sha
-FROM documents
-"""
-
-
-# --- real decode paths: BMP image channel means, WAV PCM16 audio stats.
-# Payloads are synthesized deterministically from the text bytes (cycled to a
-# fixed size), round-tripped through the real encoders/decoders in Spark, and
-# oracle-checked against DuckDB computing the same statistics directly from
-# the byte values (integer sums / power-of-two counts — exact doubles).
-
-_IMG_W, _IMG_H = 16, 16  # 16*16*3 = 768 payload bytes, stride 48 (no pad)
-_N_SAMPLES = 256  # WAV: 512 payload bytes → 256 int16 samples
-
-
-def q_multimodal_image_features(spark, sf_dir):
-    from .operators.multimodal import bmp_payload_udf, image_channel_means
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    payloads = d.select(
-        "doc_id", bmp_payload_udf(_IMG_W, _IMG_H)("text").alias("payload")
-    )
-    return image_channel_means(payloads)
-
-
-def _cycled_code_mean_sql(channel: int, stride: int, count: int) -> str:
-    """SQL: mean over `count` cycled text bytes at positions ≡ channel
-    (mod stride)."""
-    return (
-        f"CASE WHEN n = 0 THEN 0.0 ELSE list_sum(list_transform(range(0, {count}), "
-        f"j -> cs[(({stride}*j+{channel}) % n) + 1])) / {count}.0 END"
-    )
-
-
-_PIX = _IMG_W * _IMG_H
-SQL_MULTIMODAL_IMAGE_FEATURES = f"""
-WITH codes AS (
-  SELECT doc_id,
-    list_transform(regexp_split_to_array(text, ''), c -> unicode(c)) AS cs,
-    length(text) AS n
-  FROM documents
-)
-SELECT doc_id,
-  {_cycled_code_mean_sql(0, 3, _PIX)} AS mean_b,
-  {_cycled_code_mean_sql(1, 3, _PIX)} AS mean_g,
-  {_cycled_code_mean_sql(2, 3, _PIX)} AS mean_r
-FROM codes
-"""
-
-
-_JPEG_WB, _JPEG_HB = 4, 4  # 4×4 blocks → 32×32 px, 16 = 2^4 block values
-
-
-def q_multimodal_jpeg_roundtrip(spark, sf_dir):
-    """Compressed-codec path, value-oracled: text bytes → block-constant
-    grayscale image → REAL baseline-JPEG encode (pure-numpy, all-ones quant)
-    → REAL baseline-JPEG decode (full Huffman/IDCT bitstream path in
-    operators/jpeg.py) → image stats. Flat 8×8 blocks round-trip exactly, so
-    the oracle recomputes the stats directly from the cycled text bytes —
-    a lossy format held to a lossless, hash-checked contract."""
-    from .operators.multimodal import jpeg_payload_udf, jpeg_gray_stats
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    payloads = d.select(
-        "doc_id", jpeg_payload_udf(_JPEG_WB, _JPEG_HB)("text").alias("payload")
-    )
-    return jpeg_gray_stats(payloads)
-
-
-_JPEG_NV = _JPEG_WB * _JPEG_HB
-SQL_MULTIMODAL_JPEG_ROUNDTRIP = f"""
-WITH codes AS (
-  SELECT doc_id,
-    list_transform(regexp_split_to_array(text, ''), c -> unicode(c)) AS cs,
-    length(text) AS n
-  FROM documents
-), v AS (
-  SELECT doc_id,
-    CASE WHEN n = 0 THEN [0]
-         ELSE list_transform(range(0, {_JPEG_NV}), j -> cs[(j % n) + 1]) END AS vals
-  FROM codes
-)
-SELECT doc_id,
-  {_JPEG_WB * 8}::BIGINT AS width,
-  {_JPEG_HB * 8}::BIGINT AS height,
-  list_sum(vals) / {_JPEG_NV}.0 AS mean_px,
-  list_min(vals)::BIGINT AS min_px,
-  list_max(vals)::BIGINT AS max_px
-FROM v
-"""
-
-
-def q_multimodal_jpeg_progressive(spark, sf_dir):
-    """Progressive (SOF2) JPEG path, value-oracled: the same block-constant
-    construction as multimodal_jpeg_roundtrip but encoded as SIX progressive
-    scans (DC first + refinement, two spectral AC bands first + refinement,
-    successive approximation Al=1 — operators/jpeg.py Annex-G surface) and
-    decoded through the shared multi-scan coefficient-store decoder. Same
-    oracle SQL: the coefficients are transported losslessly across scans, so
-    the stats recompute directly from the cycled text bytes."""
-    from .operators.multimodal import jpeg_progressive_payload_udf, jpeg_gray_stats
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    payloads = d.select(
-        "doc_id",
-        jpeg_progressive_payload_udf(_JPEG_WB, _JPEG_HB)("text").alias("payload"),
-    )
-    return jpeg_gray_stats(payloads)
-
-
-_PNG_W, _PNG_H = 16, 16  # 256 = 2^8 pixels → exact double mean
-
-
-def q_multimodal_png_roundtrip(spark, sf_dir):
-    """Lossless compressed-codec path, value-oracled: text bytes → 16×16
-    grayscale image → REAL PNG encode (stored-block zlib, operators/png.py)
-    → REAL PNG decode (chunk framing + CRC, from-scratch RFC 1951 inflate,
-    scanline unfilter) → image stats. PNG is lossless, so the oracle
-    recomputes the stats directly from the cycled text bytes with no
-    structural restriction on the image (contrast the flat-block JPEG
-    construction)."""
-    from .operators.multimodal import png_payload_udf, png_gray_stats
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    payloads = d.select(
-        "doc_id", png_payload_udf(_PNG_W, _PNG_H)("text").alias("payload")
-    )
-    return png_gray_stats(payloads)
-
-
-_PNG_NPX = _PNG_W * _PNG_H
-SQL_MULTIMODAL_PNG_ROUNDTRIP = f"""
-WITH codes AS (
-  SELECT doc_id,
-    list_transform(regexp_split_to_array(text, ''), c -> unicode(c)) AS cs,
-    length(text) AS n
-  FROM documents
-), v AS (
-  SELECT doc_id,
-    CASE WHEN n = 0 THEN [0]
-         ELSE list_transform(range(0, {_PNG_NPX}), j -> cs[(j % n) + 1]) END AS vals
-  FROM codes
-)
-SELECT doc_id,
-  {_PNG_W}::BIGINT AS width,
-  {_PNG_H}::BIGINT AS height,
-  list_sum(vals) / {_PNG_NPX}.0 AS mean_px,
-  list_min(vals)::BIGINT AS min_px,
-  list_max(vals)::BIGINT AS max_px
-FROM v
-"""
-
-
-def q_multimodal_png_palette(spark, sf_dir):
-    """Indexed-color PNG path, value-oracled: text bytes → 16×16 INDEX
-    matrix → palette PNG encode (PLTE chunk, operators/png.py) → REAL
-    decode (PLTE lookup to RGB) → per-channel integer sums. The palette is
-    a fixed formula ((i, 7i mod 256, 255−i)), so the oracle recomputes the
-    channel sums directly from the cycled text bytes."""
-    from .operators.multimodal import png_palette_payload_udf, png_palette_stats
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    payloads = d.select(
-        "doc_id", png_palette_payload_udf(_PNG_W, _PNG_H)("text").alias("payload")
-    )
-    return png_palette_stats(payloads)
-
-
-SQL_MULTIMODAL_PNG_PALETTE = f"""
-WITH codes AS (
-  SELECT doc_id,
-    list_transform(regexp_split_to_array(text, ''), c -> unicode(c)) AS cs,
-    length(text) AS n
-  FROM documents
-), v AS (
-  SELECT doc_id,
-    CASE WHEN n = 0 THEN list_transform(range(0, {_PNG_NPX}), j -> 0)
-         ELSE list_transform(range(0, {_PNG_NPX}), j -> cs[(j % n) + 1]) END AS idx
-  FROM codes
-), ch AS (
-  SELECT doc_id,
-    idx AS r,
-    list_transform(idx, i -> (i * 7) % 256) AS g,
-    list_transform(idx, i -> 255 - i) AS b
-  FROM v
-)
-SELECT doc_id,
-  {_PNG_W}::BIGINT AS width,
-  {_PNG_H}::BIGINT AS height,
-  list_sum(r)::BIGINT AS sum_r,
-  list_sum(g)::BIGINT AS sum_g,
-  list_sum(b)::BIGINT AS sum_b,
-  least(list_min(r), list_min(g), list_min(b))::BIGINT AS min_px,
-  greatest(list_max(r), list_max(g), list_max(b))::BIGINT AS max_px
-FROM ch
-"""
-
-
-def q_multimodal_audio_features(spark, sf_dir):
-    from .operators.multimodal import wav_payload_udf, audio_stats
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    payloads = d.select(
-        "doc_id", wav_payload_udf(_N_SAMPLES)("text").alias("payload")
-    )
-    return audio_stats(payloads)
-
-
-_VID_BYTES, _FRAME_SIZE, _FRAME_EVERY = 4096, 256, 4
-
-
-def q_multimodal_frame_sample(spark, sf_dir):
-    """Video-style frame sampling: the text bytes cycled into a 4 KiB opaque
-    payload, sliced into 256-byte frames, every 4th frame hashed — the
-    keyframe-extraction access pattern over binary columns."""
-    from .operators.multimodal import raw_payload_udf, sample_binary_frames
-
-    d = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .where(F.length("text") > 0)
-    )
-    payloads = d.select("doc_id", raw_payload_udf(_VID_BYTES)("text").alias("payload"))
-    return sample_binary_frames(
-        payloads, frame_size=_FRAME_SIZE, every=_FRAME_EVERY
-    )
-
-
-SQL_MULTIMODAL_FRAME_SAMPLE = f"""
-WITH cyc AS (
-  SELECT doc_id,
-    substr(repeat(text, ({_VID_BYTES} // length(text)) + 1), 1, {_VID_BYTES}) AS p
-  FROM documents WHERE length(text) > 0
-)
-SELECT doc_id, i::BIGINT AS frame_idx,
-  sha256(substr(p, i * {_FRAME_SIZE} + 1, {_FRAME_SIZE})) AS frame_sha
-FROM cyc CROSS JOIN (
-  SELECT unnest(range(0, {_VID_BYTES // _FRAME_SIZE}, {_FRAME_EVERY})) AS i
-)
-"""
-
-
-SQL_MULTIMODAL_AUDIO_FEATURES = f"""
-WITH codes AS (
-  SELECT doc_id,
-    list_transform(regexp_split_to_array(text, ''), c -> unicode(c)) AS cs,
-    length(text) AS n
-  FROM documents
-), samples AS (
-  SELECT doc_id,
-    CASE WHEN n = 0 THEN list_transform(range(0, {_N_SAMPLES}), j -> 0)
-    ELSE list_transform(range(0, {_N_SAMPLES}), j ->
-      CASE WHEN cs[((2*j) % n) + 1] + 256 * cs[((2*j+1) % n) + 1] >= 32768
-           THEN cs[((2*j) % n) + 1] + 256 * cs[((2*j+1) % n) + 1] - 65536
-           ELSE cs[((2*j) % n) + 1] + 256 * cs[((2*j+1) % n) + 1] END)
-    END AS s
-  FROM codes
-)
-SELECT doc_id,
-  list_sum(s) / {_N_SAMPLES}.0 AS mean_amp,
-  list_sum(list_transform(s, x -> x * x)) / {_N_SAMPLES}.0 AS energy
-FROM samples
-"""
-
-
-_GIF_W, _GIF_H, _GIF_FRAMES = 16, 16, 4
-
-
-def q_multimodal_gif_frames(spark, sf_dir):
-    """Real multi-frame container decode, value-oracled: text bytes → 4-frame
-    animated GIF (REAL LZW compression + interlaced rows, operators/gif.py)
-    → REAL decode (sub-block walk, variable-width LZW, deinterlace, palette
-    lookup) → one row per frame with per-channel sums. This replaces the
-    fixed-stride byte-slicing stand-in (`multimodal_frame_sample`) with an
-    actual compressed video-style bitstream; GIF+LZW is lossless, so the
-    oracle recomputes every frame's stats directly from the cycled text
-    bytes and the fixed palette formula."""
-    from .operators.multimodal import gif_payload_udf, gif_frame_stats
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    payloads = d.select(
-        "doc_id",
-        gif_payload_udf(_GIF_W, _GIF_H, _GIF_FRAMES)("text").alias("payload"),
-    )
-    return gif_frame_stats(payloads)
-
-
-_GIF_NPX = _GIF_W * _GIF_H
-SQL_MULTIMODAL_GIF_FRAMES = f"""
-WITH codes AS (
-  SELECT doc_id,
-    list_transform(regexp_split_to_array(text, ''), c -> unicode(c)) AS cs,
-    length(text) AS n
-  FROM documents
-), fr AS (
-  SELECT doc_id, f AS frame_idx,
-    CASE WHEN n = 0 THEN list_transform(range(0, {_GIF_NPX}), j -> 0)
-         ELSE list_transform(range(0, {_GIF_NPX}),
-                             j -> cs[((f * {_GIF_NPX} + j) % n) + 1]) END AS idx
-  FROM codes CROSS JOIN (SELECT unnest(range(0, {_GIF_FRAMES})) AS f)
-), ch AS (
-  SELECT doc_id, frame_idx,
-    idx AS r,
-    list_transform(idx, i -> (i * 7) % 256) AS g,
-    list_transform(idx, i -> 255 - i) AS b
-  FROM fr
-)
-SELECT doc_id, frame_idx::BIGINT AS frame_idx,
-  {_GIF_W}::BIGINT AS width,
-  {_GIF_H}::BIGINT AS height,
-  list_sum(r)::BIGINT AS sum_r,
-  list_sum(g)::BIGINT AS sum_g,
-  list_sum(b)::BIGINT AS sum_b,
-  least(list_min(r), list_min(g), list_min(b))::BIGINT AS min_px,
-  greatest(list_max(r), list_max(g), list_max(b))::BIGINT AS max_px
-FROM ch
-"""
-
-
-# --------------------------------------------------------------------------
-# relational coverage (scans, joins, windows, aggregation, anti join, events)
-# --------------------------------------------------------------------------
-
-def q_tpch_q1_pricing(spark, sf_dir):
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("sum_disc_price"),
-            F.round(F.avg("l_quantity"), 6).alias("avg_qty"),
-            F.count("*").alias("count_order"),
-        )
-    )
-
-
-SQL_TPCH_Q1_PRICING = """
-SELECT l_returnflag, l_linestatus,
-  round(sum(l_quantity), 2) AS sum_qty,
-  round(sum(l_extendedprice), 2) AS sum_base_price,
-  round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-  round(avg(l_quantity), 6) AS avg_qty,
-  count(*) AS count_order
-FROM lineitem GROUP BY l_returnflag, l_linestatus
-"""
-
-
-def q_segment_revenue_broadcast_join(spark, sf_dir):
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer")
-    return (
-        orders.join(
-            F.broadcast(cust), orders["o_custkey"] == cust["c_custkey"]
-        )
-        .groupBy("c_mktsegment")
-        .agg(
-            F.count("*").alias("n_orders"),
-            F.round(F.sum("o_totalprice"), 2).alias("revenue"),
-        )
-    )
-
-
-SQL_SEGMENT_REVENUE_BROADCAST_JOIN = """
-SELECT c_mktsegment, count(*) AS n_orders, round(sum(o_totalprice), 2) AS revenue
-FROM orders JOIN customer ON o_custkey = c_custkey
-GROUP BY c_mktsegment
-"""
-
-
-def q_top3_orders_per_customer(spark, sf_dir):
-    orders = load_table(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.col("o_totalprice").desc(), F.col("o_orderkey").asc()
-    )
-    return (
-        orders.select(
-            "o_custkey",
-            "o_orderkey",
-            "o_totalprice",
-            F.row_number().over(w).cast("long").alias("rn"),
-        )
-        .where(F.col("rn") <= 3)
-    )
-
-
-SQL_TOP3_ORDERS_PER_CUSTOMER = """
-SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
-  SELECT o_custkey, o_orderkey, o_totalprice,
-    row_number() OVER (PARTITION BY o_custkey
-                       ORDER BY o_totalprice DESC, o_orderkey ASC) AS rn
-  FROM orders
-) WHERE rn <= 3
-"""
-
-
-def q_customers_without_orders(spark, sf_dir):
-    """Customers with no large order (> 400k) — anti join with the filter
-    pushed below the join (predicate pushdown into the scan)."""
-    cust = load_table(spark, sf_dir, "customer")
-    big = load_table(spark, sf_dir, "orders").where(F.col("o_totalprice") > 400000)
-    return cust.join(
-        big, cust["c_custkey"] == big["o_custkey"], "left_anti"
-    ).select("c_custkey", "c_name")
-
-
-SQL_CUSTOMERS_WITHOUT_ORDERS = """
-SELECT c_custkey, c_name FROM customer
-WHERE NOT EXISTS (
-  SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_totalprice > 400000)
-"""
-
-
-def q_events_hourly(spark, sf_dir):
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(
-            F.date_format(F.date_trunc("hour", "ts"), "yyyy-MM-dd HH:mm:ss").alias(
-                "hour_ts"
-            ),
-            "event_type",
-        )
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 4).alias("sum_value"),
-        )
-    )
-
-
-SQL_EVENTS_HOURLY = """
-SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour_ts, event_type,
-  count(*) AS n_events, round(sum(value), 4) AS sum_value
-FROM events GROUP BY 1, 2
-"""
-
-
-def q_latest_event_per_user_type(spark, sf_dir):
-    """Snapshot dedup (operators/exact.py latest_version): one row per
-    (user_id, event_type) — the latest by (ts, event_id). The multi-crawl
-    keep-newest-version-per-url pattern, as a partial-aggregatable max_by
-    (one shuffle; no per-key version sort). Deterministic tie-break on
-    event_id makes it oracle-replayable by a SQL window."""
-    from .operators.exact import latest_version
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_type", "ts", "event_id", "value"
-    )
-    out = latest_version(
-        ev,
-        key_cols=["user_id", "event_type"],
-        order_cols=["ts", "event_id"],
-        payload_cols=["event_id", "ts", "value"],
-    )
-    return out.select(
-        "user_id",
-        "event_type",
-        "event_id",
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("latest_ts"),
-        "value",
-    )
-
-
-SQL_LATEST_EVENT_PER_USER_TYPE = """
-SELECT user_id, event_type, event_id,
-  strftime(ts, '%Y-%m-%d %H:%M:%S.%f') AS latest_ts, value
-FROM (
-  SELECT *, row_number() OVER (
-    PARTITION BY user_id, event_type ORDER BY ts DESC, event_id DESC
-  ) AS rn
-  FROM events
-) WHERE rn = 1
-"""
-
-
 # the DuckDB replay of sampling._bucket: parse the 3-char md5 hex prefix
 # positionally (DuckDB has no base-conv function)
 _SQL_MD5_BUCKET = (
@@ -1404,14 +914,10 @@ FROM documents
 # column-min sketch, SimHash bit sign-sums, polynomial fingerprint, SRP signs
 # --------------------------------------------------------------------------
 
-_SIG_INFTY_INT = (1 << 31) - 1
-_SIG_INFTY_LONG = (1 << 63) - 1
-
-
 def _widen_cell(c):
     """int32 storage domain → int64 oracle domain (sentinel widened)."""
     return (
-        F.when(c == _SIG_INFTY_INT, F.lit(_SIG_INFTY_LONG))
+        F.when(c == SIG_INFTY_INT, F.lit(SIG_INFTY_LONG))
         .otherwise(c.cast("long"))
         .alias("value")
     )
@@ -1675,20 +1181,6 @@ QUERIES = {
     "ann_topk_ivf": q_ann_topk_ivf,
     "srp_ann_pairs": q_srp_ann_pairs,
     "containment_pairs": q_containment_pairs,
-    "multimodal_meta": q_multimodal_meta,
-    "multimodal_image_features": q_multimodal_image_features,
-    "multimodal_jpeg_roundtrip": q_multimodal_jpeg_roundtrip,
-    "multimodal_png_roundtrip": q_multimodal_png_roundtrip,
-    "multimodal_png_palette": q_multimodal_png_palette,
-    "multimodal_audio_features": q_multimodal_audio_features,
-    "multimodal_frame_sample": q_multimodal_frame_sample,
-    "multimodal_gif_frames": q_multimodal_gif_frames,
-    "tpch_q1_pricing": q_tpch_q1_pricing,
-    "segment_revenue_broadcast_join": q_segment_revenue_broadcast_join,
-    "top3_orders_per_customer": q_top3_orders_per_customer,
-    "customers_without_orders": q_customers_without_orders,
-    "events_hourly": q_events_hourly,
-    "latest_event_per_user_type": q_latest_event_per_user_type,
     "deterministic_sample": q_deterministic_sample,
     "dataset_split_assignment": q_dataset_split_assignment,
     "pii_scrub": q_pii_scrub,
@@ -1706,7 +1198,6 @@ QUERIES = {
     "near_dup_pairs": q_near_dup_pairs,
     "token_jaccard_consecutive": q_token_jaccard_consecutive,
     "ngram_containment_consecutive": q_ngram_containment_consecutive,
-    "multimodal_jpeg_progressive": q_multimodal_jpeg_progressive,
 }
 
 ORACLE_SQL = {
@@ -1730,20 +1221,6 @@ ORACLE_SQL = {
     "ann_topk_ivf": SQL_ANN_TOPK_IVF,
     "srp_ann_pairs": SQL_SRP_ANN_PAIRS,
     "containment_pairs": SQL_CONTAINMENT_PAIRS,
-    "multimodal_meta": SQL_MULTIMODAL_META,
-    "multimodal_image_features": SQL_MULTIMODAL_IMAGE_FEATURES,
-    "multimodal_jpeg_roundtrip": SQL_MULTIMODAL_JPEG_ROUNDTRIP,
-    "multimodal_png_roundtrip": SQL_MULTIMODAL_PNG_ROUNDTRIP,
-    "multimodal_png_palette": SQL_MULTIMODAL_PNG_PALETTE,
-    "multimodal_audio_features": SQL_MULTIMODAL_AUDIO_FEATURES,
-    "multimodal_frame_sample": SQL_MULTIMODAL_FRAME_SAMPLE,
-    "multimodal_gif_frames": SQL_MULTIMODAL_GIF_FRAMES,
-    "tpch_q1_pricing": SQL_TPCH_Q1_PRICING,
-    "segment_revenue_broadcast_join": SQL_SEGMENT_REVENUE_BROADCAST_JOIN,
-    "top3_orders_per_customer": SQL_TOP3_ORDERS_PER_CUSTOMER,
-    "customers_without_orders": SQL_CUSTOMERS_WITHOUT_ORDERS,
-    "events_hourly": SQL_EVENTS_HOURLY,
-    "latest_event_per_user_type": SQL_LATEST_EVENT_PER_USER_TYPE,
     "deterministic_sample": SQL_DETERMINISTIC_SAMPLE,
     "dataset_split_assignment": SQL_DATASET_SPLIT_ASSIGNMENT,
     "pii_scrub": SQL_PII_SCRUB,
@@ -1761,5 +1238,4 @@ ORACLE_SQL = {
     "near_dup_pairs": SQL_NEAR_DUP_PAIRS,
     "token_jaccard_consecutive": SQL_TOKEN_JACCARD_CONSECUTIVE,
     "ngram_containment_consecutive": SQL_NGRAM_CONTAINMENT_CONSECUTIVE,
-    "multimodal_jpeg_progressive": SQL_MULTIMODAL_JPEG_ROUNDTRIP,
 }

@@ -1,21 +1,11 @@
-"""Readers for the driver-provided TPC-H-ish testdata tables (TESTDATA.md)."""
+"""Readers for the testdata tables the registered queries read (TESTDATA.md):
+``documents`` and ``embeddings``."""
 
 from __future__ import annotations
 
 import os
 
-TESTDATA_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+TESTDATA_TABLES = ("documents", "embeddings")
 
 
 def load_table(spark, sf_dir: str, name: str):

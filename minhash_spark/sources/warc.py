@@ -26,8 +26,7 @@ determinism beats cleverness; swap in a real boilerplate remover per corpus
 if needed.
 
 A ``build_warc`` writer emits spec-shaped archives for tests (plain or
-gzip), so the round trip is validated with self-generated vectors, the same
-discipline as the BMP/WAV/JPEG codecs.
+gzip), so the round trip is validated with self-generated vectors.
 """
 
 from __future__ import annotations

@@ -5,7 +5,6 @@ from .incremental import (
     probe_store,
     stream_signatures,
 )
-from .stateful import stateful_exact_dedup
 
 __all__ = [
     "stream_signatures",
@@ -13,5 +12,4 @@ __all__ = [
     "probe_store",
     "compact_store",
     "maybe_compact_store",
-    "stateful_exact_dedup",
 ]

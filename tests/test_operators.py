@@ -1,7 +1,6 @@
 """Operator-level tests: SimHash, suffix-array containment, n-gram Jaccard,
-text analysis, embedding similarity, multimodal plumbing."""
+text analysis, embedding similarity."""
 
-import hashlib
 import math
 
 import numpy as np
@@ -21,8 +20,6 @@ from minhash_spark.operators import (
     with_quality_score,
     with_lang_id,
     with_fingerprint,
-    extract_media_features,
-    decode_media,
 )
 from minhash_spark.sources.pages import generate_corpus
 
@@ -226,78 +223,6 @@ def test_srp_recall_vs_bruteforce(spark, emb_df):
     }
     assert approx <= exact
     assert len(approx) >= 1  # near-parallel pair lands in the same bucket
-
-
-# ---------- multimodal ------------------------------------------------------------
-
-
-def test_media_feature_plumbing(spark):
-    pages, _, _ = generate_corpus(30, seed=3)
-    df = spark.createDataFrame(pages)
-    feats = extract_media_features(df, media_col="html", feat_dim=8)
-    rows = feats.collect()
-    assert len(rows) == 30
-    for r in rows[:5]:
-        payload = pages.loc[pages["url"] == r["url"], "html"].iloc[0]
-        assert r["n_bytes"] == len(payload)
-        assert r["sha256"] == hashlib.sha256(payload).hexdigest()
-        assert len(r["feature"]) == 8
-    # determinism: same payload → same feature
-    again = {r["url"]: list(r["feature"]) for r in feats.collect()}
-    assert {r["url"]: list(r["feature"]) for r in rows} == again
-
-
-def test_real_decode_is_stubbed():
-    with pytest.raises(NotImplementedError):
-        decode_media(b"\x89PNG", "image/png")
-
-
-# ---------- multimodal: real BMP/WAV decode ----------------------------------
-
-
-def test_bmp_roundtrip_and_validation():
-    import numpy as np
-    import pytest as _pytest
-    from minhash_spark.operators.multimodal import encode_bmp24, decode_bmp24
-
-    rng = np.random.default_rng(3)
-    img = rng.integers(0, 256, size=(7, 5, 3), dtype=np.uint8)  # stride padding case
-    assert np.array_equal(decode_bmp24(encode_bmp24(img)), img)
-    with _pytest.raises(ValueError):
-        decode_bmp24(b"PNG not a bmp at all....................................")
-
-
-def test_wav_roundtrip_and_validation():
-    import numpy as np
-    import pytest as _pytest
-    from minhash_spark.operators.multimodal import encode_wav_pcm16, decode_wav_pcm16
-
-    samples = np.array([0, 1, -1, 32767, -32768, 12345], dtype=np.int16)
-    got, rate = decode_wav_pcm16(encode_wav_pcm16(samples, rate=8000))
-    assert rate == 8000 and np.array_equal(got, samples)
-    with _pytest.raises(ValueError):
-        decode_wav_pcm16(b"RIFFxxxxNOPE")
-
-
-def test_decode_media_dispatch():
-    import numpy as np
-    import pytest as _pytest
-    from minhash_spark.operators.multimodal import (
-        decode_media,
-        encode_bmp24,
-        encode_wav_pcm16,
-    )
-
-    img = np.zeros((2, 2, 3), dtype=np.uint8)
-    assert decode_media(encode_bmp24(img), "bmp").shape == (2, 2, 3)
-    s, _ = decode_media(encode_wav_pcm16(np.zeros(4, dtype=np.int16)), "wav")
-    assert len(s) == 4
-    # baseline JPEG is a real decoder now — a truncated stream is a parse
-    # error, not a stub; genuinely unimplemented codecs still raise
-    with _pytest.raises(ValueError):
-        decode_media(b"\xff\xd8\xff", "jpeg")
-    with _pytest.raises(NotImplementedError):
-        decode_media(b"\x00", "mp3")
 
 
 def test_ivf_topk_recall_vs_bruteforce(spark):

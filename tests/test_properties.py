@@ -68,45 +68,7 @@ def test_shingles_total_and_normalized(text):
     assert np.array_equal(s, char_shingles(normalize_text(text), 5))
 
 
-# ---------- round-3 operators: JPEG codec, WARC framing ----------------------
-
-
-@settings(max_examples=15, deadline=None)
-@given(
-    hb=st.integers(min_value=1, max_value=4),
-    wb=st.integers(min_value=1, max_value=4),
-    seed=st.integers(min_value=0, max_value=2**31 - 1),
-)
-def test_jpeg_block_constant_roundtrip_property(hb, wb, seed):
-    """For ANY block-constant image and unit quantization, the baseline
-    JPEG encode→decode round trip is bit-exact (zero AC energy, integral
-    DC) — the invariant the oracle-checked codec query relies on."""
-    from minhash_spark.operators.jpeg import decode_baseline, encode_gray_baseline
-
-    rng = np.random.default_rng(seed)
-    vals = rng.integers(0, 256, size=(hb, wb), dtype=np.uint8)
-    img = np.kron(vals, np.ones((8, 8), dtype=np.uint8))
-    out = decode_baseline(encode_gray_baseline(img, quant=np.ones((8, 8), dtype=np.int64)))
-    assert np.array_equal(out, img)
-
-
-@settings(max_examples=15, deadline=None)
-@given(
-    seed=st.integers(min_value=0, max_value=2**31 - 1),
-    h=st.integers(min_value=1, max_value=30),
-    w=st.integers(min_value=1, max_value=30),
-)
-def test_jpeg_arbitrary_image_bounded_error(seed, h, w):
-    """Arbitrary images (any size, including non-multiple-of-8) with unit
-    quantization decode within ±2 of the original — coefficient rounding is
-    the only loss source."""
-    from minhash_spark.operators.jpeg import decode_baseline, encode_gray_baseline
-
-    rng = np.random.default_rng(seed)
-    img = rng.integers(0, 256, size=(h, w), dtype=np.uint8)
-    out = decode_baseline(encode_gray_baseline(img, quant=np.ones((8, 8), dtype=np.int64)))
-    assert out.shape == img.shape
-    assert np.abs(out.astype(int) - img.astype(int)).max() <= 2
+# ---------- WARC framing ------------------------------------------------------
 
 
 @settings(max_examples=15, deadline=None)

@@ -152,59 +152,6 @@ def test_incremental_store_read_prunes_buckets(spark, tmp_path_factory):
     assert got_pairs == want_pairs
 
 
-def test_stateful_exact_dedup_counts_across_batches(spark, tmp_path_factory):
-    """applyInPandasWithState: occurrence numbering must survive micro-batch
-    boundaries through the state store — a text first seen in batch 1 is a
-    duplicate in batch 2."""
-    import os
-    import pandas as pd
-    from minhash_spark.streaming import stateful_exact_dedup
-    from minhash_spark.streaming.incremental import PAGES_SCHEMA
-
-    base = tmp_path_factory.mktemp("stateful")
-    in_dir, out_dir, ckpt = str(base / "in"), str(base / "out"), str(base / "ckpt")
-    os.makedirs(in_dir)
-
-    def write_batch(name, rows):
-        pdf = pd.DataFrame(rows, columns=["url", "text"])
-        df = spark.createDataFrame(pdf)
-        for c, t in (("warc_ts", "timestamp"), ("html", "binary"), ("lang", "string")):
-            df = df.withColumn(c, F.lit(None).cast(t))
-        df.select("url", "warc_ts", "html", "text", "lang").write.mode(
-            "append"
-        ).parquet(in_dir)
-
-    def run_drain():
-        src = (
-            spark.readStream.schema(PAGES_SCHEMA).parquet(in_dir).select("url", "text")
-        )
-        q = (
-            stateful_exact_dedup(src)
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    write_batch("b1", [("u1", "same text"), ("u2", "same text"), ("u3", "other")])
-    run_drain()
-    write_batch("b2", [("u4", "same text"), ("u5", "third")])
-    run_drain()
-
-    got = {
-        r["url"]: (r["occurrence"], r["is_duplicate"])
-        for r in spark.read.parquet(out_dir).collect()
-    }
-    assert got["u1"] == (0, False) and got["u2"] == (1, True)
-    assert got["u3"] == (0, False)
-    # u4's text was first seen in batch 1 — the STATE made it a duplicate
-    assert got["u4"] == (2, True)
-    assert got["u5"] == (0, False)
-
-
 def test_legacy_unbucketed_store_rejected(tmp_path_factory):
     """A populated store with no _store_meta.json predates the bucketed
     layout — the reader must fail fast instead of stamping fresh meta onto a
