@@ -4,15 +4,12 @@ handling, the KwKwK corner case, LSB-first bit packing, 255-byte sub-block
 framing), logical-screen composition of multiple frames with left/top
 offsets, local color tables, and Adam-style 4-pass interlacing.
 
-Animated GIF is the one real multi-frame compressed container this sandbox
-can decode without external libraries — it stands in for the video-decode
-surface of the multimodal pipeline (keyframe extraction over a binary
-column): `multimodal_gif_frames` in queries.py walks REAL frames out of a
-REAL bitstream, not a fixed-stride fake.
-
 Encoder writes a spec-conformant compressed stream (actual LZW dictionary,
 not the fixed-width clear-code trick), so round-trip tests exercise both
 directions honestly.
+
+Not used by the near-duplicate engine; it is kept standalone with its
+tests (tests/test_gif.py).
 """
 
 from __future__ import annotations

@@ -1,5 +1,4 @@
-"""Pure-numpy baseline PNG codec — the second compressed-format column
-parser (after operators/jpeg.py) for opaque binary media columns.
+"""Pure-numpy baseline PNG codec.
 
 Decoder: full PNG path for 8-bit gray / gray+alpha / RGB / RGBA / palette
 (color type 3, PLTE-resolved to RGB), plain AND Adam7-interlaced (seven
@@ -9,15 +8,15 @@ RFC 1951 inflate (stored, fixed-Huffman and dynamic-Huffman blocks), and
 scanline unfiltering (None/Sub/Up/Average/Paeth). Encoder: the same image
 types (either interlacing) as
 zlib STORED-block streams with filter 0 (palette via encode_png_palette) —
-a byte-exact lossless round-trip, which is what lets the Spark query
-surface hold the codec to a hash-checked value oracle
-(queries.q_multimodal_png_roundtrip), the same self-generated-vector
-discipline as the JPEG codec. The inflate also decodes externally-produced
-streams (tests cross-check against stdlib zlib.compress output at several
-levels, which exercises the fixed and dynamic Huffman paths).
+a byte-exact lossless round-trip. The inflate also decodes
+externally-produced streams (tests cross-check against stdlib
+zlib.compress output at several levels, which exercises the fixed and
+dynamic Huffman paths).
 
-Same capability-boundary honesty as jpeg.py: bit depths other than 8
-raise NotImplementedError explicitly.
+Bit depths other than 8 raise NotImplementedError explicitly.
+
+Not used by the near-duplicate engine; it is kept standalone with its
+tests (tests/test_png.py).
 
 References: RFC 1950 (zlib), RFC 1951 (DEFLATE), RFC 2083 / W3C PNG spec.
 Like the reference repo's sketch constants, the Huffman length/distance

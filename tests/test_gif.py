@@ -1,6 +1,6 @@
 """GIF codec: LZW round-trips (dictionary growth, width bumps, 4096
 re-clear, KwKwK), container round-trips (plain + interlaced, multi-frame),
-sub-rectangle composition, and the Spark-side per-frame stats path."""
+and sub-rectangle composition."""
 
 import struct
 
@@ -102,38 +102,3 @@ def test_gif_roundtrip_property(payload):
     out, _ = decode_gif(encode_gif(frames, _palette(), interlace=True))
     assert np.array_equal(out[0], frames[0])
     assert np.array_equal(out[1], frames[1])
-
-
-# ---------- Spark path -------------------------------------------------------
-
-
-def test_gif_frame_stats_spark(spark):
-    from minhash_spark.operators.multimodal import (
-        cycle_bytes,
-        gif_frame_stats,
-        gif_payload_udf,
-    )
-
-    df = spark.createDataFrame(
-        [(0, "hello gif world"), (1, ""), (2, "x")], ["doc_id", "text"]
-    )
-    payloads = df.select(
-        "doc_id", gif_payload_udf(8, 8, 2)("text").alias("payload")
-    )
-    rows = {
-        (r["doc_id"], r["frame_idx"]): r.asDict()
-        for r in gif_frame_stats(payloads).collect()
-    }
-    assert len(rows) == 6  # 3 docs x 2 frames
-    pal = _palette().astype(np.int64)
-    for did, text in [(0, "hello gif world"), (1, ""), (2, "x")]:
-        px = cycle_bytes(text, 2 * 64)
-        for f in range(2):
-            rgb = pal[px[f * 64 : (f + 1) * 64]]
-            got = rows[(did, f)]
-            assert got["width"] == 8 and got["height"] == 8
-            assert got["sum_r"] == int(rgb[:, 0].sum())
-            assert got["sum_g"] == int(rgb[:, 1].sum())
-            assert got["sum_b"] == int(rgb[:, 2].sum())
-            assert got["min_px"] == int(rgb.min())
-            assert got["max_px"] == int(rgb.max())

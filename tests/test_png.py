@@ -1,6 +1,6 @@
 """PNG codec: checksum/inflate parity vs stdlib zlib, stored-block
-round trips for every channel count, all five scanline filters, error
-paths, and the Spark png-roundtrip query plumbing."""
+round trips for every channel count, all five scanline filters, palette
+and Adam7 images, and error paths."""
 
 import struct
 import zlib
@@ -143,29 +143,6 @@ def test_decoder_error_paths():
         decode_png(bad_interlace)
     with pytest.raises(ValueError, match="LEN/NLEN"):
         inflate(b"\x01\x05\x00\x00\x00hello")  # NLEN not complement
-
-
-def test_png_query_matches_direct_stats(spark):
-    """The Spark roundtrip query (text → PNG encode → PNG decode → stats)
-    must equal stats computed directly from the cycled text bytes — the
-    lossless contract the oracle checks at the driver."""
-    from minhash_spark.operators.multimodal import cycle_bytes, png_payload_udf, png_gray_stats
-
-    texts = ["hello world", "", "abc", "x" * 2000]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    w = h = 16
-    out = png_gray_stats(
-        df.select("doc_id", png_payload_udf(w, h)("text").alias("payload"))
-    )
-    got = {r["doc_id"]: r for r in out.collect()}
-    for i, t in enumerate(texts):
-        vals = cycle_bytes(t, w * h).astype(np.int64)
-        r = got[i]
-        assert (r["width"], r["height"]) == (w, h)
-        assert r["mean_px"] == vals.sum() / float(vals.size)
-        assert (r["min_px"], r["max_px"]) == (int(vals.min()), int(vals.max()))
 
 
 def test_png_roundtrip_property():
