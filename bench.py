@@ -16,6 +16,7 @@ and =32 on identical input and reports throughput at both.
 from __future__ import annotations
 
 import glob
+import hashlib
 import json
 import os
 import shutil
@@ -100,24 +101,47 @@ def amplified_docs(spark, sf_dir, amplify: int | None = None):
 
 
 # tmpfs: /tmp is a virtio disk on this box and serializes large reads.
-# Bump CORPUS_VERSION whenever amplified_docs' construction changes — the
-# cache is keyed on (version, sf, amplify) only, and a stale corpus would
-# silently benchmark old data.
+# Bump CORPUS_VERSION whenever amplified_docs' construction changes; the
+# source parquet's own changes are caught by _source_digest.
 CORPUS_VERSION = 1
 CORPUS_CACHE = "/dev/shm/bench_corpus"
 
 
+def _source_digest(sf_dir: str) -> str:
+    """A digest of the size and mtime_ns of every file of the source
+    documents.parquet, so a changed testdata directory of the same name
+    gets a new cache key."""
+    src = os.path.join(sf_dir, "documents.parquet")
+    files = [src] if os.path.isfile(src) else sorted(
+        f for f in glob.glob(os.path.join(src, "**"), recursive=True) if os.path.isfile(f)
+    )
+    h = hashlib.sha1()
+    for f in files:
+        st = os.stat(f)
+        h.update(f"{os.path.relpath(f, src)}:{st.st_size}:{st.st_mtime_ns};".encode())
+    return h.hexdigest()[:12]
+
+
 def corpus_parquet(spark, sf_dir, amplify: int | None = None):
     """The amplified benchmark corpus, materialized to parquet ONCE per
-    (sf, amplify) and read from storage by every timed pipeline — the shape
-    of a real run (pipelines scan a corpus table; they don't synthesize it),
-    and the timed number measures the engine, not the generator."""
+    (version, sf, amplify, source digest) and read from storage by every
+    timed pipeline — the shape of a real run (pipelines scan a corpus table;
+    they don't synthesize it), and the timed number measures the engine, not
+    the generator.
+
+    The cache stays in /dev/shm after the run and is reused by later runs
+    with the same key. Writing a new one first removes every other
+    bench_corpus_v* directory, so shared memory holds one corpus at a time
+    (two concurrent benches with different keys would remove each other's)."""
     amplify = AMPLIFY if amplify is None else amplify
     path = (
         f"{CORPUS_CACHE}_v{CORPUS_VERSION}_"
-        f"{os.path.basename(sf_dir.rstrip('/'))}_{amplify}"
+        f"{os.path.basename(sf_dir.rstrip('/'))}_{amplify}_{_source_digest(sf_dir)}"
     )
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
+        for old in glob.glob(f"{CORPUS_CACHE}_v*"):
+            if old != path:
+                shutil.rmtree(old, ignore_errors=True)
         amplified_docs(spark, sf_dir, amplify).write.mode("overwrite").parquet(path)
     return spark.read.parquet(path)
 

@@ -4,8 +4,8 @@ One operator with two paths, chosen by one bounded collect of the edges:
 
 - **local** (at most `_LOCAL_MAX_EDGES` edges): the edges come to the driver
   in a single Arrow job. A sorted factorization maps the ids to integer
-  codes in id order, and min-label propagation with pointer jumping
-  (`lab = lab[lab]`) resolves the components in numpy.
+  codes in id order, and `local.components` (min-label hooking with pointer
+  jumping, `lab = lab[lab]`) resolves the components in numpy.
 - **distributed** (more edges): alternating large-star / small-star rounds
   on DataFrames (Kiveris et al., "Connected Components in MapReduce and
   Beyond", SoCC'14), O(log n) rounds, each ending in a `localCheckpoint` so
@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+from .. import local
+
 # Edge cap of the local path, the same bounded collect as
 # streaming/incremental.py's _KEY_PRUNE_MAX_KEYS. At the cap the driver holds
 # the Arrow edge table, the 2^21 concatenated ids and a few int64 arrays of
@@ -41,21 +43,14 @@ def _local_components(e: DataFrame, tbl: pa.Table, max_iterations: int):
     # sorted factorization: code order is id order, so the smallest code of
     # a component is its smallest id
     codes, ids = pd.factorize(np.concatenate([a, b]), sort=True)
-    ca, cb = codes[: len(a)], codes[len(a) :]
-    lab = np.arange(len(ids))
-    for rounds in range(1, max_iterations + 1):
-        la, lb = lab[ca], lab[cb]
-        if np.array_equal(la, lb):
-            t = e.schema["u"].dataType
-            schema = StructType([StructField("url", t), StructField("cluster_id", t)])
-            out = pa.table({"url": ids, "cluster_id": ids[lab]})
-            return e.sparkSession.createDataFrame(out, schema), rounds
-        # hook each edge's larger label onto its smaller one, then jump
-        # pointers until every vertex points at its tree's root
-        np.minimum.at(lab, np.maximum(la, lb), np.minimum(la, lb))
-        while not np.array_equal(nxt := lab[lab], lab):
-            lab = nxt
-    return None
+    res = local.components(codes[: len(a)], codes[len(a) :], len(ids), max_iterations)
+    if res is None:
+        return None
+    lab, rounds = res
+    t = e.schema["u"].dataType
+    schema = StructType([StructField("url", t), StructField("cluster_id", t)])
+    out = pa.table({"url": ids, "cluster_id": ids[lab]})
+    return e.sparkSession.createDataFrame(out, schema), rounds
 
 
 def _star_checksum(e: DataFrame) -> tuple[int, int]:

@@ -10,18 +10,34 @@ catalog is configured; same layout either way):
     pairs/        (url_a, url_b, est_jaccard)
     clusters/     (url, cluster_id)
     metrics/      one JSON line per stage run (lineage checkpoint); the
-                  clusters line carries the CC path, rounds and edge count
+                  candidates, pairs and clusters lines name the `path`
+                  that wrote them, and the clusters line the CC path,
+                  rounds and edge count
 
-Candidate generation and verification are SEPARATE stages (each one job,
-each ending in a parquet write) on purpose: the two biggest shuffles in the
-whole pipeline — the cross-band pair dedup groupBy and the two
-signature-verify joins — then never coexist in one job's scratch. In a
-single fused job the full lineage pins every shuffle file until the job
-ends, so peak shuffle-scratch is the SUM of the stages (measured: a fused
-5M-doc run needs >120 GB local-dir scratch and died on this box, while the
-staged run peaks at the largest single stage). At 100 TB each stage is its
-own spark-submit against the previous stage's table, which is also what
-makes the pipeline resumable mid-corpus.
+After the signature stage, `run` takes one of two paths:
+
+- **local**, when the corpus fits two caps (`_LOCAL_MAX_DOCS` signature rows
+  and `_LOCAL_MAX_PAIR_ROWS` bucket pair rows, the second counted from
+  bucket sizes before anything is enumerated): one bounded Arrow collect of
+  (url, minhash, band keys) brings the signatures to the driver, the numpy
+  kernels of `local` enumerate, verify and cluster on row indices, and
+  pyarrow writes candidates/, pairs/ and clusters/, each as one file plus
+  `_SUCCESS`. No Python stage runs after the signatures.
+- **spark**, above either cap: candidate generation and verification are
+  SEPARATE stages (each one job, each ending in a parquet write) on
+  purpose: the two biggest shuffles in the whole pipeline — the cross-band
+  pair dedup groupBy and the two signature-verify joins — then never
+  coexist in one job's scratch. In a single fused job the full lineage pins
+  every shuffle file until the job ends, so peak shuffle-scratch is the SUM
+  of the stages (measured: a fused 5M-doc run needs >120 GB local-dir
+  scratch and died on this box, while the staged run peaks at the largest
+  single stage). At 100 TB each stage is its own spark-submit against the
+  previous stage's table, which is also what makes the pipeline resumable
+  mid-corpus.
+
+Both paths write the same rows: the same candidate set, the same verified
+pairs (one row per signature row of url_a × signature row of url_b) and the
+same clusters.
 
 Resumability = the reference's snapshot semantics re-expressed with table
 immutability (get_global_sketch / version list,
@@ -36,21 +52,45 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 from dataclasses import dataclass, field
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import local
 from .config import DedupConfig
 from .operators.signatures import with_minhash_signature
-from .operators.lsh import bands_table, candidate_pairs, multi_bucket_stats
+from .operators.lsh import band_keys, bands_table, candidate_pairs, multi_bucket_stats
 from .operators.verify import verify_pairs
 from .operators.cluster import connected_components
+
+# Caps of the local path: signature rows collected, and bucket pair rows
+# (module docstring). Measured peak driver-Python RSS of the kernels and
+# writes, on a 4-core box with ~60-byte urls: 0.79 GB at 2^17 rows with 6.3 M
+# pair rows (the collected Arrow table is 0.1 GB of it), 0.54 GB at 5,760
+# rows with 8.2 M pair rows.
+_LOCAL_MAX_DOCS = 1 << 17
+_LOCAL_MAX_PAIR_ROWS = 1 << 23
+_CC_MAX_ITERATIONS = 50  # connected_components' default
 
 
 def _exists(path: str) -> bool:
     return os.path.exists(os.path.join(path, "_SUCCESS"))
+
+
+def _write_table(tbl: pa.Table, out: str) -> None:
+    """Overwrite the dataset `out` with one parquet file of tbl, then mark
+    it complete with _SUCCESS, as a Spark write does."""
+    shutil.rmtree(out, ignore_errors=True)
+    os.makedirs(out)
+    pq.write_table(tbl, os.path.join(out, "part-00000.parquet"))
+    open(os.path.join(out, "_SUCCESS"), "w").close()
 
 
 @dataclass
@@ -165,7 +205,8 @@ class DedupPipeline:
             h.unpersist()
         n = self.spark.read.parquet(out).count()
         self._log_metric(
-            "candidates", n_candidate_pairs=n, seconds=time.time() - t0, **stats
+            "candidates", path="spark", n_candidate_pairs=n,
+            seconds=time.time() - t0, **stats,
         )
         return out
 
@@ -185,7 +226,9 @@ class DedupPipeline:
         verified = verify_pairs(cands, sigs, self.cfg)
         verified.write.mode("overwrite").parquet(out)
         n = self.spark.read.parquet(out).count()
-        self._log_metric("pairs", n_verified_pairs=n, seconds=time.time() - t0)
+        self._log_metric(
+            "pairs", path="spark", n_verified_pairs=n, seconds=time.time() - t0
+        )
         return out
 
     def compute_pairs(self, signatures_path: str, force: bool = False) -> str:
@@ -203,6 +246,7 @@ class DedupPipeline:
         n = self.spark.read.parquet(out).count()
         self._log_metric(
             "clusters",
+            path="spark",
             n_clustered_docs=n,
             cc_path=cc["path"],
             cc_rounds=cc["rounds"],
@@ -211,13 +255,91 @@ class DedupPipeline:
         )
         return out
 
+    def _resolve_locally(self, signatures_path: str) -> bool:
+        """The local path (module docstring): writes candidates/, pairs/ and
+        clusters/ with their metrics lines from the driver. False, with
+        nothing written, when the signatures pass either cap."""
+        cfg = self.cfg
+        t0 = time.time()
+        # the JVM band_keys, so bucket membership is bands_table's
+        tbl = (
+            self.spark.read.parquet(signatures_path)
+            .select("url", "minhash", band_keys("minhash", cfg).alias("band_keys"))
+            .limit(_LOCAL_MAX_DOCS + 1)
+            .toArrow()
+        )
+        if tbl.num_rows > _LOCAL_MAX_DOCS:
+            return False
+        t1 = time.time()
+        # url codes in Spark's binary string order; -1 for a null url
+        urls = tbl["url"].combine_chunks()
+        ids = pc.unique(urls).drop_null()
+        ids = ids.take(pc.array_sort_indices(ids))
+        codes = pc.index_in(urls, value_set=ids).fill_null(-1).to_numpy()
+        keys = pc.list_flatten(tbl["band_keys"]).to_numpy().reshape(-1, cfg.bands)
+        res = local.band_pairs(keys, codes, cfg, _LOCAL_MAX_PAIR_ROWS)
+        if res is None:
+            return False
+        ca, cb, stats = res
+        t2 = time.time()
+        _write_table(
+            pa.table({"url_a": ids.take(ca), "url_b": ids.take(cb)}),
+            os.path.join(self.out_dir, "candidates"),
+        )
+        t3 = time.time()
+        self._log_metric(
+            "candidates", path="local", n_candidate_pairs=len(ca), **stats,
+            collect_s=t1 - t0, kernel_s=t2 - t1, write_s=t3 - t2, seconds=t3 - t0,
+        )
+
+        # verify every (signature row of url_a, signature row of url_b)
+        sig = b"".join(tbl["minhash"].to_pylist())
+        S = np.frombuffer(sig, dtype="<i4").reshape(tbl.num_rows, cfg.minhash.sketch_size)
+        ia, ib = local.pair_rows(codes, ca, cb)
+        keep, est = local.verify(S, ia, ib, cfg.jaccard_threshold)
+        ea, eb = codes[ia[keep]], codes[ib[keep]]
+        t4 = time.time()
+        _write_table(
+            pa.table({"url_a": ids.take(ea), "url_b": ids.take(eb), "est_jaccard": est}),
+            os.path.join(self.out_dir, "pairs"),
+        )
+        t5 = time.time()
+        self._log_metric(
+            "pairs", path="local", n_verified_pairs=len(ea),
+            kernel_s=t4 - t3, write_s=t5 - t4, seconds=t5 - t3,
+        )
+
+        cc = local.components(ea, eb, len(ids), _CC_MAX_ITERATIONS)
+        if cc is None:
+            raise RuntimeError(
+                f"connected_components (local) did not converge within "
+                f"{_CC_MAX_ITERATIONS} rounds on {len(ea)} edges"
+            )
+        lab, rounds = cc
+        v = np.unique(np.concatenate([ea, eb]))
+        t6 = time.time()
+        _write_table(
+            pa.table({"url": ids.take(v), "cluster_id": ids.take(lab[v])}),
+            os.path.join(self.out_dir, "clusters"),
+        )
+        t7 = time.time()
+        self._log_metric(
+            "clusters", path="local", n_clustered_docs=len(v), cc_path="local",
+            cc_rounds=rounds, n_edges=len(ea),
+            kernel_s=t6 - t5, write_s=t7 - t6, seconds=t7 - t5,
+        )
+        return True
+
     def run(self, pages: DataFrame, resume: bool = True) -> PipelineResult:
         t0 = time.time()
         sig_path = self.compute_signatures(pages, resume=resume)
         # pairs/clusters always rebuild: they must reflect the (possibly
         # extended) signature set; only the signature stage is incremental
-        pairs_path = self.compute_pairs(sig_path, force=True)
-        clusters_path = self.compute_clusters(pairs_path, force=True)
+        pairs_path = os.path.join(self.out_dir, "pairs")
+        clusters_path = os.path.join(self.out_dir, "clusters")
+        if not self._resolve_locally(sig_path):
+            pairs_path = self.compute_pairs(sig_path, force=True)
+            clusters_path = self.compute_clusters(pairs_path, force=True)
         rec = self._log_metric("pipeline", seconds=time.time() - t0)
         return PipelineResult(
             out_dir=self.out_dir,

@@ -40,6 +40,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from .. import local
 from ..config import DedupConfig
 from ..operators.signatures import with_minhash_signature
 from ..operators.lsh import band_keys, bands_table
@@ -554,9 +555,6 @@ def _join_rows(left_keys, right_keys) -> int:
     return int(cu[ia] @ cv[ib])
 
 
-_VERIFY_CHUNK = 1 << 16  # pairs per estimator block: 2 × 32 MiB of int32 cells
-
-
 def _resolve_on_driver(
     spark: SparkSession,
     tbl,
@@ -677,27 +675,22 @@ def _resolve_on_driver(
             stored = stored[~stored.url.isin(urls)]
         sigs = pd.concat([stored, sigs], ignore_index=True)
 
-    # verify: the estimator of estimate_jaccard_udf, (A == B).sum(1) / size,
-    # over every (pair, signature row of url_a, signature row of url_b)
+    # verify every (pair, signature row of url_a, signature row of url_b)
     size = cfg.minhash.sketch_size
     S = np.frombuffer(b"".join(sigs.minhash), dtype="<i4").reshape(len(sigs), size)
     idx = pd.DataFrame({"url": sigs.url, "i": np.arange(len(sigs))})
     m = cand.merge(idx.set_axis(["url_a", "i_a"], axis=1), on="url_a").merge(
         idx.set_axis(["url_b", "i_b"], axis=1), on="url_b"
     )
-    ia, ib = m.i_a.to_numpy(), m.i_b.to_numpy()
-    est = np.empty(len(m))
-    for s in range(0, len(m), _VERIFY_CHUNK):
-        t = slice(s, s + _VERIFY_CHUNK)
-        est[t] = (S[ia[t]] == S[ib[t]]).sum(axis=1)
-    est /= float(size)
-    keep = est >= cfg.jaccard_threshold
+    keep, est = local.verify(
+        S, m.i_a.to_numpy(), m.i_b.to_numpy(), cfg.jaccard_threshold
+    )
     at = to_arrow_type(url_type)
     return pa.table(
         {
             "url_a": pa.array(m.url_a.to_numpy()[keep], type=at),
             "url_b": pa.array(m.url_b.to_numpy()[keep], type=at),
-            "est_jaccard": est[keep],
+            "est_jaccard": est,
         }
     )
 

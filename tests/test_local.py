@@ -1,0 +1,111 @@
+"""The driver-side kernels of `minhash_spark.local` against plain-Python
+models of the Spark operators they stand in for: the skew tiers and band
+counting of `lsh.candidate_pairs` with `multi_bucket_stats`, the row
+multiplicity of `verify_pairs`, and component-minimum labels."""
+
+import dataclasses
+import itertools
+from collections import Counter, defaultdict
+
+import numpy as np
+import pytest
+
+from minhash_spark import local
+from minhash_spark.config import DedupConfig, MinHashConfig
+
+CFG = DedupConfig(
+    minhash=MinHashConfig(sketch_size=8),
+    bands=4,
+    rows=2,
+    max_bucket_size=3,
+    salted_bucket_max=6,
+)
+
+
+def _model(keys, codes, cfg):
+    """candidate_pairs over rows (code, keys[row]): all pairs per bucket of
+    up to salted_bucket_max rows, star pairs from the minimum url above it,
+    counted per occurrence; plus multi_bucket_stats."""
+    buckets = defaultdict(list)
+    for row, ks in enumerate(keys):
+        for k in ks:
+            buckets[k].append(codes[row])
+    n_bands = Counter()
+    stats = Counter()
+    for members in buckets.values():
+        m = len(members)
+        if m < 2:
+            continue
+        valid = [c for c in members if c >= 0]
+        anchor = min(valid) if valid else None
+        n_anchor = members.count(anchor) if valid else 0
+        stats["n_multi_buckets"] += n_anchor
+        stats["max_bucket"] = max(stats["max_bucket"], m)
+        if m > cfg.max_bucket_size:
+            stats["n_capped_buckets"] += n_anchor
+            stats["docs_in_capped_buckets"] += n_anchor * m
+        if m <= cfg.salted_bucket_max:
+            for x, y in itertools.combinations(members, 2):
+                if min(x, y) >= 0 and x != y:
+                    n_bands[min(x, y), max(x, y)] += 1
+        else:
+            for x in valid:
+                if x != anchor:
+                    n_bands[anchor, x] += 1
+    pairs = {p for p, n in n_bands.items() if n >= cfg.min_band_matches}
+    names = ("n_multi_buckets", "max_bucket", "n_capped_buckets", "docs_in_capped_buckets")
+    return pairs, {k: stats[k] for k in names}
+
+
+@pytest.mark.parametrize("seed", range(8))
+@pytest.mark.parametrize("min_band_matches", [1, 2])
+def test_band_pairs_match_the_tiered_model(seed, min_band_matches):
+    rng = np.random.default_rng(seed)
+    cfg = dataclasses.replace(CFG, min_band_matches=min_band_matches)
+    n_rows = 40
+    # 160 cells over 30 keys: buckets of every tier (over 8 seeds about 40
+    # plain, 120 salted-size and 75 star buckets); a repeated code is one url
+    # with several signature rows, -1 a null url
+    keys = rng.integers(0, 30, size=(n_rows, cfg.bands)).astype(np.int64)
+    codes = rng.integers(-1, 25, size=n_rows)
+    ca, cb, stats = local.band_pairs(keys, codes, cfg, max_rows=1 << 20)
+    want, want_stats = _model(keys.tolist(), codes.tolist(), cfg)
+    assert set(zip(ca.tolist(), cb.tolist())) == want
+    assert len(ca) == len(want)
+    assert stats == want_stats
+
+
+def test_band_pairs_checks_the_pair_cap_first():
+    keys = np.zeros((10, CFG.bands), dtype=np.int64)  # one 10-row bucket per band...
+    keys += np.arange(CFG.bands)  # ...distinct across bands
+    codes = np.arange(10)
+    # 10 > salted_bucket_max: star tier, 9 pair rows per band
+    assert local.band_pairs(keys, codes, CFG, max_rows=9 * CFG.bands - 1) is None
+    ca, cb, _ = local.band_pairs(keys, codes, CFG, max_rows=9 * CFG.bands)
+    assert set(zip(ca.tolist(), cb.tolist())) == {(0, i) for i in range(1, 10)}
+
+
+def test_pair_rows_and_verify():
+    rng = np.random.default_rng(3)
+    codes = np.array([2, 0, 1, 2, -1, 0, 2])  # url 2 has three rows, url 0 two
+    S = rng.integers(0, 3, size=(len(codes), 16), dtype=np.int32)
+    ca, cb = np.array([0, 1, 0]), np.array([2, 2, 1])
+    ia, ib = local.pair_rows(codes, ca, cb)
+    rows = lambda c: [i for i, x in enumerate(codes) if x == c]
+    want = [(i, j) for a, b in zip(ca, cb) for i in rows(a) for j in rows(b)]
+    assert sorted(zip(ia.tolist(), ib.tolist())) == sorted(want)
+    keep, est = local.verify(S, ia, ib, 0.4)
+    full = np.array([(S[i] == S[j]).sum() / 16.0 for i, j in zip(ia, ib)])
+    assert np.array_equal(keep, np.flatnonzero(full >= 0.4))
+    assert np.array_equal(est, full[keep])
+
+
+def test_components_labels_are_component_minima():
+    ca = np.array([5, 3, 8, 1, 6])
+    cb = np.array([7, 5, 9, 0, 7])
+    lab, rounds = local.components(ca, cb, 10, 50)
+    assert lab[[0, 1]].tolist() == [0, 0]
+    assert lab[[3, 5, 6, 7]].tolist() == [3, 3, 3, 3]
+    assert lab[[8, 9]].tolist() == [8, 8]
+    assert lab[[2, 4]].tolist() == [2, 4]
+    assert local.components(np.arange(63), np.arange(1, 64), 64, 1) is None

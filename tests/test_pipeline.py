@@ -6,14 +6,24 @@ pairs ≥ 0.99, clusters must equal a local union-find over the same pairs.
 
 Evidence chain: tests/test_kernels.py proves kernels == serial oracle;
 here we prove Spark output == kernels; therefore Spark == serial oracle.
+
+The pipeline's two paths after the signature stage (local numpy, Spark
+stages) run the same checks; the Spark path is forced by setting a cap of
+the local path to 0, and the two are compared on skewed buckets, duplicate
+url rows, a null url and non-ASCII urls.
 """
 
+import dataclasses
 import itertools
+import json
+import os
+from collections import Counter
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from minhash_spark import pipeline
 from minhash_spark.config import DedupConfig, MinHashConfig
 from minhash_spark.functions.kernels import min_sketch_batch, sketch_to_int
 from minhash_spark.functions.shingles import shingle_fn
@@ -60,12 +70,46 @@ def oracle_pairs(corpus, local_sigs):
     return out
 
 
-@pytest.fixture(scope="module")
-def result(spark, corpus, tmp_path_factory):
+# cap overrides that force a path: "spark" fails the doc cap, "pair_cap" the
+# bucket pair-row cap after the collect
+_CAPS = {
+    "local": {},
+    "spark": {"_LOCAL_MAX_DOCS": 0},
+    "pair_cap": {"_LOCAL_MAX_PAIR_ROWS": 1},
+}
+
+
+def _run(spark, df, out_dir, path, cfg=CFG):
+    with pytest.MonkeyPatch.context() as mp:
+        for name, value in _CAPS[path].items():
+            mp.setattr(pipeline, name, value)
+        return DedupPipeline(spark, cfg, out_dir).run(df)
+
+
+def _metrics(out_dir, stage):
+    with open(os.path.join(out_dir, "metrics", f"{stage}.jsonl")) as f:
+        return json.loads(f.read().splitlines()[-1])
+
+
+def _outputs(spark, out_dir):
+    """Candidates as a set, pairs as a multiset, clusters as a dict."""
+    read = lambda d: spark.read.parquet(os.path.join(out_dir, d)).collect()
+    return (
+        {tuple(r) for r in read("candidates")},
+        Counter(tuple(r) for r in read("pairs")),
+        {r["url"]: r["cluster_id"] for r in read("clusters")},
+    )
+
+
+@pytest.fixture(scope="module", params=["local", "spark"])
+def result(request, spark, corpus, tmp_path_factory):
     pages, _, _ = corpus
     out_dir = str(tmp_path_factory.mktemp("pipe"))
     df = spark.createDataFrame(pages)
-    return DedupPipeline(spark, CFG, out_dir).run(df)
+    res = _run(spark, df, out_dir, request.param)
+    for stage in ("candidates", "pairs", "clusters"):
+        assert _metrics(out_dir, stage)["path"] == request.param
+    return res
 
 
 def test_spark_signatures_match_oracle(spark, result, local_sigs):
@@ -314,9 +358,10 @@ def test_resume_refuses_legacy_array_signature_format(
 
 
 def test_staged_candidates_materialized_and_consistent(spark, result):
-    """The candidate stage is its own job with its own parquet output (the
-    scratch-bounding split — pipeline.py module docstring): candidates/ must
-    exist in out_dir and the verified pair set must be a subset of it."""
+    """Both paths materialize the candidate set (on the Spark path as its
+    own job, the scratch-bounding split — pipeline.py module docstring):
+    candidates/ must exist in out_dir and the verified pair set must be a
+    subset of it."""
     import os
 
     cand_path = os.path.join(result.out_dir, "candidates")
@@ -330,3 +375,103 @@ def test_staged_candidates_materialized_and_consistent(spark, result):
         for r in spark.read.parquet(result.pairs_path).collect()
     }
     assert pairs and pairs <= cands
+
+
+@pytest.mark.parametrize("path", ["local", "spark"])
+def test_pipeline_mega_bucket_star_pairs(spark, tmp_path, path):
+    """40 identical docs with max_bucket_size=5 and salted_bucket_max=10:
+    every band bucket takes the star tier, so the run verifies the 39
+    (u000, other) pairs and returns one cluster, on both paths."""
+    cfg = dataclasses.replace(CFG, max_bucket_size=5, salted_bucket_max=10)
+    text = " ".join(f"mega{i}" for i in range(80))
+    rows = [(f"u{i:03d}", "2024-01-01", text) for i in range(40)]
+    df = spark.createDataFrame(rows, ["url", "ds", "text"])
+    out = str(tmp_path)
+    _run(spark, df, out, path, cfg)
+    cands, pairs, clusters = _outputs(spark, out)
+    want = {("u000", f"u{i:03d}") for i in range(1, 40)}
+    assert cands == want
+    assert set(pairs) == {(a, b, 1.0) for a, b in want} and sum(pairs.values()) == 39
+    assert clusters == {f"u{i:03d}": "u000" for i in range(40)}
+    m = _metrics(out, "candidates")
+    assert m["path"] == path
+    assert (m["max_bucket"], m["n_capped_buckets"], m["docs_in_capped_buckets"]) == (
+        40, cfg.bands, 40 * cfg.bands
+    )
+    assert _metrics(out, "clusters")["n_edges"] == 39
+
+
+@pytest.fixture(scope="module")
+def edge_corpus(spark):
+    """Near-copies of one text under urls whose UTF-8 byte order differs
+    from their UTF-16 order (U+FF41 sorts after U+1F600 in UTF-16), one url
+    crawled on two days with two texts (two signature rows), a null url with
+    the same text, and an unrelated page."""
+    words = [f"w{i}" for i in range(120)]
+    text = lambda i: " ".join(words[:i] + [f"edit{i}"] + words[i + 1 :])
+    rows = [
+        ("http://a.example/\U0001f600", "2024-01-01", text(3)),
+        ("http://a.example/\uff41", "2024-01-01", text(7)),
+        ("http://a.example/é", "2024-01-01", text(11)),
+        ("http://a.example/z", "2024-01-01", text(15)),
+        ("http://a.example/twice", "2024-01-01", text(19)),
+        ("http://a.example/twice", "2024-01-02", text(23)),
+        (None, "2024-01-02", text(3)),
+        ("http://a.example/other", "2024-01-02", " ".join(f"x{i}" for i in range(90))),
+    ]
+    return spark.createDataFrame(rows, "url string, ds string, text string")
+
+
+def test_paths_agree_on_duplicate_null_and_non_ascii_urls(spark, edge_corpus, tmp_path):
+    got = {}
+    for path in ("local", "spark"):
+        out = str(tmp_path / path)
+        _run(spark, edge_corpus, out, path)
+        assert _metrics(out, "pairs")["path"] == path
+        got[path] = _outputs(spark, out)
+    assert got["local"] == got["spark"]
+    cands, pairs, clusters = got["local"]
+    # the url with two signature rows verifies once per row against a peer
+    per_pair = Counter((a, b) for a, b, _ in pairs.elements())
+    assert {n for p, n in per_pair.items() if "http://a.example/twice" in p} == {2}
+    assert {n for p, n in per_pair.items() if "http://a.example/twice" not in p} == {1}
+    assert None not in clusters and "http://a.example/other" not in clusters
+    # cluster ids are the byte-order minimum url of the component
+    assert set(clusters.values()) == {"http://a.example/twice"}
+
+
+def test_pair_cap_hands_off_to_spark(spark, edge_corpus, tmp_path):
+    got = {}
+    for path in ("local", "pair_cap"):
+        out = str(tmp_path / path)
+        _run(spark, edge_corpus, out, path)
+        got[path] = _outputs(spark, out)
+        want = "local" if path == "local" else "spark"
+        for stage in ("candidates", "pairs", "clusters"):
+            assert _metrics(out, stage)["path"] == want
+    assert got["local"] == got["pair_cap"] and got["local"][1]
+
+
+def test_local_path_job_count(spark, tmp_path):
+    """A local-path run is at most 8 Spark jobs (34 when every stage ran on
+    Spark), and the signature UDF is the only Python it evaluates."""
+    sc = spark.sparkContext
+    pages, _, _ = generate_corpus(120, seed=9)
+    df = spark.createDataFrame(pages)
+    sc.setJobGroup("local-run", "local-run")
+    try:
+        DedupPipeline(spark, CFG, str(tmp_path)).run(df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("local-run")
+    assert _metrics(str(tmp_path), "pairs")["path"] == "local"
+    assert 0 < len(jobs) <= 8, len(jobs)
+    # the SQL executions of those jobs whose plan evaluates Python
+    executions = spark._jsparkSession.sharedState().statusStore().executionsList()
+    python = []
+    for i in range(executions.size()):
+        e = executions.apply(i)
+        plan = e.physicalPlanDescription()
+        if any(e.jobs().contains(j) for j in jobs) and "EvalPython" in plan:
+            python.append(plan)
+    assert len(python) == 1 and "_sig_packed" in python[0]
