@@ -1,20 +1,23 @@
 """Driver-side numpy kernels of the dedup: LSH band pairs with the skew tiers
 of `operators.lsh.candidate_pairs`, the Jaccard estimate of
-`operators.verify.estimate_jaccard_udf` and the pointer-jumping connected
-components of `operators.cluster`.
+`operators.verify.estimate_jaccard_udf`, the pointer-jumping connected
+components of `operators.cluster`, and Spark's `xxhash64` of an id column
+(the store's url bucket and Bloom key).
 
-Everything works on integer arrays: url codes (0..n-1 in url order, -1 for
-a null url) and signature row indices. Callers factorize ids and join them
-back; these functions never see a url.
+Everything but `xxhash64` works on integer arrays: url codes (0..n-1 in url
+order, -1 for a null url) and signature row indices. Callers factorize ids
+and join them back; these functions never see a url.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 
 from .config import DedupConfig
 
 VERIFY_CHUNK = 1 << 16  # pairs per estimator block: 2 × 32 MiB of int32 cells
+XXHASH_CHUNK_BYTES = 1 << 24  # padded bytes per xxhash64 block of byte ids
 
 
 def _runs(lo: np.ndarray, n: np.ndarray) -> np.ndarray:
@@ -123,3 +126,128 @@ def components(ca: np.ndarray, cb: np.ndarray, n: int, max_iterations: int):
         while not np.array_equal(nxt := lab[lab], lab):
             lab = nxt
     return None
+
+
+# ---- Spark's xxhash64 -------------------------------------------------------
+# org.apache.spark.sql.catalyst.expressions.XXH64 with Spark's seed 42: a
+# string or binary value hashes its bytes (hashUnsafeBytes), a long
+# hashLong, an int hashInt, and a null is the seed itself. uint64
+# arithmetic wraps as Java's long does.
+_P1 = np.uint64(0x9E3779B185EBCA87)
+_P2 = np.uint64(0xC2B2AE3D27D4EB4F)
+_P3 = np.uint64(0x165667B19E3779F9)
+_P4 = np.uint64(0x85EBCA77C2B2AE63)
+_P5 = np.uint64(0x27D4EB2F165667C5)
+_SEED = 42
+_MASK64 = (1 << 64) - 1
+
+
+def _u64(x: int) -> np.uint64:
+    return np.uint64(x & _MASK64)
+
+
+def _rotl(x: np.ndarray, r: int) -> np.ndarray:
+    return (x << np.uint64(r)) | (x >> np.uint64(64 - r))
+
+
+def _round(acc, lane: np.ndarray) -> np.ndarray:
+    return _rotl(acc + lane * _P2, 31) * _P1
+
+
+def _fmix(h: np.ndarray) -> np.ndarray:
+    h = (h ^ (h >> np.uint64(33))) * _P2
+    h = (h ^ (h >> np.uint64(29))) * _P3
+    return h ^ (h >> np.uint64(32))
+
+
+def _xxh_padded(mat: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """XXH64 of each row's first lens[i] bytes of the zero-padded uint8
+    matrix `mat` (k, 8w), w > max(lens) / 8, row by row in lockstep: each
+    step applies to the rows that still have input for it."""
+    k, nbytes = mat.shape
+    words, ints = mat.view("<u8"), mat.view("<u4")
+    rows = np.arange(k)
+    n32 = lens // 32
+    p1, p2 = int(_P1), int(_P2)
+    v = [np.full(k, _u64(s), np.uint64) for s in (_SEED + p1 + p2, _SEED + p2, _SEED, _SEED - p1)]
+    for s in range(int(n32.max(initial=0))):
+        live = s < n32
+        for j in range(4):
+            v[j] = np.where(live, _round(v[j], words[:, 4 * s + j]), v[j])
+    h = _rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12) + _rotl(v[3], 18)
+    for vj in v:
+        h = (h ^ _round(np.uint64(0), vj)) * _P1 + _P4
+    h = np.where(n32 > 0, h, _u64(_SEED + int(_P5))) + lens.astype(np.uint64)
+    # up to three whole 8-byte words after the 32-byte stripes
+    n8 = lens % 32 // 8
+    for j in range(3):
+        lane = words[rows, np.minimum(4 * n32 + j, nbytes // 8 - 1)]
+        h = np.where(j < n8, _rotl(h ^ _round(np.uint64(0), lane), 27) * _P1 + _P4, h)
+    # then one 4-byte word, then single bytes
+    o = lens & ~7
+    four = lens - o >= 4
+    lane = ints[rows, np.minimum(o // 4, nbytes // 4 - 1)].astype(np.uint64)
+    h = np.where(four, _rotl(h ^ lane * _P1, 23) * _P2 + _P3, h)
+    o = o + 4 * four
+    for j in range(3):
+        byte = mat[rows, np.minimum(o + j, nbytes - 1)].astype(np.uint64)
+        h = np.where(o + j < lens, _rotl(h ^ byte * _P5, 11) * _P1, h)
+    return _fmix(h)
+
+
+def _xxh_bytes(arr: pa.Array) -> np.ndarray:
+    """hashUnsafeBytes of every value of a large_binary array. Rows go
+    through `_xxh_padded` in length order, in blocks of at most
+    XXHASH_CHUNK_BYTES padded bytes (a block holds at least one row), so one
+    very long id pads only its own block."""
+    n = len(arr)
+    bufs = arr.buffers()
+    off = np.frombuffer(bufs[1], dtype=np.int64, count=arr.offset + n + 1)[arr.offset :]
+    data = np.frombuffer(bufs[2], dtype=np.uint8) if bufs[2] is not None else np.zeros(0, np.uint8)
+    lens = np.diff(off)
+    order = np.argsort(lens, kind="stable")
+    pad = (lens[order] // 8 + 1) * 8  # bytes per padded row, nondecreasing
+    out = np.empty(n, np.uint64)
+    s = 0
+    while s < n:
+        lim = min(n, s + XXHASH_CHUNK_BYTES // int(pad[s]) + 1)
+        cost = pad[s:lim] * np.arange(1, lim - s + 1)
+        e = s + max(1, int(np.searchsorted(cost, XXHASH_CHUNK_BYTES, side="right")))
+        idx, width = order[s:e], int(pad[e - 1])
+        mat = np.zeros((e - s, width), np.uint8)
+        dst = _runs(np.arange(e - s) * width, lens[idx])
+        mat.ravel()[dst] = data[_runs(off[idx], lens[idx])]
+        out[idx] = _xxh_padded(mat, lens[idx])
+        s = e
+    return out
+
+
+def xxhash64_supports(t: pa.DataType) -> bool:
+    """Whether `xxhash64` hashes values of arrow type t as Spark does."""
+    return (
+        pa.types.is_string(t) or pa.types.is_large_string(t)
+        or pa.types.is_binary(t) or pa.types.is_large_binary(t)
+        or pa.types.is_int64(t) or pa.types.is_int32(t)
+    )
+
+
+def xxhash64(arr) -> np.ndarray:
+    """Spark's `xxhash64(col)` of every value of a pyarrow (chunked) array,
+    as int64; see `xxhash64_supports` for the types. A null hashes to 42."""
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    t = arr.type
+    if not xxhash64_supports(t):
+        raise TypeError(f"xxhash64: no Spark hash of arrow type {t}")
+    if pa.types.is_int64(t):
+        x = arr.fill_null(0).to_numpy().view(np.uint64)
+        h = _fmix(_rotl(_u64(_SEED + int(_P5) + 8) ^ _round(np.uint64(0), x), 27) * _P1 + _P4)
+    elif pa.types.is_int32(t):
+        x = arr.fill_null(0).to_numpy().view(np.uint32).astype(np.uint64)
+        h = _fmix(_rotl(_u64(_SEED + int(_P5) + 4) ^ x * _P1, 23) * _P2 + _P3)
+    else:
+        h = _xxh_bytes(arr.cast(pa.large_binary()))
+    h = h.view(np.int64)
+    if arr.null_count:
+        h = np.where(arr.is_valid().to_numpy(zero_copy_only=False), h, _SEED)
+    return h

@@ -62,6 +62,7 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import BinaryType, StructField, StructType
 
 from . import local
 from .config import DedupConfig
@@ -255,15 +256,18 @@ class DedupPipeline:
         )
         return out
 
-    def _resolve_locally(self, signatures_path: str) -> bool:
+    def _resolve_locally(self, signatures_path: str, url_field: StructField) -> bool:
         """The local path (module docstring): writes candidates/, pairs/ and
         clusters/ with their metrics lines from the driver. False, with
         nothing written, when the signatures pass either cap."""
         cfg = self.cfg
         t0 = time.time()
-        # the JVM band_keys, so bucket membership is bands_table's
+        # the JVM band_keys, so bucket membership is bands_table's; the
+        # schema (the pages' url field) skips Spark's footer-reading
+        # schema-inference job
         tbl = (
-            self.spark.read.parquet(signatures_path)
+            self.spark.read.schema(StructType([url_field, StructField("minhash", BinaryType())]))
+            .parquet(signatures_path)
             .select("url", "minhash", band_keys("minhash", cfg).alias("band_keys"))
             .limit(_LOCAL_MAX_DOCS + 1)
             .toArrow()
@@ -337,7 +341,7 @@ class DedupPipeline:
         # extended) signature set; only the signature stage is incremental
         pairs_path = os.path.join(self.out_dir, "pairs")
         clusters_path = os.path.join(self.out_dir, "clusters")
-        if not self._resolve_locally(sig_path):
+        if not self._resolve_locally(sig_path, pages.schema["url"]):
             pairs_path = self.compute_pairs(sig_path, force=True)
             clusters_path = self.compute_clusters(pairs_path, force=True)
         rec = self._log_metric("pipeline", seconds=time.time() - t0)

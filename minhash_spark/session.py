@@ -20,6 +20,16 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def default_driver_memory() -> str:
+    """`SPARK_DRIVER_MEMORY` if set, else half of physical RAM capped at
+    16g, in whole megabytes: the driver JVM shares the box with its Python
+    workers and the driver-side numpy paths."""
+    if "SPARK_DRIVER_MEMORY" in os.environ:
+        return os.environ["SPARK_DRIVER_MEMORY"]
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{min(ram_mb // 2, 16 << 10)}m"
+
+
 def get_spark(
     app_name: str = "minhash-spark",
     master: str | None = None,
@@ -48,7 +58,7 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Join strategy ladder (guide §3.1): broadcast when a side truly

@@ -16,29 +16,41 @@ the pattern for periodic incremental dedup over a landing zone.
 The store (`incremental_dedup_batch`, `probe_store`) has two paths with the
 same results and the same store rows. A narrow batch (rows × bands within
 _KEY_PRUNE_MAX_KEYS) crosses into Python once: one job computes its
-signatures and band keys and brings them to the driver, which prunes the
-store by Bloom filter, fetches the matching band rows and stored signatures
-with broadcast semi joins, and counts and verifies pairs in numpy. A wide
-batch runs the same steps as Spark joins and UDFs.
+signatures and band keys and brings them to the driver. After that the
+driver touches the store only through pyarrow: it prunes the store by Bloom
+filter, reads the matching band rows and stored signatures, counts and
+verifies pairs in numpy, and writes both store sides. A wide batch runs the
+same steps as Spark joins, UDFs and writes. `compact_store` likewise
+rewrites a side of up to _LOCAL_MAX_COMPACT_ROWS rows on the driver and a
+larger one with Spark. Both writers lay out the same partitions, rows and
+manifests, so every reader takes files from either.
 """
 
 from __future__ import annotations
 
+import base64
 import json
+import logging
 import os
+import shutil
 
+import numpy as np
+import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
     DoubleType,
-    IntegerType,
-    LongType,
     StringType,
     StructField,
     StructType,
     TimestampType,
 )
+from pyspark.sql.pandas.types import to_arrow_type
 
 from .. import local
 from ..config import DedupConfig
@@ -112,9 +124,6 @@ def _effective_store_buckets(store_path: str, requested: int | None) -> int:
     `requested=None` is the READ-ONLY lookup path (probe_store): the caller
     has no opinion about the layout, so the stored value is returned with no
     mismatch warning; a store with no meta cannot be probed."""
-    import json
-    import logging
-
     os.makedirs(store_path, exist_ok=True)
     meta_path = os.path.join(store_path, "_store_meta.json")
     if not os.path.exists(meta_path) and any(
@@ -193,8 +202,6 @@ def _bloom_positions(keys_u64, m: int):
     """(n, k) bit positions via splitmix64 double hashing — pure-numpy and
     deterministic, so the write-side builder (executor pandas UDF) and the
     read-side prober (driver) agree bit-for-bit."""
-    import numpy as np
-
     def mix(x, c):
         x = x + np.uint64(c)
         x ^= x >> np.uint64(30)
@@ -212,8 +219,6 @@ def _bloom_positions(keys_u64, m: int):
 
 
 def _bloom_build(keys_u64, m: int):
-    import numpy as np
-
     bitmap = np.zeros(m // 8, dtype=np.uint8)
     pos = _bloom_positions(keys_u64, m).ravel()
     np.bitwise_or.at(bitmap, pos >> np.uint64(3), (1 << (pos & np.uint64(7))).astype(np.uint8))
@@ -222,8 +227,6 @@ def _bloom_build(keys_u64, m: int):
 
 def _bloom_maybe_any(bitmap, m: int, keys_u64) -> bool:
     """True iff AT LEAST ONE key may be present (all k bits set for it)."""
-    import numpy as np
-
     pos = _bloom_positions(keys_u64, m)
     bits = (bitmap[(pos >> np.uint64(3)).astype(np.int64)] >> (pos & np.uint64(7)).astype(np.uint8)) & 1
     return bool(bits.all(axis=1).any())
@@ -231,26 +234,25 @@ def _bloom_maybe_any(bitmap, m: int, keys_u64) -> bool:
 
 def _bloom_entry(keys_u64) -> dict:
     """Manifest entry {n, m, bits (base64)} of one partition's distinct keys."""
-    import base64
-
     m = _bloom_m_bits(len(keys_u64))
     bits = base64.b64encode(_bloom_build(keys_u64, m).tobytes()).decode()
     return {"n": len(keys_u64), "m": m, "bits": bits}
 
 
-def _keys_by_bucket(keys_i64, n_buckets: int) -> dict[int, "object"]:
-    """{store_bucket: distinct uint64 keys} of int64 keys on the driver, with
-    the JVM's bucket (`_bucket_col`: pmod of an xxhash64 value)."""
-    import numpy as np
-
-    keys = np.unique(np.asarray(keys_i64, dtype=np.int64))
-    bucket = np.mod(keys, n_buckets)  # numpy's mod takes the divisor's sign
+def _bucket_rows(keys_i64, n_buckets: int) -> list[tuple[int, "object"]]:
+    """(store_bucket, row indices) of int64 keys on the driver, in bucket
+    order, with the JVM's bucket (`_bucket_col`: pmod of an xxhash64
+    value)."""
+    bucket = np.mod(keys_i64, n_buckets)  # numpy's mod takes the divisor's sign
     order = np.argsort(bucket, kind="stable")
     ids, starts = np.unique(bucket[order], return_index=True)
-    return {
-        int(b): k.view(np.uint64)
-        for b, k in zip(ids, np.split(keys[order], starts[1:]))
-    }
+    return [(int(b), i) for b, i in zip(ids, np.split(order, starts[1:]))]
+
+
+def _keys_by_bucket(keys_i64, n_buckets: int) -> dict[int, "object"]:
+    """{store_bucket: distinct uint64 keys} of int64 keys."""
+    keys = np.unique(np.asarray(keys_i64, dtype=np.int64))
+    return {b: keys[i].view(np.uint64) for b, i in _bucket_rows(keys, n_buckets)}
 
 
 _BLOOM_ROW_SCHEMA = "store_bucket int, n long, m long, bits string"
@@ -261,8 +263,6 @@ def _bucket_blooms(df_bucketed: DataFrame, key_col: str) -> dict[str, dict]:
     keys, built distributively (groupBy + applyInPandas: executors see the
     keys they are about to write; the driver collects only one ~m/8-byte row
     per bucket — bounded by the store layout, not the batch size)."""
-    import numpy as np
-    import pandas as pd
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
         keys = np.unique(pdf["k"].to_numpy(dtype=np.int64).view(np.uint64))
@@ -348,8 +348,6 @@ def _collect_key_filter(
     when the batch is too wide to collect (> cap distinct keys) — callers
     then fall back to bucket-level pruning only. The collect is explicitly
     bounded: ≤ cap rows of (int, long)."""
-    import numpy as np
-
     pairs = df.select(
         bucket_expr.alias("__b"), key_expr.alias("__k")
     ).distinct()
@@ -400,16 +398,55 @@ def pruned_store_read(
     cannot provide when a wide batch touches every bucket. Partitions whose
     manifests predate blooms are kept unconditionally (no false pruning).
 
-    `stats_out`, if given, has the numbers of partitions read and
-    Bloom-pruned added to its `partitions_read` / `partitions_bloom_pruned`
-    (callers read both store sides into one dict). A `schema` of the side's
-    data columns skips Spark's schema-inference job over the parquet
-    footers; the partition columns are still taken from the paths."""
-    import base64
-
-    import numpy as np
-
+    `stats_out` as in `_pruned_paths`. A `schema` of the side's data columns
+    skips Spark's schema-inference job over the parquet footers; the
+    partition columns are still taken from the paths."""
     reader = spark.read if schema is None else spark.read.schema(schema)
+    paths, bloom_pruned = _pruned_paths(
+        store_dir, epoch_id, touched_buckets, key_filter, stats_out
+    )
+    if not paths:
+        if bloom_pruned:
+            # every bucket-matching partition was Bloom-rejected: the join
+            # result is provably empty — return an empty frame with the
+            # store schema (one footer read) instead of falling back to a
+            # whole-store root read that would defeat the pruning
+            return (
+                reader.option("basePath", store_dir)
+                .parquet(bloom_pruned[0])
+                .limit(0)
+            )
+        return reader.parquet(store_dir).where(
+            (F.col("batch_id") != epoch_id)
+            & F.col("store_bucket").isin([int(b) for b in touched_buckets])
+        )
+    return reader.option("basePath", store_dir).parquet(*paths)
+
+
+def _data_files(part_dir: str) -> list[str]:
+    """The parquet files of one partition directory (Spark's `.crc` and
+    `_SUCCESS` files excluded)."""
+    return sorted(
+        os.path.join(part_dir, f)
+        for f in os.listdir(part_dir)
+        if not f.startswith((".", "_"))
+    )
+
+
+def _pruned_paths(
+    store_dir: str,
+    epoch_id: int,
+    touched_buckets: list[int],
+    key_filter: dict[int, "object"] | None = None,
+    stats_out: dict | None = None,
+) -> tuple[list[str], list[str]]:
+    """(paths, bloom_pruned): the partition directories of pruned_store_read
+    that may hold a batch key, and those its Bloom filters rejected.
+
+    `stats_out`, if given, has the numbers of partitions read and
+    Bloom-pruned, and the data files and bytes of the partitions read, added
+    to its `partitions_read`, `partitions_bloom_pruned`, `files_read` and
+    `bytes_read` (callers read both store sides into one dict)."""
     want = {int(b) for b in touched_buckets}
     paths: list[str] = []
     bloom_pruned: list[str] = []
@@ -442,24 +479,15 @@ def pruned_store_read(
                         continue
                 paths.append(path)
     if stats_out is not None:
-        for k, n in (("partitions_read", paths), ("partitions_bloom_pruned", bloom_pruned)):
-            stats_out[k] = stats_out.get(k, 0) + len(n)
-    if not paths:
-        if bloom_pruned:
-            # every bucket-matching partition was Bloom-rejected: the join
-            # result is provably empty — return an empty frame with the
-            # store schema (one footer read) instead of falling back to a
-            # whole-store root read that would defeat the pruning
-            return (
-                reader.option("basePath", store_dir)
-                .parquet(bloom_pruned[0])
-                .limit(0)
-            )
-        return reader.parquet(store_dir).where(
-            (F.col("batch_id") != epoch_id)
-            & F.col("store_bucket").isin(list(want))
-        )
-    return reader.option("basePath", store_dir).parquet(*paths)
+        files = [f for p in paths for f in _data_files(p)]
+        for k, n in (
+            ("partitions_read", len(paths)),
+            ("partitions_bloom_pruned", len(bloom_pruned)),
+            ("files_read", len(files)),
+            ("bytes_read", sum(os.path.getsize(f) for f in files)),
+        ):
+            stats_out[k] = stats_out.get(k, 0) + n
+    return paths, bloom_pruned
 
 
 def _spark_pruned_read(
@@ -491,7 +519,7 @@ def _write_batch_side(
     (partitioned by their store_bucket) and record its manifest.
 
     `rows` must be CLUSTERED: each bucket in one task (repartition on the
-    bucket column, or one task for a small batch). Otherwise every task
+    bucket column). Otherwise every task
     opens a writer per touched bucket — at thousands of store buckets that
     is tasks×buckets small files per batch (measured 5× slower batches at
     1024 buckets), and at corpus scale a metadata explosion."""
@@ -501,7 +529,13 @@ def _write_batch_side(
 
 
 def _new_stats(path: str) -> dict:
-    return {"path": path, "partitions_read": 0, "partitions_bloom_pruned": 0}
+    return {
+        "path": path,
+        "partitions_read": 0,
+        "partitions_bloom_pruned": 0,
+        "files_read": 0,
+        "bytes_read": 0,
+    }
 
 
 def _pair_schema(url_type) -> StructType:
@@ -516,20 +550,20 @@ def _pair_schema(url_type) -> StructType:
 
 def _collect_batch(batch_df: DataFrame, cfg: DedupConfig):
     """Job 1 of the narrow path, and its only Python stage: the batch's
-    (url, minhash, band_keys, url_key = xxhash64(url)) as an Arrow table.
-    None when the batch is wide (rows × bands > _KEY_PRUNE_MAX_KEYS), which a
-    bounded count decides BEFORE the signature UDF runs, so the UDF runs once
-    per batch on either path; the count also bounds the collect."""
+    (url, minhash, band_keys) as an Arrow table. None when the batch is wide
+    (rows × bands > _KEY_PRUNE_MAX_KEYS), which a bounded count decides
+    BEFORE the signature UDF runs, so the UDF runs once per batch on either
+    path; the count also bounds the collect. None, with no job run, when
+    `local.xxhash64` cannot bucket the url type as Spark does."""
     max_rows = _KEY_PRUNE_MAX_KEYS // cfg.bands
+    if not local.xxhash64_supports(to_arrow_type(batch_df.schema["url"].dataType)):
+        return None
     # a count through toArrow is one job; DataFrame.count is two under AQE
     if batch_df.select(F.lit(1)).limit(max_rows + 1).toArrow().num_rows > max_rows:
         return None
     sigs = with_minhash_signature(batch_df.select("url", "text"), cfg, packed=True)
     return sigs.select(
-        "url",
-        "minhash",
-        band_keys("minhash", cfg).alias("band_keys"),
-        F.xxhash64("url").alias("url_key"),
+        "url", "minhash", band_keys("minhash", cfg).alias("band_keys")
     ).toArrow()
 
 
@@ -547,16 +581,36 @@ def _batch_sigs(spark: SparkSession, batch_df: DataFrame, tbl, cfg) -> DataFrame
 
 def _join_rows(left_keys, right_keys) -> int:
     """Rows of the equi-join of two int64 key arrays, without building it."""
-    import numpy as np
-
     ku, cu = np.unique(left_keys, return_counts=True)
     kv, cv = np.unique(right_keys, return_counts=True)
     _, ia, ib = np.intersect1d(ku, kv, assume_unique=True, return_indices=True)
     return int(cu[ia] @ cv[ib])
 
 
+def _read_on_driver(
+    store_dir: str,
+    epoch_id: int,
+    keys,
+    n_store_buckets: int,
+    schema: pa.Schema,
+    where: ds.Expression,
+    stats: dict,
+    limit: int | None = None,
+) -> pa.Table | None:
+    """The rows matching `where` of the store partitions that may hold one
+    of `keys` (int64 band keys or url hashes), read with pyarrow; None when
+    they exceed `limit` rows (the scan stops at limit + 1)."""
+    kf = _keys_by_bucket(keys, n_store_buckets)
+    paths, _ = _pruned_paths(store_dir, epoch_id, list(kf), kf, stats)
+    files = [f for p in paths for f in _data_files(p)]
+    scan = ds.dataset(files, schema=schema, format="parquet").scanner(filter=where)
+    if limit is None:
+        return scan.to_table()
+    got = scan.head(limit + 1)
+    return None if got.num_rows > limit else got
+
+
 def _resolve_on_driver(
-    spark: SparkSession,
     tbl,
     url_type,
     store_path: str,
@@ -576,14 +630,9 @@ def _resolve_on_driver(
     of a candidate url, as verify_pairs over store ∪ batch does. A probe
     pairs only with the store (url_a = probe url), and its signature
     overrides a stored one of the same url. Fills `stats` with
-    n_candidates, n_store_band_rows and the partition counts."""
-    import numpy as np
-    import pandas as pd
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    from pyspark.sql.pandas.types import to_arrow_type
-
+    n_candidates, n_store_band_rows and the partition and file counts."""
     cap = _KEY_PRUNE_MAX_KEYS
+    at = to_arrow_type(url_type)
     sig_store, band_store = _store_subdirs(store_path)
     tbl = tbl.filter(pc.is_valid(tbl["url"]))  # a null url never joins
     urls = tbl["url"].to_numpy(zero_copy_only=False)
@@ -593,30 +642,25 @@ def _resolve_on_driver(
             "url": np.repeat(urls, cfg.bands),
         }
     )
-    store = pd.DataFrame(
-        {"band_key": batch.band_key[:0], "url": urls[:0], "url_key": batch.band_key[:0]}
-    )
+    store = batch[:0]
     if _has_batches(band_store):
-        # job 2: the store's band rows sharing a key with the batch, from the
-        # Bloom-surviving partitions, through a broadcast semi join
-        kf = _keys_by_bucket(batch.band_key, n_store_buckets)
-        prev = pruned_store_read(
-            spark, band_store, epoch_id, list(kf), kf, stats,
-            StructType(
-                [StructField("url", url_type), StructField("band_key", LongType())]
-            ),
+        # the store's band rows sharing a key with the batch, from the
+        # Bloom-surviving partitions
+        uniq = np.unique(batch.band_key)
+        got = _read_on_driver(
+            band_store, epoch_id, uniq, n_store_buckets,
+            pa.schema([("url", at), ("band_key", pa.int64())]),
+            ds.field("band_key").isin(uniq) & ds.field("url").is_valid(),
+            stats, cap,
         )
-        keys = spark.createDataFrame(pa.table({"band_key": np.unique(batch.band_key)}))
-        store = (
-            prev.join(F.broadcast(keys), "band_key", "left_semi")
-            .where(F.col("url").isNotNull())
-            .select("band_key", "url", F.xxhash64("url").alias("url_key"))
-            .limit(cap + 1)
-            .toArrow()
-            .to_pandas()
-        )
-        if len(store) > cap:
+        if got is None:
             return None
+        store = pd.DataFrame(
+            {
+                "band_key": got["band_key"].to_numpy(),
+                "url": got["url"].to_numpy(zero_copy_only=False),
+            }
+        )
 
     # band collisions, each counted once as in candidate_pairs: the batch
     # with itself once per unordered pair, and the batch with the store
@@ -629,7 +673,7 @@ def _resolve_on_driver(
         return None
     ends = []
     for left, right, ordered in legs:
-        m = left.merge(right[["band_key", "url"]], on="band_key", suffixes=("_a", "_b"))
+        m = left.merge(right, on="band_key", suffixes=("_a", "_b"))
         a, b = m.url_a.to_numpy(), m.url_b.to_numpy()
         keep = a < b if ordered else a != b
         a, b = a[keep], b[keep]
@@ -647,30 +691,14 @@ def _resolve_on_driver(
     )
     need = pd.unique(cand.url_b if probe else np.concatenate([cand.url_a, cand.url_b]))
     if len(need) and _has_batches(sig_store):
-        # job 3: the stored signatures of the candidate urls, the same way
-        batch_keys = pd.DataFrame({"url": urls, "url_key": tbl["url_key"].to_numpy()})
-        url_key = (
-            pd.concat([batch_keys, store[["url", "url_key"]]])
-            .drop_duplicates("url")
-            .set_index("url")["url_key"]
-        )
-        kf = _keys_by_bucket(url_key.loc[need], n_store_buckets)
-        prev = pruned_store_read(
-            spark, sig_store, epoch_id, list(kf), kf, stats,
-            StructType(
-                [StructField("url", url_type), StructField("minhash", BinaryType())]
-            ),
-        )
-        want = spark.createDataFrame(
-            pa.table({"url": pa.array(need, type=to_arrow_type(url_type))}),
-            StructType([StructField("url", url_type)]),
-        )
-        stored = (
-            prev.join(F.broadcast(want), "url", "left_semi")
-            .select("url", "minhash")
-            .toArrow()
-            .to_pandas()
-        )
+        # the stored signatures of the candidate urls, from the partitions
+        # their hash may be in
+        need = pa.array(need, type=at)
+        stored = _read_on_driver(
+            sig_store, epoch_id, local.xxhash64(need), n_store_buckets,
+            pa.schema([("url", at), ("minhash", pa.binary())]),
+            ds.field("url").isin(need), stats,
+        ).to_pandas()
         if probe:
             stored = stored[~stored.url.isin(urls)]
         sigs = pd.concat([stored, sigs], ignore_index=True)
@@ -685,7 +713,6 @@ def _resolve_on_driver(
     keep, est = local.verify(
         S, m.i_a.to_numpy(), m.i_b.to_numpy(), cfg.jaccard_threshold
     )
-    at = to_arrow_type(url_type)
     return pa.table(
         {
             "url_a": pa.array(m.url_a.to_numpy()[keep], type=at),
@@ -695,52 +722,62 @@ def _resolve_on_driver(
     )
 
 
+def _write_parquet(rows: pa.Table, path: str) -> None:
+    """pq.write_table with Spark's encoding choices, so the files are no
+    larger than Spark's: a column is dictionary-encoded only when its
+    dictionary plus bit-packed indices take fewer bytes than its plain
+    values (the test Spark's parquet writer makes before it falls back to
+    plain), and the signatures get no min/max statistics."""
+    dictionary = []
+    for name in rows.column_names:
+        col = rows[name]
+        n, d = len(col), pc.count_distinct(col).as_py()
+        if n and col.nbytes * d / n + n * max(d - 1, 1).bit_length() / 8 < col.nbytes:
+            dictionary.append(name)
+    pq.write_table(
+        rows, path, use_dictionary=dictionary,
+        write_statistics=[c for c in rows.column_names if c != "minhash"],
+        store_schema=False,
+    )
+
+
+def _write_buckets(out: str, parts, extra: dict | None = None) -> int:
+    """Overwrite the batch directory `out` with one parquet file per store
+    bucket of `parts` ((bucket, (rows, int64 keys)) items), then `_SUCCESS`,
+    then the manifest with each bucket's key Bloom: the layout and manifest
+    of a Spark write of one task per bucket. Returns the data bytes
+    written."""
+    shutil.rmtree(out, ignore_errors=True)
+    os.makedirs(out)
+    blooms, size = {}, 0
+    for b, (rows, keys) in parts:
+        path = os.path.join(out, f"store_bucket={b}", "part-00000.parquet")
+        os.makedirs(os.path.dirname(path))
+        _write_parquet(rows, path)
+        size += os.path.getsize(path)
+        blooms[str(b)] = _bloom_entry(np.unique(keys).view(np.uint64))
+    open(os.path.join(out, "_SUCCESS"), "w").close()
+    _write_bucket_manifest(out, blooms, extra)
+    return size
+
+
 def _write_on_driver(
-    spark: SparkSession,
-    tbl,
-    url_field: StructField,
-    store_path: str,
-    cfg: DedupConfig,
-    epoch_id: int,
-    n_store_buckets: int,
+    tbl, store_path: str, cfg: DedupConfig, epoch_id: int, n_store_buckets: int
 ) -> None:
     """Both store sides of a narrow batch from the rows already on the
-    driver, with each bucket's Bloom built here: the bits `_bucket_blooms`
-    computes, without its applyInPandas job."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
+    driver, with pyarrow: the rows, buckets and manifests of `_spark_ingest`'s
+    writes, without a Spark job."""
     sig_store, band_store = _store_subdirs(store_path)
     band_key = pc.list_flatten(tbl["band_keys"])
     band_url = tbl["url"].take(np.repeat(np.arange(tbl.num_rows), cfg.bands))
     sides = (
-        (sig_store, tbl["url"], "minhash", tbl["minhash"], BinaryType(), tbl["url_key"]),
-        (band_store, band_url, "band_key", band_key, LongType(), band_key),
+        (sig_store, tbl["url"], "minhash", tbl["minhash"], local.xxhash64(tbl["url"])),
+        (band_store, band_url, "band_key", band_key, band_key.to_numpy()),
     )
-    for side_dir, url, name, col, dtype, key in sides:
-        keys = key.to_numpy()
-        rows = spark.createDataFrame(
-            pa.table(
-                {
-                    "url": url,
-                    name: col,
-                    "store_bucket": np.mod(keys, n_store_buckets).astype(np.int32),
-                }
-            ),
-            StructType(
-                [
-                    url_field,
-                    StructField(name, dtype),
-                    StructField("store_bucket", IntegerType()),
-                ]
-            ),
-        )
-        blooms = {
-            str(b): _bloom_entry(k)
-            for b, k in _keys_by_bucket(keys, n_store_buckets).items()
-        }
-        _write_batch_side(side_dir, epoch_id, rows.coalesce(1), blooms)
+    for side_dir, url, name, col, keys in sides:
+        rows = pa.table({"url": url, name: col})
+        parts = [(b, (rows.take(i), keys[i])) for b, i in _bucket_rows(keys, n_store_buckets)]
+        _write_buckets(os.path.join(side_dir, f"batch_id={epoch_id}"), parts)
 
 
 def _spark_pairs(
@@ -890,20 +927,22 @@ def incremental_dedup_batch(
 
     Two paths, the same pairs and the same store rows:
     - narrow (rows × bands ≤ _KEY_PRUNE_MAX_KEYS, decided by a bounded count
-      before any signature is computed): job 1 computes signatures, band
-      keys and xxhash64(url) — the only Python stage — and brings them to
-      the driver. The driver Bloom-prunes the store partitions; job 2 semi
-      joins the surviving band partitions with a broadcast frame of the
-      batch keys; pandas counts band matches per pair; job 3 fetches the
-      stored signatures of the candidate urls; numpy verifies. Both store
-      sides are written from the driver's rows, Blooms built on the driver.
+      before any signature is computed): job 1 computes signatures and band
+      keys — the only Python stage — and brings them to the driver. The
+      bounded count and that collect are the only Spark jobs. The driver
+      Bloom-prunes the store partitions, reads with pyarrow the band rows
+      sharing a batch key, counts band matches per pair in pandas, reads
+      the stored signatures of the candidate urls (bucketed by
+      `local.xxhash64`, Spark's hash of the url), verifies in numpy and
+      writes both store sides with pyarrow, Blooms built on the driver.
       Every Python task costs ~0.15 s before it sees data, so a small batch
       crosses the boundary once instead of four times. A batch whose band
       collisions exceed the same cap (a hot key) hands its collected
-      signatures to the wide path.
+      signatures to the wide path, and a batch whose url type
+      `local.xxhash64` does not hash takes the wide path from the start.
     - wide (larger batches, or key_prune=False): the same steps as Spark
-      joins, the signature UDF and the estimator UDF, Blooms built by
-      applyInPandas.
+      joins, the signature UDF, the estimator UDF and Spark writes, Blooms
+      built by applyInPandas.
 
     Scale + exactly-once design:
     - The band table is a persisted, incrementally-grown store
@@ -927,9 +966,10 @@ def incremental_dedup_batch(
 
     `stats_out`, if given, receives {"path": "narrow" | "wide",
     "n_candidates", "n_store_band_rows" (store band rows sharing a key with
-    the batch), "partitions_read", "partitions_bloom_pruned"} (store
-    partitions over both sides). On the wide path the two row counts cost
-    one extra job each.
+    the batch), "partitions_read", "partitions_bloom_pruned", "files_read",
+    "bytes_read"} (store partitions, and the data files and bytes in those
+    read, over both sides). On the wide path the two row counts cost one
+    extra job each.
     """
     cfg = cfg or DedupConfig()
     n_store_buckets = _effective_store_buckets(store_path, n_store_buckets)
@@ -939,7 +979,7 @@ def incremental_dedup_batch(
     pairs = None
     if tbl is not None:
         pairs = _resolve_on_driver(
-            spark, tbl, url_field.dataType, store_path, cfg, epoch_id,
+            tbl, url_field.dataType, store_path, cfg, epoch_id,
             n_store_buckets, False, stats,
         )
     if pairs is None:
@@ -949,9 +989,7 @@ def incremental_dedup_batch(
             epoch_id, n_store_buckets, key_prune, stats,
         )
     else:
-        _write_on_driver(
-            spark, tbl, url_field, store_path, cfg, epoch_id, n_store_buckets
-        )
+        _write_on_driver(tbl, store_path, cfg, epoch_id, n_store_buckets)
         verified = spark.createDataFrame(pairs, _pair_schema(url_field.dataType))
     if stats_out is not None:
         stats_out.update(stats)
@@ -973,9 +1011,10 @@ def probe_store(
 
     The narrow and wide paths of incremental_dedup_batch, minus the
     intra-batch pair leg and minus the store writes: a narrow probe runs
-    one Python stage and three collects. A probe url that is also stored
-    is verified with the probe's signature. `stats_out` as in
-    incremental_dedup_batch."""
+    one Python stage and two Spark jobs (the bounded count and the
+    signature collect), and reads the store with pyarrow. A probe url that
+    is also stored is verified with the probe's signature. `stats_out` as
+    in incremental_dedup_batch."""
     cfg = cfg or DedupConfig()
     if not _has_batches(_store_subdirs(store_path)[1]):
         raise ValueError(f"probe_store: {store_path} has no batches to probe")
@@ -988,7 +1027,7 @@ def probe_store(
     if tbl is not None:
         # epoch -1: no batch is excluded — probes read the whole (pruned) store
         pairs = _resolve_on_driver(
-            spark, tbl, url_type, store_path, cfg, -1, n_store_buckets, True, stats
+            tbl, url_type, store_path, cfg, -1, n_store_buckets, True, stats
         )
     if pairs is not None:
         out = spark.createDataFrame(pairs, _pair_schema(url_type))
@@ -1019,6 +1058,12 @@ def probe_store(
 # partition per touched bucket instead of B.
 
 _COMPACT_SENTINEL = -1  # probe_store's "exclude nothing" epoch — never reuse
+# A side of at most this many rows (summed from its files' parquet footers)
+# is compacted on the driver with pyarrow, one bucket in memory at a time; a
+# larger one with Spark jobs. Measured at the cap on a 4-core box, 8 buckets
+# of 2^19 rows, ~60-byte urls and 512-byte signatures (2.2 GB of parquet):
+# peak driver-Python RSS 1.7 GB, 26.5 s; RSS grows with the largest bucket.
+_LOCAL_MAX_COMPACT_ROWS = 1 << 22
 
 
 def _side_batch_ids(side_dir: str) -> list[int]:
@@ -1036,19 +1081,79 @@ def _finish_pending_compaction(side_dir: str) -> None:
     dirs it replaces; any of them still present (crash between the compacted
     rename and the source removal) are removed now, and an un-renamed tmp dir
     from an interrupted write is discarded."""
-    import shutil
-
     tmp = os.path.join(side_dir, "_compacting_tmp")
     if os.path.isdir(tmp):
         shutil.rmtree(tmp)
-    for d in list(os.listdir(side_dir)) if os.path.isdir(side_dir) else []:
-        if not d.startswith("batch_id="):
-            continue
-        man = _batch_manifest(side_dir, d)
-        for src in man.get("replaces", []):
+    for i in _side_batch_ids(side_dir):
+        d = f"batch_id={i}"
+        if not os.path.isdir(os.path.join(side_dir, d)):
+            continue  # replaced by a compacted directory listed before it
+        for src in _batch_manifest(side_dir, d).get("replaces", []):
             src_path = os.path.join(side_dir, src)
             if os.path.isdir(src_path):
                 shutil.rmtree(src_path)
+
+
+def _side_files(side_dir: str, src_dirs: list[str]) -> dict[int, list[str]]:
+    """{store_bucket: data files} of the batch directories src_dirs."""
+    out: dict[int, list[str]] = {}
+    for d in src_dirs:
+        for b in _batch_buckets(side_dir, d):
+            part = os.path.join(side_dir, d, f"store_bucket={b}")
+            out.setdefault(b, []).extend(_data_files(part))
+    return dict(sorted(out.items()))
+
+
+def _compact_on_driver(files: dict[int, list[str]], tmp: str, src_dirs: list[str]) -> int | None:
+    """Write the compacted side to `tmp` with `_write_buckets`, one bucket in
+    memory at a time: each bucket's rows of every source file, keyed by
+    band_key or by `local.xxhash64(url)`. None, with nothing written, when
+    local.xxhash64 cannot hash the url type as Spark does."""
+    first = next((f for fs in files.values() for f in fs), None)
+    schema = None if first is None else pq.read_schema(first).remove_metadata()
+    if schema is not None and "band_key" not in schema.names:
+        if not local.xxhash64_supports(schema.field("url").type):
+            return None
+
+    def parts():
+        for b, fs in files.items():
+            rows = ds.dataset(fs, schema=schema, format="parquet").to_table()
+            keys = (
+                rows["band_key"].to_numpy()
+                if "band_key" in rows.column_names
+                else local.xxhash64(rows["url"])
+            )
+            yield b, (rows, keys)
+
+    return _write_buckets(tmp, parts(), extra={"replaces": src_dirs})
+
+
+def _compact_on_spark(spark: SparkSession, side_dir: str, src_dirs: list[str], tmp: str) -> int:
+    """Write the compacted side to `tmp` as Spark jobs, Blooms built by
+    applyInPandas. Returns the data bytes written."""
+    df = spark.read.option("basePath", side_dir).parquet(
+        *[os.path.join(side_dir, d) for d in src_dirs]
+    )
+    merged = df.select(*[c for c in df.columns if c != "batch_id"])
+    key = "band_key" if "band_key" in df.columns else None
+    merged.repartition(F.col("store_bucket")).write.mode(
+        "overwrite"
+    ).partitionBy("store_bucket").parquet(tmp)
+    compacted = spark.read.option("basePath", tmp).parquet(tmp)
+    blooms = _bucket_blooms(
+        compacted.select(
+            "store_bucket",
+            (F.col("band_key") if key else F.xxhash64("url")).alias("k"),
+        ),
+        "k",
+    )
+    _write_bucket_manifest(tmp, blooms, extra={"replaces": src_dirs})
+    return sum(
+        os.path.getsize(f)
+        for d in os.listdir(tmp)
+        if d.startswith("store_bucket=")
+        for f in _data_files(os.path.join(tmp, d))
+    )
 
 
 def compact_store(
@@ -1059,7 +1164,14 @@ def compact_store(
     """Compact both sides of an incremental store: merge every existing
     batch_id directory into one compacted batch per side (content-identical
     row union — no dedup, no re-hashing), one file per store bucket, merged
-    manifest with rebuilt key Blooms. Returns {side: {"merged": n, "id": id}}.
+    manifest with rebuilt key Blooms. Returns {side: {"merged": n, "id": id,
+    "path": "local" | "spark" | None, "rows": rows merged, "bytes_written":
+    data bytes of the compacted batch}}.
+
+    A side of at most _LOCAL_MAX_COMPACT_ROWS rows, counted from the source
+    files' parquet footers, is rewritten on the driver with pyarrow and
+    runs no Spark job; a larger one (or one whose url type `local.xxhash64`
+    does not hash) is rewritten by Spark.
 
     Call between micro-batches from the ingest driver (the store's existing
     single-writer contract). Crash-safe in the store's idempotent style:
@@ -1069,44 +1181,31 @@ def compact_store(
     one) finish the removal. Compacted ids are negative and descending
     (-2, -3, ...) so they can never collide with a foreachBatch epoch id or
     with probe_store's exclude-nothing sentinel (-1)."""
-    import shutil
-
     out: dict = {}
     for side_dir in _store_subdirs(store_path):
         side = os.path.basename(side_dir)
         _finish_pending_compaction(side_dir)
         ids = _side_batch_ids(side_dir)
         if len(ids) < min_batches:
-            out[side] = {"merged": 0, "id": None}
+            out[side] = {"merged": 0, "id": None, "path": None, "rows": 0, "bytes_written": 0}
             continue
         new_id = min(_COMPACT_SENTINEL, min(ids)) - 1
         src_dirs = [f"batch_id={i}" for i in ids]
-        df = spark.read.option("basePath", side_dir).parquet(
-            *[os.path.join(side_dir, d) for d in src_dirs]
-        )
-        data_cols = [c for c in df.columns if c not in ("batch_id",)]
-        merged = df.select(*data_cols)
-        key = "band_key" if "band_key" in df.columns else None
         tmp = os.path.join(side_dir, "_compacting_tmp")
-        merged.repartition(F.col("store_bucket")).write.mode(
-            "overwrite"
-        ).partitionBy("store_bucket").parquet(tmp)
-        compacted = spark.read.option("basePath", tmp).parquet(tmp)
-        blooms = _bucket_blooms(
-            compacted.select(
-                "store_bucket",
-                (
-                    F.col("band_key") if key else F.xxhash64("url")
-                ).alias("k"),
-            ),
-            "k",
-        )
-        _write_bucket_manifest(tmp, blooms, extra={"replaces": src_dirs})
-        final = os.path.join(side_dir, f"batch_id={new_id}")
-        os.rename(tmp, final)
+        files = _side_files(side_dir, src_dirs)
+        rows = sum(pq.read_metadata(f).num_rows for fs in files.values() for f in fs)
+        path, size = "local", None
+        if rows <= _LOCAL_MAX_COMPACT_ROWS:
+            size = _compact_on_driver(files, tmp, src_dirs)
+        if size is None:
+            path, size = "spark", _compact_on_spark(spark, side_dir, src_dirs, tmp)
+        os.rename(tmp, os.path.join(side_dir, f"batch_id={new_id}"))
         for d in src_dirs:
             shutil.rmtree(os.path.join(side_dir, d))
-        out[side] = {"merged": len(ids), "id": new_id}
+        out[side] = {
+            "merged": len(ids), "id": new_id, "path": path, "rows": rows,
+            "bytes_written": size,
+        }
     return out
 
 

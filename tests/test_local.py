@@ -1,14 +1,18 @@
 """The driver-side kernels of `minhash_spark.local` against plain-Python
 models of the Spark operators they stand in for: the skew tiers and band
 counting of `lsh.candidate_pairs` with `multi_bucket_stats`, the row
-multiplicity of `verify_pairs`, and component-minimum labels."""
+multiplicity of `verify_pairs`, and component-minimum labels; and
+`local.xxhash64` against Spark's `xxhash64` itself."""
 
 import dataclasses
 import itertools
 from collections import Counter, defaultdict
 
 import numpy as np
+import pyarrow as pa
 import pytest
+from hypothesis import given, settings, strategies as st
+from pyspark.sql import functions as F
 
 from minhash_spark import local
 from minhash_spark.config import DedupConfig, MinHashConfig
@@ -109,3 +113,47 @@ def test_components_labels_are_component_minima():
     assert lab[[8, 9]].tolist() == [8, 8]
     assert lab[[2, 4]].tolist() == [2, 4]
     assert local.components(np.arange(63), np.arange(1, 64), 64, 1) is None
+
+
+def _spark_xxhash64(spark, values, ddl):
+    df = spark.createDataFrame([(v,) for v in values], f"v {ddl}")
+    return np.array([r[0] for r in df.select(F.xxhash64("v")).collect()], dtype=np.int64)
+
+
+# up to 200 characters of up to 4 UTF-8 bytes: every branch of the byte
+# hash (32-byte stripes, 8-byte words, a 4-byte word, single bytes)
+@settings(max_examples=25, deadline=None)
+@given(st.lists(st.none() | st.text(max_size=200), min_size=1, max_size=40))
+def test_xxhash64_matches_spark_on_strings(spark, ids):
+    want = _spark_xxhash64(spark, ids, "string")
+    assert np.array_equal(local.xxhash64(pa.array(ids, pa.string())), want)
+    binary = [None if v is None else v.encode() for v in ids]
+    assert np.array_equal(local.xxhash64(pa.array(binary, pa.binary())), want)
+
+
+@settings(max_examples=25, deadline=None)
+@given(st.lists(st.none() | st.integers(-(2**63), 2**63 - 1), min_size=1, max_size=40))
+def test_xxhash64_matches_spark_on_integers(spark, ids):
+    want = _spark_xxhash64(spark, ids, "bigint")
+    assert np.array_equal(local.xxhash64(pa.array(ids, pa.int64())), want)
+    ints = [None if v is None else (v + 2**31) % 2**32 - 2**31 for v in ids]
+    want = _spark_xxhash64(spark, ints, "int")
+    assert np.array_equal(local.xxhash64(pa.array(ints, pa.int32())), want)
+
+
+def test_xxhash64_edge_ids(spark, monkeypatch):
+    """Every byte length 0..70, nulls, the integer extremes, and blocks
+    small enough that a long id is hashed alone."""
+    monkeypatch.setattr(local, "XXHASH_CHUNK_BYTES", 64)
+    strs = ["x" * n for n in range(71)] + ["é" * 300, None, "", "\U0001F600" * 9]
+    sliced = pa.array(["pad"] + strs)[1:]  # a non-zero array offset
+    assert np.array_equal(local.xxhash64(sliced), _spark_xxhash64(spark, strs, "string"))
+    longs = [0, 1, -1, 2**63 - 1, -(2**63), None]
+    assert np.array_equal(
+        local.xxhash64(pa.chunked_array([longs[:3], longs[3:]], pa.int64())),
+        _spark_xxhash64(spark, longs, "bigint"),
+    )
+    assert local.xxhash64(pa.array([None, None], pa.string())).tolist() == [42, 42]
+    assert not local.xxhash64_supports(pa.float64())
+    with pytest.raises(TypeError):
+        local.xxhash64(pa.array([1.5]))

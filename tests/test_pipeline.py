@@ -468,10 +468,16 @@ def test_local_path_job_count(spark, tmp_path):
     assert 0 < len(jobs) <= 8, len(jobs)
     # the SQL executions of those jobs whose plan evaluates Python
     executions = spark._jsparkSession.sharedState().statusStore().executionsList()
-    python = []
+    python, in_sql = [], set()
     for i in range(executions.size()):
         e = executions.apply(i)
         plan = e.physicalPlanDescription()
-        if any(e.jobs().contains(j) for j in jobs) and "EvalPython" in plan:
+        mine = {j for j in jobs if e.jobs().contains(j)}
+        in_sql |= mine
+        if mine and "EvalPython" in plan:
             python.append(plan)
     assert len(python) == 1 and "_sig_packed" in python[0]
+    # the local path reads the signatures with their schema, so Spark runs
+    # no schema-inference job over the footers: that job ran outside any
+    # SQL execution, and was the run's only one
+    assert sorted(in_sql) == sorted(jobs), (sorted(jobs), sorted(in_sql))

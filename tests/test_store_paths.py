@@ -3,10 +3,13 @@ same answers and write the same store: the narrow path (signatures once to
 the driver, numpy pair counting and verification) against the wide path
 (Spark joins and UDFs), forced by setting the narrow cap to 0. Also: the
 collision overflow hand-off, stats_out, and the job count of a narrow
-ingest and probe."""
+ingest and probe. Also: compaction on the driver against compaction by
+Spark (forced by setting _LOCAL_MAX_COMPACT_ROWS to 0), and its recovery
+after a crash."""
 
 import json
 import os
+import shutil
 from collections import Counter
 
 import pandas as pd
@@ -18,6 +21,7 @@ from minhash_spark.sources.pages import generate_corpus
 from minhash_spark.streaming import incremental
 from minhash_spark.streaming.incremental import (
     _store_subdirs,
+    compact_store,
     incremental_dedup_batch,
     probe_store,
 )
@@ -119,9 +123,12 @@ def test_narrow_and_wide_paths_agree(spark, corpus, monkeypatch, tmp_path):
     twin_counts = [n for (a, b, _), n in n_res[4].items() if twin in (a, b)]
     assert len(twin_counts) >= 2 and set(twin_counts) == {1}
     for n, w in zip(n_stats, w_stats):
-        assert {k: v for k, v in n.items() if k != "path"} == {
-            k: v for k, v in w.items() if k != "path"
+        # bytes_read counts file bytes, and pyarrow and Spark write files of
+        # different sizes; every other count is the same on both paths
+        assert {k: v for k, v in n.items() if k not in ("path", "bytes_read")} == {
+            k: v for k, v in w.items() if k not in ("path", "bytes_read")
         }
+        assert (n["bytes_read"] > 0) == (w["bytes_read"] > 0) == (n["files_read"] > 0)
     assert n_store == w_store
     for rows, manifests in n_store.values():
         assert sum(rows.values()) > 0
@@ -157,6 +164,25 @@ def test_collision_overflow_hands_off_to_spark(spark, monkeypatch, tmp_path):
     assert got["overflow"][2] == got["wide"][2]
 
 
+def test_unhashed_url_type_takes_the_spark_paths(spark, tmp_path):
+    """`local.xxhash64` does not hash a double url, so its batches ingest on
+    the wide path and its signature side compacts with Spark; the band side,
+    keyed by band_key, still compacts on the driver."""
+    store = str(tmp_path / "store")
+    pages, _, _ = generate_corpus(40, seed=17)
+    df = spark.createDataFrame(
+        [(float(i), t) for i, t in enumerate(pages.text)], "url double, text string"
+    )
+    for e in range(2):
+        st: dict = {}
+        part = df.where(F.col("url") % 2 == e)
+        incremental_dedup_batch(spark, part, store, CFG, e, 4, stats_out=st).collect()
+        assert st["path"] == "wide"
+    res = compact_store(spark, store)
+    assert (res["signatures"]["path"], res["bands"]["path"]) == ("spark", "local")
+    assert res["signatures"]["rows"] == 40 and res["bands"]["rows"] == 40 * CFG.bands
+
+
 def _jobs(sc, group, fn):
     sc.setJobGroup(group, group)
     try:
@@ -167,8 +193,10 @@ def _jobs(sc, group, fn):
 
 
 def test_narrow_job_counts(spark, tmp_path):
-    """At most half of the Spark jobs of the earlier per-step plans: 10 for
-    a narrow ingest (was 21), 6 for a narrow probe (was 12)."""
+    """A narrow ingest or probe runs at most 3 Spark jobs (21 and 12 with
+    per-step Spark plans; the bounded count and the signature collect are
+    two of them), and compacting a store below _LOCAL_MAX_COMPACT_ROWS
+    runs none."""
     sc = spark.sparkContext
     store = str(tmp_path / "store")
     pages, _, _ = generate_corpus(120, seed=9)
@@ -192,5 +220,82 @@ def test_narrow_job_counts(spark, tmp_path):
         lambda: probe_store(spark, df.limit(20), store, CFG, stats_out=st).collect(),
     )
     assert st["path"] == "narrow" and st["n_candidates"] > 0
-    assert n_ingest <= 10, n_ingest
-    assert n_probe <= 6, n_probe
+    assert st["files_read"] > 0 and st["bytes_read"] > 0
+    res: dict = {}
+    n_compact = _jobs(sc, "local-compact", lambda: res.update(compact_store(spark, store)))
+    assert {r["path"] for r in res.values()} == {"local"}
+    assert n_ingest <= 3, n_ingest
+    assert n_probe <= 3, n_probe
+    assert n_compact == 0, n_compact
+
+
+@pytest.fixture(params=["string", "long"])
+def store3(request, spark, tmp_path_factory):
+    """A three-epoch store, one row of it with a null url, and a copy of it
+    per call of the returned function."""
+    pages, _, _ = generate_corpus(90, seed=13)
+    pdf = pages[["url", "text"]].copy()
+    if request.param == "long":
+        pdf["url"] = range(500, 500 + len(pdf))
+    pdf["url"] = pdf["url"].astype(object)
+    pdf.loc[7, "url"] = None
+    ddl = "url string, text string" if request.param == "string" else "url long, text string"
+    df = spark.createDataFrame(pdf, ddl)
+    base = str(tmp_path_factory.mktemp("compact") / "store")
+    for e in range(3):
+        part = df.where(F.pmod(F.abs(F.crc32("text")), F.lit(3)) == e)
+        incremental_dedup_batch(spark, part, base, CFG, e, 4).collect()
+
+    def fresh(name):
+        dst = str(tmp_path_factory.mktemp(name) / "store")
+        shutil.copytree(base, dst)
+        return dst
+
+    return fresh
+
+
+def test_driver_and_spark_compaction_agree(spark, store3, monkeypatch):
+    got = {}
+    for path, cap in (("local", incremental._LOCAL_MAX_COMPACT_ROWS), ("spark", 0)):
+        monkeypatch.setattr(incremental, "_LOCAL_MAX_COMPACT_ROWS", cap)
+        store = store3(path)
+        res = compact_store(spark, store)
+        assert {r["path"] for r in res.values()} == {path}
+        assert all(r["merged"] == 3 and r["bytes_written"] > 0 for r in res.values())
+        got[path] = ({s: r["rows"] for s, r in res.items()}, _store_state(spark, store))
+    assert got["local"] == got["spark"]
+    rows, manifests = got["local"][1]["signatures"]
+    assert sum(n for r, n in rows.items() if r[0] is None) == 1  # the null url
+    assert sum(rows.values()) == got["local"][0]["signatures"]
+    (man,) = manifests.values()
+    assert man["replaces"] == ["batch_id=0", "batch_id=1", "batch_id=2"]
+
+
+@pytest.mark.parametrize("crash", ["tmp_left", "sources_left"])
+def test_compaction_recovers_from_a_crash(spark, store3, crash):
+    """A crash while `_compacting_tmp` was written, or after its rename but
+    before the sources were removed: the next compact_store leaves the rows
+    and manifests of an uninterrupted one."""
+    clean = store3("clean")
+    compact_store(spark, clean)
+    want = _store_state(spark, clean)
+
+    store = store3(crash)
+    for side, clean_side in zip(_store_subdirs(store), _store_subdirs(clean)):
+        if crash == "tmp_left":
+            # a partial tmp: one bucket's file, no manifest
+            part = next(p for p in sorted(os.listdir(clean_side)) if p.startswith("batch_id="))
+            src = os.path.join(clean_side, part, "store_bucket=0")
+            shutil.copytree(src, os.path.join(side, "_compacting_tmp", "store_bucket=0"))
+        else:
+            sources = [d for d in os.listdir(side) if d.startswith("batch_id=")]
+            (done,) = [d for d in os.listdir(clean_side) if d.startswith("batch_id=")]
+            shutil.copytree(os.path.join(clean_side, done), os.path.join(side, done))
+            assert len(sources) == 3
+    res = compact_store(spark, store)
+    assert _store_state(spark, store) == want
+    for side in _store_subdirs(store):
+        assert not os.path.exists(os.path.join(side, "_compacting_tmp"))
+    if crash == "sources_left":
+        # recovery removed the replaced sources; nothing was left to merge
+        assert {r["merged"] for r in res.values()} == {0}
