@@ -1,10 +1,10 @@
 """Driver-side numpy kernels of the dedup: LSH band pairs with the skew tiers
 of `operators.lsh.candidate_pairs`, the Jaccard estimate of
 `operators.verify.estimate_jaccard_udf`, the pointer-jumping connected
-components of `operators.cluster`, and Spark's `xxhash64` of an id column
-(the store's url bucket and Bloom key).
+components of `operators.cluster`, Spark's `xxhash64` of an id column (the
+store's url bucket and Bloom key), and the band keys of `lsh.band_keys`.
 
-Everything but `xxhash64` works on integer arrays: url codes (0..n-1 in url
+Everything but `xxhash64` and `band_keys` works on integer arrays: url codes (0..n-1 in url
 order, -1 for a null url) and signature row indices. Callers factorize ids
 and join them back; these functions never see a url.
 """
@@ -160,16 +160,17 @@ def _fmix(h: np.ndarray) -> np.ndarray:
     return h ^ (h >> np.uint64(32))
 
 
-def _xxh_padded(mat: np.ndarray, lens: np.ndarray) -> np.ndarray:
+def _xxh_padded(mat: np.ndarray, lens: np.ndarray, seed) -> np.ndarray:
     """XXH64 of each row's first lens[i] bytes of the zero-padded uint8
-    matrix `mat` (k, 8w), w > max(lens) / 8, row by row in lockstep: each
-    step applies to the rows that still have input for it."""
+    matrix `mat` (k, 8w), w > max(lens) / 8, with seed (a uint64 scalar or
+    one per row), row by row in lockstep: each step applies to the rows
+    that still have input for it."""
     k, nbytes = mat.shape
     words, ints = mat.view("<u8"), mat.view("<u4")
     rows = np.arange(k)
     n32 = lens // 32
-    p1, p2 = int(_P1), int(_P2)
-    v = [np.full(k, _u64(s), np.uint64) for s in (_SEED + p1 + p2, _SEED + p2, _SEED, _SEED - p1)]
+    seed = np.broadcast_to(np.asarray(seed, np.uint64), (k,))
+    v = [seed + _P1 + _P2, seed + _P2, seed, seed - _P1]
     for s in range(int(n32.max(initial=0))):
         live = s < n32
         for j in range(4):
@@ -177,7 +178,7 @@ def _xxh_padded(mat: np.ndarray, lens: np.ndarray) -> np.ndarray:
     h = _rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12) + _rotl(v[3], 18)
     for vj in v:
         h = (h ^ _round(np.uint64(0), vj)) * _P1 + _P4
-    h = np.where(n32 > 0, h, _u64(_SEED + int(_P5))) + lens.astype(np.uint64)
+    h = np.where(n32 > 0, h, seed + _P5) + lens.astype(np.uint64)
     # up to three whole 8-byte words after the 32-byte stripes
     n8 = lens % 32 // 8
     for j in range(3):
@@ -193,6 +194,28 @@ def _xxh_padded(mat: np.ndarray, lens: np.ndarray) -> np.ndarray:
         byte = mat[rows, np.minimum(o + j, nbytes - 1)].astype(np.uint64)
         h = np.where(o + j < lens, _rotl(h ^ byte * _P5, 11) * _P1, h)
     return _fmix(h)
+
+
+def _hash_int(x: np.ndarray, seed) -> np.ndarray:
+    """hashInt of each int32 of x with seed."""
+    x = x.astype(np.int32, copy=False).view(np.uint32).astype(np.uint64)
+    return _fmix(_rotl((seed + _P5 + np.uint64(4)) ^ x * _P1, 23) * _P2 + _P3)
+
+
+def band_keys(S: np.ndarray, cfg: DedupConfig) -> np.ndarray:
+    """The int64 band keys (n, bands) of the int32 signature matrix S, as
+    `operators.lsh.band_keys` derives them from the packed signature:
+    band i's key is Spark's xxhash64(i, substring(sig, i·4·rows + 1,
+    4·rows)), the XXH64 of the band's 4·rows little-endian bytes seeded
+    with hashInt(i, 42)."""
+    n, width = len(S), 4 * cfg.rows
+    pad = (width // 8 + 1) * 8
+    mat = np.zeros((n * cfg.bands, pad), np.uint8)
+    cells = np.ascontiguousarray(S, dtype="<i4").view(np.uint8)
+    mat[:, :width] = cells.reshape(n * cfg.bands, width)
+    seeds = _hash_int(np.arange(cfg.bands), _u64(_SEED))
+    h = _xxh_padded(mat, np.full(n * cfg.bands, width), np.tile(seeds, n))
+    return h.view(np.int64).reshape(n, cfg.bands)
 
 
 def _xxh_bytes(arr: pa.Array) -> np.ndarray:
@@ -217,7 +240,7 @@ def _xxh_bytes(arr: pa.Array) -> np.ndarray:
         mat = np.zeros((e - s, width), np.uint8)
         dst = _runs(np.arange(e - s) * width, lens[idx])
         mat.ravel()[dst] = data[_runs(off[idx], lens[idx])]
-        out[idx] = _xxh_padded(mat, lens[idx])
+        out[idx] = _xxh_padded(mat, lens[idx], _u64(_SEED))
         s = e
     return out
 
@@ -243,8 +266,7 @@ def xxhash64(arr) -> np.ndarray:
         x = arr.fill_null(0).to_numpy().view(np.uint64)
         h = _fmix(_rotl(_u64(_SEED + int(_P5) + 8) ^ _round(np.uint64(0), x), 27) * _P1 + _P4)
     elif pa.types.is_int32(t):
-        x = arr.fill_null(0).to_numpy().view(np.uint32).astype(np.uint64)
-        h = _fmix(_rotl(_u64(_SEED + int(_P5) + 4) ^ x * _P1, 23) * _P2 + _P3)
+        h = _hash_int(arr.fill_null(0).to_numpy(), _u64(_SEED))
     else:
         h = _xxh_bytes(arr.cast(pa.large_binary()))
     h = h.view(np.int64)

@@ -166,11 +166,13 @@ class DedupPipeline:
         todo = src.count()
         if todo > 0:
             # guard against under-partitioned inputs (in-memory fixtures,
-            # single-file tables): the UDF stage should use every core. Real
-            # corpora already arrive in enough parquet splits.
+            # single-file tables): one UDF task per core uses every core and
+            # starts one Python worker per core (each ~0.1 s before it sees
+            # data), and writes one file per core and ds. Real corpora
+            # already arrive in enough parquet splits.
             par = self.spark.sparkContext.defaultParallelism
             if src.rdd.getNumPartitions() < par:
-                src = src.repartition(2 * par)
+                src = src.repartition(par)
             sigs = with_minhash_signature(src, self.cfg, packed=True).select("url", "ds", "minhash")
             mode = "append" if done_ds else "overwrite"
             sigs.write.mode(mode).partitionBy("ds").parquet(out)

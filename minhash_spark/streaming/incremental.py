@@ -15,12 +15,15 @@ the pattern for periodic incremental dedup over a landing zone.
 
 The store (`incremental_dedup_batch`, `probe_store`) has two paths with the
 same results and the same store rows. A narrow batch (rows × bands within
-_KEY_PRUNE_MAX_KEYS) crosses into Python once: one job computes its
-signatures and band keys and brings them to the driver. After that the
-driver touches the store only through pyarrow: it prunes the store by Bloom
-filter, reads the matching band rows and stored signatures, counts and
-verifies pairs in numpy, and writes both store sides. A wide batch runs the
-same steps as Spark joins, UDFs and writes. `compact_store` likewise
+_KEY_PRUNE_MAX_KEYS) runs one JVM-only Spark job and starts no Python
+worker: the job brings its urls and texts to the driver, which computes
+the signatures and band keys the UDF and `lsh.band_keys` would (a batch of
+more than _LOCAL_MAX_SIGN_BYTES of text is signed by the UDF instead, in a
+second job). After that the driver touches the store only through pyarrow:
+it prunes the store by Bloom filter, reads the matching band rows and
+stored signatures, counts and verifies pairs in numpy, and writes both
+store sides. A wide batch runs the same steps as Spark joins, UDFs and
+writes. `compact_store` likewise
 rewrites a side of up to _LOCAL_MAX_COMPACT_ROWS rows on the driver and a
 larger one with Spark. Both writers lay out the same partitions, rows and
 manifests, so every reader takes files from either.
@@ -54,7 +57,7 @@ from pyspark.sql.pandas.types import to_arrow_type
 
 from .. import local
 from ..config import DedupConfig
-from ..operators.signatures import with_minhash_signature
+from ..operators.signatures import packed_rows, signature_matrix, with_minhash_signature
 from ..operators.lsh import band_keys, bands_table
 from ..operators.verify import verify_pairs
 
@@ -189,6 +192,19 @@ _BLOOM_MIN_BITS = 1024
 # stay within it; the wide path Bloom-probes only while its distinct
 # (bucket, key) pairs do, and degrades to bucket pruning past it
 _KEY_PRUNE_MAX_KEYS = 1 << 18
+# a narrow batch of up to this many bytes of text is signed on the driver
+# (see _collect_batch), a larger one by the signature UDF: the driver signs
+# on one core at ~0.85 s/MiB, the UDF's tasks run in parallel but each pays
+# ~0.1 s of Python-worker start first. Median narrow-ingest wall of a
+# 4-partition batch of 2 KiB docs into a 256-doc store, 4-core box:
+#   text MiB   rows   driver s   UDF s
+#   0.25        128     0.33     0.32   (0.37 / 0.40 in a second run)
+#   0.375       192     0.40     0.33
+#   0.5         256     0.54     0.40
+#   1           512     1.19     0.57
+#   4         2,048     4.19     1.45
+#   16        8,192    17.85     5.18
+_LOCAL_MAX_SIGN_BYTES = 1 << 18
 
 
 def _bloom_m_bits(n_keys: int) -> int:
@@ -549,27 +565,44 @@ def _pair_schema(url_type) -> StructType:
 
 
 def _collect_batch(batch_df: DataFrame, cfg: DedupConfig):
-    """Job 1 of the narrow path, and its only Python stage: the batch's
-    (url, minhash, band_keys) as an Arrow table. None when the batch is wide
-    (rows × bands > _KEY_PRUNE_MAX_KEYS), which a bounded count decides
-    BEFORE the signature UDF runs, so the UDF runs once per batch on either
-    path; the count also bounds the collect. None, with no job run, when
-    `local.xxhash64` cannot bucket the url type as Spark does."""
+    """Step 1 of the narrow path: the batch's (url, minhash, band_keys) as
+    an Arrow table. One JVM-only job collects (url, text) of at most
+    max_rows + 1 rows; None when the batch is wide (more than max_rows =
+    _KEY_PRUNE_MAX_KEYS / bands rows). The driver signs those texts with
+    `signature_matrix` and keys the bands with `local.band_keys`, the
+    values of the signature UDF and `lsh.band_keys`, so no Python worker
+    starts. A batch of more than _LOCAL_MAX_SIGN_BYTES of text drops the
+    collected text and is signed by the UDF in a second job, in parallel.
+    None, with no job run, when `local.xxhash64` cannot bucket the url
+    type as Spark does."""
     max_rows = _KEY_PRUNE_MAX_KEYS // cfg.bands
     if not local.xxhash64_supports(to_arrow_type(batch_df.schema["url"].dataType)):
         return None
-    # a count through toArrow is one job; DataFrame.count is two under AQE
-    if batch_df.select(F.lit(1)).limit(max_rows + 1).toArrow().num_rows > max_rows:
+    batch = batch_df.select("url", "text")
+    tbl = batch.limit(max_rows + 1).toArrow()
+    if tbl.num_rows > max_rows:
         return None
-    sigs = with_minhash_signature(batch_df.select("url", "text"), cfg, packed=True)
-    return sigs.select(
-        "url", "minhash", band_keys("minhash", cfg).alias("band_keys")
-    ).toArrow()
+    if (pc.sum(pc.binary_length(tbl["text"])).as_py() or 0) > _LOCAL_MAX_SIGN_BYTES:
+        sigs = with_minhash_signature(batch, cfg, packed=True)
+        return sigs.select(
+            "url", "minhash", band_keys("minhash", cfg).alias("band_keys")
+        ).toArrow()
+    S = signature_matrix(tbl["text"].to_pylist(), cfg)
+    keys = local.band_keys(S, cfg)
+    return pa.table(
+        {
+            "url": tbl["url"],
+            "minhash": pa.array(packed_rows(S), pa.binary()),
+            "band_keys": pa.ListArray.from_arrays(
+                np.arange(0, keys.size + 1, cfg.bands, dtype=np.int32), keys.ravel()
+            ),
+        }
+    )
 
 
 def _batch_sigs(spark: SparkSession, batch_df: DataFrame, tbl, cfg) -> DataFrame:
     """The batch's (url, minhash) for the Spark path: the collected table of
-    `_collect_batch` when it ran (the UDF does not run twice), else the
+    `_collect_batch` when it ran (no batch is signed twice), else the
     signature UDF."""
     if tbl is None:
         return with_minhash_signature(
@@ -926,19 +959,19 @@ def incremental_dedup_batch(
     (pass its epoch_id through).
 
     Two paths, the same pairs and the same store rows:
-    - narrow (rows × bands ≤ _KEY_PRUNE_MAX_KEYS, decided by a bounded count
-      before any signature is computed): job 1 computes signatures and band
-      keys — the only Python stage — and brings them to the driver. The
-      bounded count and that collect are the only Spark jobs. The driver
-      Bloom-prunes the store partitions, reads with pyarrow the band rows
-      sharing a batch key, counts band matches per pair in pandas, reads
-      the stored signatures of the candidate urls (bucketed by
+    - narrow (rows × bands ≤ _KEY_PRUNE_MAX_KEYS, decided by a collect of at
+      most max_rows + 1 urls and texts): that collect is the only Spark job
+      and evaluates no Python. The driver signs the texts and keys their
+      bands (`_collect_batch`; above _LOCAL_MAX_SIGN_BYTES of text the
+      signature UDF does, in a second job), Bloom-prunes the store
+      partitions, reads with pyarrow the band rows sharing a batch key,
+      counts band matches per pair in pandas, reads the stored signatures of the candidate urls (bucketed by
       `local.xxhash64`, Spark's hash of the url), verifies in numpy and
       writes both store sides with pyarrow, Blooms built on the driver.
-      Every Python task costs ~0.15 s before it sees data, so a small batch
-      crosses the boundary once instead of four times. A batch whose band
-      collisions exceed the same cap (a hot key) hands its collected
-      signatures to the wide path, and a batch whose url type
+      Every Python task costs ~0.1 s before it sees data, more than
+      signing a small batch on the driver, so a small batch never crosses
+      the boundary. A batch whose band collisions exceed the same cap (a
+      hot key) hands its collected signatures to the wide path, and a batch whose url type
       `local.xxhash64` does not hash takes the wide path from the start.
     - wide (larger batches, or key_prune=False): the same steps as Spark
       joins, the signature UDF, the estimator UDF and Spark writes, Blooms
@@ -1011,8 +1044,8 @@ def probe_store(
 
     The narrow and wide paths of incremental_dedup_batch, minus the
     intra-batch pair leg and minus the store writes: a narrow probe runs
-    one Python stage and two Spark jobs (the bounded count and the
-    signature collect), and reads the store with pyarrow. A probe url that
+    one JVM-only Spark job (the collect of its urls and texts), signs on
+    the driver and reads the store with pyarrow. A probe url that
     is also stored is verified with the probe's signature. `stats_out` as
     in incremental_dedup_batch."""
     cfg = cfg or DedupConfig()

@@ -2,7 +2,9 @@
 models of the Spark operators they stand in for: the skew tiers and band
 counting of `lsh.candidate_pairs` with `multi_bucket_stats`, the row
 multiplicity of `verify_pairs`, and component-minimum labels; and
-`local.xxhash64` against Spark's `xxhash64` itself."""
+`local.xxhash64` and `local.band_keys` against Spark's `xxhash64` and
+`lsh.band_keys` themselves, and `signature_matrix` against the signature
+UDF."""
 
 import dataclasses
 import itertools
@@ -12,10 +14,15 @@ import numpy as np
 import pyarrow as pa
 import pytest
 from hypothesis import given, settings, strategies as st
+from hypothesis.extra.numpy import arrays
 from pyspark.sql import functions as F
 
 from minhash_spark import local
-from minhash_spark.config import DedupConfig, MinHashConfig
+from minhash_spark.config import SIG_INFTY_INT, DedupConfig, MinHashConfig
+from minhash_spark.functions.kernels import min_sketch_batch, sketch_to_int
+from minhash_spark.functions.shingles import shingle_fn
+from minhash_spark.operators import lsh
+from minhash_spark.operators.signatures import signature_matrix, with_minhash_signature
 
 CFG = DedupConfig(
     minhash=MinHashConfig(sketch_size=8),
@@ -157,3 +164,49 @@ def test_xxhash64_edge_ids(spark, monkeypatch):
     assert not local.xxhash64_supports(pa.float64())
     with pytest.raises(TypeError):
         local.xxhash64(pa.array([1.5]))
+
+
+# rows=4: one 16-byte band, below the 32-byte stripe; rows=8: a 32-byte band,
+# one pass of the stripe loop
+BAND_CFGS = [DedupConfig(), DedupConfig(bands=16, rows=8)]
+
+
+@pytest.mark.parametrize("cfg", BAND_CFGS, ids=["rows4", "rows8"])
+@settings(max_examples=15, deadline=None)
+@given(data=st.data())
+def test_band_keys_match_spark(spark, cfg, data):
+    cell = st.sampled_from([SIG_INFTY_INT, 0, -1, -(2**31)]) | st.integers(-(2**31), 2**31 - 1)
+    n = data.draw(st.integers(0, 12))
+    S = data.draw(arrays(np.int32, (n, cfg.minhash.sketch_size), elements=cell))
+    df = spark.createDataFrame(
+        [(i, bytearray(S[i].astype("<i4").tobytes())) for i in range(n)],
+        "i int, minhash binary",
+    )
+    got = df.select("i", lsh.band_keys("minhash", cfg).alias("k")).collect()
+    want = np.array([r.k for r in sorted(got)], dtype=np.int64).reshape(n, cfg.bands)
+    assert np.array_equal(local.band_keys(S, cfg), want)
+
+
+WORDS = st.sampled_from(["alpha", "beta", "Gamma", "ü", "日本語", "\U0001F600", "a", ""])
+TEXTS = (
+    st.none()
+    | st.text(max_size=60)
+    | st.text(max_size=4)  # below shingle_size
+    | st.lists(WORDS, max_size=12).map(" ".join)
+)
+
+
+@pytest.mark.parametrize("mode", ["char", "word"])
+@settings(max_examples=15, deadline=None)
+@given(texts=st.lists(TEXTS, min_size=1, max_size=30))
+def test_signature_matrix_matches_the_udf(spark, mode, texts):
+    cfg = DedupConfig(shingle_mode=mode, shingle_size=5 if mode == "char" else 2)
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, text string")
+    got = with_minhash_signature(df, cfg, packed=True).select("i", "minhash").collect()
+    want = [bytes(r.minhash) for r in sorted(got)]
+    S = signature_matrix(texts, cfg)
+    assert S.dtype == np.int32 and S.shape == (len(texts), cfg.minhash.sketch_size)
+    assert [row.astype("<i4").tobytes() for row in S] == want
+    # the UDF shares signature_matrix; the per-document shingler does not
+    per_doc = [shingle_fn(mode, cfg.shingle_size)(t) for t in texts]
+    assert np.array_equal(S, sketch_to_int(min_sketch_batch(per_doc, cfg.minhash)))

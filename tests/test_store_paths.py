@@ -1,11 +1,11 @@
 """The two paths of the incremental store (streaming/incremental.py) give the
-same answers and write the same store: the narrow path (signatures once to
-the driver, numpy pair counting and verification) against the wide path
-(Spark joins and UDFs), forced by setting the narrow cap to 0. Also: the
-collision overflow hand-off, stats_out, and the job count of a narrow
-ingest and probe. Also: compaction on the driver against compaction by
-Spark (forced by setting _LOCAL_MAX_COMPACT_ROWS to 0), and its recovery
-after a crash."""
+same answers and write the same store: the narrow path (texts once to the
+driver, signed there, numpy pair counting and verification) against the
+wide path (Spark joins and UDFs), forced by setting the narrow cap to 0.
+Also: the collision overflow hand-off, the text-byte cap's hand-off to the
+signature UDF, stats_out, and the job count of a narrow ingest and probe.
+Also: compaction on the driver against compaction by Spark (forced by
+setting _LOCAL_MAX_COMPACT_ROWS to 0), and its recovery after a crash."""
 
 import json
 import os
@@ -184,19 +184,31 @@ def test_unhashed_url_type_takes_the_spark_paths(spark, tmp_path):
 
 
 def _jobs(sc, group, fn):
+    """The ids of the Spark jobs that fn runs."""
     sc.setJobGroup(group, group)
     try:
         fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _python_executions(spark, jobs) -> int:
+    """The SQL executions of `jobs` whose plan evaluates Python."""
+    executions = spark._jsparkSession.sharedState().statusStore().executionsList()
+    n = 0
+    for i in range(executions.size()):
+        e = executions.apply(i)
+        if any(e.jobs().contains(j) for j in jobs):
+            n += "EvalPython" in e.physicalPlanDescription()
+    return n
 
 
 def test_narrow_job_counts(spark, tmp_path):
-    """A narrow ingest or probe runs at most 3 Spark jobs (21 and 12 with
-    per-step Spark plans; the bounded count and the signature collect are
-    two of them), and compacting a store below _LOCAL_MAX_COMPACT_ROWS
-    runs none."""
+    """A narrow ingest or probe runs at most 1 Spark job (21 and 12 with
+    per-step Spark plans; it collects the batch's urls and texts) and
+    evaluates no Python, and compacting a store below
+    _LOCAL_MAX_COMPACT_ROWS runs no job."""
     sc = spark.sparkContext
     store = str(tmp_path / "store")
     pages, _, _ = generate_corpus(120, seed=9)
@@ -206,7 +218,7 @@ def test_narrow_job_counts(spark, tmp_path):
     incremental_dedup_batch(spark, first, store, CFG, 0, 8).collect()
 
     st: dict = {}
-    n_ingest = _jobs(
+    ingest_jobs = _jobs(
         sc,
         "narrow-ingest",
         lambda: incremental_dedup_batch(
@@ -215,18 +227,53 @@ def test_narrow_job_counts(spark, tmp_path):
     )
     assert st["path"] == "narrow" and st["n_store_band_rows"] > 0
     st = {}
-    n_probe = _jobs(
+    probe_jobs = _jobs(
         sc, "narrow-probe",
         lambda: probe_store(spark, df.limit(20), store, CFG, stats_out=st).collect(),
     )
     assert st["path"] == "narrow" and st["n_candidates"] > 0
     assert st["files_read"] > 0 and st["bytes_read"] > 0
     res: dict = {}
-    n_compact = _jobs(sc, "local-compact", lambda: res.update(compact_store(spark, store)))
+    compact_jobs = _jobs(sc, "local-compact", lambda: res.update(compact_store(spark, store)))
     assert {r["path"] for r in res.values()} == {"local"}
-    assert n_ingest <= 3, n_ingest
-    assert n_probe <= 3, n_probe
-    assert n_compact == 0, n_compact
+    assert len(ingest_jobs) <= 1, ingest_jobs
+    assert len(probe_jobs) <= 1, probe_jobs
+    assert _python_executions(spark, ingest_jobs + probe_jobs) == 0
+    assert compact_jobs == [], compact_jobs
+
+
+def test_sign_byte_cap_hands_off_to_the_udf(spark, monkeypatch, tmp_path):
+    """A narrow batch of more text than _LOCAL_MAX_SIGN_BYTES is signed by
+    the signature UDF, in one Python execution, and then resolved on the
+    driver: the same pairs, store rows and manifests as a batch signed on
+    the driver."""
+    sc = spark.sparkContext
+    pages, _, _ = generate_corpus(120, seed=21)
+    df = spark.createDataFrame(pages).select("url", "text")
+    probes = df.where(F.crc32("url") % 4 == 0)
+    got = {}
+    for path, cap in (("driver", incremental._LOCAL_MAX_SIGN_BYTES), ("udf", 0)):
+        monkeypatch.setattr(incremental, "_LOCAL_MAX_SIGN_BYTES", cap)
+        store = str(tmp_path / path)
+        calls = [
+            lambda st, e=e: incremental_dedup_batch(
+                spark, df.where(F.crc32("url") % 2 == e), store, CFG, e, 4, stats_out=st
+            )
+            for e in (0, 1)
+        ]
+        calls.append(lambda st: probe_store(spark, probes, store, CFG, stats_out=st))
+        results, python = [], []
+        for i, call in enumerate(calls):
+            st: dict = {}
+            jobs = _jobs(sc, f"{path}-{i}", lambda: results.append(_rows(call(st))))
+            assert st["path"] == "narrow"
+            python.append(_python_executions(spark, jobs))
+        got[path] = (results, python, _store_state(spark, store))
+    assert got["driver"][1] == [0, 0, 0]
+    assert got["udf"][1] == [1, 1, 1]
+    assert got["driver"][0] == got["udf"][0]
+    assert all(sum(r.values()) > 0 for r in got["driver"][0][1:])
+    assert got["driver"][2] == got["udf"][2]
 
 
 @pytest.fixture(params=["string", "long"])
