@@ -4,9 +4,9 @@ of `operators.lsh.candidate_pairs`, the Jaccard estimate of
 components of `operators.cluster`, Spark's `xxhash64` of an id column (the
 store's url bucket and Bloom key), and the band keys of `lsh.band_keys`.
 
-Everything but `xxhash64` and `band_keys` works on integer arrays: url codes (0..n-1 in url
-order, -1 for a null url) and signature row indices. Callers factorize ids
-and join them back; these functions never see a url.
+Everything but `xxhash64` and `band_keys` works on integer arrays: url
+codes (0..n-1 in url order, -1 for a null url) and signature row indices.
+Callers factorize ids and join them back; these functions never see a url.
 """
 
 from __future__ import annotations

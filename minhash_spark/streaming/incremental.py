@@ -15,11 +15,12 @@ the pattern for periodic incremental dedup over a landing zone.
 
 The store (`incremental_dedup_batch`, `probe_store`) has two paths with the
 same results and the same store rows. A narrow batch (rows × bands within
-_KEY_PRUNE_MAX_KEYS) runs one JVM-only Spark job and starts no Python
-worker: the job brings its urls and texts to the driver, which computes
-the signatures and band keys the UDF and `lsh.band_keys` would (a batch of
-more than _LOCAL_MAX_SIGN_BYTES of text is signed by the UDF instead, in a
-second job). After that the driver touches the store only through pyarrow:
+_KEY_PRUNE_MAX_KEYS) runs two JVM-only Spark jobs and starts no Python
+worker: the first brings its text lengths to the driver, the second its
+urls and texts, and the driver computes the signatures and band keys the
+UDF and `lsh.band_keys` would (a batch of more than _LOCAL_MAX_SIGN_BYTES
+of text is signed by the UDF instead, and its text stays in Spark). After
+that the driver touches the store only through pyarrow:
 it prunes the store by Bloom filter, reads the matching band rows and
 stored signatures, counts and verifies pairs in numpy, and writes both
 store sides. A wide batch runs the same steps as Spark joins, UDFs and
@@ -194,16 +195,18 @@ _BLOOM_MIN_BITS = 1024
 _KEY_PRUNE_MAX_KEYS = 1 << 18
 # a narrow batch of up to this many bytes of text is signed on the driver
 # (see _collect_batch), a larger one by the signature UDF: the driver signs
-# on one core at ~0.85 s/MiB, the UDF's tasks run in parallel but each pays
-# ~0.1 s of Python-worker start first. Median narrow-ingest wall of a
-# 4-partition batch of 2 KiB docs into a 256-doc store, 4-core box:
+# on one core at ~1.1 s/MiB, the UDF's tasks run in parallel but each pays
+# ~0.1 s of Python-worker start first, so more cores move the break-even
+# down. Median narrow-ingest wall of a 4-partition batch of 2 KiB docs into
+# a 256-doc store, 4-core box (scripts/bench_sign_cap.py):
 #   text MiB   rows   driver s   UDF s
-#   0.25        128     0.33     0.32   (0.37 / 0.40 in a second run)
-#   0.375       192     0.40     0.33
-#   0.5         256     0.54     0.40
-#   1           512     1.19     0.57
-#   4         2,048     4.19     1.45
-#   16        8,192    17.85     5.18
+#   0.125        64     0.29     0.35
+#   0.25        128     0.36     0.35
+#   0.375       192     0.53     0.46
+#   0.5         256     0.69     0.50
+#   1           512     1.24     0.62
+#   4         2,048     4.51     1.48
+#   16        8,192    18.11     5.06
 _LOCAL_MAX_SIGN_BYTES = 1 << 18
 
 
@@ -566,27 +569,29 @@ def _pair_schema(url_type) -> StructType:
 
 def _collect_batch(batch_df: DataFrame, cfg: DedupConfig):
     """Step 1 of the narrow path: the batch's (url, minhash, band_keys) as
-    an Arrow table. One JVM-only job collects (url, text) of at most
-    max_rows + 1 rows; None when the batch is wide (more than max_rows =
-    _KEY_PRUNE_MAX_KEYS / bands rows). The driver signs those texts with
-    `signature_matrix` and keys the bands with `local.band_keys`, the
-    values of the signature UDF and `lsh.band_keys`, so no Python worker
-    starts. A batch of more than _LOCAL_MAX_SIGN_BYTES of text drops the
-    collected text and is signed by the UDF in a second job, in parallel.
-    None, with no job run, when `local.xxhash64` cannot bucket the url
-    type as Spark does."""
+    an Arrow table, or None when the batch is wide (more than max_rows =
+    _KEY_PRUNE_MAX_KEYS / bands rows). A first JVM-only job collects the
+    text byte lengths of at most max_rows + 1 rows, so a wide batch, or
+    one of large documents, brings no text to the driver. A narrow batch
+    of up to _LOCAL_MAX_SIGN_BYTES of text is then collected as (url,
+    text) by a second JVM-only job and signed on the driver with
+    `signature_matrix` and `local.band_keys`, the values of the signature
+    UDF and `lsh.band_keys`, so no Python worker starts; a larger one is
+    signed by the UDF in parallel instead. None, with no job run, when
+    `local.xxhash64` cannot bucket the url type as Spark does."""
     max_rows = _KEY_PRUNE_MAX_KEYS // cfg.bands
     if not local.xxhash64_supports(to_arrow_type(batch_df.schema["url"].dataType)):
         return None
-    batch = batch_df.select("url", "text")
-    tbl = batch.limit(max_rows + 1).toArrow()
-    if tbl.num_rows > max_rows:
+    sizes = batch_df.select(F.octet_length("text")).limit(max_rows + 1).toArrow()
+    if sizes.num_rows > max_rows:
         return None
-    if (pc.sum(pc.binary_length(tbl["text"])).as_py() or 0) > _LOCAL_MAX_SIGN_BYTES:
+    batch = batch_df.select("url", "text")
+    if (pc.sum(sizes.column(0)).as_py() or 0) > _LOCAL_MAX_SIGN_BYTES:
         sigs = with_minhash_signature(batch, cfg, packed=True)
         return sigs.select(
             "url", "minhash", band_keys("minhash", cfg).alias("band_keys")
         ).toArrow()
+    tbl = batch.toArrow()
     S = signature_matrix(tbl["text"].to_pylist(), cfg)
     keys = local.band_keys(S, cfg)
     return pa.table(
@@ -959,20 +964,22 @@ def incremental_dedup_batch(
     (pass its epoch_id through).
 
     Two paths, the same pairs and the same store rows:
-    - narrow (rows × bands ≤ _KEY_PRUNE_MAX_KEYS, decided by a collect of at
-      most max_rows + 1 urls and texts): that collect is the only Spark job
-      and evaluates no Python. The driver signs the texts and keys their
-      bands (`_collect_batch`; above _LOCAL_MAX_SIGN_BYTES of text the
-      signature UDF does, in a second job), Bloom-prunes the store
-      partitions, reads with pyarrow the band rows sharing a batch key,
-      counts band matches per pair in pandas, reads the stored signatures of the candidate urls (bucketed by
-      `local.xxhash64`, Spark's hash of the url), verifies in numpy and
+    - narrow (rows × bands ≤ _KEY_PRUNE_MAX_KEYS, decided by a collect of
+      the text lengths of at most max_rows + 1 rows): that collect and the
+      collect of the urls and texts are the only Spark jobs, and neither
+      evaluates Python. The driver signs the texts and keys their bands
+      (`_collect_batch`; above _LOCAL_MAX_SIGN_BYTES of text the signature
+      UDF does), Bloom-prunes the store partitions, reads with pyarrow the
+      band rows sharing a batch key, counts band matches per pair in
+      pandas, reads the stored signatures of the candidate urls (bucketed
+      by `local.xxhash64`, Spark's hash of the url), verifies in numpy and
       writes both store sides with pyarrow, Blooms built on the driver.
       Every Python task costs ~0.1 s before it sees data, more than
       signing a small batch on the driver, so a small batch never crosses
       the boundary. A batch whose band collisions exceed the same cap (a
-      hot key) hands its collected signatures to the wide path, and a batch whose url type
-      `local.xxhash64` does not hash takes the wide path from the start.
+      hot key) hands its collected signatures to the wide path, and a
+      batch whose url type `local.xxhash64` does not hash takes the wide
+      path from the start.
     - wide (larger batches, or key_prune=False): the same steps as Spark
       joins, the signature UDF, the estimator UDF and Spark writes, Blooms
       built by applyInPandas.
@@ -1044,10 +1051,10 @@ def probe_store(
 
     The narrow and wide paths of incremental_dedup_batch, minus the
     intra-batch pair leg and minus the store writes: a narrow probe runs
-    one JVM-only Spark job (the collect of its urls and texts), signs on
-    the driver and reads the store with pyarrow. A probe url that
-    is also stored is verified with the probe's signature. `stats_out` as
-    in incremental_dedup_batch."""
+    two JVM-only Spark jobs (the collects of its text lengths and of its
+    urls and texts), signs on the driver and reads the store with pyarrow.
+    A probe url that is also stored is verified with the probe's
+    signature. `stats_out` as in incremental_dedup_batch."""
     cfg = cfg or DedupConfig()
     if not _has_batches(_store_subdirs(store_path)[1]):
         raise ValueError(f"probe_store: {store_path} has no batches to probe")

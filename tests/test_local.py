@@ -175,7 +175,9 @@ BAND_CFGS = [DedupConfig(), DedupConfig(bands=16, rows=8)]
 @settings(max_examples=15, deadline=None)
 @given(data=st.data())
 def test_band_keys_match_spark(spark, cfg, data):
-    cell = st.sampled_from([SIG_INFTY_INT, 0, -1, -(2**31)]) | st.integers(-(2**31), 2**31 - 1)
+    cell = st.sampled_from([SIG_INFTY_INT, 0, -1, -(2**31)]) | st.integers(
+        -(2**31), 2**31 - 1
+    )
     n = data.draw(st.integers(0, 12))
     S = data.draw(arrays(np.int32, (n, cfg.minhash.sketch_size), elements=cell))
     df = spark.createDataFrame(
@@ -187,7 +189,9 @@ def test_band_keys_match_spark(spark, cfg, data):
     assert np.array_equal(local.band_keys(S, cfg), want)
 
 
-WORDS = st.sampled_from(["alpha", "beta", "Gamma", "ü", "日本語", "\U0001F600", "a", ""])
+WORDS = st.sampled_from(
+    ["alpha", "beta", "Gamma", "ü", "日本語", "\U0001F600", "a", ""]
+)
 TEXTS = (
     st.none()
     | st.text(max_size=60)

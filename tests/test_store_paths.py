@@ -3,7 +3,8 @@ same answers and write the same store: the narrow path (texts once to the
 driver, signed there, numpy pair counting and verification) against the
 wide path (Spark joins and UDFs), forced by setting the narrow cap to 0.
 Also: the collision overflow hand-off, the text-byte cap's hand-off to the
-signature UDF, stats_out, and the job count of a narrow ingest and probe.
+signature UDF, no text on the driver above either cap, stats_out, and the
+job count of a narrow ingest and probe.
 Also: compaction on the driver against compaction by Spark (forced by
 setting _LOCAL_MAX_COMPACT_ROWS to 0), and its recovery after a crash."""
 
@@ -205,9 +206,9 @@ def _python_executions(spark, jobs) -> int:
 
 
 def test_narrow_job_counts(spark, tmp_path):
-    """A narrow ingest or probe runs at most 1 Spark job (21 and 12 with
-    per-step Spark plans; it collects the batch's urls and texts) and
-    evaluates no Python, and compacting a store below
+    """A narrow ingest or probe runs at most 2 Spark jobs (21 and 12 with
+    per-step Spark plans; they collect the batch's text lengths, then its
+    urls and texts) and evaluates no Python, and compacting a store below
     _LOCAL_MAX_COMPACT_ROWS runs no job."""
     sc = spark.sparkContext
     store = str(tmp_path / "store")
@@ -234,10 +235,12 @@ def test_narrow_job_counts(spark, tmp_path):
     assert st["path"] == "narrow" and st["n_candidates"] > 0
     assert st["files_read"] > 0 and st["bytes_read"] > 0
     res: dict = {}
-    compact_jobs = _jobs(sc, "local-compact", lambda: res.update(compact_store(spark, store)))
+    compact_jobs = _jobs(
+        sc, "local-compact", lambda: res.update(compact_store(spark, store))
+    )
     assert {r["path"] for r in res.values()} == {"local"}
-    assert len(ingest_jobs) <= 1, ingest_jobs
-    assert len(probe_jobs) <= 1, probe_jobs
+    assert len(ingest_jobs) <= 2, ingest_jobs
+    assert len(probe_jobs) <= 2, probe_jobs
     assert _python_executions(spark, ingest_jobs + probe_jobs) == 0
     assert compact_jobs == [], compact_jobs
 
@@ -274,6 +277,49 @@ def test_sign_byte_cap_hands_off_to_the_udf(spark, monkeypatch, tmp_path):
     assert got["driver"][0] == got["udf"][0]
     assert all(sum(r.values()) > 0 for r in got["driver"][0][1:])
     assert got["driver"][2] == got["udf"][2]
+
+
+def _collected_columns(monkeypatch, df) -> list:
+    """The column names of every table that DataFrame.toArrow brings to
+    the driver from now on."""
+    seen = []
+    cls = type(df)
+    to_arrow = cls.toArrow
+
+    def spy(self):
+        tbl = to_arrow(self)
+        seen.append(tbl.schema.names)
+        return tbl
+
+    monkeypatch.setattr(cls, "toArrow", spy)
+    return seen
+
+
+@pytest.mark.parametrize("over", [None, "_KEY_PRUNE_MAX_KEYS", "_LOCAL_MAX_SIGN_BYTES"])
+def test_no_text_to_the_driver_above_the_caps(spark, monkeypatch, tmp_path, over):
+    """A batch over the narrow row cap (wide) or over the text-byte cap
+    (signed by the UDF) brings no text to the driver, only its text
+    lengths; a batch under both caps brings its texts."""
+    pages, _, _ = generate_corpus(80, seed=23)
+    df = spark.createDataFrame(pages).select("url", "text")
+    store = str(tmp_path / "store")
+    first = df.where(F.crc32("url") % 2 == 0)
+    incremental_dedup_batch(spark, first, store, CFG, 0, 4).collect()
+    if over:
+        monkeypatch.setattr(incremental, over, 0)
+    seen = _collected_columns(monkeypatch, df)
+    calls = [
+        lambda st: incremental_dedup_batch(
+            spark, df.where(F.crc32("url") % 2 == 1), store, CFG, 1, 4, stats_out=st
+        ),
+        lambda st: probe_store(spark, df.limit(20), store, CFG, stats_out=st),
+    ]
+    for call in calls:
+        st: dict = {}
+        assert _rows(call(st))
+        assert st["path"] == ("wide" if over == "_KEY_PRUNE_MAX_KEYS" else "narrow")
+    assert seen
+    assert any("text" in cols for cols in seen) == (over is None), seen
 
 
 @pytest.fixture(params=["string", "long"])
