@@ -150,7 +150,7 @@ def bench_dedup_minhash(spark, sf_dir) -> tuple[float, int, float, float]:
     docs = corpus_parquet(spark, sf_dir)
     n_docs = docs.count()  # materialization outside the timed region
     t0 = time.time()
-    sigs = with_minhash_signature(docs, CFG, packed=True).select("doc_id", "minhash")
+    sigs = with_minhash_signature(docs, CFG).select("doc_id", "minhash")
     sigs = sigs.persist()
     bands = bands_table(sigs, CFG, id_col="doc_id")
     cands = candidate_pairs(bands, CFG, id_col="doc_id")

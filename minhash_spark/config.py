@@ -23,14 +23,14 @@ import numpy as np
 # Empty-cell marker: INFTY = UINT64_MAX (/root/reference/include/minhash.h:23).
 INFTY = np.uint64(0xFFFFFFFFFFFFFFFF)
 
-# Spark-side empty-cell sentinels. Signatures are stored as array<int>:
-# every real hash value is STRICTLY below prime_modulus = 2^31-1, so int32
-# holds it exactly and the int32 maximum (= 2^31-1, never a real value) marks
-# empty cells — elementwise `least()` merges keep the reference's min
-# semantics (the sentinel loses to any real value), and the signature store,
-# shuffle rows, and Arrow transfers are HALF the width of array<long>.
-# SIG_INFTY_LONG is the int64-domain sentinel used by the exploded query
-# outputs and the DuckDB oracles.
+# Spark-side empty-cell sentinels. A signature is stored packed, as
+# sketch_size little-endian int32 values (operators/signatures.py): every real
+# hash value is STRICTLY below prime_modulus = 2^31-1, so int32 holds it
+# exactly and the int32 maximum (= 2^31-1, never a real value) marks empty
+# cells — elementwise min merges keep the reference's min semantics (the
+# sentinel loses to any real value), and the signature store, shuffle rows
+# and Arrow transfers are HALF the width of int64 cells. SIG_INFTY_LONG is the
+# int64-domain sentinel of the exploded query outputs and the DuckDB oracles.
 SIG_INFTY_INT = (1 << 31) - 1
 SIG_INFTY_LONG = (1 << 63) - 1
 

@@ -115,28 +115,22 @@ def min_sketch_batch(
 
 
 def sketch_to_long(sketches: np.ndarray) -> np.ndarray:
-    """uint64 sketches → int64 for Spark array<long> storage. Real values are
-    < prime_modulus = 2^31-1 so they fit unchanged; INFTY maps to
-    SIG_INFTY_LONG (2^63-1) so JVM-side ``least()`` merges keep min order."""
+    """uint64 sketches → int64, the domain of the oracle's (pos, value)
+    signature cells. Real values are < prime_modulus = 2^31-1 so they fit
+    unchanged; INFTY maps to SIG_INFTY_LONG (2^63-1) so min merges keep min
+    order."""
     out = sketches.copy()
     out[out == INFTY] = _U64(SIG_INFTY_LONG)
     return out.astype(np.int64)
 
 
 def sketch_to_int(sketches: np.ndarray) -> np.ndarray:
-    """uint64 sketches → int32 for Spark array<int> storage. Real values are
+    """uint64 sketches → int32, the packed signature's cells. Real values are
     < prime_modulus = 2^31-1 so they fit exactly; INFTY maps to SIG_INFTY_INT
-    (int32 max — never a real value) so `least()` merges keep min order."""
+    (int32 max — never a real value) so min merges keep min order."""
     out = sketches.copy()
     out[out == INFTY] = _U64(SIG_INFTY_INT)
     return out.astype(np.int32)
-
-
-def int_to_long_sentinel(ints: np.ndarray) -> np.ndarray:
-    """int32 storage domain → int64 query/oracle domain (sentinel widened)."""
-    out = np.asarray(ints, dtype=np.int64)
-    out[out == SIG_INFTY_INT] = SIG_INFTY_LONG
-    return out
 
 
 def long_to_sketch(longs: np.ndarray) -> np.ndarray:

@@ -1,6 +1,6 @@
 from .signatures import with_minhash_signature
 from .lsh import band_keys, bands_table, candidate_pairs, bucket_stats
-from .verify import estimate_jaccard, verify_pairs
+from .verify import verify_pairs
 from .cluster import connected_components
 from .exact import exact_dup_groups, dedup_exact
 from .simhash import with_simhash, simhash_candidates
@@ -22,7 +22,6 @@ __all__ = [
     "bands_table",
     "candidate_pairs",
     "bucket_stats",
-    "estimate_jaccard",
     "verify_pairs",
     "connected_components",
     "exact_dup_groups",

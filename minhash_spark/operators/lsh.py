@@ -3,7 +3,7 @@
 Banding slices each signature into `bands` groups of `rows` values and keys
 each slice with xxhash64 (`band_keys`) — documents agreeing on any band
 become a candidate pair (standard MinHash-LSH; the signature semantics
-underneath are the reference's, SURVEY.md §2.3). All JVM-side: slice/
+underneath are the reference's, SURVEY.md §2.3). All JVM-side: substring/
 transform/explode/xxhash64 are built-in expressions; no Python.
 
 Scale/skew design:
@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..config import DedupConfig
+from .signatures import require_packed
 
 # Fallback registry for bucket tables persisted by tiered_bucket_pairs when
 # the caller does not collect handles itself (handles_out=None). The persist
@@ -45,26 +46,19 @@ def release_persisted() -> None:
         _PERSISTED.pop().unpersist()
 
 
-def band_keys(sig_col: str, cfg: DedupConfig, packed: bool = True) -> Column:
-    """array<bigint> of a signature's `bands` band keys: band i's key is
-    xxhash64(i, slice i) over its `rows` signature values. The band index is
-    folded INTO the key, so equal slices in different bands never collide
-    into one bucket and no separate band_id column travels through the
-    caches and shuffles.
-
-    packed=True takes the packed int32 binary buffer (substring per band),
-    packed=False the array<int> form (slice per band). Equal signatures get
-    equal keys within one form; the key VALUES differ between forms (hash of
-    bytes vs of an int list), which is why incremental stores record their
-    signature format."""
-    rows = cfg.rows
+def band_keys(sig_col: str, cfg: DedupConfig) -> Column:
+    """array<bigint> of a packed signature's `bands` band keys: band i's key
+    is xxhash64(i, bytes of band i), its `rows` int32 values cut out of the
+    packed buffer with substring(). The band index is folded INTO the key,
+    so equal slices in different bands never collide into one bucket and no
+    separate band_id column travels through the caches and shuffles.
+    `local.band_keys` is the same derivation in numpy, and incremental
+    stores are written with it."""
+    w = cfg.rows * 4
     sig = F.col(sig_col)
-    if packed:
-        band = lambda i: F.substring(sig, i * (rows * 4) + 1, rows * 4)
-    else:
-        band = lambda i: F.slice(sig, i * rows + 1, rows)
     return F.transform(
-        F.sequence(F.lit(0), F.lit(cfg.bands - 1)), lambda i: F.xxhash64(i, band(i))
+        F.sequence(F.lit(0), F.lit(cfg.bands - 1)),
+        lambda i: F.xxhash64(i, F.substring(sig, i * w + 1, w)),
     )
 
 
@@ -73,12 +67,10 @@ def bands_table(
 ) -> DataFrame:
     """(id, minhash) → (id, band_key): one row per band of `band_keys`. At
     10^12 docs the band table is the biggest intermediate and every column on
-    it is paid 32×/doc, so it carries only the id and the key. Accepts the
-    packed binary or the array<int> signature."""
-    packed = dict(sig_df.dtypes)[sig_col] == "binary"
-    return sig_df.select(
-        id_col, F.explode(band_keys(sig_col, cfg, packed)).alias("band_key")
-    )
+    it is paid 32×/doc, so it carries only the id and the key. The signature
+    column must be the packed binary form."""
+    require_packed(sig_df, sig_col)
+    return sig_df.select(id_col, F.explode(band_keys(sig_col, cfg)).alias("band_key"))
 
 
 def bucket_stats(bands: DataFrame, cfg: DedupConfig) -> DataFrame:

@@ -11,20 +11,21 @@ Hash-function coefficients (≤ a few KiB) are drawn from the config's seed
 for every batch — the analog of the reference's shared `hash_functions`
 table. Every value is < prime_modulus = 2^31-1 so int32 holds it exactly;
 empty cells use int32 max (config.SIG_INFTY_INT), so min merges keep their
-semantics. The engine form is the packed one (`packed=True`): one
-little-endian int32 binary buffer per document, which every engine writer
-stores. `array<int>` is the oracle/interchange form (exploded value checks,
-JVM `least()` merges).
+semantics. A signature has one form: the packed one, a little-endian int32
+binary buffer of sketch_size × 4 bytes per document (`packed_rows`), which
+the UDF emits, every engine writer stores, `lsh.band_keys` slices with
+substring() and `signature_rows` decodes. Only the oracle queries widen it
+to (pos, value) cells (queries.py).
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, BinaryType, IntegerType
+from pyspark.sql.types import BinaryType
 
 from ..config import DedupConfig
 from ..functions.kernels import min_sketch_batch, sketch_to_int
@@ -48,34 +49,18 @@ def signature_matrix(texts, cfg: DedupConfig) -> np.ndarray:
     return sketch_to_int(min_sketch_batch(sets, cfg.minhash))
 
 
-def minhash_signature_udf(cfg: DedupConfig, packed: bool = False):
+def minhash_signature_udf(cfg: DedupConfig):
     """Build the signature pandas UDF for a config: `signature_matrix` per
-    Arrow batch. Every batch draws its coefficients from the same seed, so
-    every executor hashes with the identical table (the determinism
-    invariant of test/test_parallel_lock.c:47-57).
+    Arrow batch, emitted in the packed form (`packed_rows`). Every batch
+    draws its coefficients from the same seed, so every executor hashes
+    with the identical table (the determinism invariant of
+    test/test_parallel_lock.c:47-57)."""
 
-    packed=True emits the signature as one little-endian int32 BinaryType
-    buffer (sketch_size × 4 bytes) instead of array<int>. Same values, one
-    contiguous byte run: shuffle rows for the banding/verify stages drop the
-    UnsafeArrayData header + null bitmap, band slicing stays JVM-side via
-    substring(), and the verify estimator rebuilds the matrix with a single
-    np.frombuffer per Arrow batch instead of per-row list conversions. Use
-    the packed form on the hot dedup path; the array form remains the
-    interchange/oracle representation (exploded value checks, JVM least()
-    merges)."""
-    if packed:
+    @pandas_udf(BinaryType())
+    def _sig_packed(texts: pd.Series) -> pd.Series:
+        return pd.Series(packed_rows(signature_matrix(texts, cfg)))
 
-        @pandas_udf(BinaryType())
-        def _sig_packed(texts: pd.Series) -> pd.Series:
-            return pd.Series(packed_rows(signature_matrix(texts, cfg)))
-
-        return _sig_packed
-
-    @pandas_udf(ArrayType(IntegerType()))
-    def _sig(texts: pd.Series) -> pd.Series:
-        return pd.Series(list(signature_matrix(texts, cfg)))
-
-    return _sig
+    return _sig_packed
 
 
 def packed_rows(S: np.ndarray) -> list[bytes]:
@@ -86,15 +71,32 @@ def packed_rows(S: np.ndarray) -> list[bytes]:
     return [buf[i : i + w] for i in range(0, len(buf), w)]
 
 
+def signature_rows(values, sketch_size: int) -> np.ndarray:
+    """The int32 matrix (n, sketch_size) of a sequence of n packed
+    signatures (bytes): the inverse of `packed_rows`, and the one decoder
+    of the packed form."""
+    return np.frombuffer(b"".join(values), dtype="<i4").reshape(len(values), sketch_size)
+
+
+def require_packed(sig_df: DataFrame, sig_col: str) -> None:
+    """Raise ValueError unless `sig_col` holds packed (binary) signatures:
+    the boundary check of every operator that bands or verifies them."""
+    sig_type = sig_df.schema[sig_col].dataType.simpleString()
+    if sig_type != "binary":
+        raise ValueError(
+            f"signature column {sig_col!r} is {sig_type}; the engine takes "
+            "packed int32 'binary' signatures (see with_minhash_signature)"
+        )
+
+
 def with_minhash_signature(
     df: DataFrame,
     cfg: DedupConfig,
     text_col: str = "text",
     out_col: str = "minhash",
-    packed: bool = False,
 ) -> DataFrame:
-    """Append the MinHash signature column (array<int>, or a packed int32
-    binary buffer with packed=True — see minhash_signature_udf). Column
-    pruning matters at scale: select only what downstream needs *before*
-    calling this so the scan never reads e.g. the html binary column."""
-    return df.withColumn(out_col, minhash_signature_udf(cfg, packed)(F.col(text_col)))
+    """Append the packed MinHash signature column (binary, see
+    minhash_signature_udf). Column pruning matters at scale: select only
+    what downstream needs *before* calling this so the scan never reads e.g.
+    the html binary column."""
+    return df.withColumn(out_col, minhash_signature_udf(cfg)(F.col(text_col)))

@@ -226,7 +226,7 @@ def passage_dup_stats(
 # PII scrubbing — the standard web-text redaction pass (emails, IPv4,
 # phone-like digit runs). Patterns restricted to the Java-regex ∩ RE2
 # subset (no lookaround, no backrefs) so the DuckDB oracle replays them
-# verbatim — same discipline as urls.canonicalize_url.
+# verbatim.
 PII_PATTERNS = [
     ("email", r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}", "<EMAIL>"),
     ("ipv4", r"\b(?:[0-9]{1,3}\.){3}[0-9]{1,3}\b", "<IP>"),

@@ -66,7 +66,7 @@ from pyspark.sql.types import BinaryType, StructField, StructType
 
 from . import local
 from .config import DedupConfig
-from .operators.signatures import with_minhash_signature
+from .operators.signatures import signature_rows, with_minhash_signature
 from .operators.lsh import band_keys, bands_table, candidate_pairs, multi_bucket_stats
 from .operators.verify import verify_pairs
 from .operators.cluster import connected_components
@@ -145,9 +145,9 @@ class DedupPipeline:
             # format guard BEFORE appending: this build writes the packed
             # little-endian int32 BinaryType signature; a signatures dir
             # written by the pre-packed build carries array<int>. Appending
-            # would mix two incompatible parquet schemas for one column and
-            # break compute_pairs' read / verify's dtype-based estimator —
-            # the same failure the incremental store's _store_meta.json
+            # would mix two incompatible parquet schemas for one column,
+            # which every later read and the banding/verify boundary check
+            # reject — the failure the incremental store's _store_meta.json
             # sig_format check prevents (streaming/incremental.py).
             existing_type = existing.schema["minhash"].dataType.simpleString()
             if existing_type != "binary":
@@ -173,7 +173,7 @@ class DedupPipeline:
             par = self.spark.sparkContext.defaultParallelism
             if src.rdd.getNumPartitions() < par:
                 src = src.repartition(par)
-            sigs = with_minhash_signature(src, self.cfg, packed=True).select("url", "ds", "minhash")
+            sigs = with_minhash_signature(src, self.cfg).select("url", "ds", "minhash")
             mode = "append" if done_ds else "overwrite"
             sigs.write.mode(mode).partitionBy("ds").parquet(out)
         self._log_metric(
@@ -299,8 +299,7 @@ class DedupPipeline:
         )
 
         # verify every (signature row of url_a, signature row of url_b)
-        sig = b"".join(tbl["minhash"].to_pylist())
-        S = np.frombuffer(sig, dtype="<i4").reshape(tbl.num_rows, cfg.minhash.sketch_size)
+        S = signature_rows(tbl["minhash"].to_pylist(), cfg.minhash.sketch_size)
         ia, ib = local.pair_rows(codes, ca, cb)
         keep, est = local.verify(S, ia, ib, cfg.jaccard_threshold)
         ea, eb = codes[ia[keep]], codes[ib[keep]]

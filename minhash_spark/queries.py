@@ -12,8 +12,12 @@ both sides; id pairs are canonicalized (id_a < id_b).
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import ArrayType, LongType
 
 from .config import (
     DedupConfig,
@@ -23,7 +27,7 @@ from .config import (
     SIG_INFTY_LONG,
 )
 from . import oracle_sql
-from .operators.signatures import with_minhash_signature
+from .operators.signatures import signature_rows, with_minhash_signature
 from .operators.lsh import bands_table, candidate_pairs, release_persisted
 from .operators.verify import verify_pairs
 from .operators.cluster import connected_components
@@ -97,7 +101,7 @@ def _minhash_text_dup_pairs(spark, sf_dir) -> DataFrame:
     # previous run's caches on entry, bounding the footprint to one table.
     release_persisted()
     u = _docs_union(spark, sf_dir)
-    sigs = with_minhash_signature(u, CFG, packed=True).select("doc_id", "minhash")
+    sigs = with_minhash_signature(u, CFG).select("doc_id", "minhash")
     bands = bands_table(sigs, CFG, id_col="doc_id")
     cands = candidate_pairs(bands, CFG, id_col="doc_id")
     verified = verify_pairs(cands, sigs, CFG, id_col="doc_id", threshold=1.0)
@@ -367,7 +371,7 @@ def q_fuzzy_dedup_keep(spark, sf_dir):
             (F.col("doc_id") + _PD_SHIFT).alias("doc_id"), "text"
         )
     )
-    sigs = with_minhash_signature(u, CFG, packed=True).select("doc_id", "minhash")
+    sigs = with_minhash_signature(u, CFG).select("doc_id", "minhash")
     bands = bands_table(sigs, CFG, id_col="doc_id")
     cands = candidate_pairs(bands, CFG, id_col="doc_id")
     verified = verify_pairs(cands, sigs, CFG, id_col="doc_id", threshold=1.0)
@@ -500,53 +504,6 @@ SELECT pp.doc_id AS doc_id,
 FROM pp JOIN g USING (passage)
 GROUP BY pp.doc_id
 """
-
-
-def q_url_canonicalize(spark, sf_dir):
-    """URL canonicalization — the first normalization pass of a web-crawl
-    dedup pipeline (collapse scheme/host case, www, default ports,
-    fragments, tracking params before keying by url). The operator
-    (operators/urls.py) is a pure JVM Column expression; the query applies
-    it to deterministic messy URLs synthesized from doc_id/source with the
-    identical expression on both engines."""
-    from .operators.urls import canonicalize_url
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "source")
-    messy = F.concat(
-        F.lit("HTTPS://WWW.Example-"),
-        F.col("source"),
-        F.lit(".COM:443/Docs/"),
-        F.pmod(F.col("doc_id"), F.lit(5)).cast("string"),
-        F.lit("//item?id="),
-        F.col("doc_id").cast("string"),
-        F.lit("&utm_source=feed&utm_campaign=Spring&ref=R"),
-        F.pmod(F.col("doc_id"), F.lit(3)).cast("string"),
-        F.lit("&fbclid=ABC123#frag"),
-        F.pmod(F.col("doc_id"), F.lit(7)).cast("string"),
-    )
-    return d.select(
-        "doc_id",
-        messy.alias("url"),
-        canonicalize_url(messy).alias("canonical_url"),
-    )
-
-
-def _url_canonicalize_sql() -> str:
-    from .operators.urls import canonicalize_url_sql
-
-    messy = (
-        "'HTTPS://WWW.Example-' || source || '.COM:443/Docs/' || "
-        "(doc_id % 5)::VARCHAR || '//item?id=' || doc_id::VARCHAR || "
-        "'&utm_source=feed&utm_campaign=Spring&ref=R' || "
-        "(doc_id % 3)::VARCHAR || '&fbclid=ABC123#frag' || (doc_id % 7)::VARCHAR"
-    )
-    return (
-        f"WITH m AS (SELECT doc_id, {messy} AS url FROM documents)\n"
-        f"SELECT doc_id, url, {canonicalize_url_sql('url')} AS canonical_url FROM m"
-    )
-
-
-SQL_URL_CANONICALIZE = _url_canonicalize_sql()
 
 
 def q_embedding_normalize(spark, sf_dir):
@@ -914,13 +871,21 @@ FROM documents
 # column-min sketch, SimHash bit sign-sums, polynomial fingerprint, SRP signs
 # --------------------------------------------------------------------------
 
-def _widen_cell(c):
-    """int32 storage domain → int64 oracle domain (sentinel widened)."""
-    return (
-        F.when(c == SIG_INFTY_INT, F.lit(SIG_INFTY_LONG))
-        .otherwise(c.cast("long"))
-        .alias("value")
-    )
+def _signature_cells(sig, cfg: DedupConfig):
+    """array<bigint> of a packed signature column, empty cells widened to
+    SIG_INFTY_LONG: `signature_rows` in one Arrow UDF. The oracle queries'
+    (pos, value) cells are the only place the engine widens the packed
+    form."""
+    size = cfg.minhash.sketch_size
+
+    @pandas_udf(ArrayType(LongType()))
+    def _cells(sigs: pd.Series) -> pd.Series:
+        S = signature_rows(sigs, size)
+        W = S.astype(np.int64)
+        W[S == SIG_INFTY_INT] = SIG_INFTY_LONG
+        return pd.Series(list(W))
+
+    return _cells(sig)
 
 
 def _exploded_signature(d: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -928,8 +893,9 @@ def _exploded_signature(d: DataFrame, cfg: DedupConfig) -> DataFrame:
     columns can't be hashed by the driver's pandas canonicalizer)."""
     sigs = with_minhash_signature(d, cfg)
     return sigs.select(
-        "doc_id", F.posexplode("minhash").alias("pos", "value")
-    ).select("doc_id", F.col("pos").cast("long").alias("pos"), _widen_cell(F.col("value")))
+        "doc_id",
+        F.posexplode(_signature_cells(F.col("minhash"), cfg)).alias("pos", "value"),
+    ).select("doc_id", F.col("pos").cast("long").alias("pos"), "value")
 
 
 def q_minhash_signatures(spark, sf_dir):
@@ -971,7 +937,9 @@ def q_minhash_merged_signatures(spark, sf_dir):
     sets — the algebra that makes Spark partial aggregation of sketches
     correct."""
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    sigs = with_minhash_signature(d, CFG).select("doc_id", "minhash")
+    sigs = with_minhash_signature(d, CFG).select(
+        "doc_id", _signature_cells(F.col("minhash"), CFG).alias("minhash")
+    )
     a = sigs.select(F.col("doc_id").alias("id_a"), F.col("minhash").alias("_sa"))
     b = sigs.select(
         (F.col("doc_id") - 1).alias("id_a"),
@@ -985,12 +953,7 @@ def q_minhash_merged_signatures(spark, sf_dir):
             "pos", "value"
         ),
     )
-    return merged.select(
-        "id_a",
-        "id_b",
-        F.col("pos").cast("long").alias("pos"),
-        _widen_cell(F.col("value")),
-    )
+    return merged.select("id_a", "id_b", F.col("pos").cast("long").alias("pos"), "value")
 
 
 SQL_MINHASH_MERGED_SIGNATURES = oracle_sql.merged_signature_cells_sql(CFG)
@@ -1054,7 +1017,7 @@ def q_near_dup_pairs(spark, sf_dir):
     band-slice collisions exactly."""
     release_persisted()  # bound enumerator-cache footprint across query runs
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    sigs = with_minhash_signature(d, CFG, packed=True).select("doc_id", "minhash")
+    sigs = with_minhash_signature(d, CFG).select("doc_id", "minhash")
     bands = bands_table(sigs, CFG, id_col="doc_id")
     cands = candidate_pairs(bands, CFG, id_col="doc_id")
     return verify_pairs(cands, sigs, CFG, id_col="doc_id", threshold=0.5).select(
@@ -1171,7 +1134,6 @@ QUERIES = {
     "ngram3_jaccard_consecutive": q_ngram3_jaccard_consecutive,
     "ngram_decontaminate": q_ngram_decontaminate,
     "vocab_topk": q_vocab_topk,
-    "url_canonicalize": q_url_canonicalize,
     "passage_dup_stats": q_passage_dup_stats,
     "intra_doc_repetition": q_intra_doc_repetition,
     "fuzzy_dedup_keep": q_fuzzy_dedup_keep,
@@ -1211,7 +1173,6 @@ ORACLE_SQL = {
     "ngram3_jaccard_consecutive": SQL_NGRAM3_JACCARD_CONSECUTIVE,
     "ngram_decontaminate": SQL_NGRAM_DECONTAMINATE,
     "vocab_topk": SQL_VOCAB_TOPK,
-    "url_canonicalize": SQL_URL_CANONICALIZE,
     "passage_dup_stats": SQL_PASSAGE_DUP_STATS,
     "intra_doc_repetition": SQL_INTRA_DOC_REPETITION,
     "fuzzy_dedup_keep": SQL_FUZZY_DEDUP_KEEP,

@@ -58,7 +58,12 @@ from pyspark.sql.pandas.types import to_arrow_type
 
 from .. import local
 from ..config import DedupConfig
-from ..operators.signatures import packed_rows, signature_matrix, with_minhash_signature
+from ..operators.signatures import (
+    packed_rows,
+    signature_matrix,
+    signature_rows,
+    with_minhash_signature,
+)
 from ..operators.lsh import band_keys, bands_table
 from ..operators.verify import verify_pairs
 
@@ -81,9 +86,10 @@ def stream_signatures(
     cfg: DedupConfig | None = None,
     available_now: bool = True,
 ):
-    """File-source stream → signature store (append-only parquet). Returns
-    the StreamingQuery; with available_now=True it drains pending files and
-    stops (call .awaitTermination())."""
+    """File-source stream → signature store (append-only parquet of url and
+    packed minhash, the form DedupPipeline and the incremental store
+    write). Returns the StreamingQuery; with available_now=True it drains
+    pending files and stops (call .awaitTermination())."""
     cfg = cfg or DedupConfig()
     src = (
         spark.readStream.schema(PAGES_SCHEMA)
@@ -147,9 +153,9 @@ def _effective_store_buckets(store_path: str, requested: int | None) -> int:
             meta = json.load(f)
         stored = int(meta["n_store_buckets"])
         if meta.get("sig_format") != _SIG_FORMAT:
-            # band_key values differ between signature representations
-            # (xxhash64 of an int list vs of packed bytes) — a batch written
-            # in another format would silently never collide with this store
+            # a store written by a build that kept array<int> signatures has
+            # other band_key values (xxhash64 of an int list, not of packed
+            # bytes) — a new batch would silently never collide with it
             raise ValueError(
                 f"incremental store {store_path} was written with signature "
                 f"format {meta.get('sig_format')!r}; this build writes "
@@ -516,13 +522,12 @@ def _spark_pruned_read(
     df: DataFrame,
     bucket_expr,
     key_expr,
-    key_prune: bool,
     stats_out: dict | None,
 ) -> DataFrame:
     """pruned_store_read of the partitions that may hold df's keys, from keys
     that stay in Spark: Bloom-probed when the distinct (bucket, key) pairs
     fit _collect_key_filter's cap, else pruned by bucket only."""
-    kf = _collect_key_filter(df, bucket_expr, key_expr) if key_prune else None
+    kf = _collect_key_filter(df, bucket_expr, key_expr)
     if kf is None:
         touched = [
             r[0] for r in df.select(bucket_expr.alias("b")).distinct().collect()
@@ -587,7 +592,7 @@ def _collect_batch(batch_df: DataFrame, cfg: DedupConfig):
         return None
     batch = batch_df.select("url", "text")
     if (pc.sum(sizes.column(0)).as_py() or 0) > _LOCAL_MAX_SIGN_BYTES:
-        sigs = with_minhash_signature(batch, cfg, packed=True)
+        sigs = with_minhash_signature(batch, cfg)
         return sigs.select(
             "url", "minhash", band_keys("minhash", cfg).alias("band_keys")
         ).toArrow()
@@ -610,9 +615,9 @@ def _batch_sigs(spark: SparkSession, batch_df: DataFrame, tbl, cfg) -> DataFrame
     `_collect_batch` when it ran (no batch is signed twice), else the
     signature UDF."""
     if tbl is None:
-        return with_minhash_signature(
-            batch_df.select("url", "text"), cfg, packed=True
-        ).select("url", "minhash")
+        return with_minhash_signature(batch_df.select("url", "text"), cfg).select(
+            "url", "minhash"
+        )
     schema = StructType([batch_df.schema["url"], StructField("minhash", BinaryType())])
     return spark.createDataFrame(tbl.select(["url", "minhash"]), schema)
 
@@ -742,8 +747,7 @@ def _resolve_on_driver(
         sigs = pd.concat([stored, sigs], ignore_index=True)
 
     # verify every (pair, signature row of url_a, signature row of url_b)
-    size = cfg.minhash.sketch_size
-    S = np.frombuffer(b"".join(sigs.minhash), dtype="<i4").reshape(len(sigs), size)
+    S = signature_rows(sigs.minhash, cfg.minhash.sketch_size)
     idx = pd.DataFrame({"url": sigs.url, "i": np.arange(len(sigs))})
     m = cand.merge(idx.set_axis(["url_a", "i_a"], axis=1), on="url_a").merge(
         idx.set_axis(["url_b", "i_b"], axis=1), on="url_b"
@@ -826,7 +830,6 @@ def _spark_pairs(
     cfg: DedupConfig,
     epoch_id: int,
     n_store_buckets: int,
-    key_prune: bool,
     probe: bool,
     stats_out: dict | None,
 ) -> DataFrame:
@@ -853,8 +856,7 @@ def _spark_pairs(
     if _has_batches(band_store):
         prev_bands = _spark_pruned_read(
             spark, band_store, epoch_id, new_bands,
-            _bucket_col("band_key", n_store_buckets), F.col("band_key"),
-            key_prune, stats_out,
+            _bucket_col("band_key", n_store_buckets), F.col("band_key"), stats_out,
         )
         store = batch_a.join(
             prev_bands.select("band_key", F.col("url").alias("url_b")), ["band_key"]
@@ -887,8 +889,7 @@ def _spark_pairs(
         u = F.col("url_b") if probe else F.explode(F.array("url_a", "url_b"))
         prev_sigs = _spark_pruned_read(
             spark, sig_store, epoch_id, joined.select(u.alias("u")),
-            _bucket_col("u", n_store_buckets), F.xxhash64("u"),
-            key_prune, stats_out,
+            _bucket_col("u", n_store_buckets), F.xxhash64("u"), stats_out,
         ).select("url", "minhash")
         if probe:
             # a probe url may also exist IN the store (re-checking a known
@@ -915,7 +916,6 @@ def _spark_ingest(
     cfg: DedupConfig,
     epoch_id: int,
     n_store_buckets: int,
-    key_prune: bool,
     stats_out: dict | None,
 ) -> DataFrame:
     """The wide path of incremental_dedup_batch: pairs, verification and
@@ -925,7 +925,7 @@ def _spark_ingest(
     new_bands = bands_table(batch_sigs, cfg).persist()
     verified = _spark_pairs(
         spark, batch_sigs, new_bands, store_path, cfg, epoch_id,
-        n_store_buckets, key_prune, False, stats_out,
+        n_store_buckets, False, stats_out,
     )
     # per-bucket key Bloom filters into the manifests: one extra pass over
     # the (persisted) batch per side — the write-time cost that buys the
@@ -954,7 +954,6 @@ def incremental_dedup_batch(
     cfg: DedupConfig | None = None,
     epoch_id: int = 0,
     n_store_buckets: int = 64,
-    key_prune: bool = True,
     stats_out: dict | None = None,
 ) -> DataFrame:
     """Dedup one micro-batch against the accumulated signature store:
@@ -980,7 +979,7 @@ def incremental_dedup_batch(
       hot key) hands its collected signatures to the wide path, and a
       batch whose url type `local.xxhash64` does not hash takes the wide
       path from the start.
-    - wide (larger batches, or key_prune=False): the same steps as Spark
+    - wide (larger batches): the same steps as Spark
       joins, the signature UDF, the estimator UDF and Spark writes, Blooms
       built by applyInPandas.
 
@@ -1014,7 +1013,7 @@ def incremental_dedup_batch(
     cfg = cfg or DedupConfig()
     n_store_buckets = _effective_store_buckets(store_path, n_store_buckets)
     url_field = batch_df.schema["url"]
-    tbl = _collect_batch(batch_df, cfg) if key_prune else None
+    tbl = _collect_batch(batch_df, cfg)
     stats: dict | None = _new_stats("narrow")
     pairs = None
     if tbl is not None:
@@ -1026,7 +1025,7 @@ def incremental_dedup_batch(
         stats = None if stats_out is None else _new_stats("wide")
         verified = _spark_ingest(
             spark, _batch_sigs(spark, batch_df, tbl, cfg), store_path, cfg,
-            epoch_id, n_store_buckets, key_prune, stats,
+            epoch_id, n_store_buckets, stats,
         )
     else:
         _write_on_driver(tbl, store_path, cfg, epoch_id, n_store_buckets)
@@ -1076,7 +1075,7 @@ def probe_store(
         batch_sigs = _batch_sigs(spark, batch_df, tbl, cfg).persist()
         out = _spark_pairs(
             spark, batch_sigs, bands_table(batch_sigs, cfg), store_path, cfg, -1,
-            n_store_buckets, True, True, stats,
+            n_store_buckets, True, stats,
         )
         batch_sigs.unpersist()
     if stats_out is not None:

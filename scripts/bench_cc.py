@@ -73,7 +73,7 @@ def main_dedup_graph() -> None:
     spark = get_spark("bench-cc")
     if not os.path.exists(os.path.join(cache, "_SUCCESS")):
         docs = bench.amplified_docs(spark, sf_dir, amplify)
-        with_minhash_signature(docs, CFG, packed=True).select(
+        with_minhash_signature(docs, CFG).select(
             "doc_id", "minhash"
         ).write.mode("overwrite").parquet(cache)
     sigs = spark.read.parquet(cache).persist()

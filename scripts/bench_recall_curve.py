@@ -84,7 +84,7 @@ def main() -> None:
     docs = graded_corpus(spark, sf_dir).persist()
     n_base = docs.where(F.col("doc_id") < TIER_STRIDE).count()
 
-    sigs = with_minhash_signature(docs, CFG, packed=True).select(
+    sigs = with_minhash_signature(docs, CFG).select(
         "doc_id", "minhash"
     ).persist()
     bands = bands_table(sigs, CFG, id_col="doc_id")

@@ -132,7 +132,7 @@ def dedup_e2e_staged(sf_dir: str, amplify: int, work: str) -> dict:
     docs = bench.corpus_parquet(spark, sf_dir, amplify).select("doc_id", "text")
     n_docs = docs.count()  # corpus materialization outside the timed region
     t0 = time.time()
-    sigs = with_minhash_signature(docs, CFG, packed=True).select("doc_id", "minhash")
+    sigs = with_minhash_signature(docs, CFG).select("doc_id", "minhash")
     sigs.write.mode("overwrite").parquet(f"{work}/signatures")
     stages["signatures"] = round(time.time() - t0, 1)
     spark.stop()

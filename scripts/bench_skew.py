@@ -148,7 +148,7 @@ def run_dedup(spark, docs, label: str) -> dict:
     docs = docs.persist()
     n_docs = docs.count()
     t0 = time.time()
-    sigs = with_minhash_signature(docs, CFG, packed=True).select(
+    sigs = with_minhash_signature(docs, CFG).select(
         "doc_id", "minhash"
     ).persist()
     bands = bands_table(sigs, CFG, id_col="doc_id")

@@ -8,12 +8,9 @@ Phases, all against one hash-bucketed incremental store on tmpfs:
 1. WIDE    — 9 equal ~n/10-doc batches build the store. Wide batches touch
              every store bucket, so their store-join component grows with
              the store; the curve quantifies that slope.
-2. NARROW  — 10 × ~n/100-doc batches ingested twice from the SAME post-wide
-             store state (byte-copy): once with key-level Bloom manifest
-             pruning (key_prune=True) and once with bucket-level pruning
-             only (key_prune=False). The slope delta is the measured value
-             of the per-(batch, bucket) key Blooms: narrow batches stop
-             paying O(store) join input.
+2. NARROW  — 10 × ~n/100-doc batches ingested into the post-wide store.
+             Key-level Bloom manifest pruning keeps them from paying
+             O(store) join input, so their walls stay flat.
 3. PROBES  — tiny 3-doc read-only lookups against the full store stay flat
              (bucket + key pruning), the property that makes continuous
              small-batch ingest viable against a corpus-scale store.
@@ -74,7 +71,7 @@ def main() -> None:
     store = os.path.join(work, "store")
     _, band_store = _store_subdirs(store)
 
-    wide_out, narrow_keyed, narrow_plain, probe_out, mix_out = [], [], [], [], []
+    wide_out, narrow_out, probe_out, mix_out = [], [], [], []
     try:
         # -- phase 1: WIDE -------------------------------------------------
         for i in range(9):
@@ -97,30 +94,19 @@ def main() -> None:
         base_store = os.path.join(work, "store_base")
         _copy_store(store, base_store)
 
-        # -- phase 2: NARROW, keyed vs plain from the same store state ------
-        def narrow_series(target_store: str, key_prune: bool, out: list):
-            for j in range(10):
-                batch = docs.where(F.col("h") == j).select("url", "text")
-                t0 = time.time()
-                n_pairs = incremental_dedup_batch(
-                    spark, batch, target_store, CFG,
-                    epoch_id=100 + j, n_store_buckets=N_STORE_BUCKETS,
-                    key_prune=key_prune,
-                ).count()
-                out.append(
-                    {"batch": j, "wall_sec": round(time.time() - t0, 1),
-                     "verified_pairs": n_pairs}
-                )
-                print(
-                    f"# narrow key_prune={key_prune} {out[-1]}",
-                    file=sys.stderr, flush=True,
-                )
-
-        plain_store = os.path.join(work, "store_plain")
-        _copy_store(base_store, plain_store)
-        narrow_series(store, True, narrow_keyed)
-        narrow_series(plain_store, False, narrow_plain)
-        shutil.rmtree(plain_store, ignore_errors=True)
+        # -- phase 2: NARROW ----------------------------------------------
+        for j in range(10):
+            batch = docs.where(F.col("h") == j).select("url", "text")
+            t0 = time.time()
+            n_pairs = incremental_dedup_batch(
+                spark, batch, store, CFG,
+                epoch_id=100 + j, n_store_buckets=N_STORE_BUCKETS,
+            ).count()
+            narrow_out.append(
+                {"batch": j, "wall_sec": round(time.time() - t0, 1),
+                 "verified_pairs": n_pairs}
+            )
+            print(f"# narrow {narrow_out[-1]}", file=sys.stderr, flush=True)
 
         # -- phase 3: tiny probes against the grown store -------------------
         base = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
@@ -201,19 +187,15 @@ def main() -> None:
                 "n_store_buckets": N_STORE_BUCKETS,
                 "cpus": default_parallelism(),
                 "wide_batches": wide_out,
-                "narrow_batches_key_prune": narrow_keyed,
-                "narrow_batches_bucket_only": narrow_plain,
+                "narrow_batches": narrow_out,
                 "probes": probe_out,
                 "mixes": mix_out,
             }
         )
     )
-    md = [
-        "| narrow batch | keyed wall (s) | bucket-only wall (s) |",
-        "|---|---|---|",
-    ]
-    for a, b in zip(narrow_keyed, narrow_plain):
-        md.append(f"| {a['batch']} | {a['wall_sec']} | {b['wall_sec']} |")
+    md = ["| narrow batch | wall (s) |", "|---|---|"]
+    for a in narrow_out:
+        md.append(f"| {a['batch']} | {a['wall_sec']} |")
     print("\n".join(md), file=sys.stderr)
 
 

@@ -67,7 +67,7 @@ def run_cell(spark, docs, truth, n_docs: int, n_truth: int, sketch: int, bands: 
         minhash=MinHashConfig(sketch_size=sketch, seed=42), bands=bands, rows=rows
     )
     t0 = time.time()
-    sigs = with_minhash_signature(docs, cfg, packed=True).select(
+    sigs = with_minhash_signature(docs, cfg).select(
         "doc_id", "minhash"
     ).persist()
     bt = bands_table(sigs, cfg, id_col="doc_id")

@@ -61,7 +61,7 @@ def truth_pairs(docs):
 
 def run_ours(spark, docs):
     t0 = time.time()
-    sigs = with_minhash_signature(docs, CFG, packed=True).select(
+    sigs = with_minhash_signature(docs, CFG).select(
         "doc_id", "minhash"
     ).persist()
     cands = candidate_pairs(

@@ -6,11 +6,7 @@ optimization — a full pipeline re-run per experiment would spend 90% of its
 wall on the signature UDF stage that is not under study.
 
 Usage:
-  SPARK_GRAFT_CPUS=8 python scripts/profile_pair_stages.py [sf_dir] [amplify] [packed]
-
-`packed` (default 1) selects the signature representation under test:
-1 = packed int32 binary buffers (the hot-path default), 0 = array<int> —
-the A/B for the verify shuffle-volume work.
+  SPARK_GRAFT_CPUS=8 python scripts/profile_pair_stages.py [sf_dir] [amplify]
 
 Prints one JSON line: per-stage wall, summed task seconds, utilization,
 GC seconds, shuffle bytes written, and row counts.
@@ -41,10 +37,7 @@ LOG_DIR = "/tmp/spark-events-pair-profile"
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     amplify = int(sys.argv[2]) if len(sys.argv) > 2 else 100
-    packed = bool(int(sys.argv[3])) if len(sys.argv) > 3 else True
-    cache = f"{SIG_CACHE}_{os.path.basename(sf_dir)}_{amplify}" + (
-        "_pk" if packed else ""
-    )
+    cache = f"{SIG_CACHE}_{os.path.basename(sf_dir)}_{amplify}"
 
     shutil.rmtree(LOG_DIR, ignore_errors=True)
     os.makedirs(LOG_DIR, exist_ok=True)
@@ -59,7 +52,7 @@ def main() -> None:
 
     if not os.path.exists(os.path.join(cache, "_SUCCESS")):
         docs = bench.amplified_docs(spark, sf_dir, amplify)
-        with_minhash_signature(docs, CFG, packed=packed).select(
+        with_minhash_signature(docs, CFG).select(
             "doc_id", "minhash"
         ).write.mode("overwrite").parquet(cache)
 
@@ -116,7 +109,6 @@ def main() -> None:
     out = {
         "cpus": cores,
         "amplify": amplify,
-        "packed": packed,
         "n_docs": n_docs,
         "stages": {},
     }

@@ -34,7 +34,7 @@ def main() -> None:
     t: dict[str, float] = {}
 
     t0 = time.time()
-    sigs = with_minhash_signature(docs, CFG, packed=True).select("doc_id", "minhash").persist()
+    sigs = with_minhash_signature(docs, CFG).select("doc_id", "minhash").persist()
     sigs.count()
     t["signatures"] = time.time() - t0
 

@@ -54,7 +54,7 @@ def main() -> None:
         fn()
         marks.append((name, t0, time.time()))
 
-    sigs = with_minhash_signature(docs, CFG, packed=True).select("doc_id", "minhash").persist()
+    sigs = with_minhash_signature(docs, CFG).select("doc_id", "minhash").persist()
     run("signatures", lambda: sigs.count())
     bands = bands_table(sigs, CFG, id_col="doc_id")
     cands = candidate_pairs(bands, CFG, id_col="doc_id").persist()

@@ -206,7 +206,7 @@ TEXTS = (
 def test_signature_matrix_matches_the_udf(spark, mode, texts):
     cfg = DedupConfig(shingle_mode=mode, shingle_size=5 if mode == "char" else 2)
     df = spark.createDataFrame(list(enumerate(texts)), "i int, text string")
-    got = with_minhash_signature(df, cfg, packed=True).select("i", "minhash").collect()
+    got = with_minhash_signature(df, cfg).select("i", "minhash").collect()
     want = [bytes(r.minhash) for r in sorted(got)]
     S = signature_matrix(texts, cfg)
     assert S.dtype == np.int32 and S.shape == (len(texts), cfg.minhash.sketch_size)

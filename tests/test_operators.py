@@ -256,50 +256,6 @@ def test_ivf_topk_recall_vs_bruteforce(spark):
     assert recall >= 0.5, recall
 
 
-def test_canonicalize_url_spec(spark):
-    """The documented canonicalization spec, edge cases included."""
-    from minhash_spark.operators.urls import canonicalize_url
-    import pyspark.sql.functions as F
-
-    cases = {
-        "HTTPS://WWW.ExAmple.COM:443/A/b?x=1&utm_source=s#frag": "https://example.com/A/b?x=1",
-        "http://Example.com:80": "http://example.com/",
-        "http://example.com:8080/p": "http://example.com:8080/p",
-        "https://example.com/?utm_a=1&utm_b=2": "https://example.com/",
-        "https://example.com/p?utm_x=1&keep=2&gclid=z&also=3": "https://example.com/p?keep=2&also=3",
-        "example.com/Path": "example.com/Path",
-        "https://a.com/p//q?fbclid=only": "https://a.com/p//q",
-    }
-    df = spark.createDataFrame([(u,) for u in cases], ["url"])
-    got = {
-        r["url"]: r["c"]
-        for r in df.select("url", canonicalize_url(F.col("url")).alias("c")).collect()
-    }
-    assert got == cases
-
-
-def test_canonicalize_url_idempotent(spark):
-    """canonicalize(canonicalize(u)) == canonicalize(u) — the canonical form
-    is a fixpoint (prerequisite for using it as a join/dedup key)."""
-    from minhash_spark.operators.urls import canonicalize_url
-    import pyspark.sql.functions as F
-
-    urls = [
-        "HTTPS://WWW.ExAmple.COM:443/A/b?x=1&utm_source=s#frag",
-        "http://Example.com:80",
-        "http://example.com:8080/p?a=1&b=2",
-        "https://example.com/?utm_a=1&utm_b=2",
-        "example.com/Path?gclid=1",
-        "https://a.com/p//q?fbclid=only&z=9",
-        "ftp://Files.Example.org:21/pub/x",
-    ] + [f"https://WWW.h{i}.COM/p{i}?utm_x={i}&k={i}#f{i}" for i in range(30)]
-    df = spark.createDataFrame([(u,) for u in urls], ["url"])
-    once = df.select(canonicalize_url(F.col("url")).alias("c1"))
-    twice = once.select("c1", canonicalize_url(F.col("c1")).alias("c2"))
-    bad = twice.where(F.col("c1") != F.col("c2")).collect()
-    assert bad == [], bad
-
-
 def test_passage_dup_stats_semantics(spark):
     """Known corpus: doc A and B share A's full token stream; C is unique;
     D is too short for one window."""
@@ -331,61 +287,7 @@ def test_train_ivf_centroids_empty_raises(spark):
         train_ivf_centroids(empty, n_cells=4)
 
 
-def test_packed_signature_representation_parity(spark):
-    """The packed binary signature is a pure re-encoding: unpacking gives the
-    array form cell-for-cell, and the banding → candidates → verify chain
-    produces identical results from either representation (band_key VALUES
-    differ — hash of bytes vs of a list — but bucket contents, and therefore
-    pairs, are the same)."""
-    import numpy as np
-
-    from minhash_spark.config import DedupConfig
-    from minhash_spark.operators.lsh import (
-        bands_table,
-        candidate_pairs,
-        release_persisted,
-    )
-    from minhash_spark.operators.signatures import with_minhash_signature
-    from minhash_spark.operators.verify import verify_pairs
-
-    cfg = DedupConfig()
-    texts = [
-        "alpha bravo charlie delta echo foxtrot golf hotel india juliet",
-        "alpha bravo charlie delta echo foxtrot golf hotel india juliett",
-        "totally different words in this one nothing shared at all here",
-        "",  # empty doc: all-sentinel signature must survive packing
-    ]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    arr = with_minhash_signature(df, cfg).select("doc_id", "minhash")
-    pk = with_minhash_signature(df, cfg, packed=True).select("doc_id", "minhash")
-    a_rows = {r["doc_id"]: np.asarray(r["minhash"], dtype=np.int32) for r in arr.collect()}
-    p_rows = {
-        r["doc_id"]: np.frombuffer(bytes(r["minhash"]), dtype="<i4")
-        for r in pk.collect()
-    }
-    for k in a_rows:
-        assert np.array_equal(a_rows[k], p_rows[k]), k
-
-    def run(sigs):
-        bands = bands_table(sigs, cfg, id_col="doc_id")
-        cands = candidate_pairs(bands, cfg, id_col="doc_id")
-        out = {
-            (r["url_a"], r["url_b"], r["est_jaccard"])
-            for r in verify_pairs(
-                cands, sigs, cfg, id_col="doc_id", threshold=0.5
-            ).collect()
-        }
-        release_persisted()
-        return out
-
-    assert run(arr) == run(pk)
-    assert run(pk)  # the near-dup pair must actually be found
-
-
-@pytest.mark.parametrize("packed", [True, False])
-def test_band_keys_match_the_stored_band_key_derivation(spark, packed):
+def test_band_keys_match_the_stored_band_key_derivation(spark):
     """Exploded `band_keys` equals `bands_table` row for row, and both equal
     the derivation incremental stores were written with: posexplode over the
     band slices, then xxhash64(band index, slice). A drift here would make
@@ -399,19 +301,16 @@ def test_band_keys_match_the_stored_band_key_derivation(spark, packed):
     cfg = DedupConfig()
     pages, _, _ = generate_corpus(40, seed=3)
     sigs = with_minhash_signature(
-        spark.createDataFrame(pages).select("url", "text"), cfg, packed=packed
+        spark.createDataFrame(pages).select("url", "text"), cfg
     ).select("url", "minhash")
     rows = cfg.rows
-    if packed:
-        band = lambda i: F.substring("minhash", i * (rows * 4) + 1, rows * 4)
-    else:
-        band = lambda i: F.slice("minhash", i * rows + 1, rows)
+    band = lambda i: F.substring("minhash", i * (rows * 4) + 1, rows * 4)
     slices = F.transform(F.sequence(F.lit(0), F.lit(cfg.bands - 1)), band)
     reference = sigs.select(
         "url", F.posexplode(slices).alias("band_id", "band_sig")
     ).select("url", F.xxhash64("band_id", "band_sig").alias("band_key"))
     exploded = sigs.select(
-        "url", F.explode(band_keys("minhash", cfg, packed)).alias("band_key")
+        "url", F.explode(band_keys("minhash", cfg)).alias("band_key")
     )
 
     def rows_of(df):

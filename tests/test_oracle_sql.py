@@ -132,23 +132,18 @@ def test_verify_pairs_survives_empty_documents(spark):
     assert got == {("a", "b"), ("a", "c"), ("b", "c")}
 
 
-def test_verify_pairs_accepts_legacy_long_signatures(spark):
-    """Back-compat: an array<long> signature store (pre-int32 layout) flows
-    through the explicit sentinel mapping without ANSI CAST_OVERFLOW."""
-    from minhash_spark.config import SIG_INFTY_LONG
+def test_verify_pairs_and_bands_table_reject_array_signatures(spark):
+    """Packed binary is the only signature form: an array<int> signature
+    column is refused with ValueError before any plan is built, by both
+    operators that read signature cells."""
+    from minhash_spark.operators.lsh import bands_table
     from minhash_spark.operators.verify import verify_pairs
 
     sigs = spark.createDataFrame(
-        [
-            ("a", [SIG_INFTY_LONG] * 32),
-            ("b", [SIG_INFTY_LONG] * 32),
-            ("c", [7] * 32),
-        ],
-        ["url", "minhash"],
+        [("a", [7] * 32), ("b", [7] * 32)], "url string, minhash array<int>"
     )
-    pairs = spark.createDataFrame([("a", "b"), ("a", "c")], ["url_a", "url_b"])
-    got = {
-        (r["url_a"], r["url_b"]): r["est_jaccard"]
-        for r in verify_pairs(pairs, sigs, CFG, threshold=0.0).collect()
-    }
-    assert got[("a", "b")] == 1.0 and got[("a", "c")] == 0.0
+    pairs = spark.createDataFrame([("a", "b")], ["url_a", "url_b"])
+    with pytest.raises(ValueError, match="array<int>"):
+        verify_pairs(pairs, sigs, CFG)
+    with pytest.raises(ValueError, match="array<int>"):
+        bands_table(sigs, CFG)

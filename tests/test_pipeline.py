@@ -193,7 +193,7 @@ def test_exact_clusters_fully_merged(spark, result, corpus):
 def test_word_shingle_mode_end_to_end(spark):
     """Word w-shingle mode drives the same pipeline (config knob from the
     FIXTURES spec: char 5-shingles default, word shingles optional)."""
-    from minhash_spark.operators.signatures import with_minhash_signature
+    from minhash_spark.operators.signatures import signature_rows, with_minhash_signature
     from minhash_spark.operators.lsh import bands_table, candidate_pairs
     from minhash_spark.operators.verify import verify_pairs
     from minhash_spark.functions.kernels import min_sketch_batch, sketch_to_int
@@ -207,7 +207,10 @@ def test_word_shingle_mode_end_to_end(spark):
         [("a", base), ("b", near), ("c", far)], ["url", "text"]
     )
     sigs = with_minhash_signature(df, cfg).select("url", "minhash")
-    rows = {r["url"]: np.array(r["minhash"]) for r in sigs.collect()}
+    rows = {
+        r["url"]: signature_rows([r["minhash"]], cfg.minhash.sketch_size)[0]
+        for r in sigs.collect()
+    }
     want = sketch_to_int(min_sketch_batch([word_shingles(base, 3)], cfg.minhash))[0]
     assert np.array_equal(rows["a"], want)
     got = verify_pairs(

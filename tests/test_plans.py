@@ -3,18 +3,22 @@ can't silently regress — column pruning reaching the scan (never read html
 for a text-only stage), partition pruning on ds, JVM-only verification and
 banding (no Python), broadcast where intended."""
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from minhash_spark import oracle
 from minhash_spark.config import DedupConfig
 from minhash_spark.operators.lsh import bands_table, candidate_pairs
-from minhash_spark.operators.verify import verify_pairs, estimate_jaccard
-from minhash_spark.operators.signatures import with_minhash_signature
+from minhash_spark.operators.verify import estimate_jaccard_udf, verify_pairs
+from minhash_spark.operators.signatures import packed_rows, with_minhash_signature
 from minhash_spark.plans import plan_report
 from minhash_spark.sources.pages import generate_corpus, write_pages, read_pages
 
 
 CFG = DedupConfig()
+# one packed 128-cell signature (cells 0..127)
+SIG = packed_rows(np.arange(128, dtype=np.int32)[None, :])[0]
 
 
 @pytest.fixture(scope="module")
@@ -50,7 +54,7 @@ def test_predicate_pushdown_to_scan(spark, pages_path):
 
 def test_banding_and_candidates_are_jvm_only(spark):
     sigs = spark.createDataFrame(
-        [(f"u{i}", list(range(128))) for i in range(10)], ["url", "minhash"]
+        [(f"u{i}", SIG) for i in range(10)], ["url", "minhash"]
     )
     cands = candidate_pairs(bands_table(sigs, CFG), CFG)
     rep = plan_report(cands)
@@ -63,7 +67,7 @@ def test_candidate_enumeration_has_no_object_hash_aggregate(spark):
     its GC share grew with core count (2% → 21% of task time from 2 to 32
     cores) and hot buckets would OOM at corpus scale."""
     sigs = spark.createDataFrame(
-        [(f"u{i}", list(range(128))) for i in range(10)], ["url", "minhash"]
+        [(f"u{i}", SIG) for i in range(10)], ["url", "minhash"]
     )
     cands = candidate_pairs(bands_table(sigs, CFG), CFG)
     rep = plan_report(cands)
@@ -85,7 +89,7 @@ def test_verify_joins_are_hash_not_sort_merge(spark, tmp_path):
         > 0
     )
     spark.createDataFrame(
-        [(f"u{i}", list(range(128))) for i in range(300)], ["url", "minhash"]
+        [(f"u{i}", SIG) for i in range(300)], ["url", "minhash"]
     ).write.parquet(str(tmp_path / "sigs"))
     spark.createDataFrame(
         [("u1", "u2"), ("u3", "u4")], ["url_a", "url_b"]
@@ -100,7 +104,7 @@ def test_verify_python_is_arrow_only(spark):
     """Verification crosses to Python exactly once, through Arrow — never
     row-at-a-time BatchEvalPython."""
     sigs = spark.createDataFrame(
-        [(f"u{i}", list(range(128))) for i in range(10)], ["url", "minhash"]
+        [(f"u{i}", SIG) for i in range(10)], ["url", "minhash"]
     )
     pairs = spark.createDataFrame([("u1", "u2")], ["url_a", "url_b"])
     rep = plan_report(verify_pairs(pairs, sigs, CFG))
@@ -136,34 +140,32 @@ def test_srp_pairs_has_no_nested_loop_join(spark):
 
 
 def test_jvm_estimator_expression_matches_udf(spark):
-    """The JVM expression form and the Arrow UDF must agree exactly."""
-    rows = [
-        ("a", list(range(128)), list(range(128))),
-        ("b", list(range(128)), [0, 1] + [999] * 126),
-        ("c", [7] * 128, [7] * 64 + [8] * 64),
-    ]
-    df = spark.createDataFrame(rows, ["k", "s1", "s2"])
-    from minhash_spark.operators.verify import estimate_jaccard_udf
-
+    """The Arrow estimator over packed signatures agrees exactly with the
+    serial oracle's `query`."""
+    cells = {
+        "a": (list(range(128)), list(range(128))),
+        "b": (list(range(128)), [0, 1] + [999] * 126),
+        "c": ([7] * 128, [7] * 64 + [8] * 64),
+    }
+    S = {k: np.array(v, dtype=np.int32) for k, v in cells.items()}
+    df = spark.createDataFrame(
+        [(k, *packed_rows(np.stack(S[k]))) for k in cells], ["k", "s1", "s2"]
+    )
     out = df.select(
-        "k",
-        estimate_jaccard(F.col("s1"), F.col("s2"), 128).alias("jvm"),
-        estimate_jaccard_udf(128)(F.col("s1"), F.col("s2")).alias("arrow"),
+        "k", estimate_jaccard_udf(128)(F.col("s1"), F.col("s2")).alias("arrow")
     ).collect()
-    for r in out:
-        assert r["jvm"] == r["arrow"]
-    got = {r["k"]: r["jvm"] for r in out}
+    got = {r["k"]: r["arrow"] for r in out}
+    assert got == {k: oracle.query(*S[k]) for k in cells}
     assert got == {"a": 1.0, "b": 2 / 128, "c": 0.5}
 
 
 def test_packed_path_stays_jvm_and_hash_joined(spark):
-    """The packed-binary signature path (the hot-path default) must keep
-    every plan property of the array path: banding/candidates JVM-only
-    (binary substring slices stay in codegen), verify joins hash not
-    sort-merge, Python crossing Arrow-only."""
+    """Signatures straight from the UDF keep every plan property:
+    banding/candidates JVM-only (binary substring slices stay in codegen),
+    verify joins hash not sort-merge, Python crossing Arrow-only."""
     texts = [(i, f"document number {i} with some shared tokens alpha beta") for i in range(20)]
     df = spark.createDataFrame(texts, "doc_id long, text string")
-    sigs = with_minhash_signature(df, CFG, packed=True).select("doc_id", "minhash")
+    sigs = with_minhash_signature(df, CFG).select("doc_id", "minhash")
     # force the sig column through a materialized boundary so the banding
     # plan below contains no Python from the signature UDF itself
     sigs = spark.createDataFrame(sigs.collect(), sigs.schema)

@@ -8,8 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from minhash_spark.config import DedupConfig
-from minhash_spark.functions.kernels import min_sketch_batch, sketch_to_int
-from minhash_spark.functions.shingles import shingle_fn
+from minhash_spark.operators.signatures import signature_matrix, signature_rows
 from minhash_spark.sources.pages import generate_corpus
 from minhash_spark.streaming import stream_signatures, incremental_dedup_batch
 
@@ -37,14 +36,14 @@ def test_stream_signatures_availablenow(spark, tmp_path_factory):
     assert out.count() == 120
     assert out.select("url").distinct().count() == 120
 
-    # streamed signatures == batch kernel signatures (order independence)
-    shingler = shingle_fn(CFG.shingle_mode, CFG.shingle_size)
-    want = {
-        u: sketch_to_int(min_sketch_batch([shingler(t)], CFG.minhash))[0]
-        for u, t in zip(pages["url"], pages["text"])
-    }
-    for r in out.collect():
-        assert np.array_equal(np.array(r["minhash"]), want[r["url"]]), r["url"]
+    # streamed signatures are packed, the form the pipeline and the store
+    # write, and equal the batch kernel's (order independence)
+    assert out.schema["minhash"].dataType.simpleString() == "binary"
+    rows = out.collect()
+    text = dict(zip(pages["url"], pages["text"]))
+    got = signature_rows([r["minhash"] for r in rows], CFG.minhash.sketch_size)
+    want = signature_matrix([text[r["url"]] for r in rows], CFG)
+    assert np.array_equal(got, want)
 
 
 def test_incremental_dedup_matches_batch(spark, tmp_path_factory):
@@ -203,9 +202,7 @@ def test_store_reads_stay_bounded_as_store_grows(tmp_path_factory, spark):
     touched = [
         r[0]
         for r in bands_table(
-            with_minhash_signature(probe, CFG, packed=True).select(
-                "url", "minhash"
-            ),
+            with_minhash_signature(probe, CFG).select("url", "minhash"),
             CFG,
         )
         .select(_bucket_col("band_key", n_buckets).alias("b"))
@@ -383,7 +380,7 @@ def test_key_level_bloom_pruning_skips_disjoint_store_batches(
         [(r["url"] + "#copy", r["text"]) for r in probe_rows], ["url", "text"]
     )
     new_bands = bands_table(
-        with_minhash_signature(probes, CFG, packed=True).select("url", "minhash"),
+        with_minhash_signature(probes, CFG).select("url", "minhash"),
         CFG,
     )
     kf = _collect_key_filter(

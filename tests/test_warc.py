@@ -106,7 +106,8 @@ def test_read_warc_spark(spark, tmp_path_factory):
 
     sigs = with_minhash_signature(df.select("url", "text"), DedupConfig())
     got = sigs.select("url", "minhash").collect()
-    assert len(got) == 3 and all(len(r["minhash"]) == 128 for r in got)
+    # 128 packed little-endian int32 cells per document
+    assert len(got) == 3 and all(len(r["minhash"]) == 4 * 128 for r in got)
 
 
 def test_resync_not_fooled_by_warc_mention_in_garbage():
