@@ -22,7 +22,10 @@ _U64 = np.uint64
 def hash_matrix(
     x: np.ndarray, coeffs: tuple[np.ndarray, ...], hash_type: int, M: int
 ) -> np.ndarray:
-    """Hash every element by every function: uint64[n] → uint64[n, size].
+    """Hash every element by every function: uint64[n] → uint64[n, size],
+    the transposed view of a C-contiguous (size, n) matrix, so that each
+    function's values over the n elements are contiguous (min_sketch_batch
+    reduces along them).
 
     Pairwise: ``((a * x) % M + b) % M`` where ``a * x`` wraps mod 2^64 first,
     exactly like the C uint64 arithmetic (src/utils/hash.c:6-9) — computed
@@ -30,38 +33,68 @@ def hash_matrix(
     small enough for it to be cache-resident; see min_sketch_batch).
     K-wise: degree-k polynomial accumulated mod M per step with the same
     wrap-before-mod order as src/utils/hash.c:13-25.
+
+    For the Mersenne prime M = 2^31 - 1 (the default and every reference
+    config) no `% M` divides: 2^31 ≡ 1 (mod M), so ``(h >> 31) + (h & M)``
+    keeps h's residue and shrinks any uint64 below 2^33 + 2^31 (`_fold`),
+    and a second fold or one conditional subtract finishes the reduction.
+    Any other M takes the uint64 division.
     """
     x = np.ascontiguousarray(x, dtype=np.uint64)
+    mersenne = M == (1 << 31) - 1
     M = _U64(M)
-    u31 = _U64(31)
     with np.errstate(over="ignore"):
         if hash_type == HASH_KWISE:
-            (C,) = coeffs  # (size, k+1) uint64
+            (C,) = coeffs  # (size, k+1) uint64, each < 2^31
             n, size = x.shape[0], C.shape[0]
-            total = np.zeros((n, size), dtype=np.uint64)
+            total = np.zeros((size, n), dtype=np.uint64)
             pow_x = np.ones(n, dtype=np.uint64)
             for i in range(C.shape[1]):
-                term = pow_x[:, None] * C[None, :, i]
-                term %= M
-                total += term
-                # total < 2M here (both addends already reduced), so the
-                # canonical `%= M` is one conditional subtract — the uint64
-                # division only ever runs on the full-width products
-                np.subtract(total, M, out=total, where=total >= M)
-                pow_x = (pow_x * x) % M
-            return total
+                # pow_x ≤ M and C < 2^31, so the product is < 2^62 and
+                # does not wrap; one fold leaves it < 2^32
+                term = C[:, i, None] * pow_x[None, :]
+                if mersenne:
+                    _fold(term)
+                    total += term  # < 2^32 + 2^31
+                    _fold(total)  # ≤ M + 2
+                else:
+                    term %= M
+                    total += term  # < 2M
+                _sub_if_ge(total, M)
+                # pow_x · x wraps mod 2^64 first, as in the C
+                pow_x = pow_x * x
+                if mersenne:
+                    _fold(pow_x)
+                    _fold(pow_x)  # ≤ M + 4
+                    _sub_if_ge(pow_x, M)
+                else:
+                    pow_x %= M
+            return total.T
         a, b = coeffs
-        h = x[:, None] * a[None, :]
-        h %= M
-        h += b[None, :]
-        # h < M + 2^31 < 2^32: the second `%= M` reduces to one Mersenne
-        # fold (M = 2^31 - 1) + conditional subtract — same values as the
-        # division, measured ~8% cheaper on the (chunk × size) hot loop
-        t = h >> u31
-        h &= M
-        h += t
-        np.subtract(h, M, out=h, where=h >= M)
-        return h
+        h = a[:, None] * x[None, :]
+        if mersenne:
+            _fold(h)  # < 2^33 + 2^31
+            h += b[:, None]  # b < 2^31
+            _fold(h)  # ≤ M + 5
+            _sub_if_ge(h, M)
+        else:
+            h %= M
+            h += b[:, None]
+            h %= M
+        return h.T
+
+
+def _fold(h: np.ndarray) -> None:
+    """In place h ← (h >> 31) + (h & (2^31 - 1)): the same residue mod the
+    Mersenne prime 2^31 - 1, and < 2^33 + 2^31 for any uint64 h."""
+    t = h >> _U64(31)
+    h &= _U64((1 << 31) - 1)
+    h += t
+
+
+def _sub_if_ge(h: np.ndarray, M: np.uint64) -> None:
+    """In place h ← h - M where h ≥ M: `h %= M` for h < 2M."""
+    np.subtract(h, M, out=h, where=h >= M)
 
 
 def min_sketch_batch(
@@ -97,20 +130,26 @@ def min_sketch_batch(
     starts = np.concatenate([[0], np.cumsum(lengths)])[:-1]
     X = np.concatenate([np.asarray(shingle_sets[i], dtype=np.uint64) for i in nonempty])
 
-    total = X.shape[0]
-    pos = 0
-    while pos < total:
-        end = min(pos + chunk_elems, total)
-        H = hash_matrix(X[pos:end], coeffs, cfg.hash_type, cfg.prime_modulus)
-        first = int(np.searchsorted(starts, pos, side="right")) - 1
-        # doc containing the chunk's LAST element (end-1, not end — a doc
-        # starting exactly at `end` belongs to the next chunk)
-        last = int(np.searchsorted(starts, end - 1, side="right")) - 1
-        seg_starts = np.maximum(starts[first : last + 1], pos) - pos
-        mins = np.minimum.reduceat(H, seg_starts, axis=0)
-        docs = orig_idx[first : last + 1]
-        out[docs] = np.minimum(out[docs], mins)
-        pos = end
+    # the docs each chunk of X spans: first[c] ..= last[c]
+    pos = np.arange(0, X.shape[0], chunk_elems)
+    end = np.minimum(pos + chunk_elems, X.shape[0])
+    first = np.searchsorted(starts, pos, side="right") - 1
+    # the doc containing the chunk's LAST element (end-1, not end: a doc
+    # starting exactly at `end` belongs to the next chunk)
+    last = np.searchsorted(starts, end - 1, side="right") - 1
+    for p, e, f, l in zip(pos.tolist(), end.tolist(), first.tolist(), last.tolist()):
+        # (size, chunk), C-contiguous: the reductions run along the last
+        # axis, where np.minimum.reduceat is ~8x faster than along the first
+        H = hash_matrix(X[p:e], coeffs, cfg.hash_type, cfg.prime_modulus).T
+        if f == l:
+            # one doc: a plain min, which also releases the GIL that
+            # reduceat holds (driver threads share it)
+            row = out[orig_idx[f]]
+            np.minimum(row, H.min(axis=1), out=row)
+        else:
+            seg_starts = np.maximum(starts[f : l + 1], p) - p
+            docs = orig_idx[f : l + 1]
+            out[docs] = np.minimum(out[docs], np.minimum.reduceat(H, seg_starts, axis=1).T)
     return out
 
 

@@ -9,20 +9,33 @@ catalog is configured; same layout either way):
     candidates/   (url_a, url_b)
     pairs/        (url_a, url_b, est_jaccard)
     clusters/     (url, cluster_id)
-    metrics/      one JSON line per stage run (lineage checkpoint); the
-                  candidates, pairs and clusters lines name the `path`
-                  that wrote them, and the clusters line the CC path,
-                  rounds and edge count
+    metrics/      one JSON line per stage run (lineage checkpoint); each
+                  stage line names the `path` (local or spark) that
+                  wrote it; the signatures line on either path and the
+                  local lines split collect_s/kernel_s/write_s, the
+                  signatures line names the signer's threads, and the
+                  clusters line the CC path, rounds and edge count
+
+The signature stage signs on the driver when the rows to sign fit
+`_LOCAL_MAX_DOCS` rows and `signatures._LOCAL_MAX_SIGN_BYTES` of text (the
+cap the store's narrow path shares, measured by scripts/bench_sign_cap.py):
+one JVM-only job collects the text lengths, a second the (url, ds, text)
+rows, `signatures.sign_texts` signs them over a thread pool, and pyarrow
+writes one file per `ds` partition. Above either cap the signature UDF
+signs in Spark, and only the text lengths reached the driver. Both write
+the same rows to the same partition directories, so a resume may mix them.
 
 After the signature stage, `run` takes one of two paths:
 
 - **local**, when the corpus fits two caps (`_LOCAL_MAX_DOCS` signature rows
   and `_LOCAL_MAX_PAIR_ROWS` bucket pair rows, the second counted from
-  bucket sizes before anything is enumerated): one bounded Arrow collect of
-  (url, minhash, band keys) brings the signatures to the driver, the numpy
-  kernels of `local` enumerate, verify and cluster on row indices, and
-  pyarrow writes candidates/, pairs/ and clusters/, each as one file plus
-  `_SUCCESS`. No Python stage runs after the signatures.
+  bucket sizes before anything is enumerated): the signatures this run
+  signed on the driver stay in memory (otherwise one bounded Arrow collect
+  of (url, minhash, band keys) brings them to the driver), the numpy
+  kernels of `local` key the bands, enumerate, verify and cluster on row
+  indices, and pyarrow writes candidates/, pairs/ and clusters/, each as
+  one file plus `_SUCCESS`. A corpus under both signing caps runs no Python
+  stage at all, and a local-path run of it is two Spark jobs.
 - **spark**, above either cap: candidate generation and verification are
   SEPARATE stages (each one job, each ending in a parquet write) on
   purpose: the two biggest shuffles in the whole pipeline — the cross-band
@@ -44,8 +57,9 @@ immutability (get_global_sketch / version list,
 /root/reference/src/fcds/minhash-fcds.c:195-222 — SURVEY.md §2.1 op#11):
 completed work is a committed snapshot; on restart the signature stage
 anti-joins the already-committed `ds` partitions and computes only the rest.
-Downstream stages rebuild only if their output is missing or upstream was
-extended.
+The driver's writer commits each partition file by rename, so a crash
+leaves only whole partitions. Downstream stages rebuild only if their
+output is missing or upstream was extended.
 """
 
 from __future__ import annotations
@@ -54,6 +68,7 @@ import json
 import os
 import shutil
 import time
+import uuid
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -66,7 +81,12 @@ from pyspark.sql.types import BinaryType, StructField, StructType
 
 from . import local
 from .config import DedupConfig
-from .operators.signatures import signature_rows, with_minhash_signature
+from .operators.signatures import (
+    collect_signed,
+    packed_array,
+    signature_rows,
+    with_minhash_signature,
+)
 from .operators.lsh import band_keys, bands_table, candidate_pairs, multi_bucket_stats
 from .operators.verify import verify_pairs
 from .operators.cluster import connected_components
@@ -83,6 +103,41 @@ _CC_MAX_ITERATIONS = 50  # connected_components' default
 
 def _exists(path: str) -> bool:
     return os.path.exists(os.path.join(path, "_SUCCESS"))
+
+
+# the characters Spark escapes as %XX in a partition directory name
+# (ExternalCatalogUtils.escapePathName), and its name for a null value
+_PATH_ESCAPES = frozenset('"#%\'*/:=?\\\x7f{[]^' + "".join(map(chr, range(1, 32))))
+_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+
+
+def _partition_dir(ds: str | None) -> str:
+    """The directory Spark's partitionBy("ds") writes a string value to."""
+    if not ds:  # Spark writes an empty string as null
+        return f"ds={_NULL_PARTITION}"
+    return "ds=" + "".join(f"%{ord(c):02X}" if c in _PATH_ESCAPES else c for c in ds)
+
+
+def _write_partitions(tbl: pa.Table, out: str, append: bool) -> None:
+    """Write (url, ds, minhash) rows as Spark's partitionBy("ds") parquet
+    write does: the rows of each ds value as (url, minhash) under
+    out/ds=<value>/, then _SUCCESS. Each file is written under a hidden
+    name that both Spark and pyarrow skip, then renamed into place under a
+    unique name, so a crash leaves only whole partitions and an append
+    never replaces a committed file. Without `append`, out is emptied
+    first."""
+    if not append:
+        shutil.rmtree(out, ignore_errors=True)
+    ds = tbl["ds"]
+    for value in pc.unique(ds).to_pylist():
+        rows = tbl.filter(pc.is_null(ds) if value is None else pc.equal(ds, value))
+        part = os.path.join(out, _partition_dir(value))
+        os.makedirs(part, exist_ok=True)
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(part, f".{name}.tmp")
+        pq.write_table(rows.select(["url", "minhash"]), tmp)
+        os.replace(tmp, os.path.join(part, name))
+    open(os.path.join(out, "_SUCCESS"), "w").close()
 
 
 def _write_table(tbl: pa.Table, out: str) -> None:
@@ -116,6 +171,7 @@ class DedupPipeline:
         self.out_dir = out_dir
         self.metrics_dir = os.path.join(out_dir, "metrics")
         os.makedirs(self.metrics_dir, exist_ok=True)
+        self._signed = None  # (url, signatures) of a driver-signed run
 
     # -- lineage / metrics ------------------------------------------------
     def _log_metric(self, stage: str, **kv) -> dict:
@@ -129,15 +185,28 @@ class DedupPipeline:
     def compute_signatures(self, pages: DataFrame, resume: bool = True) -> str:
         """Signature stage, partitioned + resumable by `ds` (date of warc_ts).
 
+        The rows still to sign (those of `ds` partitions not yet committed)
+        are signed on the driver when they fit `_LOCAL_MAX_DOCS` rows and
+        `signatures._LOCAL_MAX_SIGN_BYTES` of text (`collect_signed`, which
+        brings only text lengths to the driver above either cap), and
+        pyarrow writes them (`_write_partitions`); above either cap the
+        signature UDF signs them in Spark. Both write the same rows in the
+        same `ds=` directories. When this run signed every row on the
+        driver, it keeps (url, signatures) in `self._signed` for the local
+        path, which then reads nothing back.
+
         Column pruning: only url/ds/text are selected, so the Parquet scan
         never reads the html binary column (check with .explain → ReadSchema).
         """
         out = os.path.join(self.out_dir, "signatures")
         t0 = time.time()
+        self._signed = None
         src = pages
         if "ds" not in src.columns:
             src = src.withColumn("ds", F.date_format("warc_ts", "yyyy-MM-dd"))
-        src = src.select("url", "ds", "text")
+        # a partition directory is named by the value cast to string, for
+        # either writer
+        src = src.select("url", F.col("ds").cast("string").alias("ds"), "text")
 
         done_ds: list[str] = []
         if resume and _exists(out):
@@ -163,8 +232,18 @@ class DedupPipeline:
             if done_ds:
                 src = src.join(F.broadcast(done), "ds", "left_anti")
 
-        todo = src.count()
-        if todo > 0:
+        st: dict = {}
+        todo, tbl, S = collect_signed(src, self.cfg, _LOCAL_MAX_DOCS, st)
+        t1 = time.time()
+        if tbl is not None:
+            if todo > 0:
+                tbl = tbl.append_column("minhash", packed_array(S))
+                _write_partitions(tbl, out, append=bool(done_ds))
+            if not done_ds:
+                self._signed = (tbl["url"], S)
+        else:
+            if todo > _LOCAL_MAX_DOCS:  # the length collect stopped there
+                todo = src.count()
             # guard against under-partitioned inputs (in-memory fixtures,
             # single-file tables): one UDF task per core uses every core and
             # starts one Python worker per core (each ~0.1 s before it sees
@@ -176,11 +255,19 @@ class DedupPipeline:
             sigs = with_minhash_signature(src, self.cfg).select("url", "ds", "minhash")
             mode = "append" if done_ds else "overwrite"
             sigs.write.mode(mode).partitionBy("ds").parquet(out)
+        t2 = time.time()
         self._log_metric(
             "signatures",
+            path="local" if tbl is not None else "spark",
             docs_processed=todo,
             resumed_partitions=len(done_ds),
-            seconds=time.time() - t0,
+            # on the spark path the UDF signs inside the write job, one
+            # thread per task
+            collect_s=st["collect_s"],
+            kernel_s=st["kernel_s"],
+            write_s=t2 - t1,
+            threads=st["threads"] or 1,
+            seconds=t2 - t0,
         )
         return out
 
@@ -258,31 +345,40 @@ class DedupPipeline:
         )
         return out
 
-    def _resolve_locally(self, signatures_path: str, url_field: StructField) -> bool:
+    def _resolve_locally(self, signatures_path: str, url_field: StructField, signed=None) -> bool:
         """The local path (module docstring): writes candidates/, pairs/ and
-        clusters/ with their metrics lines from the driver. False, with
-        nothing written, when the signatures pass either cap."""
+        clusters/ with their metrics lines from the driver. `signed`, the
+        (url, signatures) of a run that signed every row on the driver,
+        stands in for reading the signatures back. False, with nothing
+        written, when the signatures pass either cap."""
         cfg = self.cfg
         t0 = time.time()
-        # the JVM band_keys, so bucket membership is bands_table's; the
-        # schema (the pages' url field) skips Spark's footer-reading
-        # schema-inference job
-        tbl = (
-            self.spark.read.schema(StructType([url_field, StructField("minhash", BinaryType())]))
-            .parquet(signatures_path)
-            .select("url", "minhash", band_keys("minhash", cfg).alias("band_keys"))
-            .limit(_LOCAL_MAX_DOCS + 1)
-            .toArrow()
-        )
-        if tbl.num_rows > _LOCAL_MAX_DOCS:
-            return False
-        t1 = time.time()
+        if signed is None:
+            # the JVM band_keys, so bucket membership is bands_table's; the
+            # schema (the pages' url field) skips Spark's footer-reading
+            # schema-inference job
+            tbl = (
+                self.spark.read.schema(StructType([url_field, StructField("minhash", BinaryType())]))
+                .parquet(signatures_path)
+                .select("url", "minhash", band_keys("minhash", cfg).alias("band_keys"))
+                .limit(_LOCAL_MAX_DOCS + 1)
+                .toArrow()
+            )
+            if tbl.num_rows > _LOCAL_MAX_DOCS:
+                return False
+            urls = tbl["url"]
+            S = signature_rows(tbl["minhash"].to_pylist(), cfg.minhash.sketch_size)
+            keys = pc.list_flatten(tbl["band_keys"]).to_numpy().reshape(-1, cfg.bands)
+            t1 = time.time()
+        else:
+            t1 = t0
+            urls, S = signed
+            keys = local.band_keys(S, cfg)  # `lsh.band_keys` in numpy
         # url codes in Spark's binary string order; -1 for a null url
-        urls = tbl["url"].combine_chunks()
+        urls = urls.combine_chunks()
         ids = pc.unique(urls).drop_null()
         ids = ids.take(pc.array_sort_indices(ids))
         codes = pc.index_in(urls, value_set=ids).fill_null(-1).to_numpy()
-        keys = pc.list_flatten(tbl["band_keys"]).to_numpy().reshape(-1, cfg.bands)
         res = local.band_pairs(keys, codes, cfg, _LOCAL_MAX_PAIR_ROWS)
         if res is None:
             return False
@@ -299,7 +395,6 @@ class DedupPipeline:
         )
 
         # verify every (signature row of url_a, signature row of url_b)
-        S = signature_rows(tbl["minhash"].to_pylist(), cfg.minhash.sketch_size)
         ia, ib = local.pair_rows(codes, ca, cb)
         keep, est = local.verify(S, ia, ib, cfg.jaccard_threshold)
         ea, eb = codes[ia[keep]], codes[ib[keep]]
@@ -342,7 +437,8 @@ class DedupPipeline:
         # extended) signature set; only the signature stage is incremental
         pairs_path = os.path.join(self.out_dir, "pairs")
         clusters_path = os.path.join(self.out_dir, "clusters")
-        if not self._resolve_locally(sig_path, pages.schema["url"]):
+        signed, self._signed = self._signed, None
+        if not self._resolve_locally(sig_path, pages.schema["url"], signed):
             pairs_path = self.compute_pairs(sig_path, force=True)
             clusters_path = self.compute_clusters(pairs_path, force=True)
         rec = self._log_metric("pipeline", seconds=time.time() - t0)

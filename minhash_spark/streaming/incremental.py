@@ -18,8 +18,9 @@ same results and the same store rows. A narrow batch (rows × bands within
 _KEY_PRUNE_MAX_KEYS) runs two JVM-only Spark jobs and starts no Python
 worker: the first brings its text lengths to the driver, the second its
 urls and texts, and the driver computes the signatures and band keys the
-UDF and `lsh.band_keys` would (a batch of more than _LOCAL_MAX_SIGN_BYTES
-of text is signed by the UDF instead, and its text stays in Spark). After
+UDF and `lsh.band_keys` would, with the threaded signer the pipeline uses
+(a batch of more than `signatures._LOCAL_MAX_SIGN_BYTES` of text is signed
+by the UDF instead, and its text stays in Spark). After
 that the driver touches the store only through pyarrow:
 it prunes the store by Bloom filter, reads the matching band rows and
 stored signatures, counts and verifies pairs in numpy, and writes both
@@ -59,8 +60,8 @@ from pyspark.sql.pandas.types import to_arrow_type
 from .. import local
 from ..config import DedupConfig
 from ..operators.signatures import (
-    packed_rows,
-    signature_matrix,
+    collect_signed,
+    packed_array,
     signature_rows,
     with_minhash_signature,
 )
@@ -197,23 +198,10 @@ _BLOOM_MIN_BITS = 1024
 # driver-side cap on collected rows. A batch is narrow (resolved on the
 # driver) while rows × bands, its store band matches and its band collisions
 # stay within it; the wide path Bloom-probes only while its distinct
-# (bucket, key) pairs do, and degrades to bucket pruning past it
+# (bucket, key) pairs do, and degrades to bucket pruning past it. The
+# text-byte cap on signing a narrow batch on the driver is shared with the
+# pipeline: `signatures._LOCAL_MAX_SIGN_BYTES`, measured there
 _KEY_PRUNE_MAX_KEYS = 1 << 18
-# a narrow batch of up to this many bytes of text is signed on the driver
-# (see _collect_batch), a larger one by the signature UDF: the driver signs
-# on one core at ~1.1 s/MiB, the UDF's tasks run in parallel but each pays
-# ~0.1 s of Python-worker start first, so more cores move the break-even
-# down. Median narrow-ingest wall of a 4-partition batch of 2 KiB docs into
-# a 256-doc store, 4-core box (scripts/bench_sign_cap.py):
-#   text MiB   rows   driver s   UDF s
-#   0.125        64     0.29     0.35
-#   0.25        128     0.36     0.35
-#   0.375       192     0.53     0.46
-#   0.5         256     0.69     0.50
-#   1           512     1.24     0.62
-#   4         2,048     4.51     1.48
-#   16        8,192    18.11     5.06
-_LOCAL_MAX_SIGN_BYTES = 1 << 18
 
 
 def _bloom_m_bits(n_keys: int) -> int:
@@ -575,34 +563,31 @@ def _pair_schema(url_type) -> StructType:
 def _collect_batch(batch_df: DataFrame, cfg: DedupConfig):
     """Step 1 of the narrow path: the batch's (url, minhash, band_keys) as
     an Arrow table, or None when the batch is wide (more than max_rows =
-    _KEY_PRUNE_MAX_KEYS / bands rows). A first JVM-only job collects the
-    text byte lengths of at most max_rows + 1 rows, so a wide batch, or
-    one of large documents, brings no text to the driver. A narrow batch
-    of up to _LOCAL_MAX_SIGN_BYTES of text is then collected as (url,
-    text) by a second JVM-only job and signed on the driver with
-    `signature_matrix` and `local.band_keys`, the values of the signature
-    UDF and `lsh.band_keys`, so no Python worker starts; a larger one is
-    signed by the UDF in parallel instead. None, with no job run, when
-    `local.xxhash64` cannot bucket the url type as Spark does."""
+    _KEY_PRUNE_MAX_KEYS / bands rows). `signatures.collect_signed` brings
+    a narrow batch of up to `signatures._LOCAL_MAX_SIGN_BYTES` of text to
+    the driver and signs it there, and `local.band_keys` derives the band
+    keys: the values of the signature UDF and `lsh.band_keys`, with no
+    Python worker started. A wide batch, or one of more text, brings only
+    its text lengths to the driver; the UDF signs a narrow one of more
+    text in parallel instead. None, with no job run, when `local.xxhash64`
+    cannot bucket the url type as Spark does."""
     max_rows = _KEY_PRUNE_MAX_KEYS // cfg.bands
     if not local.xxhash64_supports(to_arrow_type(batch_df.schema["url"].dataType)):
         return None
-    sizes = batch_df.select(F.octet_length("text")).limit(max_rows + 1).toArrow()
-    if sizes.num_rows > max_rows:
-        return None
     batch = batch_df.select("url", "text")
-    if (pc.sum(sizes.column(0)).as_py() or 0) > _LOCAL_MAX_SIGN_BYTES:
+    n, tbl, S = collect_signed(batch, cfg, max_rows)
+    if n > max_rows:
+        return None
+    if tbl is None:
         sigs = with_minhash_signature(batch, cfg)
         return sigs.select(
             "url", "minhash", band_keys("minhash", cfg).alias("band_keys")
         ).toArrow()
-    tbl = batch.toArrow()
-    S = signature_matrix(tbl["text"].to_pylist(), cfg)
     keys = local.band_keys(S, cfg)
     return pa.table(
         {
             "url": tbl["url"],
-            "minhash": pa.array(packed_rows(S), pa.binary()),
+            "minhash": packed_array(S),
             "band_keys": pa.ListArray.from_arrays(
                 np.arange(0, keys.size + 1, cfg.bands, dtype=np.int32), keys.ravel()
             ),
@@ -967,10 +952,10 @@ def incremental_dedup_batch(
       the text lengths of at most max_rows + 1 rows): that collect and the
       collect of the urls and texts are the only Spark jobs, and neither
       evaluates Python. The driver signs the texts and keys their bands
-      (`_collect_batch`; above _LOCAL_MAX_SIGN_BYTES of text the signature
-      UDF does), Bloom-prunes the store partitions, reads with pyarrow the
-      band rows sharing a batch key, counts band matches per pair in
-      pandas, reads the stored signatures of the candidate urls (bucketed
+      (`_collect_batch`; above `signatures._LOCAL_MAX_SIGN_BYTES` of text
+      the signature UDF does), Bloom-prunes the store partitions, reads
+      with pyarrow the band rows sharing a batch key, counts band matches
+      per pair in pandas, reads the stored signatures of the candidate urls (bucketed
       by `local.xxhash64`, Spark's hash of the url), verifies in numpy and
       writes both store sides with pyarrow, Blooms built on the driver.
       Every Python task costs ~0.1 s before it sees data, more than

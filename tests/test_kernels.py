@@ -68,6 +68,30 @@ def test_min_sketch_batch_chunking_invariance():
     assert np.array_equal(aligned, min_sketch_batch(sets2, cfg, chunk_elems=1 << 20))
 
 
+@pytest.mark.parametrize("cpus,slice_bytes", [(1, 1 << 16), (3, 64), (8, 1)])
+def test_sign_texts_equals_one_batch(monkeypatch, cpus, slice_bytes):
+    """The driver's signer cuts a batch into byte-balanced slices, one per
+    thread (up to the machine's cores, here also more threads than cores);
+    its signatures must equal one `signature_matrix` call over the batch,
+    with null, empty and non-ASCII texts and a two-chunk Arrow column."""
+    import pyarrow as pa
+
+    from minhash_spark.config import DedupConfig
+    from minhash_spark.operators import signatures
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", str(cpus))
+    monkeypatch.setattr(signatures, "_SLICE_BYTES", slice_bytes)
+    rng = np.random.default_rng(5)
+    texts = [" ".join(f"w{j}" for j in rng.integers(0, 50, rng.integers(0, 80))) for _ in range(40)]
+    texts[3], texts[7], texts[8], texts[20] = None, "", "", "ü" * 500 + " é"
+    cfg = DedupConfig(minhash=MinHashConfig(sketch_size=32, seed=3), bands=8, rows=4)
+    column = pa.chunked_array([pa.array(texts[:25]), pa.array(texts[25:])])
+    S, threads = signatures.sign_texts(column, cfg)
+    total = sum(len(t.encode()) for t in texts if t)
+    assert threads == max(1, min(cpus, total // slice_bytes))
+    assert np.array_equal(S, signatures.signature_matrix(texts, cfg))
+
+
 def test_sketch_long_roundtrip():
     cfg = MinHashConfig(sketch_size=32, seed=4)
     s = oracle.sketch_of_set(np.arange(10, dtype=np.uint64), cfg)

@@ -21,12 +21,14 @@ from collections import Counter
 
 import numpy as np
 import pytest
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from minhash_spark import pipeline
 from minhash_spark.config import DedupConfig, MinHashConfig
 from minhash_spark.functions.kernels import min_sketch_batch, sketch_to_int
 from minhash_spark.functions.shingles import shingle_fn
+from minhash_spark.operators import signatures
 from minhash_spark.pipeline import DedupPipeline
 from minhash_spark.sources.pages import generate_corpus
 
@@ -455,21 +457,17 @@ def test_pair_cap_hands_off_to_spark(spark, edge_corpus, tmp_path):
     assert got["local"] == got["pair_cap"] and got["local"][1]
 
 
-def test_local_path_job_count(spark, tmp_path):
-    """A local-path run is at most 8 Spark jobs (34 when every stage ran on
-    Spark), and the signature UDF is the only Python it evaluates."""
+def _run_jobs(spark, df, out_dir):
+    """Run the pipeline; return its Spark job ids, the physical plans of
+    those of its SQL executions that evaluate Python, and the job ids that
+    ran inside a SQL execution."""
     sc = spark.sparkContext
-    pages, _, _ = generate_corpus(120, seed=9)
-    df = spark.createDataFrame(pages)
-    sc.setJobGroup("local-run", "local-run")
+    sc.setJobGroup("pipeline-run", "pipeline-run")
     try:
-        DedupPipeline(spark, CFG, str(tmp_path)).run(df)
+        DedupPipeline(spark, CFG, out_dir).run(df)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    jobs = sc.statusTracker().getJobIdsForGroup("local-run")
-    assert _metrics(str(tmp_path), "pairs")["path"] == "local"
-    assert 0 < len(jobs) <= 8, len(jobs)
-    # the SQL executions of those jobs whose plan evaluates Python
+    jobs = sc.statusTracker().getJobIdsForGroup("pipeline-run")
     executions = spark._jsparkSession.sharedState().statusStore().executionsList()
     python, in_sql = [], set()
     for i in range(executions.size()):
@@ -479,8 +477,196 @@ def test_local_path_job_count(spark, tmp_path):
         in_sql |= mine
         if mine and "EvalPython" in plan:
             python.append(plan)
+    return jobs, python, in_sql
+
+
+def test_local_path_job_count(spark, tmp_path):
+    """A local-path run of a corpus under the driver's signing caps is at
+    most 2 Spark jobs, the collects of its text lengths and of its rows (34
+    when every stage ran on Spark), and evaluates no Python."""
+    pages, _, _ = generate_corpus(120, seed=9)
+    jobs, python, in_sql = _run_jobs(spark, spark.createDataFrame(pages), str(tmp_path))
+    assert _metrics(str(tmp_path), "signatures")["path"] == "local"
+    assert _metrics(str(tmp_path), "pairs")["path"] == "local"
+    assert 0 < len(jobs) <= 2, len(jobs)
+    assert python == []
+    # nothing reads the signatures back, so Spark runs no schema-inference
+    # job over the footers: that job ran outside any SQL execution
+    assert sorted(in_sql) == sorted(jobs), (sorted(jobs), sorted(in_sql))
+
+
+def test_udf_signed_local_path_job_count(spark, monkeypatch, tmp_path):
+    """Over the driver's text-byte cap, the signature UDF signs and the
+    local path reads the signatures back: at most 8 Spark jobs, the UDF is
+    the only Python they evaluate, and the read takes the known schema."""
+    monkeypatch.setattr(signatures, "_LOCAL_MAX_SIGN_BYTES", 0)
+    pages, _, _ = generate_corpus(120, seed=9)
+    jobs, python, in_sql = _run_jobs(spark, spark.createDataFrame(pages), str(tmp_path))
+    assert _metrics(str(tmp_path), "signatures")["path"] == "spark"
+    assert _metrics(str(tmp_path), "pairs")["path"] == "local"
+    assert 0 < len(jobs) <= 8, len(jobs)
     assert len(python) == 1 and "_sig_packed" in python[0]
     # the local path reads the signatures with their schema, so Spark runs
     # no schema-inference job over the footers: that job ran outside any
     # SQL execution, and was the run's only one
     assert sorted(in_sql) == sorted(jobs), (sorted(jobs), sorted(in_sql))
+
+
+# -- driver-signed signature stage -------------------------------------------
+
+
+@pytest.fixture(scope="module")
+def ds_corpus(spark):
+    """200 pages spread over four ds values by url."""
+    pages, _, _ = generate_corpus(200, seed=17)
+    day = (F.abs(F.crc32("url")) % 4 + 1).cast("string")
+    return (
+        spark.createDataFrame(pages)
+        .select("url", "text")
+        .withColumn("ds", F.concat(F.lit("2024-01-0"), day))
+    )
+
+
+def _sign(spark, df, out_dir, signer, monkeypatch, run=False):
+    """compute_signatures (or the whole run) with the driver signing
+    ("driver") or the UDF ("udf")."""
+    with monkeypatch.context() as mp:
+        if signer == "udf":
+            mp.setattr(signatures, "_LOCAL_MAX_SIGN_BYTES", 0)
+        pipe = DedupPipeline(spark, CFG, out_dir)
+        if run:
+            pipe.run(df)
+        else:
+            pipe.compute_signatures(df)
+    assert _metrics(out_dir, "signatures")["path"] == ("local" if signer == "driver" else "spark")
+
+
+def _sig_rows(spark, out_dir):
+    """The signature rows (url, ds, minhash) as read by Spark and by
+    pyarrow, each as a multiset."""
+    path = os.path.join(out_dir, "signatures")
+    by_spark = Counter(
+        (r["url"], None if r["ds"] is None else str(r["ds"]), bytes(r["minhash"]))
+        for r in spark.read.parquet(path).collect()
+    )
+    tbl = pq.read_table(path)
+    by_arrow = Counter(
+        zip(
+            tbl["url"].to_pylist(),
+            [None if d is None else str(d) for d in tbl["ds"].to_pylist()],
+            tbl["minhash"].to_pylist(),
+        )
+    )
+    return by_spark, by_arrow
+
+
+def test_driver_and_udf_signatures_equal(spark, ds_corpus, monkeypatch, tmp_path):
+    """The driver writes the rows and ds partitions the UDF path writes, as
+    read back by Spark and by pyarrow, also for a null ds and a ds that
+    Spark escapes in the directory name."""
+    ds = F.col("ds")
+    odd = F.when(ds.endswith("3"), "a/b:c%").when(ds.endswith("4"), F.lit(None)).otherwise(ds)
+    df = ds_corpus.withColumn("ds", odd)
+    got = {}
+    for signer in ("driver", "udf"):
+        out = str(tmp_path / signer)
+        _sign(spark, df, out, signer, monkeypatch)
+        dirs = sorted(d for d in os.listdir(os.path.join(out, "signatures")) if d.startswith("ds="))
+        got[signer] = (_sig_rows(spark, out), dirs)
+    (by_spark, by_arrow), dirs = got["driver"]
+    assert got["driver"] == got["udf"]
+    assert by_spark == by_arrow and sum(by_spark.values()) == 200
+    assert "ds=__HIVE_DEFAULT_PARTITION__" in dirs and "ds=a%2Fb%3Ac%25" in dirs
+
+
+def _head(df):
+    """The rows of df's first two ds values."""
+    all_ds = sorted(r["ds"] for r in df.select("ds").distinct().collect())
+    return df.where(F.col("ds").isin(all_ds[:2]))
+
+
+@pytest.fixture(scope="module")
+def fresh_run(spark, ds_corpus, tmp_path_factory):
+    """One uninterrupted run over ds_corpus: its signature rows and
+    outputs."""
+    out = str(tmp_path_factory.mktemp("fresh"))
+    DedupPipeline(spark, CFG, out).run(ds_corpus)
+    assert _metrics(out, "signatures")["path"] == "local"
+    return _sig_rows(spark, out)[0], _outputs(spark, out)
+
+
+@pytest.mark.parametrize("head,tail", [("udf", "driver"), ("driver", "udf")])
+def test_mixed_resume_equals_fresh_run(spark, ds_corpus, fresh_run, monkeypatch, tmp_path, head, tail):
+    """Signing the first ds partitions with one signer and resuming over
+    the whole corpus with the other gives the rows and outputs of one
+    fresh run; the resume signs only the missing partitions."""
+    head_df = _head(ds_corpus)
+    out = str(tmp_path)
+    _sign(spark, head_df, out, head, monkeypatch)
+    n_head = head_df.count()
+    _sign(spark, ds_corpus, out, tail, monkeypatch, run=True)
+    m = _metrics(out, "signatures")
+    assert (m["docs_processed"], m["resumed_partitions"]) == (200 - n_head, 2)
+    assert (_sig_rows(spark, out)[0], _outputs(spark, out)) == fresh_run
+
+
+@pytest.mark.parametrize("append", [False, True])
+def test_crash_between_partitions_then_resume(spark, ds_corpus, fresh_run, monkeypatch, tmp_path, append):
+    """A crash after the driver wrote one ds file of a run leaves only
+    whole partitions (the unfinished file keeps a hidden name both readers
+    skip), and a resume then equals a fresh run. Without a committed head
+    the crashed run left no _SUCCESS, so the resume starts over."""
+    head_df = _head(ds_corpus)
+    out = str(tmp_path)
+    if append:
+        _sign(spark, head_df, out, "driver", monkeypatch)
+    replace = os.replace
+    calls = []
+
+    def crash_on_second(src, dst):
+        calls.append(dst)
+        if len(calls) == 2:
+            raise OSError("injected crash")
+        replace(src, dst)
+
+    with monkeypatch.context() as mp:
+        mp.setattr(os, "replace", crash_on_second)
+        with pytest.raises(OSError, match="injected crash"):
+            DedupPipeline(spark, CFG, out).compute_signatures(ds_corpus)
+    sig_dir = os.path.join(out, "signatures")
+    assert os.path.exists(os.path.join(sig_dir, "_SUCCESS")) == append
+    fresh_sigs = fresh_run[0]
+    by_spark, by_arrow = _sig_rows(spark, out)
+    assert by_spark == by_arrow
+    written = {ds for _, ds, _ in by_spark}
+    assert len(written) == (3 if append else 1)
+    # every visible partition holds exactly the fresh run's rows of its ds
+    assert by_spark == Counter({r: n for r, n in fresh_sigs.items() if r[1] in written})
+    hidden = [
+        f for d in os.listdir(sig_dir) if d.startswith("ds=")
+        for f in os.listdir(os.path.join(sig_dir, d)) if f.startswith(".")
+    ]
+    assert len(hidden) == 1 and hidden[0].endswith(".tmp")
+
+    DedupPipeline(spark, CFG, out).run(ds_corpus)
+    assert (_sig_rows(spark, out)[0], _outputs(spark, out)) == fresh_run
+
+
+@pytest.mark.parametrize("over", [None, "_LOCAL_MAX_DOCS", "_LOCAL_MAX_SIGN_BYTES"])
+def test_no_text_to_the_driver_above_the_signing_caps(spark, ds_corpus, monkeypatch, tmp_path, over):
+    """A corpus over the row cap or the text-byte cap brings only its text
+    lengths to the driver and is signed by the UDF; a corpus under both
+    caps brings its texts and is signed on the driver."""
+    if over:
+        monkeypatch.setattr(signatures if over == "_LOCAL_MAX_SIGN_BYTES" else pipeline, over, 0)
+    seen = []
+    cls = type(ds_corpus)
+    to_arrow = cls.toArrow
+    monkeypatch.setattr(cls, "toArrow", lambda self: seen.append(to_arrow(self)) or seen[-1])
+    DedupPipeline(spark, CFG, str(tmp_path)).run(ds_corpus)
+    m = _metrics(str(tmp_path), "signatures")
+    assert m["path"] == ("local" if over is None else "spark")
+    assert m["docs_processed"] == 200
+    cols = [t.schema.names for t in seen]
+    assert cols[0] == ds_corpus.select(F.octet_length("text")).columns
+    assert any("text" in c for c in cols) == (over is None), cols

@@ -9,7 +9,7 @@ from hypothesis import given, settings, strategies as st
 
 from minhash_spark.config import MinHashConfig, HASH_KWISE
 from minhash_spark import oracle
-from minhash_spark.functions.kernels import min_sketch_batch
+from minhash_spark.functions.kernels import hash_matrix, min_sketch_batch
 from minhash_spark.functions.shingles import char_shingles, normalize_text
 
 _cfg = st.builds(
@@ -56,6 +56,49 @@ def test_chunking_is_invisible(sets, chunk):
         min_sketch_batch(arrs, cfg, chunk_elems=chunk),
         min_sketch_batch(arrs, cfg, chunk_elems=1 << 20),
     )
+
+
+_M = (1 << 31) - 1
+# uint64 values at the edges of the fold's bounds, plus arbitrary ones
+_u64 = st.one_of(
+    st.sampled_from([0, 1, _M - 1, _M, _M + 1, 2 * _M, 2**62, 2**63, 2**64 - 1]),
+    st.integers(min_value=0, max_value=2**64 - 1),
+)
+_coeff = st.one_of(st.sampled_from([0, 1, _M - 1, _M]), st.integers(0, 2**31 - 1))
+
+
+def _division_hash(x, coeffs, hash_type):
+    """hash_matrix's arithmetic with every reduction a uint64 `% M`."""
+    M = np.uint64(_M)
+    with np.errstate(over="ignore"):
+        if hash_type == HASH_KWISE:
+            (C,) = coeffs
+            total = np.zeros((len(x), C.shape[0]), dtype=np.uint64)
+            pow_x = np.ones(len(x), dtype=np.uint64)
+            for i in range(C.shape[1]):
+                total = (total + (pow_x[:, None] * C[None, :, i]) % M) % M
+                pow_x = (pow_x * x) % M
+            return total
+        a, b = coeffs
+        return ((x[:, None] * a[None, :]) % M + b[None, :]) % M
+
+
+@settings(max_examples=60, deadline=None)
+@given(
+    xs=st.lists(_u64, min_size=1, max_size=40),
+    coeffs=st.lists(_coeff, min_size=8, max_size=8),
+    hash_type=st.sampled_from([0, HASH_KWISE]),
+)
+def test_mersenne_fold_equals_division(xs, coeffs, hash_type):
+    """For M = 2^31 - 1, hash_matrix reduces with Mersenne folds instead of
+    `% M`; over the full uint64 range it must give the division's values,
+    pairwise and k-wise (degree 3)."""
+    x = np.array(xs, dtype=np.uint64)
+    c = np.array(coeffs, dtype=np.uint64)
+    table = (c.reshape(2, 4),) if hash_type == HASH_KWISE else (c[:4], c[4:])
+    got = hash_matrix(x, table, hash_type, _M)
+    assert np.array_equal(got, _division_hash(x, table, hash_type))
+    assert got.max() < _M
 
 
 @settings(max_examples=30, deadline=None)

@@ -18,6 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from minhash_spark.config import DedupConfig
+from minhash_spark.operators import signatures
 from minhash_spark.sources.pages import generate_corpus
 from minhash_spark.streaming import incremental
 from minhash_spark.streaming.incremental import (
@@ -246,17 +247,17 @@ def test_narrow_job_counts(spark, tmp_path):
 
 
 def test_sign_byte_cap_hands_off_to_the_udf(spark, monkeypatch, tmp_path):
-    """A narrow batch of more text than _LOCAL_MAX_SIGN_BYTES is signed by
-    the signature UDF, in one Python execution, and then resolved on the
-    driver: the same pairs, store rows and manifests as a batch signed on
-    the driver."""
+    """A narrow batch of more text than signatures._LOCAL_MAX_SIGN_BYTES is
+    signed by the signature UDF, in one Python execution, and then resolved
+    on the driver: the same pairs, store rows and manifests as a batch
+    signed on the driver."""
     sc = spark.sparkContext
     pages, _, _ = generate_corpus(120, seed=21)
     df = spark.createDataFrame(pages).select("url", "text")
     probes = df.where(F.crc32("url") % 4 == 0)
     got = {}
-    for path, cap in (("driver", incremental._LOCAL_MAX_SIGN_BYTES), ("udf", 0)):
-        monkeypatch.setattr(incremental, "_LOCAL_MAX_SIGN_BYTES", cap)
+    for path, cap in (("driver", signatures._LOCAL_MAX_SIGN_BYTES), ("udf", 0)):
+        monkeypatch.setattr(signatures, "_LOCAL_MAX_SIGN_BYTES", cap)
         store = str(tmp_path / path)
         calls = [
             lambda st, e=e: incremental_dedup_batch(
@@ -306,7 +307,8 @@ def test_no_text_to_the_driver_above_the_caps(spark, monkeypatch, tmp_path, over
     first = df.where(F.crc32("url") % 2 == 0)
     incremental_dedup_batch(spark, first, store, CFG, 0, 4).collect()
     if over:
-        monkeypatch.setattr(incremental, over, 0)
+        owner = signatures if over == "_LOCAL_MAX_SIGN_BYTES" else incremental
+        monkeypatch.setattr(owner, over, 0)
     seen = _collected_columns(monkeypatch, df)
     calls = [
         lambda st: incremental_dedup_batch(
