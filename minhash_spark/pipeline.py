@@ -205,10 +205,11 @@ class DedupPipeline:
         if "ds" not in src.columns:
             src = src.withColumn("ds", F.date_format("warc_ts", "yyyy-MM-dd"))
         # a partition directory is named by the value cast to string, for
-        # either writer
-        src = src.select("url", F.col("ds").cast("string").alias("ds"), "text")
+        # either writer, and both write an empty string as null
+        ds = F.nullif(F.col("ds").cast("string"), F.lit(""))
+        src = src.select("url", ds.alias("ds"), "text")
 
-        done_ds: list[str] = []
+        done_ds: list[str | None] = []
         if resume and _exists(out):
             existing = self.spark.read.parquet(out)
             # format guard BEFORE appending: this build writes the packed
@@ -227,10 +228,16 @@ class DedupPipeline:
                     "delete the signatures directory (or the whole out_dir) "
                     "and rebuild."
                 )
-            done = existing.select("ds").distinct()
+            # the committed ds values as strings: Spark would infer a date
+            # type from values like 2024-01-01, and the anti-join would then
+            # cast each source ds to a date, which fails on any other value
+            done = self.spark.read.schema("ds string").parquet(out).distinct()
             done_ds = [r["ds"] for r in done.collect()]
             if done_ds:
-                src = src.join(F.broadcast(done), "ds", "left_anti")
+                # null-safe: the rows of a null ds are stored under
+                # ds=__HIVE_DEFAULT_PARTITION__ and read back as null
+                done = self.spark.createDataFrame([(d,) for d in done_ds], "done_ds string")
+                src = src.join(F.broadcast(done), src.ds.eqNullSafe(done.done_ds), "left_anti")
 
         st: dict = {}
         todo, tbl, S = collect_signed(src, self.cfg, _LOCAL_MAX_DOCS, st)

@@ -24,11 +24,13 @@ by the UDF instead, and its text stays in Spark). After
 that the driver touches the store only through pyarrow:
 it prunes the store by Bloom filter, reads the matching band rows and
 stored signatures, counts and verifies pairs in numpy, and writes both
-store sides. A wide batch runs the same steps as Spark joins, UDFs and
-writes. `compact_store` likewise
-rewrites a side of up to _LOCAL_MAX_COMPACT_ROWS rows on the driver and a
-larger one with Spark. Both writers lay out the same partitions, rows and
-manifests, so every reader takes files from either.
+store sides. A wide batch runs the same steps as Spark joins and UDFs.
+`compact_store` likewise rewrites a side of up to _LOCAL_MAX_COMPACT_ROWS
+rows on the driver and a larger one with Spark. Every store file is
+written by one per-bucket writer, `_write_bucket`: the driver calls it
+for each bucket, and the wide ingest and Spark compaction run it once per
+bucket in an executor task (`_write_buckets_on_spark`). The driver then
+writes `_SUCCESS` and the manifest, so both paths write the same files.
 """
 
 from __future__ import annotations
@@ -38,6 +40,7 @@ import json
 import logging
 import os
 import shutil
+import uuid
 
 import numpy as np
 import pandas as pd
@@ -55,7 +58,7 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
-from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_type
 
 from .. import local
 from ..config import DedupConfig
@@ -213,8 +216,8 @@ def _bloom_m_bits(n_keys: int) -> int:
 
 def _bloom_positions(keys_u64, m: int):
     """(n, k) bit positions via splitmix64 double hashing — pure-numpy and
-    deterministic, so the write-side builder (executor pandas UDF) and the
-    read-side prober (driver) agree bit-for-bit."""
+    deterministic, so the write-side builder (driver or executor task) and
+    the read-side prober (driver) agree bit-for-bit."""
     def mix(x, c):
         x = x + np.uint64(c)
         x ^= x >> np.uint64(30)
@@ -268,59 +271,27 @@ def _keys_by_bucket(keys_i64, n_buckets: int) -> dict[int, "object"]:
     return {b: keys[i].view(np.uint64) for b, i in _bucket_rows(keys, n_buckets)}
 
 
-_BLOOM_ROW_SCHEMA = "store_bucket int, n long, m long, bits string"
-
-
-def _bucket_blooms(df_bucketed: DataFrame, key_col: str) -> dict[str, dict]:
-    """One Bloom filter per store_bucket over the partition's distinct int64
-    keys, built distributively (groupBy + applyInPandas: executors see the
-    keys they are about to write; the driver collects only one ~m/8-byte row
-    per bucket — bounded by the store layout, not the batch size)."""
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        keys = np.unique(pdf["k"].to_numpy(dtype=np.int64).view(np.uint64))
-        row = {"store_bucket": int(pdf["store_bucket"].iloc[0]), **_bloom_entry(keys)}
-        return pd.DataFrame({k: [v] for k, v in row.items()})
-
-    rows = (
-        df_bucketed.select("store_bucket", F.col(key_col).alias("k"))
-        .groupBy("store_bucket")
-        .applyInPandas(build, _BLOOM_ROW_SCHEMA)
-        .collect()
-    )
-    return {
-        str(r["store_bucket"]): {"n": int(r["n"]), "m": int(r["m"]), "bits": r["bits"]}
-        for r in rows
-    }
-
-
-def _write_bucket_manifest(
-    batch_dir: str,
-    blooms: dict[str, dict] | None = None,
-    extra: dict | None = None,
-) -> list[int]:
-    """Record which store_bucket partitions a batch actually wrote, next to
-    the batch's data (one listing of ONE directory at write time — cheap on
-    any filesystem). Readers then prune from the manifest with zero
-    filesystem listing at all: the object-store-friendly form of the
-    explicit-path read (an S3 LIST per batch per micro-batch is exactly the
-    metadata tax the bucketed layout exists to avoid). `blooms` additionally
-    records a per-bucket key Bloom filter enabling KEY-LEVEL pruning inside
-    touched buckets (see the module-level Bloom notes)."""
-    buckets = sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(batch_dir)
-        if d.startswith("store_bucket=")
-    )
-    payload: dict = {"store_buckets": buckets}
-    if blooms:
+def _write_bucket_manifest(out: str, written, extra: dict | None = None) -> int:
+    """Mark the batch directory `out` complete once its bucket files are
+    written: `_SUCCESS`, then the manifest of `written` ((bucket, Bloom
+    entry, bytes) per file). The manifest records which store_bucket
+    partitions the batch wrote, so readers prune with zero filesystem
+    listing at all: the object-store-friendly form of the explicit-path
+    read (an S3 LIST per batch per micro-batch is exactly the metadata tax
+    the bucketed layout exists to avoid). Each bucket's key Bloom filter
+    enables KEY-LEVEL pruning inside touched buckets (see the module-level
+    Bloom notes). Returns the data bytes written."""
+    written = sorted(written, key=lambda w: w[0])
+    payload: dict = {"store_buckets": [b for b, _, _ in written]}
+    if written:
         payload["bloom_k"] = _BLOOM_K
-        payload["blooms"] = blooms
+        payload["blooms"] = {str(b): e for b, e, _ in written}
     if extra:
         payload.update(extra)
-    with open(os.path.join(batch_dir, _MANIFEST), "w") as f:
+    open(os.path.join(out, "_SUCCESS"), "w").close()
+    with open(os.path.join(out, _MANIFEST), "w") as f:
         json.dump(payload, f)
-    return buckets
+    return sum(n for _, _, n in written)
 
 
 def _batch_manifest(store_dir: str, batch_dir_name: str) -> dict:
@@ -345,12 +316,16 @@ def _batch_buckets(store_dir: str, batch_dir_name: str) -> list[int]:
     return _batch_manifest(store_dir, batch_dir_name)["store_buckets"]
 
 
+def _key_col(col: str):
+    """The int64 key a store side is bucketed and Bloom-filtered by:
+    band_key is already an xxhash64 value; other columns get an xxhash64."""
+    return F.col(col) if col == "band_key" else F.xxhash64(F.col(col))
+
+
 def _bucket_col(col: str, n_buckets: int):
-    """Stable hash bucket for store partitioning. band_key is already an
-    xxhash64 value, so a plain pmod spreads it uniformly; other columns get
-    an xxhash64 first."""
-    c = F.col(col) if col == "band_key" else F.xxhash64(F.col(col))
-    return F.pmod(c, F.lit(n_buckets)).cast("int")
+    """Stable hash bucket for store partitioning: a plain pmod of the
+    uniformly spread `_key_col`."""
+    return F.pmod(_key_col(col), F.lit(n_buckets)).cast("int")
 
 
 def _collect_key_filter(
@@ -437,8 +412,8 @@ def pruned_store_read(
 
 
 def _data_files(part_dir: str) -> list[str]:
-    """The parquet files of one partition directory (Spark's `.crc` and
-    `_SUCCESS` files excluded)."""
+    """The parquet files of one partition directory (hidden temp files of
+    `_write_bucket`, and Spark's `.crc` and `_SUCCESS` files, excluded)."""
     return sorted(
         os.path.join(part_dir, f)
         for f in os.listdir(part_dir)
@@ -522,22 +497,6 @@ def _spark_pruned_read(
         ]
         return pruned_store_read(spark, store_dir, epoch_id, touched, stats_out=stats_out)
     return pruned_store_read(spark, store_dir, epoch_id, list(kf), kf, stats_out)
-
-
-def _write_batch_side(
-    side_dir: str, epoch_id: int, rows: DataFrame, blooms: dict[str, dict]
-) -> None:
-    """Overwrite one store side's batch_id=epoch_id directory with `rows`
-    (partitioned by their store_bucket) and record its manifest.
-
-    `rows` must be CLUSTERED: each bucket in one task (repartition on the
-    bucket column). Otherwise every task
-    opens a writer per touched bucket — at thousands of store buckets that
-    is tasks×buckets small files per batch (measured 5× slower batches at
-    1024 buckets), and at corpus scale a metadata explosion."""
-    out = os.path.join(side_dir, f"batch_id={epoch_id}")
-    rows.write.mode("overwrite").partitionBy("store_bucket").parquet(out)
-    _write_bucket_manifest(out, blooms)
 
 
 def _new_stats(path: str) -> dict:
@@ -750,11 +709,11 @@ def _resolve_on_driver(
 
 
 def _write_parquet(rows: pa.Table, path: str) -> None:
-    """pq.write_table with Spark's encoding choices, so the files are no
-    larger than Spark's: a column is dictionary-encoded only when its
-    dictionary plus bit-packed indices take fewer bytes than its plain
-    values (the test Spark's parquet writer makes before it falls back to
-    plain), and the signatures get no min/max statistics."""
+    """pq.write_table with the encoding choices that keep a store file
+    small: a column is dictionary-encoded only when its dictionary plus
+    bit-packed indices take fewer bytes than its plain values (the test
+    Spark's parquet writer makes before it falls back to plain), and the
+    signatures, random bytes, get no min/max statistics."""
     dictionary = []
     for name in rows.column_names:
         col = rows[name]
@@ -768,32 +727,72 @@ def _write_parquet(rows: pa.Table, path: str) -> None:
     )
 
 
+def _write_bucket(out: str, b: int, rows: pa.Table, keys) -> tuple[dict, int]:
+    """The one writer of store files: write one bucket's rows as
+    out/store_bucket=<b>/part-00000.parquet and return the bucket's Bloom
+    entry over its int64 `keys` and the file's bytes. It runs on the driver
+    and in executor tasks. The file is written under a hidden, unique name
+    (skipped by `_data_files`, pyarrow and Spark) and then moved into place,
+    so a retried task replaces the file of an earlier attempt instead of
+    adding a second one."""
+    part = os.path.join(out, f"store_bucket={b}")
+    os.makedirs(part, exist_ok=True)
+    path = os.path.join(part, "part-00000.parquet")
+    tmp = os.path.join(part, f".part-{uuid.uuid4().hex}.tmp")
+    _write_parquet(rows, tmp)
+    os.replace(tmp, path)
+    return _bloom_entry(np.unique(keys).view(np.uint64)), os.path.getsize(path)
+
+
 def _write_buckets(out: str, parts, extra: dict | None = None) -> int:
-    """Overwrite the batch directory `out` with one parquet file per store
-    bucket of `parts` ((bucket, (rows, int64 keys)) items), then `_SUCCESS`,
-    then the manifest with each bucket's key Bloom: the layout and manifest
-    of a Spark write of one task per bucket. Returns the data bytes
-    written."""
+    """Overwrite the batch directory `out` on the driver: one file per store
+    bucket of `parts` ((bucket, rows, int64 keys) items), then
+    `_write_bucket_manifest`. Returns the data bytes written."""
     shutil.rmtree(out, ignore_errors=True)
     os.makedirs(out)
-    blooms, size = {}, 0
-    for b, (rows, keys) in parts:
-        path = os.path.join(out, f"store_bucket={b}", "part-00000.parquet")
-        os.makedirs(os.path.dirname(path))
-        _write_parquet(rows, path)
-        size += os.path.getsize(path)
-        blooms[str(b)] = _bloom_entry(np.unique(keys).view(np.uint64))
-    open(os.path.join(out, "_SUCCESS"), "w").close()
-    _write_bucket_manifest(out, blooms, extra)
-    return size
+    written = [(b, *_write_bucket(out, b, rows, keys)) for b, rows, keys in parts]
+    return _write_bucket_manifest(out, written, extra)
+
+
+def _write_buckets_on_spark(
+    out: str, df: DataFrame, cols: list[str], key, order: list, extra: dict | None = None
+) -> int:
+    """`_write_buckets` in executor tasks, as one Spark action: df's rows
+    (with a store_bucket column) grouped by bucket, each group written by
+    `_write_bucket` with its `cols` in the order of the `order` columns and
+    its Bloom over the int64 `key` column; the driver collects one row per
+    bucket, then writes the manifest. The driver's rows of the same batch
+    are in the same order, so both write the same files. Returns the data
+    bytes written."""
+    shutil.rmtree(out, ignore_errors=True)
+    os.makedirs(out)
+    by = [(f"__o{i}", "ascending") for i in range(len(order))]
+
+    def write(tbl: pa.Table) -> pa.Table:
+        tbl = tbl.take(pc.sort_indices(tbl, by))
+        b = tbl["store_bucket"][0].as_py()
+        bloom, size = _write_bucket(out, b, tbl.select(cols), tbl["__key"].to_numpy())
+        return pa.table({"b": [b], "bloom": [json.dumps(bloom)], "size": [size]})
+
+    rows = (
+        df.select(
+            "store_bucket", *cols, key.alias("__key"),
+            *[c.alias(name) for c, (name, _) in zip(order, by)],
+        )
+        .groupBy("store_bucket")
+        .applyInArrow(write, "b long, bloom string, size long")
+        .collect()
+    )
+    written = [(r["b"], json.loads(r["bloom"]), r["size"]) for r in rows]
+    return _write_bucket_manifest(out, written, extra)
 
 
 def _write_on_driver(
     tbl, store_path: str, cfg: DedupConfig, epoch_id: int, n_store_buckets: int
 ) -> None:
     """Both store sides of a narrow batch from the rows already on the
-    driver, with pyarrow: the rows, buckets and manifests of `_spark_ingest`'s
-    writes, without a Spark job."""
+    driver: the files and manifests of `_spark_ingest`'s writes, without a
+    Spark job."""
     sig_store, band_store = _store_subdirs(store_path)
     band_key = pc.list_flatten(tbl["band_keys"])
     band_url = tbl["url"].take(np.repeat(np.arange(tbl.num_rows), cfg.bands))
@@ -803,7 +802,7 @@ def _write_on_driver(
     )
     for side_dir, url, name, col, keys in sides:
         rows = pa.table({"url": url, name: col})
-        parts = [(b, (rows.take(i), keys[i])) for b, i in _bucket_rows(keys, n_store_buckets)]
+        parts = [(b, rows.take(i), keys[i]) for b, i in _bucket_rows(keys, n_store_buckets)]
         _write_buckets(os.path.join(side_dir, f"batch_id={epoch_id}"), parts)
 
 
@@ -841,7 +840,7 @@ def _spark_pairs(
     if _has_batches(band_store):
         prev_bands = _spark_pruned_read(
             spark, band_store, epoch_id, new_bands,
-            _bucket_col("band_key", n_store_buckets), F.col("band_key"), stats_out,
+            _bucket_col("band_key", n_store_buckets), _key_col("band_key"), stats_out,
         )
         store = batch_a.join(
             prev_bands.select("band_key", F.col("url").alias("url_b")), ["band_key"]
@@ -874,7 +873,7 @@ def _spark_pairs(
         u = F.col("url_b") if probe else F.explode(F.array("url_a", "url_b"))
         prev_sigs = _spark_pruned_read(
             spark, sig_store, epoch_id, joined.select(u.alias("u")),
-            _bucket_col("u", n_store_buckets), F.xxhash64("u"), stats_out,
+            _bucket_col("u", n_store_buckets), _key_col("u"), stats_out,
         ).select("url", "minhash")
         if probe:
             # a probe url may also exist IN the store (re-checking a known
@@ -903,8 +902,8 @@ def _spark_ingest(
     n_store_buckets: int,
     stats_out: dict | None,
 ) -> DataFrame:
-    """The wide path of incremental_dedup_batch: pairs, verification and
-    both store writes as Spark jobs."""
+    """The wide path of incremental_dedup_batch: pairs and verification as
+    Spark jobs, and each store side written by `_write_buckets_on_spark`."""
     sig_store, band_store = _store_subdirs(store_path)
     batch_sigs = batch_sigs.persist()
     new_bands = bands_table(batch_sigs, cfg).persist()
@@ -912,21 +911,18 @@ def _spark_ingest(
         spark, batch_sigs, new_bands, store_path, cfg, epoch_id,
         n_store_buckets, False, stats_out,
     )
-    # per-bucket key Bloom filters into the manifests: one extra pass over
-    # the (persisted) batch per side — the write-time cost that buys the
-    # key-level read pruning above for every later batch and probe
-    sig_out = batch_sigs.withColumn("store_bucket", _bucket_col("url", n_store_buckets))
-    _write_batch_side(
-        sig_store, epoch_id, sig_out.repartition(F.col("store_bucket")),
-        _bucket_blooms(sig_out.select("store_bucket", F.xxhash64("url").alias("k")), "k"),
-    )
-    band_out = new_bands.withColumn(
-        "store_bucket", _bucket_col("band_key", n_store_buckets)
-    )
-    _write_batch_side(
-        band_store, epoch_id, band_out.repartition(F.col("store_bucket")),
-        _bucket_blooms(band_out, "band_key"),
-    )
+    # each side in one action: every task writes one bucket's file, in the
+    # batch's row order, and returns its Bloom (the key-level read pruning
+    # of every later batch and probe)
+    for side_dir, rows, col, key in (
+        (sig_store, batch_sigs, "minhash", "url"),
+        (band_store, new_bands, "band_key", "band_key"),
+    ):
+        _write_buckets_on_spark(
+            os.path.join(side_dir, f"batch_id={epoch_id}"),
+            rows.withColumn("store_bucket", _bucket_col(key, n_store_buckets)),
+            ["url", col], _key_col(key), [F.monotonically_increasing_id()],
+        )
     batch_sigs.unpersist()
     new_bands.unpersist()
     return verified
@@ -957,16 +953,17 @@ def incremental_dedup_batch(
       with pyarrow the band rows sharing a batch key, counts band matches
       per pair in pandas, reads the stored signatures of the candidate urls (bucketed
       by `local.xxhash64`, Spark's hash of the url), verifies in numpy and
-      writes both store sides with pyarrow, Blooms built on the driver.
+      writes both store sides with `_write_bucket`, Blooms built on the
+      driver.
       Every Python task costs ~0.1 s before it sees data, more than
       signing a small batch on the driver, so a small batch never crosses
       the boundary. A batch whose band collisions exceed the same cap (a
       hot key) hands its collected signatures to the wide path, and a
       batch whose url type `local.xxhash64` does not hash takes the wide
       path from the start.
-    - wide (larger batches): the same steps as Spark
-      joins, the signature UDF, the estimator UDF and Spark writes, Blooms
-      built by applyInPandas.
+    - wide (larger batches): the same steps as Spark joins, the signature
+      UDF and the estimator UDF; each store side is one Spark action that
+      runs `_write_bucket` once per bucket in an executor task.
 
     Scale + exactly-once design:
     - The band table is a persisted, incrementally-grown store
@@ -1147,37 +1144,28 @@ def _compact_on_driver(files: dict[int, list[str]], tmp: str, src_dirs: list[str
                 if "band_key" in rows.column_names
                 else local.xxhash64(rows["url"])
             )
-            yield b, (rows, keys)
+            yield b, rows, keys
 
     return _write_buckets(tmp, parts(), extra={"replaces": src_dirs})
 
 
-def _compact_on_spark(spark: SparkSession, side_dir: str, src_dirs: list[str], tmp: str) -> int:
-    """Write the compacted side to `tmp` as Spark jobs, Blooms built by
-    applyInPandas. Returns the data bytes written."""
-    df = spark.read.option("basePath", side_dir).parquet(
-        *[os.path.join(side_dir, d) for d in src_dirs]
+def _compact_on_spark(
+    spark: SparkSession, side_dir: str, files: dict[int, list[str]], tmp: str, src_dirs: list[str]
+) -> int:
+    """Write the compacted side to `tmp` with `_write_buckets_on_spark`,
+    each bucket's rows in `_compact_on_driver`'s order (source batch, file,
+    row). The schema comes from one file's footer, so Spark runs no
+    schema-inference job. Returns the data bytes written."""
+    first = next(f for fs in files.values() for f in fs)
+    df = (
+        spark.read.schema(from_arrow_schema(pq.read_schema(first)))
+        .option("basePath", side_dir)
+        .parquet(*[os.path.join(side_dir, d) for d in src_dirs])
     )
-    merged = df.select(*[c for c in df.columns if c != "batch_id"])
-    key = "band_key" if "band_key" in df.columns else None
-    merged.repartition(F.col("store_bucket")).write.mode(
-        "overwrite"
-    ).partitionBy("store_bucket").parquet(tmp)
-    compacted = spark.read.option("basePath", tmp).parquet(tmp)
-    blooms = _bucket_blooms(
-        compacted.select(
-            "store_bucket",
-            (F.col("band_key") if key else F.xxhash64("url")).alias("k"),
-        ),
-        "k",
-    )
-    _write_bucket_manifest(tmp, blooms, extra={"replaces": src_dirs})
-    return sum(
-        os.path.getsize(f)
-        for d in os.listdir(tmp)
-        if d.startswith("store_bucket=")
-        for f in _data_files(os.path.join(tmp, d))
-    )
+    cols = [c for c in df.columns if c not in ("batch_id", "store_bucket")]
+    key = _key_col("band_key" if "band_key" in cols else "url")
+    order = [F.col("batch_id"), F.col("_metadata.file_path"), F.col("_metadata.row_index")]
+    return _write_buckets_on_spark(tmp, df, cols, key, order, extra={"replaces": src_dirs})
 
 
 def compact_store(
@@ -1193,9 +1181,10 @@ def compact_store(
     data bytes of the compacted batch}}.
 
     A side of at most _LOCAL_MAX_COMPACT_ROWS rows, counted from the source
-    files' parquet footers, is rewritten on the driver with pyarrow and
-    runs no Spark job; a larger one (or one whose url type `local.xxhash64`
-    does not hash) is rewritten by Spark.
+    files' parquet footers, is rewritten on the driver and runs no Spark
+    job; a larger one (or one whose url type `local.xxhash64` does not
+    hash) is rewritten by one Spark action, a task per bucket. Both use
+    the one bucket writer and write the same files.
 
     Call between micro-batches from the ingest driver (the store's existing
     single-writer contract). Crash-safe in the store's idempotent style:
@@ -1222,7 +1211,7 @@ def compact_store(
         if rows <= _LOCAL_MAX_COMPACT_ROWS:
             size = _compact_on_driver(files, tmp, src_dirs)
         if size is None:
-            path, size = "spark", _compact_on_spark(spark, side_dir, src_dirs, tmp)
+            path, size = "spark", _compact_on_spark(spark, side_dir, files, tmp, src_dirs)
         os.rename(tmp, os.path.join(side_dir, f"batch_id={new_id}"))
         for d in src_dirs:
             shutil.rmtree(os.path.join(side_dir, d))

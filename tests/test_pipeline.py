@@ -579,6 +579,31 @@ def test_driver_and_udf_signatures_equal(spark, ds_corpus, monkeypatch, tmp_path
     assert "ds=__HIVE_DEFAULT_PARTITION__" in dirs and "ds=a%2Fb%3Ac%25" in dirs
 
 
+@pytest.mark.parametrize("signer", ["driver", "udf"])
+def test_resume_signs_and_skips_null_and_empty_ds(spark, ds_corpus, monkeypatch, tmp_path, signer):
+    """A resume over committed partitions that all look like dates signs
+    the rows of a null or empty ds (both stored under
+    ds=__HIVE_DEFAULT_PARTITION__), and the next resume skips them."""
+    ds = F.col("ds")
+    df = ds_corpus.withColumn(
+        "ds", F.when(ds.endswith("4"), F.lit(None)).when(ds.endswith("3"), "").otherwise(ds)
+    )
+    out = str(tmp_path)
+    dated = df.where(ds != "")
+    n_dated = dated.count()
+    _sign(spark, dated, out, signer, monkeypatch)
+    for todo in (200 - n_dated, 0):
+        with monkeypatch.context() as mp:
+            if signer == "udf":
+                mp.setattr(signatures, "_LOCAL_MAX_SIGN_BYTES", 0)
+            DedupPipeline(spark, CFG, out).compute_signatures(df)
+        assert _metrics(out, "signatures")["docs_processed"] == todo
+    assert _metrics(out, "signatures")["resumed_partitions"] == 3
+    by_spark, by_arrow = _sig_rows(spark, out)
+    assert by_spark == by_arrow and sum(by_spark.values()) == 200
+    assert sorted(os.listdir(os.path.join(out, "signatures")))[-1] == "ds=__HIVE_DEFAULT_PARTITION__"
+
+
 def _head(df):
     """The rows of df's first two ds values."""
     all_ds = sorted(r["ds"] for r in df.select("ds").distinct().collect())
