@@ -1,9 +1,13 @@
 """Vectorized numpy hashing kernels — the batched (Arrow) counterpart of the
 serial oracle. Same arithmetic as /root/reference/src/utils/hash.c:6-25 and
-the min-update of src/utils/utils.c:3-33, but computed as one
-(n_shingles × sketch_size) matrix per chunk with ``np.minimum.reduceat``
-per-document reduction, instead of per-element loops. Differential tests in
-tests/test_kernels.py require cell-for-cell equality with oracle.py — the
+the min-update of src/utils/utils.c:3-33, but per window of a batch's
+concatenated shingle ids instead of per-element loops: a window whose ids
+repeat hashes each distinct id once into a (n_distinct × sketch_size) table
+and gathers each document's rows from it; any other window hashes an
+(n_shingles × sketch_size) matrix per chunk and reduces per document with
+``np.minimum.reduceat`` (see min_sketch_batch). Differential tests in
+tests/test_kernels.py and tests/test_properties.py require cell-for-cell
+equality with oracle.py — the
 same invariant the reference demands of its parallel variants vs serial
 (/root/reference/test/test_parallel_lock.c:47-57).
 """
@@ -97,22 +101,58 @@ def _sub_if_ge(h: np.ndarray, M: np.uint64) -> None:
     np.subtract(h, M, out=h, where=h >= M)
 
 
+# occurrences (direct branch) or distinct ids (table branch) per
+# hash_matrix call: a (size × 1,024) uint64 matrix, ~1 MiB at size 128, so
+# 32 concurrent executor cores don't thrash a shared L3 (measured best at 8
+# and 32 processes, ~6x over DRAM-sized chunks)
+_BLOCK = 1 << 10
+
+
 def min_sketch_batch(
     shingle_sets: Sequence[np.ndarray],
     cfg: MinHashConfig,
     coeffs: tuple[np.ndarray, ...] | None = None,
-    chunk_elems: int = 1 << 10,
+    chunk_elems: int = 1 << 16,
 ) -> np.ndarray:
     """MinHash sketches for a batch of documents → uint64[n_docs, size].
 
-    Concatenates all documents' shingle ids, hashes them in bounded chunks
-    (≤ chunk_elems × size × 8 bytes of temporary — the default keeps each
-    worker's working set ~1 MB so 32 concurrent executor cores don't thrash
-    the shared L3: measured best at both 8 and 32 procs, ~6× over
-    DRAM-sized chunks), and reduces per-document minima with
-    ``np.minimum.reduceat``. Empty documents stay all-INFTY
-    (init_empty_values, src/configuration/configuration.c:143-148). Documents
-    larger than a chunk are folded across chunks — min is associative and
+    Concatenates all documents' shingle ids and cuts them into windows of
+    chunk_elems occurrences. h_i depends only on the shingle, so each window
+    first counts its distinct ids (one sort) and takes one of two branches:
+
+    - **Table**, when the distinct ids are at most half of the window's
+      occurrences (boilerplate, near-duplicate clusters, common words):
+      ``np.unique(..., return_inverse=True)`` gives the distinct ids and
+      each occurrence's row; each distinct id is hashed once into a
+      row-major table T (n_distinct × size), in _BLOCK-row calls of the
+      same hash_matrix, and each document's part of the window reduces as
+      ``np.take(T, inv[s:e], axis=0).min(axis=0)``. T holds values < M in
+      the narrowest unsigned dtype (uint32 for M = 2^31 - 1, every
+      reference config), in one buffer of half a window's rows that every
+      table window of the call reuses: at the default window and sketch
+      size 128, under 16 MiB per signing thread, and one document's gather
+      under 32 MiB.
+    - **Direct**, otherwise: hash the window's occurrences in _BLOCK-element
+      chunks, each a (size × 1,024) uint64 matrix of ~1 MiB at size 128
+      that stays cache-resident, and reduce per-document minima along its
+      contiguous axis with ``np.minimum.reduceat``.
+
+    Why half: filling T row-major and gathering from it cost about as much
+    per occurrence as hashing saves once ~60% of a window is distinct, and
+    a table of tens of thousands of rows no longer fits in cache. Measured
+    on 4,200-id sorted documents from pools of varying size (4-core box,
+    sketch size 128, table vs direct, two runs): 2.4–2.5x faster at 16%
+    distinct, 1.6–1.8x at 38%, 1.1–1.25x at 57%, 0.73–0.89x at 69% and
+    0.76–0.78x at 90% on one thread; 2.7–2.9x, 1.7x, 1.1–1.2x, 1.07–1.14x
+    and 0.82–1.01x with four threads. The branch is picked per window from
+    the input, whose repetition varies from batch to batch and within one,
+    and a direct window pays only for the sort (~1–2% of hashing it), so
+    there is no option to tune. chunk_elems, the one size parameter, bounds
+    the table and the gather.
+
+    Empty documents stay all-INFTY (init_empty_values,
+    src/configuration/configuration.c:143-148). A document that spans
+    windows or chunks is folded across them — min is associative and
     commutative (the same algebra that makes the reference's merge and
     Spark's partial aggregation correct, src/utils/utils.c:36-46).
     """
@@ -128,29 +168,67 @@ def min_sketch_batch(
     orig_idx = np.array(nonempty, dtype=np.int64)
     lengths = np.array([len(shingle_sets[i]) for i in nonempty], dtype=np.int64)
     starts = np.concatenate([[0], np.cumsum(lengths)])[:-1]
+    ends = starts + lengths
     X = np.concatenate([np.asarray(shingle_sets[i], dtype=np.uint64) for i in nonempty])
+    table = None  # one buffer for every table window of the call
 
-    # the docs each chunk of X spans: first[c] ..= last[c]
-    pos = np.arange(0, X.shape[0], chunk_elems)
-    end = np.minimum(pos + chunk_elems, X.shape[0])
-    first = np.searchsorted(starts, pos, side="right") - 1
-    # the doc containing the chunk's LAST element (end-1, not end: a doc
-    # starting exactly at `end` belongs to the next chunk)
-    last = np.searchsorted(starts, end - 1, side="right") - 1
-    for p, e, f, l in zip(pos.tolist(), end.tolist(), first.tolist(), last.tolist()):
+    def hash_block(x: np.ndarray) -> np.ndarray:
+        return hash_matrix(x, coeffs, cfg.hash_type, cfg.prime_modulus)
+
+    for p in range(0, X.shape[0], chunk_elems):
+        e = min(p + chunk_elems, X.shape[0])
+        # a plain sort counts the distinct ids at a quarter of the cost of
+        # np.unique's inverse, which only a table window needs
+        srt = np.sort(X[p:e])
+        if 2 * (1 + np.count_nonzero(srt[1:] != srt[:-1])) > e - p:
+            _min_direct(out, X, p, e, starts, orig_idx, hash_block)
+            continue
+        ids, inv = np.unique(X[p:e], return_inverse=True)
+        if table is None:
+            rows = min(chunk_elems, X.shape[0]) // 2
+            table = np.empty((rows, size), dtype=np.min_scalar_type(cfg.prime_modulus - 1))
+        T = table[: ids.shape[0]]
+        for q in range(0, ids.shape[0], _BLOCK):
+            T[q : q + _BLOCK] = hash_block(ids[q : q + _BLOCK])
+        f, l = map(int, _doc_span(starts, p, e))
+        seg_s = np.maximum(starts[f : l + 1], p) - p
+        seg_e = np.minimum(ends[f : l + 1], e) - p
+        for d, s, t in zip(orig_idx[f : l + 1].tolist(), seg_s.tolist(), seg_e.tolist()):
+            row = out[d]
+            np.minimum(row, np.take(T, inv[s:t], axis=0).min(axis=0), out=row)
+    return out
+
+
+def _doc_span(starts: np.ndarray, p, e):
+    """The first and last of the nonempty documents that occurrences
+    [p, e) of the concatenated ids touch (scalars or arrays of chunks). The
+    last is the document holding e - 1, not e: a document starting exactly
+    at e belongs to the next chunk."""
+    return (
+        np.searchsorted(starts, p, side="right") - 1,
+        np.searchsorted(starts, e - 1, side="right") - 1,
+    )
+
+
+def _min_direct(out, X, p, e, starts, orig_idx, hash_block) -> None:
+    """Fold the minima of occurrences X[p:e] into `out`, hashing each
+    occurrence in _BLOCK-element chunks."""
+    pos = np.arange(p, e, _BLOCK)
+    end = np.minimum(pos + _BLOCK, e)
+    first, last = _doc_span(starts, pos, end)
+    for c, ce, f, l in zip(pos.tolist(), end.tolist(), first.tolist(), last.tolist()):
         # (size, chunk), C-contiguous: the reductions run along the last
         # axis, where np.minimum.reduceat is ~8x faster than along the first
-        H = hash_matrix(X[p:e], coeffs, cfg.hash_type, cfg.prime_modulus).T
+        H = hash_block(X[c:ce]).T
         if f == l:
             # one doc: a plain min, which also releases the GIL that
             # reduceat holds (driver threads share it)
             row = out[orig_idx[f]]
             np.minimum(row, H.min(axis=1), out=row)
         else:
-            seg_starts = np.maximum(starts[f : l + 1], p) - p
+            seg_starts = np.maximum(starts[f : l + 1], c) - c
             docs = orig_idx[f : l + 1]
             out[docs] = np.minimum(out[docs], np.minimum.reduceat(H, seg_starts, axis=1).T)
-    return out
 
 
 def sketch_to_long(sketches: np.ndarray) -> np.ndarray:

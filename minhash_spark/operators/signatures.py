@@ -48,18 +48,21 @@ from ..session import default_parallelism
 # Python-worker start (and the pipeline then reads its signatures back).
 # Median wall of one store ingest / pipeline run (s), driver vs UDF, and
 # the driver process's peak RSS (MB) so far; 4-core box, 4 KiB docs in 4
-# partitions (scripts/bench_sign_cap.py, 5 runs, the first left out):
+# partitions (scripts/bench_sign_cap.py, 5 runs, the first left out). Its
+# random-word text is ~70% distinct per min_sketch_batch window, so both
+# paths hash every shingle occurrence; text that repeats more signs faster
+# on both, which this table does not show:
 #   text MiB   rows   store       pipeline    RSS
-#   0.25         64   0.17 0.24   0.10 0.39   195
-#   0.5         128   0.15 0.26   0.15 0.34   218
-#   1           256   0.24 0.30   0.23 0.39   226
-#   2           512   0.40 0.43   0.38 0.52   250
-#   3           768   0.56 0.59   0.54 0.62   279
-#   4         1,024   0.74 0.69   0.74 0.78   298
-#   8         2,048   1.42 1.24   1.38 1.29   426
-#   16        4,096   3.30 2.78   2.99 2.81   701
-#   32        8,192   5.87 4.34   5.92 4.35 1,127
-# The driver ties or beats the UDF on both callers up to 3 MiB.
+#   0.25         64   0.22 0.39   0.18 0.54   183
+#   0.5         128   0.24 0.36   0.20 0.48   209
+#   1           256   0.36 0.44   0.38 0.63   216
+#   2           512   0.66 0.64   0.54 0.67   239
+#   3           768   0.79 0.76   0.66 0.85   263
+#   4         1,024   1.06 1.00   1.13 1.03   285
+#   8         2,048   2.48 1.84   2.01 1.74   389
+#   16        4,096   5.58 4.12   5.35 4.57   651
+#   32        8,192   8.73 7.17   8.55 7.51 1,112
+# The driver ties (within 5%) or beats the UDF on both callers up to 3 MiB.
 _LOCAL_MAX_SIGN_BYTES = 3 << 20
 # the least text a driver thread signs: smaller slices cost more in thread
 # hand-off than they save, so a ~75 KB store probe stays on one thread

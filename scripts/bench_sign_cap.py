@@ -15,6 +15,15 @@ so both paths take the same code otherwise. Sizes run in ascending order,
 and each driver row records the process's peak RSS so far (`ru_maxrss`),
 so it bounds the driver's peak at that size.
 
+The documents draw from 5,000 random words, so about 70% of the char
+5-grams in each 2^16-occurrence window are distinct: above the half at
+which `min_sketch_batch` hashes each distinct 5-gram once (its table
+branch), so both paths here hash every occurrence. Text that repeats
+more (perfbench's crawl corpus is ~9% distinct per window, its store
+batches ~35%) signs faster on both paths, which this script does not
+show, and no perfbench workload measures a move of the cap. The cap is
+therefore not moved on this script's numbers alone.
+
 Usage: SPARK_GRAFT_CPUS=N python scripts/bench_sign_cap.py [MiB,MiB,...] [repeats]
 Prints one JSON line; one row per size, caller and path to stderr.
 """

@@ -68,6 +68,35 @@ def test_min_sketch_batch_chunking_invariance():
     assert np.array_equal(aligned, min_sketch_batch(sets2, cfg, chunk_elems=1 << 20))
 
 
+@pytest.mark.parametrize("hash_type", [0, HASH_KWISE])
+def test_signature_matrix_on_repetitive_text_equals_serial_oracle(monkeypatch, hash_type):
+    """Texts from a 12-word vocabulary plus a boilerplate cluster (one
+    template, one word changed per page) repeat their 5-grams across the
+    batch, so the char path's min_sketch_batch takes the distinct-id table
+    for its one window; every signature must equal the serial oracle's,
+    cell for cell."""
+    from minhash_spark.config import DedupConfig
+    from minhash_spark.functions import kernels
+    from minhash_spark.functions.kernels import sketch_to_int
+    from minhash_spark.operators.signatures import signature_matrix
+
+    monkeypatch.setattr(kernels, "_min_direct", None)  # the table branch only
+    rng = np.random.default_rng(11)
+    vocab = np.array("the a of and to in data page home news about contact".split())
+    template = list(rng.choice(vocab, 150))
+    texts = [" ".join(rng.choice(vocab, rng.integers(0, 60))) for _ in range(30)]
+    for i in range(8):
+        page = template.copy()
+        page[rng.integers(0, 150)] = f"item{i}"
+        texts.append(" ".join(page))
+    texts[4], texts[17] = None, ""
+    cfg = DedupConfig(minhash=MinHashConfig(sketch_size=32, hash_type=hash_type, seed=3), bands=8, rows=4)
+    got = signature_matrix(texts, cfg)
+    for i, t in enumerate(texts):
+        want = oracle.sketch_of_set(char_shingles(t, cfg.shingle_size), cfg.minhash)
+        assert np.array_equal(got[i], sketch_to_int(want[None, :])[0]), f"text {i}"
+
+
 @pytest.mark.parametrize("cpus,slice_bytes", [(1, 1 << 16), (3, 64), (8, 1)])
 def test_sign_texts_equals_one_batch(monkeypatch, cpus, slice_bytes):
     """The driver's signer cuts a batch into byte-balanced slices, one per

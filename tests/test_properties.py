@@ -5,10 +5,12 @@ invisible — the reference's validation invariants generalized beyond fixed
 fixtures (/root/reference/test/test_parallel_lock.c:47-57)."""
 
 import numpy as np
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from minhash_spark.config import MinHashConfig, HASH_KWISE
 from minhash_spark import oracle
+from minhash_spark.functions import kernels
 from minhash_spark.functions.kernels import hash_matrix, min_sketch_batch
 from minhash_spark.functions.shingles import char_shingles, normalize_text
 
@@ -56,6 +58,63 @@ def test_chunking_is_invisible(sets, chunk):
         min_sketch_batch(arrs, cfg, chunk_elems=chunk),
         min_sketch_batch(arrs, cfg, chunk_elems=1 << 20),
     )
+
+
+# primes whose hash values need each table dtype: uint16, uint32 (Mersenne
+# and not) and uint64 (2^61 - 1 takes hash_matrix's division, like any
+# M but 2^31 - 1; a uint32 table would truncate its values)
+_PRIMES = [65521, (1 << 31) - 1, 1_000_000_007, (1 << 61) - 1]
+
+
+@settings(max_examples=40, deadline=None)
+@given(
+    data=st.data(),
+    cfg=st.builds(
+        MinHashConfig,
+        sketch_size=st.sampled_from([8, 32]),
+        prime_modulus=st.sampled_from(_PRIMES),
+        hash_type=st.sampled_from([0, HASH_KWISE]),
+        k=st.integers(min_value=1, max_value=3),
+        seed=st.integers(min_value=0, max_value=2**31 - 1),
+    ),
+    pool=st.lists(st.integers(0, 2**64 - 1), min_size=1, max_size=64, unique=True),
+    chunk=st.integers(min_value=1, max_value=48),
+)
+def test_repeated_ids_equal_serial_oracle(data, cfg, pool, chunk):
+    """Documents drawn from a pool of at most 64 ids repeat them across the
+    batch, so min_sketch_batch hashes a distinct-id table and gathers each
+    document's rows from it; small windows make documents straddle them,
+    and empty documents sit anywhere. Every row must equal the serial
+    oracle of its document."""
+    sets = data.draw(st.lists(st.lists(st.sampled_from(pool), max_size=40), max_size=8))
+    arrs = [np.array(s, dtype=np.uint64) for s in sets]
+    got = min_sketch_batch(arrs, cfg, chunk_elems=chunk)
+    for i, a in enumerate(arrs):
+        assert np.array_equal(got[i], oracle.sketch_of_set(a, cfg)), f"doc {i}"
+
+
+@pytest.mark.parametrize("prime", _PRIMES)
+def test_one_call_takes_both_branches(monkeypatch, prime):
+    """A first window of repeated ids takes the table branch and a second
+    of distinct ids the direct one, in one call; a document straddles the
+    two windows, and every row equals the serial oracle."""
+    direct, real = [], kernels._min_direct
+
+    def spy(out, X, p, *args):
+        direct.append(p)
+        real(out, X, p, *args)
+
+    monkeypatch.setattr(kernels, "_min_direct", spy)
+    rng = np.random.default_rng(3)
+    repeated = rng.integers(0, 2**64, 16, dtype=np.uint64)[rng.integers(0, 16, 700)]
+    fresh = rng.integers(0, 2**64, 700, dtype=np.uint64)
+    X = np.concatenate([repeated, fresh])
+    sets = [X[:300], X[300:0], X[300:1200], X[1200:]]
+    cfg = MinHashConfig(sketch_size=16, prime_modulus=prime, seed=5)
+    got = min_sketch_batch(sets, cfg, chunk_elems=700)
+    assert direct == [700]
+    for i, s in enumerate(sets):
+        assert np.array_equal(got[i], oracle.sketch_of_set(s, cfg)), f"doc {i}"
 
 
 _M = (1 << 31) - 1
