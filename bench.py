@@ -27,7 +27,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F
 
-from minhash_spark.config import DedupConfig, MinHashConfig
 from minhash_spark.session import get_spark, default_parallelism
 from minhash_spark.operators.signatures import with_minhash_signature
 from minhash_spark.operators.lsh import bands_table, candidate_pairs, release_persisted
@@ -35,9 +34,8 @@ from minhash_spark.operators.verify import verify_pairs
 from minhash_spark.operators.cluster import connected_components
 from minhash_spark.operators.simhash import with_simhash, simhash_candidates
 from minhash_spark.operators.substring import substring_dedup
-from minhash_spark.operators.similarity import srp_cosine_pairs, brute_force_topk
 from minhash_spark.operators.text import token_count
-from minhash_spark.queries import CFG, q_quality_features, _emb_union
+from minhash_spark.queries import CFG
 
 AMPLIFY = int(os.environ.get("SPARK_GRAFT_AMPLIFY", "20"))
 
@@ -307,21 +305,6 @@ def main() -> None:
         lambda: substring_dedup(raw.unionAll(containers), id_col="doc_id").count(),
         repeats=2,
     )
-    timed(
-        "srp_ann_pairs",
-        lambda: srp_cosine_pairs(
-            _emb_union(spark, sf_dir), threshold=0.5, dim=64, n_planes=8
-        ).count(),
-        repeats=2,
-    )
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    timed(
-        "ann_topk_bruteforce",
-        lambda: brute_force_topk(emb, emb.where(F.col("vec_id") < 100), k=10).count(),
-    )
-    timed("quality_features", lambda: q_quality_features(spark, sf_dir).count())
 
     # attribute executor task time / CPU to each query's BEST repeat window
     # (the one the recorded wall number comes from)

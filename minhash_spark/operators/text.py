@@ -1,5 +1,5 @@
-"""Text-analysis operators for training-data pipelines: token counting,
-quality scoring, language ID, document fingerprinting.
+"""Text operators the dedup queries share: whitespace tokens and their
+count, the exact-copy document fingerprint, and duplicated-passage stats.
 
 Everything except the fingerprint is pure JVM expressions (whole-stage
 codegen; no Python). The fingerprint is a uint64 polynomial rolling hash —
@@ -16,14 +16,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import LongType
 
-# deterministic marker-token lists for the n-gram/stopword language heuristic
-LANG_MARKERS: dict[str, tuple[str, ...]] = {
-    "en": ("the", "and", "of", "to", "a", "in", "is", "that", "it", "for"),
-    "de": ("der", "die", "das", "und", "ist", "nicht", "ein", "mit", "für", "auf"),
-    "fr": ("le", "la", "les", "et", "est", "une", "dans", "pour", "que", "pas"),
-    "es": ("el", "la", "los", "y", "es", "una", "en", "por", "que", "con"),
-}
-
 
 def tokens_col(text_col: str | Column = "text") -> Column:
     """Whitespace tokens of the trimmed text; empty text → empty array."""
@@ -36,76 +28,6 @@ def tokens_col(text_col: str | Column = "text") -> Column:
 
 def token_count(text_col: str | Column = "text") -> Column:
     return F.size(tokens_col(text_col)).cast("long")
-
-
-# GPT-2-style pre-tokenizer pattern: contractions, space-prefixed letter /
-# digit / punctuation runs. Same semantics in Java regex and RE2, so the
-# count is oracle-checkable.
-BPE_ISH_PATTERN = r"'(?:s|t|re|ve|m|ll|d)| ?\p{L}+| ?\p{N}+| ?[^\s\p{L}\p{N}]+"
-
-
-def token_count_bpe(text_col: str | Column = "text") -> Column:
-    """BPE-ish token count: the number of pre-tokenizer matches — the
-    standard cheap proxy for LLM token budgets over a corpus."""
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    return F.size(F.regexp_extract_all(c, F.lit(BPE_ISH_PATTERN), 0)).cast("long")
-
-
-def with_quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Length/punctuation/stopword-ratio quality features + a composite score.
-    All ratios rounded to 6 dp so results hash identically across engines."""
-    toks = tokens_col(text_col)
-    n_chars = F.length(F.col(text_col)).cast("long")
-    n_tokens = F.size(toks).cast("long")
-    n_punct = (
-        n_chars - F.length(F.regexp_replace(F.col(text_col), r"[.,!?;:]", ""))
-    ).cast("long")
-    stop = F.array(*[F.lit(w) for w in LANG_MARKERS["en"]])
-    n_stop = F.size(F.filter(toks, lambda t: F.array_contains(stop, F.lower(t))))
-    safe_tokens = F.greatest(n_tokens, F.lit(1))
-    safe_chars = F.greatest(n_chars, F.lit(1))
-    avg_token_len = F.round((n_chars - (n_tokens - 1)) / safe_tokens.cast("double"), 6)
-    punct_ratio = F.round(n_punct / safe_chars.cast("double"), 6)
-    stop_ratio = F.round(n_stop / safe_tokens.cast("double"), 6)
-    score = F.round(
-        F.least(n_tokens / F.lit(100.0), F.lit(1.0)) * 0.5
-        + stop_ratio * 0.3
-        + (F.lit(1.0) - F.least(punct_ratio * F.lit(5.0), F.lit(1.0))) * 0.2,
-        6,
-    )
-    return df.select(
-        "*",
-        n_chars.alias("q_n_chars"),
-        n_tokens.alias("n_tokens"),
-        avg_token_len.alias("avg_token_len"),
-        punct_ratio.alias("punct_ratio"),
-        stop_ratio.alias("stopword_ratio"),
-        score.alias("quality_score"),
-    )
-
-
-def with_lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Marker-token language heuristic: count marker hits per language over
-    lowercase tokens; highest count wins, ties broken by language code order,
-    zero hits → 'und'. Deterministic and SQL-expressible for the oracle."""
-    toks = F.transform(tokens_col(text_col), lambda t: F.lower(t))
-    scores = []
-    for lang in sorted(LANG_MARKERS):
-        markers = F.array(*[F.lit(w) for w in LANG_MARKERS[lang]])
-        scores.append(
-            F.size(F.filter(toks, lambda t: F.array_contains(markers, t))).alias(
-                f"score_{lang}"
-            )
-        )
-    out = df.select("*", *scores)
-    best = F.greatest(*[F.col(f"score_{lang}") for lang in sorted(LANG_MARKERS)])
-    pred = F.lit("und")
-    # first language (in sorted order) achieving the max wins
-    for lang in sorted(LANG_MARKERS, reverse=True):
-        pred = F.when(
-            (best > 0) & (F.col(f"score_{lang}") == best), F.lit(lang)
-        ).otherwise(pred)
-    return out.withColumn("lang_pred", pred)
 
 
 _FP_BASE = np.uint64(1099511628211)
@@ -222,46 +144,3 @@ def passage_dup_stats(
         )
     )
 
-
-# PII scrubbing — the standard web-text redaction pass (emails, IPv4,
-# phone-like digit runs). Patterns restricted to the Java-regex ∩ RE2
-# subset (no lookaround, no backrefs) so the DuckDB oracle replays them
-# verbatim.
-PII_PATTERNS = [
-    ("email", r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}", "<EMAIL>"),
-    ("ipv4", r"\b(?:[0-9]{1,3}\.){3}[0-9]{1,3}\b", "<IP>"),
-    # international-ish phone: +?digits with separators, 9-15 digits total;
-    # anchored on word boundaries to spare ordinary numbers/ids
-    # leading + matched explicitly — there is no \b between a space and
-    # '+' (both non-word), so \b\+? silently drops the plus
-    ("phone", r"(?:\+|\b)[0-9][0-9() .-]{7,18}[0-9]\b", "<PHONE>"),
-]
-
-
-def scrub_pii(col: Column | str) -> Column:
-    """Redact emails/IPv4s/phone-like runs from a text column — chained
-    JVM regexp_replace, whole-stage codegen, zero shuffle. Order matters:
-    emails first (their local part can contain digits a later phone pass
-    would half-eat), then IPs (dotted digits would otherwise match the
-    phone run), then phones."""
-    c = F.col(col) if isinstance(col, str) else col
-    for _, pat, repl in PII_PATTERNS:
-        c = F.regexp_replace(c, pat, repl)
-    return c
-
-
-def pii_counts(col: Column | str) -> list[Column]:
-    """Per-kind redaction counts — the audit signal a scrubbing pass
-    reports per document. Counted SEQUENTIALLY on the progressively
-    scrubbed text (emails on raw, IPs on email-scrubbed, phones on
-    IP-scrubbed), exactly mirroring scrub_pii's replacement order — an
-    IPv4 is digits-and-dots and would otherwise double-count as a
-    phone-like run."""
-    c = F.col(col) if isinstance(col, str) else col
-    out = []
-    for name, pat, repl in PII_PATTERNS:
-        out.append(
-            F.size(F.regexp_extract_all(c, F.lit(pat), F.lit(0))).alias(f"n_{name}")
-        )
-        c = F.regexp_replace(c, pat, repl)
-    return out

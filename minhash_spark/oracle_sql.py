@@ -12,10 +12,6 @@ HERE by re-deriving their exact integer semantics in SQL:
   tests/test_oracle_sql.py).
 - SimHash (per-token FNV bit sign-sums) and the 64-bit polynomial rolling
   fingerprint — same discipline.
-- SRP (signed-random-projection) bucketing — the hyperplanes are inlined as
-  SQL literals and the dot products are evaluated in the same sequential
-  order as the Spark UDF, so the sign patterns (and hence buckets) agree
-  bit-for-bit.
 
 Assumption: the documents corpus is ASCII (driver testdata is), so one
 character = one utf-8 byte and `unicode(c)` yields the byte value. All SQL
@@ -24,8 +20,6 @@ hash-function tables by construction.
 """
 
 from __future__ import annotations
-
-import numpy as np
 
 from .config import DedupConfig, HASH_KWISE, SIG_INFTY_LONG
 
@@ -344,158 +338,3 @@ SELECT doc_id,
 FROM f
 """
 
-
-# ---------------------------------------------------------------------------
-# SRP (signed random projection) buckets
-# ---------------------------------------------------------------------------
-
-def srp_plane_literals(dim: int, n_planes: int, seed: int) -> list[str]:
-    """The hyperplanes as SQL DOUBLE[] literals — full repr round-trips
-    float64 exactly, so both engines project onto identical planes."""
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((dim, n_planes))
-    return [
-        "[" + ",".join(repr(planes[d, j]) for d in range(dim)) + "]::DOUBLE[]"
-        for j in range(n_planes)
-    ]
-
-
-def _emb_union_sql(shift: int) -> str:
-    return (
-        "(SELECT vec_id, embedding FROM embeddings "
-        f"UNION ALL SELECT vec_id + {shift} AS vec_id, "
-        "list_transform(embedding, x -> (x::DOUBLE * 2)::FLOAT) AS embedding "
-        "FROM embeddings)"
-    )
-
-
-def srp_pairs_sql(
-    threshold: float,
-    dim: int,
-    n_planes: int,
-    seed: int,
-    emb_shift: int,
-    n_sets: int = 1,
-) -> str:
-    """SRP-bucketed cosine pairs over the embeddings∪scaled union: bucket =
-    packed sign bits of the plane projections (list_dot_product's sequential
-    accumulation matches the Spark UDF's per-dimension loop bit-for-bit),
-    pairs = same bucket in ANY plane set, exact cosine ≥ threshold."""
-    set_selects = []
-    for s in range(n_sets):
-        planes = srp_plane_literals(dim, n_planes, seed + s)
-        bucket = " + ".join(
-            f"(CASE WHEN list_dot_product(embedding::DOUBLE[], {p}) > 0 "
-            f"THEN {1 << j} ELSE 0 END)"
-            for j, p in enumerate(planes)
-        )
-        set_selects.append(
-            f"SELECT {s} AS set_id, vec_id, embedding, ({bucket})::BIGINT AS bucket "
-            f"FROM u"
-        )
-    buckets = " UNION ALL ".join(set_selects)
-    return f"""
-WITH u AS (SELECT * FROM {_emb_union_sql(emb_shift)}),
-b AS ({buckets}),
-cand AS (
-  SELECT DISTINCT a.vec_id AS id_a, b2.vec_id AS id_b
-  FROM b a JOIN b b2
-    ON a.set_id = b2.set_id AND a.bucket = b2.bucket AND a.vec_id < b2.vec_id
-)
-SELECT id_a, id_b,
-  round(list_cosine_similarity(ua.embedding::DOUBLE[], ub.embedding::DOUBLE[]), 6) AS cosine
-FROM cand
-JOIN u ua ON ua.vec_id = id_a
-JOIN u ub ON ub.vec_id = id_b
-WHERE round(list_cosine_similarity(ua.embedding::DOUBLE[], ub.embedding::DOUBLE[]), 6) >= {threshold}
-"""
-
-
-def trained_ivf_topk_sql(
-    n_cells: int,
-    n_probe: int,
-    k: int,
-    nq: int,
-    dim: int = 64,
-    n_iters: int = 2,
-    quant: int = 1000,
-) -> str:
-    """Unrolled SQL replay of the k-means-trained IVF search
-    (operators/similarity.py: train_ivf_centroids + trained_ivf_topk).
-
-    Exactness contract: training runs on integer-quantized vectors
-    (round(x·quant)), so every per-(cell, dim) member sum is an exactly
-    representable integer — order-independent in both engines — and each
-    centroid component is the same exact-sum / exact-count double division.
-    Cell assignment ranks round(cosine, 6) with a cid tie-break; the
-    underlying cosine chain (list_cosine_similarity vs Spark's sequential
-    zip_with fold) is bit-equal, so assignments — and therefore the whole
-    training trajectory — agree exactly. Final scoring uses the original
-    embeddings, same as every other green cosine query."""
-    cos = "round(list_cosine_similarity({a}, {b}), 6)"
-    ctes = [
-        f"""e AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v,
-         list_transform(embedding::DOUBLE[], x -> round(x * {quant})) AS xq
-  FROM embeddings
-)""",
-        f"c0 AS (SELECT vec_id AS cid, xq AS cv FROM e ORDER BY vec_id LIMIT {n_cells})",
-    ]
-    for t in range(n_iters):
-        ctes.append(
-            f"""a{t} AS (
-  SELECT id, xq, cid FROM (
-    SELECT e.vec_id AS id, e.xq, c.cid,
-      row_number() OVER (PARTITION BY e.vec_id
-        ORDER BY {cos.format(a="e.xq", b="c.cv")} DESC, c.cid ASC) AS rn
-    FROM e CROSS JOIN c{t} c
-  ) WHERE rn = 1
-)"""
-        )
-        ctes.append(
-            f"""s{t} AS (
-  SELECT cid, i, sum(xq[i]) AS sv, count(*) AS cnt
-  FROM a{t} CROSS JOIN (SELECT unnest(range(1, {dim + 1})) AS i) g
-  GROUP BY cid, i
-)"""
-        )
-        ctes.append(
-            f"""c{t + 1} AS (
-  SELECT c{t}.cid, coalesce(n.cv, c{t}.cv) AS cv
-  FROM c{t} LEFT JOIN (
-    SELECT cid, list(sv / cnt ORDER BY i) AS cv FROM s{t} GROUP BY cid
-  ) n USING (cid)
-)"""
-        )
-    ctes.append(
-        f"""af AS (
-  SELECT e.vec_id AS id, e.v, c.cid,
-    row_number() OVER (PARTITION BY e.vec_id
-      ORDER BY {cos.format(a="e.xq", b="c.cv")} DESC, c.cid ASC) AS rn
-  FROM e CROSS JOIN c{n_iters} c
-)"""
-    )
-    ctes.append("cells AS (SELECT id AS neighbor_id, v AS cv2, cid FROM af WHERE rn = 1)")
-    ctes.append(
-        f"probes AS (SELECT id AS query_id, v AS qv, cid FROM af "
-        f"WHERE id < {nq} AND rn <= {n_probe})"
-    )
-    ctes.append(
-        f"""cand AS (
-  SELECT query_id, neighbor_id, {cos.format(a="qv", b="cv2")} AS cosine
-  FROM probes JOIN cells USING (cid)
-  WHERE query_id != neighbor_id
-)"""
-    )
-    ctes.append(
-        """r AS (
-  SELECT *, row_number() OVER (
-    PARTITION BY query_id ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM cand
-)"""
-    )
-    return (
-        "WITH "
-        + ",\n".join(ctes)
-        + f"\nSELECT query_id, neighbor_id, cosine, rank FROM r WHERE rank <= {k}"
-    )

@@ -34,17 +34,8 @@ from .operators.cluster import connected_components
 from .operators.exact import exact_dup_groups
 from .operators.simhash import with_simhash, simhash_candidates
 from .operators.substring import substring_dedup
-from .operators.similarity import cosine_pairs, brute_force_topk, srp_cosine_pairs
 from .operators.ngram import ngram_jaccard_pairs
-from .operators.text import (
-    BPE_ISH_PATTERN,
-    LANG_MARKERS,
-    token_count,
-    token_count_bpe,
-    with_quality_score,
-    with_lang_id,
-    with_fingerprint,
-)
+from .operators.text import token_count, with_fingerprint
 from .sources.tables import load_table
 
 CFG = DedupConfig(minhash=MinHashConfig(sketch_size=128, seed=42))
@@ -55,7 +46,6 @@ CFG_KWISE = DedupConfig(
 )
 
 _SHIFT = 10_000_000  # id offset for the deterministic duplicated-corpus union
-_EMB_SHIFT = 100_000
 _CONT_SHIFT = 20_000_000
 
 
@@ -152,101 +142,6 @@ FROM u JOIN g ON u.text = g.text WHERE g.c >= 2
 
 
 # --------------------------------------------------------------------------
-# text analysis
-# --------------------------------------------------------------------------
-
-def q_token_count(spark, sf_dir):
-    d = load_table(spark, sf_dir, "documents")
-    return d.select("doc_id", token_count("text").alias("n_tokens"))
-
-
-SQL_TOKEN_COUNT = r"""
-SELECT doc_id,
-  CASE WHEN trim(text) = '' THEN 0
-       ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS n_tokens
-FROM documents
-"""
-
-
-def q_token_count_bpe(spark, sf_dir):
-    d = load_table(spark, sf_dir, "documents")
-    return d.select("doc_id", token_count_bpe("text").alias("n_bpe_tokens"))
-
-
-SQL_TOKEN_COUNT_BPE = (
-    "SELECT doc_id, len(regexp_extract_all(text, '"
-    + BPE_ISH_PATTERN.replace("'", "''")
-    + "')) AS n_bpe_tokens FROM documents"
-)
-
-
-def q_quality_features(spark, sf_dir):
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return with_quality_score(d).select(
-        "doc_id",
-        "q_n_chars",
-        "n_tokens",
-        "avg_token_len",
-        "punct_ratio",
-        "stopword_ratio",
-        "quality_score",
-    )
-
-
-_EN = ", ".join(f"'{w}'" for w in LANG_MARKERS["en"])
-SQL_QUALITY_FEATURES = rf"""
-WITH base AS (
-  SELECT doc_id,
-    length(text) AS n_chars,
-    CASE WHEN trim(text) = '' THEN 0
-         ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS n_tokens,
-    length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS n_punct,
-    CASE WHEN trim(text) = '' THEN 0
-         ELSE len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-                              t -> list_contains([{_EN}], lower(t)))) END AS n_stop
-  FROM documents
-), ratios AS (
-  SELECT doc_id, n_chars AS q_n_chars, n_tokens,
-    round((n_chars - (n_tokens - 1)) / greatest(n_tokens, 1)::DOUBLE, 6) AS avg_token_len,
-    round(n_punct / greatest(n_chars, 1)::DOUBLE, 6) AS punct_ratio,
-    round(n_stop / greatest(n_tokens, 1)::DOUBLE, 6) AS stopword_ratio
-  FROM base
-)
-SELECT doc_id, q_n_chars, n_tokens, avg_token_len, punct_ratio, stopword_ratio,
-  round(least(n_tokens / 100.0, 1.0) * 0.5 + stopword_ratio * 0.3
-        + (1.0 - least(punct_ratio * 5.0, 1.0)) * 0.2, 6) AS quality_score
-FROM ratios
-"""
-
-
-def q_lang_id(spark, sf_dir):
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return with_lang_id(d).select("doc_id", "lang_pred")
-
-
-def _lang_sql() -> str:
-    score_cols = []
-    for lang in sorted(LANG_MARKERS):
-        markers = ", ".join(f"'{w}'" for w in LANG_MARKERS[lang])
-        score_cols.append(
-            f"CASE WHEN trim(text) = '' THEN 0 ELSE "
-            f"len(list_filter(regexp_split_to_array(trim(text), '\\s+'), "
-            f"t -> list_contains([{markers}], lower(t)))) END AS score_{lang}"
-        )
-    best = "greatest(" + ", ".join(f"score_{l}" for l in sorted(LANG_MARKERS)) + ")"
-    cases = " ".join(
-        f"WHEN score_{l} = {best} THEN '{l}'" for l in sorted(LANG_MARKERS)
-    )
-    return f"""
-WITH s AS (SELECT doc_id, {", ".join(score_cols)} FROM documents)
-SELECT doc_id, CASE WHEN {best} = 0 THEN 'und' {cases} END AS lang_pred FROM s
-"""
-
-
-SQL_LANG_ID = _lang_sql()
-
-
-# --------------------------------------------------------------------------
 # n-gram Jaccard (consecutive-id pairs → deterministic linear pair set)
 # --------------------------------------------------------------------------
 
@@ -311,45 +206,6 @@ def q_ngram_decontaminate(spark, sf_dir):
     return decontaminate_report(
         docs, eval_docs, n=5, id_col="doc_id", threshold=0.5
     )
-
-
-def q_vocab_topk(spark, sf_dir):
-    """Corpus vocabulary statistics: the 100 most frequent lowercased tokens
-    with occurrence counts — the vocab-audit pass of a training-data
-    pipeline (explode → count → top-k by count with deterministic
-    tie-break).
-
-    The top-k is `orderBy(...).limit(100)` — Spark compiles it to
-    TakeOrderedAndProject (per-partition heaps, no global sort barrier). An
-    unpartitioned row_number window here would funnel the ENTIRE distinct
-    vocabulary (billions of tokens at web scale) through one task; rank is
-    instead assigned on the ≤100 collected winners driver-side."""
-    from .operators.text import tokens_col
-
-    d = load_table(spark, sf_dir, "documents")
-    counts = (
-        d.select(F.explode(F.transform(tokens_col("text"), F.lower)).alias("token"))
-        .groupBy("token")
-        .agg(F.count("*").alias("n"))
-    )
-    top = counts.orderBy(F.col("n").desc(), F.col("token").asc()).limit(100).collect()
-    return spark.createDataFrame(
-        [(r["token"], r["n"], i + 1) for i, r in enumerate(top)],
-        "token string, n bigint, rank bigint",
-    )
-
-
-SQL_VOCAB_TOPK = r"""
-WITH t AS (
-  SELECT lower(unnest(regexp_split_to_array(trim(text), '\s+'))) AS token
-  FROM documents WHERE trim(text) != ''
-), c AS (
-  SELECT token, count(*) AS n FROM t GROUP BY token
-), r AS (
-  SELECT token, n, row_number() OVER (ORDER BY n DESC, token ASC) AS rank FROM c
-)
-SELECT token, n, rank FROM r WHERE rank <= 100
-"""
 
 
 _PD_SHIFT = 30_000_000  # id offset for the half-duplicated corpora
@@ -506,31 +362,6 @@ GROUP BY pp.doc_id
 """
 
 
-def q_embedding_normalize(spark, sf_dir):
-    """Unit-normalized embeddings (exploded per dimension for the harness):
-    the standard pre-ANN transform, pure JVM transform/aggregate in double
-    with the same sequential fold order as the SQL oracle."""
-    from .operators.similarity import norm_col, _as_double
-
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    vd = _as_double(F.col("embedding"))
-    unit = F.transform(vd, lambda x: F.round(x / norm_col(vd), 6))
-    return e.select(
-        "vec_id", F.posexplode(unit).alias("dim", "value")
-    ).withColumn("dim", F.col("dim").cast("long"))
-
-
-SQL_EMBEDDING_NORMALIZE = """
-WITH n AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v,
-         sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-  FROM embeddings
-)
-SELECT vec_id, (i - 1)::BIGINT AS dim, round(v[i] / nrm, 6) AS value
-FROM n CROSS JOIN (SELECT unnest(range(1, 65)) AS i)
-"""
-
-
 SQL_NGRAM_CONTAINMENT_CONSECUTIVE = rf"""
 WITH t AS (
   SELECT doc_id,
@@ -580,95 +411,6 @@ GROUP BY x.doc_id, x.n_grams
 
 
 # --------------------------------------------------------------------------
-# embeddings: cosine near-dup pairs + exact top-k ANN
-# --------------------------------------------------------------------------
-
-def _emb_union(spark, sf_dir) -> DataFrame:
-    """embeddings ∪ 2×-scaled copies (cosine 1.0 with their source) — gives
-    the near-dup threshold query a deterministic positive set."""
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    scaled = e.select(
-        (F.col("vec_id") + _EMB_SHIFT).alias("vec_id"),
-        F.transform("embedding", lambda x: (x.cast("double") * 2).cast("float")).alias(
-            "embedding"
-        ),
-    )
-    return e.unionAll(scaled)
-
-
-_EMB_UNION_SQL = (
-    "(SELECT vec_id, embedding FROM embeddings "
-    f"UNION ALL SELECT vec_id + {_EMB_SHIFT} AS vec_id, "
-    "list_transform(embedding, x -> (x::DOUBLE * 2)::FLOAT) AS embedding "
-    "FROM embeddings)"
-)
-
-
-def q_embedding_cosine_pairs(spark, sf_dir):
-    return cosine_pairs(_emb_union(spark, sf_dir), threshold=0.5).select(
-        "id_a", "id_b", "cosine"
-    )
-
-
-SQL_EMBEDDING_COSINE_PAIRS = f"""
-WITH u AS (SELECT * FROM {_EMB_UNION_SQL})
-SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-  round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6) AS cosine
-FROM u a JOIN u b ON a.vec_id < b.vec_id
-WHERE round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6) >= 0.5
-"""
-
-
-def q_ann_topk_bruteforce(spark, sf_dir):
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    q = e.where(F.col("vec_id") < 50)
-    res = brute_force_topk(e, q, k=10)
-    return res.select(
-        "query_id", "neighbor_id", "cosine", F.col("rank").cast("long").alias("rank")
-    )
-
-
-_IVF_CELLS, _IVF_PROBE, _IVF_K, _IVF_NQ, _IVF_ITERS = 8, 2, 5, 20, 2
-
-
-def q_ann_topk_ivf(spark, sf_dir):
-    """IVF top-k with a k-means-TRAINED codebook: deterministic Lloyd
-    iterations over integer-quantized vectors (exact, order-independent
-    centroid sums), then the inverted-file search. The oracle replays the
-    identical training trajectory in unrolled SQL."""
-    from .operators.similarity import trained_ivf_topk
-
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    q = e.where(F.col("vec_id") < _IVF_NQ)
-    res = trained_ivf_topk(
-        e, q, k=_IVF_K, n_cells=_IVF_CELLS, n_probe=_IVF_PROBE, n_iters=_IVF_ITERS
-    )
-    return res.select(
-        "query_id", "neighbor_id", "cosine", F.col("rank").cast("long").alias("rank")
-    )
-
-
-SQL_ANN_TOPK_IVF = oracle_sql.trained_ivf_topk_sql(
-    n_cells=_IVF_CELLS, n_probe=_IVF_PROBE, k=_IVF_K, nq=_IVF_NQ, n_iters=_IVF_ITERS
-)
-
-
-SQL_ANN_TOPK_BRUTEFORCE = """
-WITH s AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-    round(list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]), 6) AS cosine
-  FROM embeddings q JOIN embeddings c ON q.vec_id != c.vec_id
-  WHERE q.vec_id < 50
-), r AS (
-  SELECT *,
-    row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
-  FROM s
-)
-SELECT query_id, neighbor_id, cosine, rank FROM r WHERE rank <= 10
-"""
-
-
-# --------------------------------------------------------------------------
 # substring containment (suffix-array path)
 # --------------------------------------------------------------------------
 
@@ -713,47 +455,6 @@ SELECT a.doc_id AS containee, b.doc_id AS container
 FROM n a JOIN n b ON a.doc_id != b.doc_id AND contains(b.nt, a.nt)
 WHERE len(regexp_split_to_array(a.nt, ' ')) >= {_MIN_CONTAINEE_TOKENS}
 """
-
-
-# the DuckDB replay of sampling._bucket: parse the 3-char md5 hex prefix
-# positionally (DuckDB has no base-conv function)
-_SQL_MD5_BUCKET = (
-    "(256 * (strpos('0123456789abcdef', substr(md5(doc_id::VARCHAR), 1, 1)) - 1)"
-    " + 16 * (strpos('0123456789abcdef', substr(md5(doc_id::VARCHAR), 2, 1)) - 1)"
-    " + (strpos('0123456789abcdef', substr(md5(doc_id::VARCHAR), 3, 1)) - 1))"
-)
-
-_SAMPLE_RATE = 0.25
-
-
-def q_deterministic_sample(spark, sf_dir):
-    """Reproducible corpus sampling (operators/sampling.py): membership is
-    a pure function of the row id (md5 hex-prefix range), identical across
-    runs, partitionings and engines — unlike df.sample, whose seed is only
-    stable per partition layout. Zero shuffle, whole-stage codegen."""
-    from .operators.sampling import deterministic_sample
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    return deterministic_sample(d, _SAMPLE_RATE)
-
-
-SQL_DETERMINISTIC_SAMPLE = f"""
-SELECT doc_id, n_chars FROM documents
-WHERE {_SQL_MD5_BUCKET} < {int(round(_SAMPLE_RATE * 4096))}
-"""
-
-_SPLITS = {"train": 0.8, "val": 0.1, "test": 0.1}
-
-
-def q_dataset_split_assignment(spark, sf_dir):
-    """Deterministic train/val/test assignment by id-hash range — the
-    reproducible-split contract a training pipeline needs around
-    dedup/filtering. Row-local JVM expression; a 10^12-doc corpus splits
-    with zero shuffle."""
-    from .operators.sampling import with_split
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id")
-    return with_split(d, _SPLITS)
 
 
 def q_probe_store_lookup(spark, sf_dir):
@@ -806,69 +507,10 @@ SELECT id_b + {_SHIFT}, id_a, 1.0::DOUBLE FROM dup
 """
 
 
-def q_pii_scrub(spark, sf_dir):
-    """PII redaction (operators/text.py scrub_pii): deterministic synthetic
-    PII (an email, an IPv4 and a phone derived from doc_id) is appended to
-    each document, then scrubbed; the query returns per-kind redaction
-    counts and the sha256 of the scrubbed text. The oracle replays the
-    injection and the identical Java∩RE2 regexes in DuckDB — proving the
-    scrubber actually removes what it claims, byte-for-byte."""
-    from .operators.text import pii_counts, scrub_pii
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    did = F.col("doc_id")
-    injected = F.concat(
-        F.col("text"),
-        F.lit(" contact user"), did.cast("string"), F.lit("@example.com"),
-        F.lit(" at 10.1."), F.pmod(did, F.lit(256)).cast("string"),
-        F.lit("."), F.pmod(did, F.lit(100)).cast("string"),
-        F.lit(" or +1 555 000 "),
-        (F.lit(1000) + F.pmod(did, F.lit(9000))).cast("string"),
-    )
-    w = d.withColumn("_t", injected)
-    return w.select(
-        "doc_id",
-        *pii_counts("_t"),
-        F.sha2(scrub_pii("_t"), 256).alias("scrubbed_sha"),
-    )
-
-
-_PII_INJECT_SQL = (
-    "text || ' contact user' || doc_id || '@example.com'"
-    " || ' at 10.1.' || (doc_id % 256) || '.' || (doc_id % 100)"
-    " || ' or +1 555 000 ' || (1000 + doc_id % 9000)"
-)
-_PII_EMAIL = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
-_PII_IP = r"\b(?:[0-9]{1,3}\.){3}[0-9]{1,3}\b"
-_PII_PHONE = r"(?:\+|\b)[0-9][0-9() .-]{7,18}[0-9]\b"
-SQL_PII_SCRUB = f"""
-WITH inj AS (SELECT doc_id, {_PII_INJECT_SQL} AS t FROM documents),
-s1 AS (SELECT doc_id, len(regexp_extract_all(t, '{_PII_EMAIL}')) AS n_email,
-       regexp_replace(t, '{_PII_EMAIL}', '<EMAIL>', 'g') AS t FROM inj),
-s2 AS (SELECT doc_id, n_email, len(regexp_extract_all(t, '{_PII_IP}')) AS n_ipv4,
-       regexp_replace(t, '{_PII_IP}', '<IP>', 'g') AS t FROM s1)
-SELECT doc_id, n_email, n_ipv4,
-  len(regexp_extract_all(t, '{_PII_PHONE}')) AS n_phone,
-  sha256(regexp_replace(t, '{_PII_PHONE}', '<PHONE>', 'g')) AS scrubbed_sha
-FROM s2
-"""
-
-
-_TRAIN_HI = int(round(0.8 * 4096))
-_VAL_HI = _TRAIN_HI + int(round(0.1 * 4096))
-SQL_DATASET_SPLIT_ASSIGNMENT = f"""
-SELECT doc_id,
-  CASE WHEN {_SQL_MD5_BUCKET} < {_TRAIN_HI} THEN 'train'
-       WHEN {_SQL_MD5_BUCKET} < {_VAL_HI} THEN 'val'
-       ELSE 'test' END AS split
-FROM documents
-"""
-
-
 # --------------------------------------------------------------------------
 # sketch/fingerprint queries — oracled by re-deriving the exact integer
 # semantics in DuckDB SQL (oracle_sql.py): FNV shingles, universal hashing,
-# column-min sketch, SimHash bit sign-sums, polynomial fingerprint, SRP signs
+# column-min sketch, SimHash bit sign-sums, polynomial fingerprint
 # --------------------------------------------------------------------------
 
 def _signature_cells(sig, cfg: DedupConfig):
@@ -974,26 +616,6 @@ SELECT min(doc_id) AS doc_id FROM {_DOCS_UNION_SQL} u GROUP BY text
 """
 
 
-def q_quality_filter(spark, sf_dir):
-    """Training-data filter pipeline: keep documents passing the composite
-    quality threshold AND identified as English — the standard pre-dedup
-    cleaning pass, filters composed from the text-analysis operators."""
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    scored = with_lang_id(with_quality_score(d))
-    return scored.where(
-        (F.col("quality_score") >= 0.5) & (F.col("lang_pred") == "en")
-    ).select("doc_id", "quality_score")
-
-
-SQL_QUALITY_FILTER = f"""
-WITH q AS ({SQL_QUALITY_FEATURES}),
-l AS ({SQL_LANG_ID})
-SELECT q.doc_id, q.quality_score
-FROM q JOIN l ON l.doc_id = q.doc_id
-WHERE q.quality_score >= 0.5 AND l.lang_pred = 'en'
-"""
-
-
 def q_simhash_fingerprints(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     return with_simhash(d).select("doc_id", "simhash")
@@ -1041,28 +663,6 @@ def q_simhash_candidate_pairs(spark, sf_dir):
 
 
 SQL_SIMHASH_CANDIDATE_PAIRS = oracle_sql.simhash_pairs_sql(max_hamming=3)
-
-
-_SRP_PLANES = 8
-_SRP_SETS = 2
-
-
-def q_srp_ann_pairs(spark, sf_dir):
-    release_persisted()  # bound enumerator-cache footprint across query runs
-    u = _emb_union(spark, sf_dir)
-    return srp_cosine_pairs(
-        u, threshold=0.5, dim=64, n_planes=_SRP_PLANES, n_sets=_SRP_SETS
-    ).select("id_a", "id_b", "cosine")
-
-
-SQL_SRP_ANN_PAIRS = oracle_sql.srp_pairs_sql(
-    threshold=0.5,
-    dim=64,
-    n_planes=_SRP_PLANES,
-    seed=42,
-    emb_shift=_EMB_SHIFT,
-    n_sets=_SRP_SETS,
-)
 
 
 def q_incremental_dedup_replay(spark, sf_dir):
@@ -1127,25 +727,12 @@ QUERIES = {
     "exact_dedup_groups": q_exact_dedup_groups,
     "minhash_text_dup_pairs": q_minhash_text_dup_pairs,
     "dedup_clusters_exact": q_dedup_clusters_exact,
-    "token_count": q_token_count,
-    "token_count_bpe": q_token_count_bpe,
-    "quality_features": q_quality_features,
-    "lang_id": q_lang_id,
     "ngram3_jaccard_consecutive": q_ngram3_jaccard_consecutive,
     "ngram_decontaminate": q_ngram_decontaminate,
-    "vocab_topk": q_vocab_topk,
     "passage_dup_stats": q_passage_dup_stats,
     "intra_doc_repetition": q_intra_doc_repetition,
     "fuzzy_dedup_keep": q_fuzzy_dedup_keep,
-    "embedding_normalize": q_embedding_normalize,
-    "embedding_cosine_pairs": q_embedding_cosine_pairs,
-    "ann_topk_bruteforce": q_ann_topk_bruteforce,
-    "ann_topk_ivf": q_ann_topk_ivf,
-    "srp_ann_pairs": q_srp_ann_pairs,
     "containment_pairs": q_containment_pairs,
-    "deterministic_sample": q_deterministic_sample,
-    "dataset_split_assignment": q_dataset_split_assignment,
-    "pii_scrub": q_pii_scrub,
     "probe_store_lookup": q_probe_store_lookup,
     "incremental_dedup_replay": q_incremental_dedup_replay,
     "minhash_signatures": q_minhash_signatures,
@@ -1153,7 +740,6 @@ QUERIES = {
     "minhash_signatures_word": q_minhash_signatures_word,
     "minhash_merged_signatures": q_minhash_merged_signatures,
     "dedup_keep_list": q_dedup_keep_list,
-    "quality_filter": q_quality_filter,
     "simhash_fingerprints": q_simhash_fingerprints,
     "simhash_candidate_pairs": q_simhash_candidate_pairs,
     "doc_fingerprints": q_doc_fingerprints,
@@ -1166,25 +752,12 @@ ORACLE_SQL = {
     "exact_dedup_groups": SQL_EXACT_DEDUP_GROUPS,
     "minhash_text_dup_pairs": SQL_MINHASH_TEXT_DUP_PAIRS,
     "dedup_clusters_exact": SQL_DEDUP_CLUSTERS_EXACT,
-    "token_count": SQL_TOKEN_COUNT,
-    "token_count_bpe": SQL_TOKEN_COUNT_BPE,
-    "quality_features": SQL_QUALITY_FEATURES,
-    "lang_id": SQL_LANG_ID,
     "ngram3_jaccard_consecutive": SQL_NGRAM3_JACCARD_CONSECUTIVE,
     "ngram_decontaminate": SQL_NGRAM_DECONTAMINATE,
-    "vocab_topk": SQL_VOCAB_TOPK,
     "passage_dup_stats": SQL_PASSAGE_DUP_STATS,
     "intra_doc_repetition": SQL_INTRA_DOC_REPETITION,
     "fuzzy_dedup_keep": SQL_FUZZY_DEDUP_KEEP,
-    "embedding_normalize": SQL_EMBEDDING_NORMALIZE,
-    "embedding_cosine_pairs": SQL_EMBEDDING_COSINE_PAIRS,
-    "ann_topk_bruteforce": SQL_ANN_TOPK_BRUTEFORCE,
-    "ann_topk_ivf": SQL_ANN_TOPK_IVF,
-    "srp_ann_pairs": SQL_SRP_ANN_PAIRS,
     "containment_pairs": SQL_CONTAINMENT_PAIRS,
-    "deterministic_sample": SQL_DETERMINISTIC_SAMPLE,
-    "dataset_split_assignment": SQL_DATASET_SPLIT_ASSIGNMENT,
-    "pii_scrub": SQL_PII_SCRUB,
     "probe_store_lookup": SQL_PROBE_STORE_LOOKUP,
     "incremental_dedup_replay": SQL_INCREMENTAL_DEDUP_REPLAY,
     "minhash_signatures": SQL_MINHASH_SIGNATURES,
@@ -1192,7 +765,6 @@ ORACLE_SQL = {
     "minhash_signatures_word": SQL_MINHASH_SIGNATURES_WORD,
     "minhash_merged_signatures": SQL_MINHASH_MERGED_SIGNATURES,
     "dedup_keep_list": SQL_DEDUP_KEEP_LIST,
-    "quality_filter": SQL_QUALITY_FILTER,
     "simhash_fingerprints": SQL_SIMHASH_FINGERPRINTS,
     "simhash_candidate_pairs": SQL_SIMHASH_CANDIDATE_PAIRS,
     "doc_fingerprints": SQL_DOC_FINGERPRINTS,

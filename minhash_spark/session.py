@@ -66,7 +66,7 @@ def get_spark(
         # =false lets the static planner pick SHJ when stats allow, and the
         # AQE local-map threshold converts a planned sort-merge into SHJ at
         # runtime from REAL partition sizes — the scale-adaptive way to keep
-        # wide payload rows (packed signatures, embeddings) out of sort
+        # wide payload rows (packed signatures, texts) out of sort
         # buffers at any corpus size, instead of hard-coding a per-join hint
         # that also blocks the broadcast tier when the side is small.
         .config("spark.sql.join.preferSortMergeJoin", "false")

@@ -1,11 +1,11 @@
-"""Readers for the testdata tables the registered queries read (TESTDATA.md):
-``documents`` and ``embeddings``."""
+"""Reader for the testdata table the registered queries read (TESTDATA.md):
+``documents``."""
 
 from __future__ import annotations
 
 import os
 
-TESTDATA_TABLES = ("documents", "embeddings")
+TESTDATA_TABLES = ("documents",)
 
 
 def load_table(spark, sf_dir: str, name: str):

@@ -1,6 +1,7 @@
 """The driver-side kernels of `minhash_spark.local` against plain-Python
 models of the Spark operators they stand in for: the skew tiers and band
-counting of `lsh.candidate_pairs` with `multi_bucket_stats`, the row
+counting of `lsh.candidate_pairs` with `multi_bucket_stats` (and against
+those Spark operators themselves), the row
 multiplicity of `verify_pairs`, and component-minimum labels; and
 `local.xxhash64` and `local.band_keys` against Spark's `xxhash64` and
 `lsh.band_keys` themselves, and `signature_matrix` against the signature
@@ -94,6 +95,45 @@ def test_band_pairs_checks_the_pair_cap_first():
     assert local.band_pairs(keys, codes, CFG, max_rows=9 * CFG.bands - 1) is None
     ca, cb, _ = local.band_pairs(keys, codes, CFG, max_rows=9 * CFG.bands)
     assert set(zip(ca.tolist(), cb.tolist())) == {(0, i) for i in range(1, 10)}
+
+
+# url pool with a null; "u10" < "u2" in both Python's and Spark's order
+URLS = st.none() | st.sampled_from(["u0", "u1", "u10", "u2", "v", "w~"])
+
+
+@settings(max_examples=25, deadline=None)
+@given(data=st.data())
+def test_band_pairs_match_spark_candidate_pairs(spark, data):
+    """`local.band_pairs` equals Spark's `candidate_pairs` as a pair set, and
+    its stats equal `multi_bucket_stats`, on band tables with repeated urls
+    and keys, null urls, and tier caps small enough that buckets reach the
+    plain, salted and star tiers."""
+    # m = 2 plain, m = 3..4 salted, m >= 5 star; keys 0..3 make the big buckets
+    cfg = dataclasses.replace(
+        CFG,
+        max_bucket_size=2,
+        salted_bucket_max=4,
+        salt_factor=data.draw(st.integers(1, 3)),
+        min_band_matches=data.draw(st.sampled_from([1, 2])),
+    )
+    urls = data.draw(st.lists(URLS, min_size=1, max_size=14))
+    key = st.integers(0, 3) | st.integers(4, 24)
+    keys = data.draw(arrays(np.int64, (len(urls), cfg.bands), elements=key))
+    ids = sorted({u for u in urls if u is not None})
+    codes = np.array([-1 if u is None else ids.index(u) for u in urls])
+    ca, cb, stats = local.band_pairs(keys, codes, cfg, max_rows=1 << 20)
+
+    bands = spark.createDataFrame(
+        [(u, int(k)) for u, row in zip(urls, keys) for k in row],
+        "url string, band_key bigint",
+    )
+    handles = []
+    want = lsh.candidate_pairs(bands, cfg, handles_out=handles).collect()
+    want_stats = lsh.multi_bucket_stats(handles[0], cfg).first().asDict()
+    handles[0].unpersist()
+    got = [(ids[a], ids[b]) for a, b in zip(ca.tolist(), cb.tolist())]
+    assert sorted(got) == sorted((r.url_a, r.url_b) for r in want)
+    assert stats == want_stats
 
 
 def test_pair_rows_and_verify():

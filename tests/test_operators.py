@@ -1,24 +1,15 @@
 """Operator-level tests: SimHash, suffix-array containment, n-gram Jaccard,
-text analysis, embedding similarity."""
-
-import math
+text operators."""
 
 import numpy as np
-import pandas as pd
-import pytest
 from pyspark.sql import functions as F
 
 from minhash_spark.operators import (
     with_simhash,
     simhash_candidates,
     substring_dedup,
-    cosine_pairs,
-    brute_force_topk,
-    srp_cosine_pairs,
     ngram_jaccard_pairs,
     token_count,
-    with_quality_score,
-    with_lang_id,
     with_fingerprint,
 )
 from minhash_spark.sources.pages import generate_corpus
@@ -143,30 +134,12 @@ def test_ngram_jaccard_exact_values(spark):
 # ---------- text ops -----------------------------------------------------------
 
 
-def test_token_count_and_quality(spark):
+def test_token_count(spark):
     df = spark.createDataFrame(
         [("a", "the cat, sat."), ("b", ""), ("c", "  x  ")], ["url", "text"]
     )
     tc = {r["url"]: r["n"] for r in df.select("url", token_count("text").alias("n")).collect()}
     assert tc == {"a": 3, "b": 0, "c": 1}
-    q = {r["url"]: r for r in with_quality_score(df).collect()}
-    assert q["a"]["n_tokens"] == 3
-    assert q["a"]["punct_ratio"] == round(2 / 13, 6)
-    assert q["b"]["quality_score"] is not None
-
-
-def test_lang_id(spark):
-    df = spark.createDataFrame(
-        [
-            ("en", "the cat and the dog went to the store"),
-            ("de", "der hund und die katze sind nicht hier"),
-            ("fr", "le chat est dans la maison pour toujours"),
-            ("und", "zzz qqq www"),
-        ],
-        ["url", "text"],
-    )
-    got = {r["url"]: r["lang_pred"] for r in with_lang_id(df).collect()}
-    assert got == {"en": "en", "de": "de", "fr": "fr", "und": "und"}
 
 
 def test_fingerprint_deterministic(spark):
@@ -177,83 +150,6 @@ def test_fingerprint_deterministic(spark):
     base = 1099511628211
     want = sum(b * pow(base, 4 - i, 1 << 64) for i, b in enumerate(b"hello")) % (1 << 64)
     assert got["a"] == (want if want < 1 << 63 else want - (1 << 64))
-
-
-# ---------- similarity ----------------------------------------------------------
-
-
-@pytest.fixture(scope="module")
-def emb_df(spark):
-    rng = np.random.default_rng(1)
-    base = rng.standard_normal((20, 16)).astype(np.float32)
-    # vecs 0 and 1 nearly parallel
-    base[1] = base[0] + 0.01 * rng.standard_normal(16).astype(np.float32)
-    rows = [(i, [float(x) for x in base[i]]) for i in range(20)]
-    return spark.createDataFrame(rows, ["vec_id", "embedding"]), base
-
-
-def test_cosine_pairs_matches_numpy(spark, emb_df):
-    df, base = emb_df
-    X = base.astype(np.float64)
-    Xn = X / np.linalg.norm(X, axis=1, keepdims=True)
-    sims = Xn @ Xn.T
-    want = {
-        (i, j)
-        for i in range(20)
-        for j in range(i + 1, 20)
-        if round(sims[i, j], 6) >= 0.9
-    }
-    got = {(r["id_a"], r["id_b"]) for r in cosine_pairs(df, 0.9).collect()}
-    assert got == want and (0, 1) in got
-
-
-def test_brute_force_topk(spark, emb_df):
-    df, base = emb_df
-    res = brute_force_topk(df, df.where(F.col("vec_id") == 0), k=3).collect()
-    assert [r["neighbor_id"] for r in sorted(res, key=lambda r: r["rank"])][0] == 1
-    assert len(res) == 3
-
-
-def test_srp_recall_vs_bruteforce(spark, emb_df):
-    df, _ = emb_df
-    exact = {(r["id_a"], r["id_b"]) for r in cosine_pairs(df, 0.9).collect()}
-    approx = {
-        (r["id_a"], r["id_b"])
-        for r in srp_cosine_pairs(df, 0.9, dim=16, n_planes=8).collect()
-    }
-    assert approx <= exact
-    assert len(approx) >= 1  # near-parallel pair lands in the same bucket
-
-
-def test_ivf_topk_recall_vs_bruteforce(spark):
-    """IVF with n_probe=n_cells must EQUAL brute force (it searches every
-    cell); with n_probe < n_cells recall is measured and must stay useful."""
-    import numpy as np
-    from minhash_spark.operators.similarity import brute_force_topk, ivf_topk
-
-    rng = np.random.default_rng(7)
-    vecs = rng.standard_normal((200, 16)).astype(np.float32)
-    emb = spark.createDataFrame(
-        [(i, [float(x) for x in vecs[i]]) for i in range(200)],
-        ["vec_id", "embedding"],
-    )
-    q = emb.where("vec_id < 10")
-    want = {
-        (r["query_id"], r["neighbor_id"], r["rank"])
-        for r in brute_force_topk(emb, q, k=5).collect()
-    }
-    exact = {
-        (r["query_id"], r["neighbor_id"], r["rank"])
-        for r in ivf_topk(emb, q, k=5, n_cells=4, n_probe=4).collect()
-    }
-    assert exact == want
-    got = {
-        (r["query_id"], r["neighbor_id"])
-        for r in ivf_topk(emb, q, k=5, n_cells=4, n_probe=2).collect()
-    }
-    want_pairs = {(a, b) for a, b, _ in want}
-    recall = len(got & want_pairs) / len(want_pairs)
-    assert recall >= 0.5, recall
 
 
 def test_passage_dup_stats_semantics(spark):
@@ -275,16 +171,6 @@ def test_passage_dup_stats_semantics(spark):
     assert (got[2]["n_passages"], got[2]["n_dup_passages"]) == (3, 2)
     assert got[2]["dup_ratio"] == round(2 / 3, 6)
     assert (got[3]["n_passages"], got[3]["n_dup_passages"]) == (1, 0)
-
-
-def test_train_ivf_centroids_empty_raises(spark):
-    import pytest
-
-    from minhash_spark.operators.similarity import train_ivf_centroids
-
-    empty = spark.createDataFrame([], "vec_id bigint, embedding array<double>")
-    with pytest.raises(ValueError, match="empty"):
-        train_ivf_centroids(empty, n_cells=4)
 
 
 def test_band_keys_match_the_stored_band_key_derivation(spark):
@@ -379,65 +265,6 @@ def test_latest_version_semantics_and_plan(spark):
     rep = plan_report(out)
     assert "Window" not in rep.text  # max_by aggregate, no per-key sort
     assert "HashAggregate" in rep.text or "SortAggregate" in rep.text
-
-
-def test_deterministic_sampling_and_splits(spark):
-    """Reproducibility contract: membership is a pure function of the id —
-    invariant under repartitioning (where df.sample's seed stability
-    breaks), nested across rates (rate r1 ⊆ rate r2 for r1 < r2), splits
-    disjoint+exhaustive with ~honored weights."""
-    import pytest
-
-    from minhash_spark.operators.sampling import deterministic_sample, with_split
-
-    df = spark.range(0, 5000).select(F.col("id").alias("doc_id"))
-    s1 = {r["doc_id"] for r in deterministic_sample(df, 0.2).collect()}
-    # same ids regardless of partitioning
-    s1b = {
-        r["doc_id"]
-        for r in deterministic_sample(df.repartition(17), 0.2).collect()
-    }
-    assert s1 == s1b
-    # nested: a smaller rate is a subset of a larger one
-    s_small = {r["doc_id"] for r in deterministic_sample(df, 0.05).collect()}
-    assert s_small <= s1
-    # rate roughly honored (4096 strata, 5000 ids → few-% tolerance)
-    assert 0.15 < len(s1) / 5000 < 0.25
-    with pytest.raises(ValueError, match="rate"):
-        deterministic_sample(df, 1.5)
-
-    split = with_split(df, {"train": 0.8, "val": 0.1, "test": 0.1})
-    counts = {r["split"]: r["n"] for r in split.groupBy("split").agg(F.count("*").alias("n")).collect()}
-    assert set(counts) == {"train", "val", "test"}
-    assert sum(counts.values()) == 5000  # exhaustive, no null split
-    assert 0.75 < counts["train"] / 5000 < 0.85
-    with pytest.raises(ValueError, match="sum to 1"):
-        with_split(df, {"a": 0.5, "b": 0.6})
-
-
-def test_scrub_pii_semantics(spark):
-    from minhash_spark.operators.text import pii_counts, scrub_pii
-
-    rows = [
-        (1, "mail a.b+tag@sub.example.co.uk now"),
-        (2, "server at 192.168.0.1 and 8.8.8.8"),
-        (3, "call +44 20 7946 0958 or (555) 123-4567"),
-        (4, "no pii here, version 1.2 and year 2024"),
-    ]
-    df = spark.createDataFrame(rows, "id long, text string")
-    got = {
-        r["id"]: (r["t"], r["n_email"], r["n_ipv4"], r["n_phone"])
-        for r in df.select(
-            "id", scrub_pii("text").alias("t"), *pii_counts("text")
-        ).collect()
-    }
-    assert got[1] == ("mail <EMAIL> now", 1, 0, 0)
-    assert got[2] == ("server at <IP> and <IP>", 0, 2, 0)
-    # the leading "(" is not consumed (the pattern anchors on + or a digit
-    # boundary) — the digits themselves are what must go
-    assert got[3][1:] == (0, 0, 2) and got[3][0] == "call <PHONE> or (<PHONE>"
-    # ordinary short numbers and dotted versions survive
-    assert got[4] == ("no pii here, version 1.2 and year 2024", 0, 0, 0)
 
 
 def test_decontaminate_report_exact_values(spark):

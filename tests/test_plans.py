@@ -114,31 +114,6 @@ def test_verify_python_is_arrow_only(spark):
     assert "BatchEvalPython" not in rep.text
 
 
-def test_cosine_pairs_has_no_nested_loop_join(spark):
-    """Exact all-pairs cosine must be the blocked triangular EQUI-join, never
-    a BroadcastNestedLoopJoin / CartesianProduct (the O(n²)-in-one-task plan
-    that dies at scale)."""
-    from minhash_spark.operators.similarity import cosine_pairs
-
-    emb = spark.createDataFrame(
-        [(i, [float(i), 1.0]) for i in range(20)], ["vec_id", "embedding"]
-    )
-    rep = plan_report(cosine_pairs(emb, threshold=0.5))
-    assert "BroadcastNestedLoopJoin" not in rep.text, rep.text
-    assert "CartesianProduct" not in rep.text, rep.text
-
-
-def test_srp_pairs_has_no_nested_loop_join(spark):
-    from minhash_spark.operators.similarity import srp_cosine_pairs
-
-    emb = spark.createDataFrame(
-        [(i, [float(i % 3), 1.0]) for i in range(20)], ["vec_id", "embedding"]
-    )
-    rep = plan_report(srp_cosine_pairs(emb, threshold=0.5, dim=2, n_planes=4))
-    assert "BroadcastNestedLoopJoin" not in rep.text, rep.text
-    assert "CartesianProduct" not in rep.text, rep.text
-
-
 def test_jvm_estimator_expression_matches_udf(spark):
     """The Arrow estimator over packed signatures agrees exactly with the
     serial oracle's `query`."""

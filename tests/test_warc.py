@@ -1,11 +1,13 @@
 """WARC source: record framing round trip (plain + concatenated-gzip), HTTP
-header stripping, deterministic html→text extraction, and the Spark
-binaryFile → mapInPandas reader emitting the canonical pages schema."""
+header stripping, deterministic html→text extraction, the Spark
+binaryFile → mapInPandas reader emitting the canonical pages schema, and
+the pages table's byte-identical write → read round trip."""
 
 import datetime as dt
 
 import pytest
 
+from minhash_spark.sources.pages import generate_corpus, write_pages, read_pages
 from minhash_spark.sources.warc import (
     build_warc,
     html_to_text,
@@ -137,3 +139,20 @@ def test_resync_not_fooled_by_warc_mention_in_garbage():
         "https://a.example.com/x",
         "https://b.example.com/y",
     ]
+
+
+def test_text_byte_identity_roundtrip(spark, tmp_path_factory):
+    """The per-row invariant (BASELINE input_hint): extracted text survives
+    write → read byte-identically per url; html bytes too."""
+    pages, _, _ = generate_corpus(200, seed=17)
+    path = str(tmp_path_factory.mktemp("roundtrip") / "pages")
+    write_pages(spark, pages, path)
+    back = {
+        r["url"]: (r["text"], bytes(r["html"]))
+        for r in read_pages(spark, path).collect()
+    }
+    assert len(back) == 200
+    for _, row in pages.iterrows():
+        t, h = back[row["url"]]
+        assert t == row["text"]
+        assert h == row["html"]
