@@ -1,18 +1,21 @@
-"""Driver-side numpy kernels of the dedup: LSH band pairs with the skew tiers
-of `operators.lsh.candidate_pairs`, the Jaccard estimate of
-`operators.verify.estimate_jaccard_udf`, the pointer-jumping connected
-components of `operators.cluster`, Spark's `xxhash64` of an id column (the
-store's url bucket and Bloom key), and the band keys of `lsh.band_keys`.
+"""Driver-side numpy kernels of the dedup, for the pipeline's local path,
+the store's narrow path and `operators.cluster`'s local components: url
+codes, LSH band pairs with the skew tiers of `lsh.candidate_pairs`, the
+equi-join of two key arrays, the Jaccard estimate of
+`verify.estimate_jaccard_udf`, pointer-jumping connected components,
+Spark's `xxhash64` of an id column (the store's url bucket and Bloom key),
+and the band keys of `lsh.band_keys`.
 
-Everything but `xxhash64` and `band_keys` works on integer arrays: url
-codes (0..n-1 in url order, -1 for a null url) and signature row indices.
-Callers factorize ids and join them back; these functions never see a url.
+The others work on integer arrays: the url codes of `url_codes` (0..n-1 in
+url order, -1 for a null url), which callers join back with `ids.take`,
+and signature row indices. They never see a url.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from .config import DedupConfig
 
@@ -23,6 +26,28 @@ XXHASH_CHUNK_BYTES = 1 << 24  # padded bytes per xxhash64 block of byte ids
 def _runs(lo: np.ndarray, n: np.ndarray) -> np.ndarray:
     """lo[i], lo[i] + 1, ..., lo[i] + n[i] - 1 for every i, concatenated."""
     return np.arange(n.sum()) - np.repeat(np.cumsum(n) - n - lo, n)
+
+
+def url_codes(*arrays):
+    """(ids, codes, ...): the distinct non-null values of the pyarrow
+    (chunked) arrays, all of one type, sorted in Spark's binary order, and
+    for each array the int64 index into ids of each value, -1 for a null."""
+    chunks = [c for a in arrays for c in getattr(a, "chunks", [a])]
+    ids = pc.unique(pa.chunked_array(chunks, arrays[0].type)).drop_null()
+    ids = ids.take(pc.array_sort_indices(ids))
+    codes = [pc.index_in(a, value_set=ids).fill_null(-1).to_numpy() for a in arrays]
+    return ids, *(c.astype(np.int64) for c in codes)
+
+
+def key_pairs(left: np.ndarray, right: np.ndarray, max_rows: int):
+    """Row indices (il, ir) of every pair with left[il] == right[ir], the
+    equi-join of two int64 key arrays; None when its rows, counted before
+    anything is enumerated, exceed max_rows."""
+    ol, orr = np.argsort(left, kind="stable"), np.argsort(right, kind="stable")
+    lo, hi = (np.searchsorted(right[orr], left[ol], side) for side in ("left", "right"))
+    if int((hi - lo).sum()) > max_rows:
+        return None
+    return np.repeat(ol, hi - lo), orr[_runs(lo, hi - lo)]
 
 
 def band_pairs(keys: np.ndarray, codes: np.ndarray, cfg: DedupConfig, max_rows: int):
@@ -84,10 +109,12 @@ def band_pairs(keys: np.ndarray, codes: np.ndarray, cfg: DedupConfig, max_rows: 
 
 def pair_rows(codes: np.ndarray, ca: np.ndarray, cb: np.ndarray):
     """Row indices (ia, ib): one entry per (pair, row of ca, row of cb), as
-    `verify_pairs` joins a candidate with every signature row of its urls."""
+    `verify_pairs` joins a candidate with every signature row of its urls
+    (a url without rows pairs with none)."""
     valid = codes >= 0
     order = np.flatnonzero(valid)[np.argsort(codes[valid], kind="stable")]
-    cnt = np.bincount(codes[valid], minlength=int(codes.max(initial=-1)) + 1)
+    n = max(codes.max(initial=-1), ca.max(initial=-1), cb.max(initial=-1)) + 1
+    cnt = np.bincount(codes[valid], minlength=int(n))
     first = np.cumsum(cnt) - cnt
     na, nb = cnt[ca], cnt[cb]
     per = na * nb

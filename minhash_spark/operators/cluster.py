@@ -3,8 +3,8 @@
 One operator with two paths, chosen by one bounded collect of the edges:
 
 - **local** (at most `_LOCAL_MAX_EDGES` edges): the edges come to the driver
-  in a single Arrow job. A sorted factorization maps the ids to integer
-  codes in id order, and `local.components` (min-label hooking with pointer
+  in a single Arrow job. `local.url_codes` maps the ids to integer codes
+  in id order, and `local.components` (min-label hooking with pointer
   jumping, `lab = lab[lab]`) resolves the components in numpy.
 - **distributed** (more edges): alternating large-star / small-star rounds
   on DataFrames (Kiveris et al., "Connected Components in MapReduce and
@@ -19,8 +19,6 @@ the session conf.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -39,17 +37,16 @@ _LOCAL_MAX_EDGES = 1 << 20
 def _local_components(e: DataFrame, tbl: pa.Table, max_iterations: int):
     """(url, cluster_id) of the collected edges tbl(u, v) of e, plus rounds,
     or None when it does not converge."""
-    a, b = tbl.column("u").to_numpy(), tbl.column("v").to_numpy()
-    # sorted factorization: code order is id order, so the smallest code of
-    # a component is its smallest id
-    codes, ids = pd.factorize(np.concatenate([a, b]), sort=True)
-    res = local.components(codes[: len(a)], codes[len(a) :], len(ids), max_iterations)
+    # sorted codes: code order is id order, so the smallest code of a
+    # component is its smallest id
+    ids, a, b = local.url_codes(tbl.column("u"), tbl.column("v"))
+    res = local.components(a, b, len(ids), max_iterations)
     if res is None:
         return None
     lab, rounds = res
     t = e.schema["u"].dataType
     schema = StructType([StructField("url", t), StructField("cluster_id", t)])
-    out = pa.table({"url": ids, "cluster_id": ids[lab]})
+    out = pa.table({"url": ids, "cluster_id": ids.take(lab)})
     return e.sparkSession.createDataFrame(out, schema), rounds
 
 

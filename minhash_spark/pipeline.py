@@ -381,11 +381,7 @@ class DedupPipeline:
             t1 = t0
             urls, S = signed
             keys = local.band_keys(S, cfg)  # `lsh.band_keys` in numpy
-        # url codes in Spark's binary string order; -1 for a null url
-        urls = urls.combine_chunks()
-        ids = pc.unique(urls).drop_null()
-        ids = ids.take(pc.array_sort_indices(ids))
-        codes = pc.index_in(urls, value_set=ids).fill_null(-1).to_numpy()
+        ids, codes = local.url_codes(urls)
         res = local.band_pairs(keys, codes, cfg, _LOCAL_MAX_PAIR_ROWS)
         if res is None:
             return False

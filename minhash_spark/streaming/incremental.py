@@ -43,7 +43,6 @@ import shutil
 import uuid
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as ds
@@ -566,14 +565,6 @@ def _batch_sigs(spark: SparkSession, batch_df: DataFrame, tbl, cfg) -> DataFrame
     return spark.createDataFrame(tbl.select(["url", "minhash"]), schema)
 
 
-def _join_rows(left_keys, right_keys) -> int:
-    """Rows of the equi-join of two int64 key arrays, without building it."""
-    ku, cu = np.unique(left_keys, return_counts=True)
-    kv, cv = np.unique(right_keys, return_counts=True)
-    _, ia, ib = np.intersect1d(ku, kv, assume_unique=True, return_indices=True)
-    return int(cu[ia] @ cv[ib])
-
-
 def _read_on_driver(
     store_dir: str,
     epoch_id: int,
@@ -616,24 +607,20 @@ def _resolve_on_driver(
     minus `epoch_id` (canonicalized), and verifies with every signature row
     of a candidate url, as verify_pairs over store ∪ batch does. A probe
     pairs only with the store (url_a = probe url), and its signature
-    overrides a stored one of the same url. Fills `stats` with
-    n_candidates, n_store_band_rows and the partition and file counts."""
+    overrides a stored one of the same url. All of it runs on url codes
+    with `local`'s kernels. Fills `stats` with n_candidates,
+    n_store_band_rows and the partition and file counts."""
     cap = _KEY_PRUNE_MAX_KEYS
     at = to_arrow_type(url_type)
     sig_store, band_store = _store_subdirs(store_path)
     tbl = tbl.filter(pc.is_valid(tbl["url"]))  # a null url never joins
-    urls = tbl["url"].to_numpy(zero_copy_only=False)
-    batch = pd.DataFrame(
-        {
-            "band_key": pc.list_flatten(tbl["band_keys"]).to_numpy(),
-            "url": np.repeat(urls, cfg.bands),
-        }
-    )
-    store = batch[:0]
+    urls = tbl["url"].cast(at)
+    keys = pc.list_flatten(tbl["band_keys"]).to_numpy()
+    store_keys, store_urls = keys[:0], pa.array([], at)
     if _has_batches(band_store):
         # the store's band rows sharing a key with the batch, from the
         # Bloom-surviving partitions
-        uniq = np.unique(batch.band_key)
+        uniq = np.unique(keys)
         got = _read_on_driver(
             band_store, epoch_id, uniq, n_store_buckets,
             pa.schema([("url", at), ("band_key", pa.int64())]),
@@ -642,70 +629,56 @@ def _resolve_on_driver(
         )
         if got is None:
             return None
-        store = pd.DataFrame(
-            {
-                "band_key": got["band_key"].to_numpy(),
-                "url": got["url"].to_numpy(zero_copy_only=False),
-            }
-        )
+        store_keys, store_urls = got["band_key"].to_numpy(), got["url"]
+    ids, codes, store_codes = local.url_codes(urls, store_urls)
+    key_codes = np.repeat(codes, cfg.bands)
 
     # band collisions, each counted once as in candidate_pairs: the batch
-    # with itself once per unordered pair, and the batch with the store
-    # (disjoint sides: the store excludes this epoch)
-    multi = batch[batch.band_key.duplicated(keep=False)]
-    legs = [(batch, store, False)]
-    if not probe:
-        legs.append((multi, multi, True))
-    if sum(_join_rows(l.band_key, r.band_key) for l, r, _ in legs) > cap:
+    # with the store (disjoint sides: the store excludes this epoch), and an
+    # ingest's batch with itself once per unordered pair; the cap holds the
+    # rows of both joins, the latter over keys of two or more batch rows
+    joined = local.key_pairs(keys, store_keys, cap)
+    if joined is None:
         return None
-    ends = []
-    for left, right, ordered in legs:
-        m = left.merge(right, on="band_key", suffixes=("_a", "_b"))
-        a, b = m.url_a.to_numpy(), m.url_b.to_numpy()
-        keep = a < b if ordered else a != b
-        a, b = a[keep], b[keep]
-        if not probe:
-            lo = a < b
-            a, b = np.where(lo, a, b), np.where(lo, b, a)
-        ends.append((a, b))
-    a, b = (np.concatenate(e) for e in zip(*ends))
-    n_bands = pd.DataFrame({"url_a": a, "url_b": b}).value_counts(sort=False)
-    cand = n_bands[n_bands >= cfg.min_band_matches].index.to_frame(index=False)
-    stats.update(n_candidates=len(cand), n_store_band_rows=len(store))
+    ca, cb = key_codes[joined[0]], store_codes[joined[1]]
+    ca, cb = ca[ca != cb], cb[ca != cb]
+    if not probe:
+        ca, cb = np.minimum(ca, cb), np.maximum(ca, cb)
+        _, inv, cnt = np.unique(keys, return_inverse=True, return_counts=True)
+        multi = np.flatnonzero(cnt[inv] >= 2)
+        self_joined = local.key_pairs(keys[multi], keys[multi], cap - len(joined[0]))
+        if self_joined is None:
+            return None
+        a, b = (key_codes[multi[i]] for i in self_joined)
+        ca, cb = np.r_[ca, a[a < b]], np.r_[cb, b[a < b]]
+    n = max(len(ids), 1)
+    pair, n_bands = np.unique(ca * n + cb, return_counts=True)
+    pair = pair[n_bands >= cfg.min_band_matches]
+    ca, cb = pair // n, pair % n
+    stats.update(n_candidates=len(pair), n_store_band_rows=len(store_keys))
 
-    sigs = pd.DataFrame(
-        {"url": urls, "minhash": tbl["minhash"].to_numpy(zero_copy_only=False)}
-    )
-    need = pd.unique(cand.url_b if probe else np.concatenate([cand.url_a, cand.url_b]))
+    sig_codes, minhash = codes, tbl["minhash"].to_pylist()
+    need = np.unique(cb if probe else np.r_[ca, cb])
     if len(need) and _has_batches(sig_store):
         # the stored signatures of the candidate urls, from the partitions
         # their hash may be in
-        need = pa.array(need, type=at)
+        need = ids.take(need)
         stored = _read_on_driver(
             sig_store, epoch_id, local.xxhash64(need), n_store_buckets,
             pa.schema([("url", at), ("minhash", pa.binary())]),
             ds.field("url").isin(need), stats,
-        ).to_pandas()
+        )
         if probe:
-            stored = stored[~stored.url.isin(urls)]
-        sigs = pd.concat([stored, sigs], ignore_index=True)
+            stored = stored.filter(pc.invert(pc.is_in(stored["url"], value_set=urls)))
+        sig_codes = np.r_[pc.index_in(stored["url"], value_set=ids).to_numpy(), codes]
+        minhash = stored["minhash"].to_pylist() + minhash
 
     # verify every (pair, signature row of url_a, signature row of url_b)
-    S = signature_rows(sigs.minhash, cfg.minhash.sketch_size)
-    idx = pd.DataFrame({"url": sigs.url, "i": np.arange(len(sigs))})
-    m = cand.merge(idx.set_axis(["url_a", "i_a"], axis=1), on="url_a").merge(
-        idx.set_axis(["url_b", "i_b"], axis=1), on="url_b"
-    )
-    keep, est = local.verify(
-        S, m.i_a.to_numpy(), m.i_b.to_numpy(), cfg.jaccard_threshold
-    )
-    return pa.table(
-        {
-            "url_a": pa.array(m.url_a.to_numpy()[keep], type=at),
-            "url_b": pa.array(m.url_b.to_numpy()[keep], type=at),
-            "est_jaccard": est,
-        }
-    )
+    S = signature_rows(minhash, cfg.minhash.sketch_size)
+    ia, ib = local.pair_rows(sig_codes, ca, cb)
+    keep, est = local.verify(S, ia, ib, cfg.jaccard_threshold)
+    ea, eb = sig_codes[ia[keep]], sig_codes[ib[keep]]
+    return pa.table({"url_a": ids.take(ea), "url_b": ids.take(eb), "est_jaccard": est})
 
 
 def _write_parquet(rows: pa.Table, path: str) -> None:
@@ -818,7 +791,8 @@ def _spark_pairs(
     stats_out: dict | None,
 ) -> DataFrame:
     """The wide path's verified pairs: `_resolve_on_driver`'s pairing and
-    verification as Spark joins and the estimator UDF."""
+    verification as Spark joins and the estimator UDF on urls, and its
+    `stats_out` values, at one extra job per row count."""
     sig_store, band_store = _store_subdirs(store_path)
     # candidates restricted to pairs touching the new batch, in two legs so
     # each band collision is counted exactly once (the batch candidate_pairs
@@ -838,10 +812,11 @@ def _spark_pairs(
         )
     prev_bands = None
     if _has_batches(band_store):
+        # a null url never joins, and the narrow path's read drops it too
         prev_bands = _spark_pruned_read(
             spark, band_store, epoch_id, new_bands,
             _bucket_col("band_key", n_store_buckets), _key_col("band_key"), stats_out,
-        )
+        ).where(F.col("url").isNotNull())
         store = batch_a.join(
             prev_bands.select("band_key", F.col("url").alias("url_b")), ["band_key"]
         ).where(F.col("url_a") != F.col("url_b"))
@@ -951,10 +926,10 @@ def incremental_dedup_batch(
       (`_collect_batch`; above `signatures._LOCAL_MAX_SIGN_BYTES` of text
       the signature UDF does), Bloom-prunes the store partitions, reads
       with pyarrow the band rows sharing a batch key, counts band matches
-      per pair in pandas, reads the stored signatures of the candidate urls (bucketed
-      by `local.xxhash64`, Spark's hash of the url), verifies in numpy and
-      writes both store sides with `_write_bucket`, Blooms built on the
-      driver.
+      per pair of url codes with `local`'s kernels, reads the stored
+      signatures of the candidate urls (bucketed by `local.xxhash64`,
+      Spark's hash of the url), verifies with `local.verify` and writes
+      both store sides with `_write_bucket`, Blooms built on the driver.
       Every Python task costs ~0.1 s before it sees data, more than
       signing a small batch on the driver, so a small batch never crosses
       the boundary. A batch whose band collisions exceed the same cap (a
@@ -986,10 +961,11 @@ def incremental_dedup_batch(
       the store write is a side effect outside the sink transaction.
 
     `stats_out`, if given, receives {"path": "narrow" | "wide",
-    "n_candidates", "n_store_band_rows" (store band rows sharing a key with
-    the batch), "partitions_read", "partitions_bloom_pruned", "files_read",
-    "bytes_read"} (store partitions, and the data files and bytes in those
-    read, over both sides). On the wide path the two row counts cost one
+    "n_candidates", "n_store_band_rows" (store band rows of a non-null url
+    sharing a key with the batch), "partitions_read",
+    "partitions_bloom_pruned", "files_read", "bytes_read"} (store
+    partitions, and the data files and bytes in those read, over both
+    sides). On the wide path the two row counts cost one
     extra job each.
     """
     cfg = cfg or DedupConfig()

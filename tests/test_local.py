@@ -2,7 +2,8 @@
 models of the Spark operators they stand in for: the skew tiers and band
 counting of `lsh.candidate_pairs` with `multi_bucket_stats` (and against
 those Spark operators themselves), the row
-multiplicity of `verify_pairs`, and component-minimum labels; and
+multiplicity of `verify_pairs`, the key equi-join against a nested loop,
+url codes, and component-minimum labels; and
 `local.xxhash64` and `local.band_keys` against Spark's `xxhash64` and
 `lsh.band_keys` themselves, and `signature_matrix` against the signature
 UDF."""
@@ -149,6 +150,45 @@ def test_pair_rows_and_verify():
     full = np.array([(S[i] == S[j]).sum() / 16.0 for i, j in zip(ia, ib)])
     assert np.array_equal(keep, np.flatnonzero(full >= 0.4))
     assert np.array_equal(est, full[keep])
+
+
+KEYS = arrays(np.int64, st.integers(0, 12), elements=st.integers(-3, 3))
+
+
+@settings(max_examples=50, deadline=None)
+@given(left=KEYS, right=KEYS, max_rows=st.integers(0, 40))
+def test_key_pairs_is_the_equi_join(left, right, max_rows):
+    """`local.key_pairs` against a nested loop, as a multiset of row pairs,
+    on repeated keys and empty sides; None exactly above max_rows."""
+    want = [(i, j) for i, x in enumerate(left) for j, y in enumerate(right) if x == y]
+    got = local.key_pairs(left, right, max_rows)
+    if len(want) > max_rows:
+        assert got is None
+    else:
+        assert Counter(zip(got[0].tolist(), got[1].tolist())) == Counter(want)
+
+
+@pytest.mark.parametrize(
+    "ty, values",
+    [(pa.string(), st.none() | st.sampled_from(["u0", "u1", "u10", "u2", "é", ""])),
+     (pa.int64(), st.none() | st.integers(-(2**63), 2**63 - 1) | st.integers(-3, 3))],
+    ids=["string", "int64"],
+)
+@settings(max_examples=25, deadline=None)
+@given(data=st.data())
+def test_url_codes_sorted_shared_and_null(ty, values, data):
+    """`local.url_codes` over arrays and chunked arrays with nulls: ids are
+    the distinct non-null values in sorted (for strings, UTF-8 byte) order,
+    equal values get one code across arrays, and a null gets -1."""
+    lists = data.draw(st.lists(st.lists(values, max_size=10), min_size=1, max_size=3))
+    arrs = [pa.array(v, ty) for v in lists]
+    arrs[0] = pa.chunked_array([arrs[0][:2], arrs[0][2:]])
+    ids, *codes = local.url_codes(*arrs)
+    key = (lambda v: v.encode()) if ty == pa.string() else (lambda v: v)
+    assert ids.to_pylist() == sorted({v for v in sum(lists, []) if v is not None}, key=key)
+    for vals, c in zip(lists, codes):
+        assert c.dtype == np.int64
+        assert [None if i < 0 else ids[i].as_py() for i in c] == vals
 
 
 def test_components_labels_are_component_minima():

@@ -2,7 +2,8 @@
 same answers and write the same store: the narrow path (texts once to the
 driver, signed there, numpy pair counting and verification) against the
 wide path (Spark joins and UDFs), forced by setting the narrow cap to 0.
-Also: the collision overflow hand-off, the text-byte cap's hand-off to the
+Also: the collision overflow hand-offs (store band rows, and the batch's
+band collisions with itself), the text-byte cap's hand-off to the
 signature UDF, no text on the driver above either cap, stats_out, and the
 job count of a narrow ingest and probe.
 Also: compaction on the driver against compaction by Spark (forced by
@@ -74,20 +75,28 @@ def _replay(spark, df, probes, store):
 @pytest.fixture(params=["string", "long"])
 def corpus(request, spark):
     """Three epochs of a near-dup corpus. Epoch 2 re-ingests one epoch-0 url
-    (its store and batch signature rows both verify), and the probes hold a
-    copy under a new url, stored urls with other and with their own text
-    (the probe's signature replaces the stored ones), a novel text and one
-    probe url twice."""
+    (its store and batch signature rows both verify), epoch 0 holds a copy
+    of an epoch-1 doc under a null url (its store band rows share the
+    epoch-1 batch's keys but never join) and epoch 1 one url twice with two
+    texts, and the probes hold a copy under a new url, stored urls with
+    other and with their own text (the probe's signature replaces the
+    stored ones), a novel text and one probe url twice."""
     pages, _, _ = generate_corpus(150, seed=5)
     pdf = pages[["url", "text"]].copy()
     if request.param == "long":
         pdf["url"] = range(1000, 1000 + len(pdf))
+    pdf["url"] = pdf["url"].astype(object)
     pdf["epoch"] = [i % 3 for i in range(len(pdf))]
     # a copy of an epoch-2 doc, ingested in epoch 0 and again in epoch 2
     twin = "twin" if request.param == "string" else 5_000
     first = pdf.iloc[[5]].assign(url=twin, epoch=0)
+    null = pdf.iloc[[7]].assign(url=None, epoch=0)
+    dup = "dup" if request.param == "string" else 5_001
+    doubled = pdf.iloc[[10, 13]].assign(url=dup, epoch=1)
+    ddl = "string" if request.param == "string" else "long"
     df = spark.createDataFrame(
-        pd.concat([pdf, first, first.assign(epoch=2)], ignore_index=True)
+        pd.concat([pdf, first, first.assign(epoch=2), null, doubled], ignore_index=True),
+        f"url {ddl}, text string, epoch long",
     )
     u1 = pdf.url.tolist()[1]
     new = "probe-copy" if request.param == "string" else 99_999
@@ -163,6 +172,31 @@ def test_collision_overflow_hands_off_to_spark(spark, monkeypatch, tmp_path):
     assert got["overflow"][0] == got["wide"][0]
     assert {(a, b) for a, b, _ in got["overflow"][0]} == {
         ("b0", "s0"), ("b0", "s1"), ("b0", "s2")
+    }
+    assert got["overflow"][2] == got["wide"][2]
+
+
+def test_batch_self_join_overflow_hands_off_to_spark(spark, monkeypatch, tmp_path):
+    """A batch of k identical docs fits the narrow row cap (k × bands rows)
+    but not its band collisions with itself (bands × k² join rows): it is
+    verified by the Spark path, with the same pairs and store rows as the
+    wide path."""
+    k = 3
+    text = "the same boilerplate page repeated many times across the crawl"
+    batch = spark.createDataFrame(
+        [(f"b{i}", text) for i in range(k)], "url string, text string"
+    )
+    got = {}
+    for path, cap in (("overflow", k * CFG.bands), ("wide", 0)):
+        monkeypatch.setattr(incremental, "_KEY_PRUNE_MAX_KEYS", cap)
+        store = str(tmp_path / path)
+        st: dict = {}
+        rows = _rows(incremental_dedup_batch(spark, batch, store, CFG, 0, 4, stats_out=st))
+        got[path] = (rows, st["path"], _store_state(spark, store))
+    assert got["overflow"][1] == got["wide"][1] == "wide"
+    assert got["overflow"][0] == got["wide"][0]
+    assert {(a, b) for a, b, _ in got["overflow"][0]} == {
+        ("b0", "b1"), ("b0", "b2"), ("b1", "b2")
     }
     assert got["overflow"][2] == got["wide"][2]
 
