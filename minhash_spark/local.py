@@ -6,9 +6,9 @@ equi-join of two key arrays, the Jaccard estimate of
 Spark's `xxhash64` of an id column (the store's url bucket and Bloom key),
 and the band keys of `lsh.band_keys`.
 
-The others work on integer arrays: the url codes of `url_codes` (0..n-1 in
-url order, -1 for a null url), which callers join back with `ids.take`,
-and signature row indices. They never see a url.
+All but `url_codes`, `xxhash64` and `band_keys` work on integer arrays:
+the url codes of `url_codes` (0..n-1 in url order, -1 for a null url),
+which callers join back with `ids.take`, and signature row indices.
 """
 
 from __future__ import annotations
