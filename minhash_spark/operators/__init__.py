@@ -1,5 +1,5 @@
 from .signatures import with_minhash_signature
-from .lsh import band_keys, bands_table, candidate_pairs, bucket_stats
+from .lsh import band_keys, bands_table, candidate_pairs
 from .verify import verify_pairs
 from .cluster import connected_components
 from .exact import exact_dup_groups, dedup_exact
@@ -13,7 +13,6 @@ __all__ = [
     "band_keys",
     "bands_table",
     "candidate_pairs",
-    "bucket_stats",
     "verify_pairs",
     "connected_components",
     "exact_dup_groups",

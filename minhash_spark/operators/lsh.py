@@ -1,18 +1,22 @@
 """LSH banding + candidate-pair generation.
 
 Banding slices each signature into `bands` groups of `rows` values and keys
-each slice with xxhash64 (`band_keys`) — documents agreeing on any band
-become a candidate pair (standard MinHash-LSH; the signature semantics
-underneath are the reference's, SURVEY.md §2.3). All JVM-side: substring/
-transform/explode/xxhash64 are built-in expressions; no Python.
+each slice with xxhash64 (`band_keys`) — documents agreeing on at least
+cfg.min_band_matches bands become a candidate pair (MinHash-LSH; the
+signature semantics underneath are the reference's, SURVEY.md §2.3).
+All JVM-side: substring/transform/explode/xxhash64 are built-in
+expressions; no Python.
 
 Scale/skew design:
 - The candidate join is a self equi-join on band_key — shuffle
   partitioned by the key, AQE skew-split enabled (session.py).
-- Boilerplate pages collapse into mega-buckets ⇒ O(m²) pair blowup. Buckets
-  larger than cfg.max_bucket_size are excluded from pair enumeration (their
-  overflow is reported via `bucket_stats`) — the standard cap used by
-  web-dedup pipelines; the exact-dup path still catches identical boilerplate.
+- Boilerplate pages collapse into mega-buckets ⇒ O(m²) pair blowup, so a
+  bucket's size picks its tier (`tiered_bucket_pairs`): up to
+  cfg.max_bucket_size a plain all-pairs join, up to cfg.salted_bucket_max a
+  salted all-pairs join (same pair set, spread over salt_factor join
+  groups), and above that a star of (anchor, member) pairs. The buckets over
+  max_bucket_size are counted by `multi_bucket_stats` (and by the stats of
+  `local.band_pairs` on the driver path).
 - Pair dedup across bands is a groupBy on (url_a, url_b) — map-side partial
   aggregation keeps the shuffle small (the same partial→final algebra as the
   reference's FCDS local→global merge, SURVEY.md §2.1 op#9/10).
@@ -73,15 +77,6 @@ def bands_table(
     return sig_df.select(id_col, F.explode(band_keys(sig_col, cfg)).alias("band_key"))
 
 
-def bucket_stats(bands: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """Bucket-size distribution + overflow accounting for the metrics table,
-    computed from scratch (one count-aggregation over the band table). When a
-    candidate_pairs run is already in flight, prefer multi_bucket_stats over
-    the persisted handle from `handles_out` — it reads the cache instead of
-    re-running the banding explode + groupBy as a second job."""
-    return bucket_sizes_stats(bands.groupBy("band_key").count(), cfg)
-
-
 def multi_bucket_stats(multi: DataFrame, cfg: DedupConfig) -> DataFrame:
     """Skew/overflow accounting from the persisted multi-member bucket table
     (the `handles_out` handle of tiered_bucket_pairs: one row per bucket
@@ -115,19 +110,6 @@ def multi_bucket_stats(multi: DataFrame, cfg: DedupConfig) -> DataFrame:
         )
         .cast("long")
         .alias("docs_in_capped_buckets"),
-    )
-
-
-def bucket_sizes_stats(sizes: DataFrame, cfg: DedupConfig) -> DataFrame:
-    return sizes.agg(
-        F.count("*").alias("n_buckets"),
-        F.max("count").alias("max_bucket"),
-        F.sum(F.when(F.col("count") > cfg.max_bucket_size, 1).otherwise(0)).alias(
-            "n_capped_buckets"
-        ),
-        F.sum(
-            F.when(F.col("count") > cfg.max_bucket_size, F.col("count")).otherwise(0)
-        ).alias("docs_in_capped_buckets"),
     )
 
 

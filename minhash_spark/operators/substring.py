@@ -45,22 +45,6 @@ def _word_gram_hashes(text: str, w: int) -> np.ndarray:
     )
 
 
-def _grams_udf(w: int, winnow_k: int, side: str):
-    @pandas_udf(ArrayType(LongType()))
-    def _grams(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            h = _word_gram_hashes(t, w)
-            if side == "index":
-                sel = h[::winnow_k]
-            else:  # probe: first winnow_k positional grams
-                sel = h[:winnow_k]
-            out.append(sel.astype(np.int64))
-        return pd.Series(out)
-
-    return _grams
-
-
 def _grams_both_udf(w: int, winnow_k: int):
     """One pass over the text producing BOTH gram selections —
     [index_grams, probe_grams] — so the candidate generator hashes every

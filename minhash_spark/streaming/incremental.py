@@ -52,6 +52,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
     DoubleType,
+    LongType,
     StringType,
     StructField,
     StructType,
@@ -356,9 +357,9 @@ def pruned_store_read(
     store_dir: str,
     epoch_id: int,
     touched_buckets: list[int],
+    schema: StructType,
     key_filter: dict[int, "object"] | None = None,
     stats_out: dict | None = None,
-    schema: StructType | None = None,
 ) -> DataFrame:
     """Read a bucketed store side (`<store>/bands` or `<store>/signatures`)
     pruned to (a) batches other than `epoch_id` (a failed previous attempt of
@@ -374,9 +375,7 @@ def pruned_store_read(
     existence checks here. On a real deployment the listdir/isdir calls
     below are the same O(touched) calls against the object store (or an
     Iceberg manifest lookup). df.inputFiles() on the result shows exactly
-    the touched files. Falls back to the filtered root read when no touched
-    directory exists yet (rare; also keeps the right schema for the empty
-    result).
+    the touched files.
 
     With `key_filter` ({bucket: uint64 key array} of the batch's keys), a
     touched partition is additionally Bloom-probed against its manifest's
@@ -385,29 +384,15 @@ def pruned_store_read(
     cannot provide when a wide batch touches every bucket. Partitions whose
     manifests predate blooms are kept unconditionally (no false pruning).
 
-    `stats_out` as in `_pruned_paths`. A `schema` of the side's data columns
-    skips Spark's schema-inference job over the parquet footers; the
-    partition columns are still taken from the paths."""
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    paths, bloom_pruned = _pruned_paths(
-        store_dir, epoch_id, touched_buckets, key_filter, stats_out
-    )
+    `schema` holds the side's data columns, so Spark runs no
+    schema-inference job; the partition columns are taken from the paths.
+    When no partition is kept (no touched bucket, or all Bloom-pruned) the
+    read is an empty frame of `schema`, built without a Spark job.
+    `stats_out` as in `_pruned_paths`."""
+    paths = _pruned_paths(store_dir, epoch_id, touched_buckets, key_filter, stats_out)
     if not paths:
-        if bloom_pruned:
-            # every bucket-matching partition was Bloom-rejected: the join
-            # result is provably empty — return an empty frame with the
-            # store schema (one footer read) instead of falling back to a
-            # whole-store root read that would defeat the pruning
-            return (
-                reader.option("basePath", store_dir)
-                .parquet(bloom_pruned[0])
-                .limit(0)
-            )
-        return reader.parquet(store_dir).where(
-            (F.col("batch_id") != epoch_id)
-            & F.col("store_bucket").isin([int(b) for b in touched_buckets])
-        )
-    return reader.option("basePath", store_dir).parquet(*paths)
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).option("basePath", store_dir).parquet(*paths)
 
 
 def _data_files(part_dir: str) -> list[str]:
@@ -426,9 +411,9 @@ def _pruned_paths(
     touched_buckets: list[int],
     key_filter: dict[int, "object"] | None = None,
     stats_out: dict | None = None,
-) -> tuple[list[str], list[str]]:
-    """(paths, bloom_pruned): the partition directories of pruned_store_read
-    that may hold a batch key, and those its Bloom filters rejected.
+) -> list[str]:
+    """The partition directories of pruned_store_read that may hold a batch
+    key.
 
     `stats_out`, if given, has the numbers of partitions read and
     Bloom-pruned, and the data files and bytes of the partitions read, added
@@ -436,7 +421,7 @@ def _pruned_paths(
     `bytes_read` (callers read both store sides into one dict)."""
     want = {int(b) for b in touched_buckets}
     paths: list[str] = []
-    bloom_pruned: list[str] = []
+    n_bloom_pruned = 0
     if os.path.isdir(store_dir):
         for d in os.listdir(store_dir):
             if not d.startswith("batch_id="):
@@ -462,25 +447,26 @@ def _pruned_paths(
                         )
                     ):
                         # no batch key can be in this partition
-                        bloom_pruned.append(path)
+                        n_bloom_pruned += 1
                         continue
                 paths.append(path)
     if stats_out is not None:
         files = [f for p in paths for f in _data_files(p)]
         for k, n in (
             ("partitions_read", len(paths)),
-            ("partitions_bloom_pruned", len(bloom_pruned)),
+            ("partitions_bloom_pruned", n_bloom_pruned),
             ("files_read", len(files)),
             ("bytes_read", sum(os.path.getsize(f) for f in files)),
         ):
             stats_out[k] = stats_out.get(k, 0) + n
-    return paths, bloom_pruned
+    return paths
 
 
 def _spark_pruned_read(
     spark: SparkSession,
     store_dir: str,
     epoch_id: int,
+    schema: StructType,
     df: DataFrame,
     bucket_expr,
     key_expr,
@@ -494,8 +480,9 @@ def _spark_pruned_read(
         touched = [
             r[0] for r in df.select(bucket_expr.alias("b")).distinct().collect()
         ]
-        return pruned_store_read(spark, store_dir, epoch_id, touched, stats_out=stats_out)
-    return pruned_store_read(spark, store_dir, epoch_id, list(kf), kf, stats_out)
+    else:
+        touched = list(kf)
+    return pruned_store_read(spark, store_dir, epoch_id, touched, schema, kf, stats_out)
 
 
 def _new_stats(path: str) -> dict:
@@ -579,7 +566,7 @@ def _read_on_driver(
     of `keys` (int64 band keys or url hashes), read with pyarrow; None when
     they exceed `limit` rows (the scan stops at limit + 1)."""
     kf = _keys_by_bucket(keys, n_store_buckets)
-    paths, _ = _pruned_paths(store_dir, epoch_id, list(kf), kf, stats)
+    paths = _pruned_paths(store_dir, epoch_id, list(kf), kf, stats)
     files = [f for p in paths for f in _data_files(p)]
     scan = ds.dataset(files, schema=schema, format="parquet").scanner(filter=where)
     if limit is None:
@@ -802,6 +789,7 @@ def _spark_pairs(
     # epoch — so only canonicalization is needed). A single new-vs-all join
     # would keep BOTH orderings of an intra-batch pair, doubling its
     # band-match count vs batch-vs-store pairs.
+    url = new_bands.schema["url"]
     batch_a = new_bands.select("band_key", F.col("url").alias("url_a"))
     legs = []
     if not probe:
@@ -814,7 +802,8 @@ def _spark_pairs(
     if _has_batches(band_store):
         # a null url never joins, and the narrow path's read drops it too
         prev_bands = _spark_pruned_read(
-            spark, band_store, epoch_id, new_bands,
+            spark, band_store, epoch_id,
+            StructType([url, StructField("band_key", LongType())]), new_bands,
             _bucket_col("band_key", n_store_buckets), _key_col("band_key"), stats_out,
         ).where(F.col("url").isNotNull())
         store = batch_a.join(
@@ -847,7 +836,9 @@ def _spark_pairs(
         # xxhash64(url), the derivation of the write-side manifest blooms)
         u = F.col("url_b") if probe else F.explode(F.array("url_a", "url_b"))
         prev_sigs = _spark_pruned_read(
-            spark, sig_store, epoch_id, joined.select(u.alias("u")),
+            spark, sig_store, epoch_id,
+            StructType([url, StructField("minhash", BinaryType())]),
+            joined.select(u.alias("u")),
             _bucket_col("u", n_store_buckets), _key_col("u"), stats_out,
         ).select("url", "minhash")
         if probe:

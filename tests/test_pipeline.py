@@ -22,6 +22,7 @@ from collections import Counter
 import numpy as np
 import pytest
 import pyarrow.parquet as pq
+from pyspark.sql import DataFrameWriter
 from pyspark.sql import functions as F
 
 from minhash_spark import pipeline
@@ -285,6 +286,7 @@ def test_spark_submit_pyfiles_deployment(tmp_path_factory):
     import shutil
     import subprocess
     import sys
+    import zipfile
 
     import pyspark
 
@@ -295,7 +297,14 @@ def test_spark_submit_pyfiles_deployment(tmp_path_factory):
     import build_pyfiles_zip
 
     zip_path = str(base / "minhash_spark.zip")
-    assert build_pyfiles_zip.build(zip_path) > 30
+    modules = sorted(
+        os.path.relpath(os.path.join(d, f), repo)
+        for d, _, files in os.walk(os.path.join(repo, "minhash_spark"))
+        for f in files
+        if f.endswith(".py")
+    )
+    assert build_pyfiles_zip.build(zip_path) == len(modules)
+    assert sorted(zipfile.ZipFile(zip_path).namelist()) == modules
     shutil.copy(os.path.join(repo, "scripts", "run_pipeline.py"), base)
 
     pages, _, _ = generate_corpus(60, seed=21)
@@ -675,6 +684,50 @@ def test_crash_between_partitions_then_resume(spark, ds_corpus, fresh_run, monke
 
     DedupPipeline(spark, CFG, out).run(ds_corpus)
     assert (_sig_rows(spark, out)[0], _outputs(spark, out)) == fresh_run
+
+
+@pytest.mark.parametrize("stage", ["candidates", "pairs", "clusters"])
+@pytest.mark.parametrize("path", ["local", "spark"])
+def test_crash_before_success_then_rerun(spark, ds_corpus, fresh_run, tmp_path, path, stage):
+    """A run that dies after a stage's data files exist but before its
+    _SUCCESS leaves the stage unmarked, and running the pipeline again gives
+    the outputs of a fresh run with no file of the crashed attempt left in
+    the stage. The local path dies opening the stage's _SUCCESS; on the
+    Spark path the stage's write commits its files, and the crash removes
+    the _SUCCESS of that commit."""
+    out = str(tmp_path)
+    target = os.path.join(out, stage)
+    mark = os.path.join(target, "_SUCCESS")
+
+    def open_(file, *args, **kwargs):
+        if file == mark:
+            raise OSError("injected crash")
+        return open(file, *args, **kwargs)
+
+    write = DataFrameWriter.parquet
+
+    def parquet(self, path, *args, **kwargs):
+        write(self, path, *args, **kwargs)
+        if path == target:
+            os.remove(mark)
+            raise OSError("injected crash")
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(pipeline, "open", open_, raising=False)
+        mp.setattr(DataFrameWriter, "parquet", parquet)
+        with pytest.raises(OSError, match="injected crash"):
+            _run(spark, ds_corpus, out, path)
+    crashed = [os.path.join(target, f) for f in os.listdir(target)]
+    assert any(f.endswith(".parquet") for f in crashed) and not os.path.exists(mark)
+    # stamp the crashed attempt's files: a rewritten file gets a new mtime
+    for f in crashed:
+        os.utime(f, ns=(0, 0))
+
+    _run(spark, ds_corpus, out, path)
+    assert _metrics(out, stage)["path"] == path
+    assert _outputs(spark, out) == fresh_run[1]
+    left = [f for f in os.listdir(target) if os.stat(os.path.join(target, f)).st_mtime_ns == 0]
+    assert left == [], left
 
 
 @pytest.mark.parametrize("over", [None, "_LOCAL_MAX_DOCS", "_LOCAL_MAX_SIGN_BYTES"])

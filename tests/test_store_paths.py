@@ -22,6 +22,7 @@ import pyarrow.dataset as pads
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from minhash_spark.config import DedupConfig
 from minhash_spark.operators import signatures
@@ -286,12 +287,13 @@ def test_narrow_job_counts(spark, tmp_path):
 def test_wide_job_counts(spark, monkeypatch, tmp_path):
     """On the wide path each store side is written by one Spark action, 2
     jobs under adaptive execution (its shuffle-map stage, then its result
-    stage). A wide ingest with stats_out runs 23 jobs, 4 of them store
-    writes, and a Spark compaction runs only its 4 write jobs. Before the
-    one bucket writer, a side took a partitionBy write and an applyInPandas
-    Bloom pass, 2 jobs each: a wide ingest ran 27 jobs, 8 of them store
-    writes, and a Spark compaction 12, with a schema-inference job per side
-    for each of its read and its read-back."""
+    stage). A wide ingest with stats_out runs 21 jobs, 4 of them store
+    writes (23 while its two store reads inferred their schema from the
+    parquet footers), and a Spark compaction runs only its 4 write jobs.
+    Before the one bucket writer, a side took a partitionBy write and an
+    applyInPandas Bloom pass, 2 jobs each: a wide ingest ran 27 jobs, 8 of
+    them store writes, and a Spark compaction 12, with a schema-inference
+    job per side for each of its read and its read-back."""
     sc = spark.sparkContext
     monkeypatch.setattr(incremental, "_KEY_PRUNE_MAX_KEYS", 0)
     monkeypatch.setattr(incremental, "_LOCAL_MAX_COMPACT_ROWS", 0)
@@ -323,8 +325,42 @@ def test_wide_job_counts(spark, monkeypatch, tmp_path):
     compact_jobs = _jobs(sc, "spark-compact", lambda: res.update(compact_store(spark, store)))
     assert {r["path"] for r in res.values()} == {"spark"}
     assert len(writes) == 4 and all(1 <= len(j) <= 2 for j in writes), writes
-    assert len(ingest_jobs) + len(writes[0]) + len(writes[1]) <= 23, (ingest_jobs, writes)
+    assert len(ingest_jobs) + len(writes[0]) + len(writes[1]) <= 21, (ingest_jobs, writes)
     assert compact_jobs == [], compact_jobs
+
+
+def test_zero_key_store_read_runs_no_job(spark, tmp_path):
+    """A wide read with no batch key to look up (`_collect_key_filter`
+    returned {}) is an empty frame of the caller's schema, built without a
+    Spark job and reading no file. Against a store of 64-bucket batches, a
+    root read of the store instead ran 4 jobs to build (listing more than 32
+    bucket directories per batch, then inferring the schema)."""
+    sc = spark.sparkContext
+    store = str(tmp_path / "store")
+    pages, _, _ = generate_corpus(90, seed=5)
+    df = spark.createDataFrame(pages).select("url", "text")
+    for e in range(3):
+        incremental_dedup_batch(
+            spark, df.where(F.crc32("url") % 3 == e), store, CFG, e, 64
+        ).collect()
+    band_store = _store_subdirs(store)[1]
+    schema = StructType(
+        [StructField("url", StringType()), StructField("band_key", LongType())]
+    )
+    st = incremental._new_stats("wide")
+    got = []
+    jobs = _jobs(
+        sc, "zero-key-read",
+        lambda: got.append(
+            incremental.pruned_store_read(
+                spark, band_store, -1, [], schema=schema, key_filter={}, stats_out=st
+            )
+        ),
+    )
+    assert jobs == [], jobs
+    assert got[0].schema == schema and got[0].inputFiles() == []
+    assert got[0].count() == 0
+    assert st["partitions_read"] == st["files_read"] == 0
 
 
 def test_retried_bucket_write_leaves_one_file(spark, tmp_path):

@@ -6,6 +6,7 @@ order/partition-independence invariant)."""
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from minhash_spark.config import DedupConfig
 from minhash_spark.operators.signatures import signature_matrix, signature_rows
@@ -13,6 +14,10 @@ from minhash_spark.sources.pages import generate_corpus
 from minhash_spark.streaming import stream_signatures, incremental_dedup_batch
 
 CFG = DedupConfig()
+# the data columns of a band store side written from string urls
+BAND_SCHEMA = StructType(
+    [StructField("url", StringType()), StructField("band_key", LongType())]
+)
 
 
 def test_stream_signatures_availablenow(spark, tmp_path_factory):
@@ -113,7 +118,7 @@ def test_incremental_store_read_prunes_buckets(spark, tmp_path_factory):
         .distinct()
         .collect()
     ]
-    pruned = pruned_store_read(spark, band_store, 1, touched)
+    pruned = pruned_store_read(spark, band_store, 1, touched, BAND_SCHEMA)
     # pruning happens at PATH CONSTRUCTION (explicit touched directories, no
     # whole-store listing), so inputFiles() directly shows it: every scanned
     # file lives under a touched store_bucket directory
@@ -222,7 +227,7 @@ def test_store_reads_stay_bounded_as_store_grows(tmp_path_factory, spark):
             spark, batch, store, CFG, epoch_id=i, n_store_buckets=n_buckets
         ).count()
         total = spark.read.parquet(band_store).count()
-        pruned = pruned_store_read(spark, band_store, 10_000, touched).count()
+        pruned = pruned_store_read(spark, band_store, 10_000, touched, BAND_SCHEMA).count()
         fractions.append(pruned / total)
 
     # the store grew ~5x; the probe's read fraction must stay bounded by the
@@ -390,8 +395,8 @@ def test_key_level_bloom_pruning_skips_disjoint_store_batches(
 
     # bucket-level pruning alone reads BOTH store batches (tiny bucket count
     # → all buckets touched); key-level pruning must drop batch_id=1 files
-    bucket_only = pruned_store_read(spark, band_store, -1, list(kf))
-    keyed = pruned_store_read(spark, band_store, -1, list(kf), kf)
+    bucket_only = pruned_store_read(spark, band_store, -1, list(kf), BAND_SCHEMA)
+    keyed = pruned_store_read(spark, band_store, -1, list(kf), BAND_SCHEMA, kf)
     assert any("batch_id=1" in f for f in bucket_only.inputFiles())
     keyed_files = keyed.inputFiles()
     assert keyed_files and all("batch_id=0" in f for f in keyed_files)
@@ -411,8 +416,8 @@ def test_key_level_bloom_pruning_skips_disjoint_store_batches(
 
 def test_bloom_all_pruned_returns_empty_not_full_scan(spark, tmp_path_factory):
     """When every bucket-matching partition is Bloom-rejected, the read
-    returns an EMPTY frame (schema intact) — it must not fall back to a
-    whole-store scan."""
+    returns an EMPTY frame of the caller's schema and reads no file — it
+    must not fall back to a whole-store scan."""
     from minhash_spark.streaming import probe_store
     from minhash_spark.streaming.incremental import (
         _bucket_col,
@@ -428,10 +433,10 @@ def test_bloom_all_pruned_returns_empty_not_full_scan(spark, tmp_path_factory):
     _, band_store = _store_subdirs(store)
 
     kf = {b: np.array([12345 + b], dtype=np.uint64) for b in range(4)}
-    got = pruned_store_read(spark, band_store, -1, [0, 1, 2, 3], kf)
+    got = pruned_store_read(spark, band_store, -1, [0, 1, 2, 3], BAND_SCHEMA, kf)
     assert got.count() == 0
     assert "band_key" in got.columns and "url" in got.columns
-    assert len(got.inputFiles()) <= 1  # at most the schema-footer partition
+    assert got.inputFiles() == []  # no footer read, not even for the schema
 
     # end-to-end: probing a novel document returns no pairs
     novel = spark.createDataFrame(
